@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -11,16 +11,18 @@ import graft.ops.{Dsp, Inference, Segmentation}
 
 /** The reference pipeline (pa.py:393-426) as a single declarative Spark
   * dataflow: binaryFile scan → decode/normalize/resample → silence
-  * segmentation → HOF audio metrics → audio-quality filter → batched ASR →
-  * text-quality filter → post-filter overlap window → wav export → metadata
-  * table with first-writer-wins dedup.
+  * segmentation → per-segment audio metrics → audio-quality filter →
+  * batched ASR → text-quality filter → wav export → post-filter overlap
+  * window → metadata table with first-writer-wins dedup.
   *
   * Scale design (SURVEY §3.1): parallelism is per-file for decode/segment
   * (files are independent), per-segment afterwards. The only shuffles are the
-  * overlap window's partition-by-file and the final dedup — both on
-  * `original_name`, so one exchange serves both at scale. Audio filters run
-  * BEFORE inference (README.md:33) — Catalyst cannot reorder across the
-  * opaque model call, so the composition order here is the optimization.
+  * overlap window's partition on `originalName` and the metadata dedup's
+  * partition on `wav_path`. The export runs before the first of them and the
+  * sample arrays are dropped right after it, so neither exchange carries
+  * audio. Audio filters run BEFORE inference (README.md:33) — Catalyst cannot
+  * reorder across the opaque model call, so the composition order here is
+  * the optimization.
   */
 object Pipeline {
 
@@ -35,6 +37,16 @@ object Pipeline {
       samples: Array[Float], frameRate: Int,
       rms: Double, clippingPercent: Double, musicRatio: Double,
       text: String)
+
+  /** A segment with its three reference metrics; the metric fields carry
+    * audioQuality's output column names. rms and clipping_percent are None
+    * for an empty slice outside ANSI mode, where SQL's division by zero
+    * gives NULL. */
+  private[graft] final case class MeasuredSegment(
+      originalName: String, startMs: Long, endMs: Long,
+      padStartMs: Long, padEndMs: Long,
+      samples: Array[Float], frameRate: Int,
+      rms: Option[Double], clipping_percent: Option[Double], music_ratio: Double)
 
   val TargetRate = 16000        // pa.py:89
   val MinRms = 250.0            // pa.py:25
@@ -98,22 +110,45 @@ object Pipeline {
     }
   }
 
-  /** O10-O13: audio metrics (RMS / clipping via codegen'd higher-order
-    * functions on the sample array; music-ratio DSP via UDF with the
-    * reference's -1.0 error sentinel) + the 4-predicate quality filter. */
-  def audioQuality(segments: Dataset[SegmentRow]): DataFrame = {
+  /** O10-O12: RMS, clipping and music ratio of every segment (pa.py:179-210)
+    * in one typed pass over its primitive sample array. The arithmetic order
+    * is that of the SQL forms rms = sqrt(Σ(x·32767)² / n) and clipping =
+    * 100.0 · count(|x| ≥ 0.98) / n, so the doubles are bit-identical to
+    * them. An empty slice divides by zero: under ANSI mode that raises
+    * DIVIDE_BY_ZERO, as the SQL division does; otherwise both are None.
+    * The music-ratio DSP keeps the reference's -1.0 error sentinel. */
+  private[graft] def measure(segments: Dataset[SegmentRow]): Dataset[MeasuredSegment] = {
     val spark = segments.sparkSession
-    val musicRatioUdf = udf { (samples: Seq[Float], rate: Int) =>
-      try Dsp.musicRatio(samples.toArray, rate)
-      catch { case _: Exception => -1.0 } // pa.py:208-210
+    import spark.implicits._
+    val ansi = spark.conf.get("spark.sql.ansi.enabled").toBoolean
+    segments.map { s =>
+      val x = s.samples
+      val n = x.length
+      var sumSq = 0.0
+      var clipped = 0
+      var i = 0
+      while (i < n) {
+        val v = x(i).toDouble * 32767.0
+        sumSq += v * v
+        if (math.abs(x(i).toDouble) >= 0.98) clipped += 1
+        i += 1
+      }
+      val (rms, clip) =
+        if (n > 0) (Some(math.sqrt(sumSq / n)), Some(100.0 * clipped / n))
+        else if (ansi) throw org.apache.spark.sql.graftbridge.ColumnBridge.divideByZeroError()
+        else (None, None)
+      val music =
+        try Dsp.musicRatio(x, s.frameRate)
+        catch { case _: Exception => -1.0 } // pa.py:208-210
+      MeasuredSegment(s.originalName, s.startMs, s.endMs, s.padStartMs, s.padEndMs,
+        x, s.frameRate, rms, clip, music)
     }
-    segments.toDF()
-      .withColumn("rms", sqrt(
-        expr("aggregate(samples, 0D, (a, x) -> a + (x * 32767D) * (x * 32767D))") /
-        size(col("samples"))))
-      .withColumn("clipping_percent",
-        lit(100.0) * size(expr("filter(samples, x -> abs(x) >= 0.98)")) / size(col("samples")))
-      .withColumn("music_ratio", musicRatioUdf(col("samples"), col("frameRate")))
+  }
+
+  /** O10-O13: the audio metrics of [[measure]] plus the AudioQc SNR columns,
+    * then the 4-predicate quality filter. */
+  def audioQuality(segments: Dataset[SegmentRow]): DataFrame = {
+    measure(segments).toDF()
       // SNR estimate (round-13 AudioQc): noise-floor / speech-level frame
       // energies + the dB view, surfaced as metadata for downstream
       // curation filters. NOT part of the quality predicate — the filter
@@ -163,12 +198,16 @@ object Pipeline {
     * segments dropped by the text filters are not compared, so survivors
     * separated by a dropped segment ARE adjacent. Both neighbors get the
     * flag (lag and lead). */
-  def textQualityAndOverlap(transcribed: Dataset[AsrRow]): DataFrame = {
-    val filtered = transcribed.toDF()
-      .filter(length(col("text")) > 0 &&
-              size(split(col("text"), "\\s+")) > 2 &&
-              col("text").rlike("[a-zA-Z]") &&
-              !graft.queries.TextOps.hallucinationMatch(lower(col("text"))))
+  def textQualityAndOverlap(transcribed: Dataset[AsrRow]): DataFrame =
+    overlapFlag(textFilter(transcribed.toDF()))
+
+  private def textFilter(transcribed: DataFrame): DataFrame =
+    transcribed.filter(length(col("text")) > 0 &&
+                       size(split(col("text"), "\\s+")) > 2 &&
+                       col("text").rlike("[a-zA-Z]") &&
+                       !graft.queries.TextOps.hallucinationMatch(lower(col("text"))))
+
+  private def overlapFlag(filtered: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("originalName")).orderBy(col("startMs"))
     val words = split(lower(col("text")), "\\s+")
     val firstWord = element_at(words, 1)
@@ -183,9 +222,14 @@ object Pipeline {
     * integer seconds (pa.py:339-343) — colliding names overwrite on disk and
     * dedup in the metadata, replicating the reference quirk (SURVEY §2.1).
     * Export failures null the path and the row is dropped (pa.py:348-352). */
-  def exportWavs(flagged: DataFrame, outDir: String): DataFrame = {
+  def exportWavs(flagged: DataFrame, outDir: String): DataFrame =
+    flagged.withColumn("wav_path", wavPath(outDir)).filter(col("wav_path").isNotNull)
+
+  /** Writes each row's segment WAV into `outDir`; the file's path, or null
+    * when the write fails. */
+  private def wavPath(outDir: String): Column = {
     val writeUdf = udf { (name: String, startMs: Long, endMs: Long,
-                          samples: Seq[Float], rate: Int) =>
+                          samples: Array[Float], rate: Int) =>
       val stem = name.lastIndexOf('.') match {
         case -1 => name
         case i  => name.substring(0, i)
@@ -193,17 +237,14 @@ object Pipeline {
       val fileName = f"${stem}_${startMs / 1000}%04ds_${endMs / 1000}%04ds.wav"
       try {
         val p = Paths.get(outDir, fileName)
-        Files.write(p, WavCodec.encodeMono16(samples.toArray, rate))
+        Files.write(p, WavCodec.encodeMono16(samples, rate))
         p.toString
       } catch { case _: Exception => null }
     }.asNondeterministic() // side-effecting: stop Catalyst from pushing the
                            // isNotNull filter below the projection and
                            // evaluating the write twice per row
-    flagged
-      .withColumn("wav_path",
-        writeUdf(col("originalName"), col("startMs"), col("endMs"),
-                 col("samples"), col("frameRate")))
-      .filter(col("wav_path").isNotNull)
+    writeUdf(col("originalName"), col("startMs"), col("endMs"),
+             col("samples"), col("frameRate"))
   }
 
   /** O23-O24: the metadata table — project the 7 reference columns plus a
@@ -225,21 +266,32 @@ object Pipeline {
         col("overlap_flag"))
   }
 
+  /** The stage chain `run`, `runCounted` and Streaming.audioIngest share,
+    * from decoded files to metadata rows. The export runs right after the
+    * text filters and the sample arrays are dropped before the overlap
+    * window, so no shuffle carries them; a failed export (null `wav_path`)
+    * still counts as a neighbour in the window and is dropped after it.
+    * `tap` sees the rows of each counted stage (segments, audio_pass,
+    * text_pass, exported) by name and returns them, e.g. observed. */
+  private[graft] def fromDecoded(decoded: Dataset[DecodedFile], outDir: String,
+      transcriberName: String,
+      tap: (String, DataFrame) => DataFrame = (_, df) => df): DataFrame = {
+    import decoded.sparkSession.implicits._
+    Files.createDirectories(Paths.get(outDir))
+    val segments = tap("segments", segmentFiles(decoded).toDF()).as[SegmentRow]
+    val audioOk = tap("audio_pass", audioQuality(segments))
+    val kept = tap("text_pass", textFilter(transcribe(audioOk, transcriberName).toDF()))
+    val exported = kept.withColumn("wav_path", wavPath(outDir)).drop("samples")
+    metadata(tap("exported", overlapFlag(exported).filter(col("wav_path").isNotNull)))
+  }
+
   /** run_pipeline equivalent (O25, pa.py:393-426). Returns the metadata
     * DataFrame; callers persist it (refresh semantics = overwrite mode,
     * pa.py:401). */
   def run(spark: SparkSession, wavDir: String, outDir: String,
           transcriberName: String = "stub",
-          glob: String = "*.wav"): DataFrame = {
-    Files.createDirectories(Paths.get(outDir))
-    val decoded = decodeWavDir(spark, wavDir, glob)
-    val segments = segmentFiles(decoded)
-    val audioOk = audioQuality(segments)
-    val withText = transcribe(audioOk, transcriberName)
-    val flagged = textQualityAndOverlap(withText)
-    val exported = exportWavs(flagged, outDir)
-    metadata(exported)
-  }
+          glob: String = "*.wav"): DataFrame =
+    fromDecoded(decodeWavDir(spark, wavDir, glob), outDir, transcriberName)
 
   /** O25's per-stage counters + end-of-run summary (pa.py:163, 237, 332,
     * 421-426) the Spark-native way: `observe()` metrics accumulate during the
@@ -248,26 +300,11 @@ object Pipeline {
     * (metadata rows, stage counters). */
   def runCounted(spark: SparkSession, wavDir: String, outDir: String,
                  transcriberName: String = "stub"): (Array[org.apache.spark.sql.Row], Map[String, Long]) = {
-    import org.apache.spark.sql.Observation
-    Files.createDirectories(Paths.get(outDir))
-    val oSeg = Observation("segments")
-    val oAudio = Observation("audio_pass")
-    val oText = Observation("text_pass")
-    val oFinal = Observation("exported")
-    val segments = segmentFiles(decodeWavDir(spark, wavDir)).toDF()
-      .observe(oSeg, count(lit(1)).as("n"))
-    val audioOk = audioQuality(segments.as[SegmentRow](org.apache.spark.sql.Encoders.product[SegmentRow]))
-      .observe(oAudio, count(lit(1)).as("n"))
-    val flagged = textQualityAndOverlap(transcribe(audioOk, transcriberName))
-      .observe(oText, count(lit(1)).as("n"))
-    val exported = exportWavs(flagged, outDir)
-    val rows = metadata(exported.observe(oFinal, count(lit(1)).as("n"))).collect()
-    val counters = Map(
-      "segments" -> oSeg.get("n").asInstanceOf[Long],
-      "audio_pass" -> oAudio.get("n").asInstanceOf[Long],
-      "text_pass" -> oText.get("n").asInstanceOf[Long],
-      "exported" -> oFinal.get("n").asInstanceOf[Long],
-      "metadata_rows" -> rows.length.toLong)
-    (rows, counters)
+    val observed = Seq("segments", "audio_pass", "text_pass", "exported")
+      .map(k => k -> Observation(k)).toMap
+    val rows = fromDecoded(decodeWavDir(spark, wavDir), outDir, transcriberName,
+      (k, df) => df.observe(observed(k), count(lit(1)).as("n"))).collect()
+    val counters = observed.map { case (k, o) => k -> o.get("n").asInstanceOf[Long] }
+    (rows, counters + ("metadata_rows" -> rows.length.toLong))
   }
 }

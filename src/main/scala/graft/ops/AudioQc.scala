@@ -13,14 +13,14 @@ import org.apache.spark.sql.functions._
   * noise), speech level = a high percentile; SNR ≈ speech/noise.
   *
   * Built ENTIRELY from Catalyst HOFs (`sequence`/`transform`/`slice`/
-  * `aggregate`/`array_sort`) — expression-codegen'd, no UDFs, per-row
-  * and shuffle-free (the hosting Project sits outside a WholeStage
-  * span, Spark's design for lambda expressions), so at 100 TB it runs
-  * at scan speed next to the decode, never an Exchange. All
-  * arithmetic is INTEGER (int16 sample domain, BIGINT
-  * energies, integer-division ratio) — exactly restatable cross-engine
-  * with zero float drift, which is what lets q328 gate it against a
-  * fully relational DuckDB oracle. */
+  * `aggregate`/`array_sort`) — no UDFs, per-row and shuffle-free, so it
+  * never adds an Exchange. It is not codegen'd: the lambda HOFs
+  * (ArrayTransform, ArrayAggregate) are CodegenFallback in Spark 4.1.2,
+  * interpreted element by element, and the hosting Project sits outside
+  * a WholeStage span. All arithmetic is INTEGER (int16 sample domain,
+  * BIGINT energies, integer-division ratio) — exactly restatable
+  * cross-engine with zero float drift, which is what lets q328 gate it
+  * against a fully relational DuckDB oracle. */
 object AudioQc {
 
   /** Per-frame energies Σ v² (array<bigint>) over non-overlapping

@@ -1179,7 +1179,7 @@ object PipelineQueries {
     * level (p90) by discrete selection; SNR is their INTEGER-division
     * ratio in parts-per-thousand. The whole operator is Catalyst HOFs
     * (sequence/transform/slice/aggregate/array_sort — zero UDFs,
-    * expression-codegen'd, per-row, shuffle-free), and the test
+    * per-row, shuffle-free; interpreted, not codegen'd), and the test
     * signal is synthesized IN the plan too (bursty speech frames at
     * ±16000 over a ±160 noise bed, all integer), so the DuckDB oracle
     * restates every step relationally — framing, energies, percentile

@@ -488,7 +488,7 @@ object Streaming {
   // Streaming ingest mode for the FULL audio pipeline (SURVEY §2.8 north
   // star): wav payloads arrive as a parquet stream of (path, content BINARY)
   // rows; each micro-batch runs the complete batch pipeline (decode →
-  // segment → metrics → filters → ASR → text/overlap → export) via
+  // segment → metrics → filters → ASR → text filter → export → overlap) via
   // foreachBatch and lands in the metadata table through the
   // INSERT-OR-IGNORE sink, so replayed/duplicate files dedup across batches.
   // Per-file semantics are exact: a file's payload is one row, so its
@@ -507,7 +507,6 @@ object Streaming {
                   metaPath: String, transcriberName: String = "stub",
                   queryName: String = "graft_audio_ingest")
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(wavOutDir))
     spark.readStream
       .schema(wavRowSchema)
       .parquet(streamDir)
@@ -515,13 +514,9 @@ object Streaming {
       .queryName(queryName)
       .outputMode("update")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val decoded = graft.Pipeline.decodeWavRows(batch.select(col("path"), col("content")))
-        val flagged = graft.Pipeline.textQualityAndOverlap(
-          graft.Pipeline.transcribe(
-            graft.Pipeline.audioQuality(graft.Pipeline.segmentFiles(decoded)),
-            transcriberName))
-        val meta = graft.Pipeline.metadata(
-          graft.Pipeline.exportWavs(flagged, wavOutDir)).drop("id")
+        val meta = graft.Pipeline.fromDecoded(
+          graft.Pipeline.decodeWavRows(batch.select(col("path"), col("content"))),
+          wavOutDir, transcriberName).drop("id")
         graft.io.Sinks.appendIgnore(spark, meta, metaPath,
           key = "wav_path", orderCols = Seq("original_name"))
         ()

@@ -2,11 +2,15 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.SparkThrowable
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ops.Inference
+import graft.ops.{Dsp, Inference}
 
 /** End-to-end audio pipeline tests over the deterministic fixture corpus
   * (SURVEY §5.4): which files produce which segments, which filter rejects
@@ -58,6 +62,70 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!ok.contains("bass_treble_music.wav"))  // music ratio ~4.6 > 2.0
     assert(ok == Set("long_utterance.wav", "tone_speechlike.wav",
                      "short_utterances.wav", "stereo_speech_441.wav"))
+  }
+
+  /** The Catalyst expressions the metrics were once computed with: the
+    * parity oracle for Pipeline.measure. */
+  private def catalystMetrics(segs: Dataset[Pipeline.SegmentRow]): DataFrame = {
+    val musicRatioUdf = udf { (samples: Seq[Float], rate: Int) =>
+      try Dsp.musicRatio(samples.toArray, rate)
+      catch { case _: Exception => -1.0 }
+    }
+    segs.toDF()
+      .withColumn("rms", sqrt(
+        expr("aggregate(samples, 0D, (a, x) -> a + (x * 32767D) * (x * 32767D))") /
+        size(col("samples"))))
+      .withColumn("clipping_percent",
+        lit(100.0) * size(expr("filter(samples, x -> abs(x) >= 0.98)")) / size(col("samples")))
+      .withColumn("music_ratio", musicRatioUdf(col("samples"), col("frameRate")))
+  }
+
+  private def condition(e: Throwable): Option[String] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).collectFirst {
+      case t: SparkThrowable if t.getCondition != null => t.getCondition
+    }
+
+  test("measure: rms / clipping / music ratio equal the Catalyst expressions exactly") {
+    val segs = Pipeline.segmentFiles(Pipeline.decodeWavDir(spark, wavDir))
+    val oracle = catalystMetrics(segs)
+    val typed = Pipeline.measure(segs)
+    assert(typed.schema.map(f => f.name -> f.dataType) ==
+      oracle.schema.map(f => f.name -> f.dataType))
+    val want = oracle.collect().map { r =>
+      (r.getAs[String]("originalName"), r.getAs[Long]("startMs")) ->
+        (r.getAs[Double]("rms"), r.getAs[Double]("clipping_percent"),
+         r.getAs[Double]("music_ratio"))
+    }.toMap
+    val got = typed.collect().map { m =>
+      (m.originalName, m.startMs) -> (m.rms.get, m.clipping_percent.get, m.music_ratio)
+    }.toMap
+    assert(want.size == 10)
+    // boxed Double equality: bit-exact, no tolerance
+    want.foreach { case (k, v) => assert(got(k) == v, s"segment $k") }
+    assert(got.keySet == want.keySet)
+  }
+
+  test("measure: an empty slice divides by zero like the Catalyst expressions, per ANSI mode") {
+    // ANSI is on by default in Spark 4, so the spec session takes the first branch
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    Seq(true, false).foreach { ansi =>
+      val s = spark.newSession()
+      s.conf.set("spark.sql.ansi.enabled", ansi.toString)
+      import s.implicits._
+      val empty = Seq(Pipeline.SegmentRow("e.wav", 0L, 0L, 0L, 0L,
+        Array.emptyFloatArray, Pipeline.TargetRate)).toDS()
+      if (ansi) {
+        Seq(catalystMetrics(empty), Pipeline.measure(empty).toDF()).foreach { df =>
+          assert(condition(intercept[Exception](df.collect())) == Some("DIVIDE_BY_ZERO"))
+        }
+      } else {
+        val o = catalystMetrics(empty).select("rms", "clipping_percent", "music_ratio").head()
+        val m = Pipeline.measure(empty).head()
+        assert(o.isNullAt(0) && o.isNullAt(1) && m.rms.isEmpty && m.clipping_percent.isEmpty)
+        assert(m.music_ratio == o.getDouble(2) && m.music_ratio == 0.0)
+        assert(Pipeline.audioQuality(empty).count() == 0) // NULL rms fails the filter
+      }
+    }
   }
 
   test("overlap flag: constant boundary words flag all adjacent pairs, post-filter") {
@@ -116,6 +184,43 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("run: no shuffle exchange carries the sample arrays") {
+    val df = Pipeline.run(spark, wavDir, base.resolve("out_plan").toString)
+    assert(df.collect().length == 4)
+    val exchanges = new AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeLike => e }
+    // the overlap window (by file) and the metadata dedup (by wav_path)
+    assert(exchanges.size == 2)
+    exchanges.foreach(e => assert(!e.output.exists(_.name == "samples"), e.toString))
+  }
+
+  test("run: a failed export drops only its row and still counts as a neighbour") {
+    val segs = Pipeline.segmentFiles(Pipeline.decodeWavDir(spark, wavDir)).collect()
+      .filter(_.originalName == "long_utterance.wav").sortBy(_.startMs)
+    // the middle segment alone links its neighbours: if it left the overlap
+    // window before the flags, the first and last would become adjacent and
+    // the last would be flagged
+    val texts = Seq("one two link", "link three four", "link five six")
+    val textOf = segs.map(s => java.util.Arrays.hashCode(s.samples)).zip(texts).toMap
+    assert(textOf.size == 3)
+    Inference.Transcribers.register("linked", () => new Inference.Transcriber {
+      def transcribe(b: Seq[Inference.AsrInput]): Seq[String] =
+        b.map(in => textOf.getOrElse(java.util.Arrays.hashCode(in.samples), "plain words here"))
+    })
+    def flags(out: String): Map[String, Boolean] =
+      Pipeline.run(spark, wavDir, out, "linked")
+        .filter(col("original_name") === "long_utterance.wav")
+        .select("wav_path", "overlap_flag").collect()
+        .map(r => Paths.get(r.getString(0)).getFileName.toString -> r.getBoolean(1)).toMap
+    val middle = "long_utterance_0015s_0030s.wav"
+    val ok = flags(base.resolve("out_export_ok").toString)
+    assert(ok == Map("long_utterance_0000s_0015s.wav" -> true, middle -> true,
+                     "long_utterance_0030s_0040s.wav" -> false))
+    val failDir = base.resolve("out_export_fail")
+    Files.createDirectories(failDir.resolve(middle)) // the write hits a directory
+    assert(flags(failDir.toString) == ok - middle)
+  }
+
   test("metadata dedup: colliding wav names keep the first writer") {
     import spark.implicits._
     val df = Seq(
@@ -155,7 +260,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("streaming audio ingest: two micro-batches converge to the batch-run metadata") {
-    import org.apache.spark.sql.functions.col
     val streamSrc = base.resolve("stream_src")
     val streamWavs = base.resolve("stream_wavs").toString
     val metaPath = base.resolve("stream_meta").toString

@@ -171,8 +171,8 @@ object Bench {
     // the timed pass then measures execution, not compiler latency (q24's
     // first-run cost was ~70% Janino/C2, round-4 profile). Nothing data-
     // sized survives into timing: no sf0.1 partition, shuffle output, or
-    // cached block exists yet, and the one memoized plan fragment (q24/q45's
-    // candidate cache) is keyed on the data dir and evicted on the switch.
+    // cached block exists yet, and the session memos (graft.core.SessionMemo)
+    // are keyed on the data dir and evicted on the switch.
     // Exception, documented in BASELINE.md: q30's audio fixture is
     // dir-independent, so its warmup run is full-size and its timed run
     // re-executes against an already-populated INSERT-OR-IGNORE sink
@@ -184,9 +184,10 @@ object Bench {
       }
     // min of N in-process repetitions (round-4 verdict: driver-machine
     // contention produced a phantom 2.1x gate breach; the min cuts that
-    // noise). Session-scoped memos (q24/q45 candidates, q25/q78 simhash)
-    // are evicted before EVERY rep so each rep pays the full computation —
-    // without the eviction the min would report a cache hit, not the query.
+    // noise). Every session-scoped memo (the graft.core.SessionMemo
+    // registry plus q345's index memo) is evicted before EVERY rep so each
+    // rep pays the full computation — without the eviction the min would
+    // report a cache hit, not the query.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
     val mins = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     for (_ <- 1 to reps) {

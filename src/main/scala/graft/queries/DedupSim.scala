@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{SessionMemo, Tables}
 
 /** Near-duplicate detection and similarity search — the LLM-data-pipeline
   * extension surface (SURVEY §2.9 north star): MinHash+LSH, SimHash, n-gram
@@ -31,70 +31,21 @@ object DedupSim {
     * are the signature group-by and the band-key self-join, both on
     * well-distributed md5-derived keys. */
   /** LSH candidate pairs are consumed by BOTH q24 (reported directly) and
-    * q45 (verified by exact Jaccard). Within one session the minhash
-    * pipeline is computed once and memoized per (session, dir). HOW it is
-    * reused is sized to the input:
-    *   - small input (≤ [[LocalCandidateInputBytes]] of documents parquet):
-    *     the pair set — a few dozen rows after banding — is collected once
-    *     and replayed as a LOCAL relation. A distributed persist here is a
-    *     measured pessimization: the MEMORY_AND_DISK materialization adds a
-    *     stage boundary that breaks whole-stage pipelining and costs more
-    *     than the shingle recompute it saves (round-2 bench: q24 1.86→4.15 s
-    *     with the persist; the local relation removes that while keeping
-    *     q45's reuse win).
-    *   - large input (the 100 TB shape, or any non-local filesystem): the
-    *     candidate set can itself be huge, so the distributed plan is
-    *     persisted MEMORY_AND_DISK — recomputing the full minhash pass
-    *     twice would dominate, and collecting is out of the question.
-    * Entries of stopped sessions are evicted on access, and a live session
-    * keeps AT MOST ONE dir cached (switching dirs unpersists the previous
-    * entry), so long-lived sessions scanning many dirs don't accumulate
-    * pinned blocks. Callers that rewrite the files under `dir` mid-session
-    * must call `invalidateCandidates`, the standard cache-coherence
-    * contract. */
-  private val candCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  /** Documents-input size below which candidates are replayed as a local
-    * relation instead of a persisted distributed plan (see candCache doc). */
-  private val LocalCandidateInputBytes = 256L * 1024 * 1024
-
-  /** Hard cap on the collected candidate set (round-3 advice: the input-bytes
-    * gate alone doesn't bound pair cardinality — a dup-heavy corpus under
-    * 256 MB can band-join to O(N²) pairs). The collect fetches at most
-    * cap+1 rows; on overflow the distributed persist path is used instead,
-    * so the driver materialization is bounded regardless of dup structure.
-    * Overridable via system property only so ScaleSpec can drive the
-    * overflow branch without a pathological fixture. */
-  private def localCandidateMaxPairs: Int =
-    sys.props.get("graft.test.localCandidateMaxPairs").map(_.toInt).getOrElse(100000)
-
-  /** Total bytes under `path` (0 if absent / not a local path — callers
-    * treat that conservatively as "large"). */
-  private def localInputBytes(path: String): Long = {
-    def walk(f: java.io.File): Long =
-      if (f.isDirectory) Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
-      else f.length()
-    walk(new java.io.File(path))
-  }
-
-  /** Drop (and unpersist) the cached candidates for `dir` in this session. */
-  def invalidateCandidates(s: SparkSession, d: String): Unit = {
-    val old = candCache.remove((s, d))
-    if (old != null && !s.sparkContext.isStopped) old.unpersist()
-  }
+    * q45 (verified by exact Jaccard), so the minhash pipeline runs once per
+    * (session, dir) through [[graft.core.SessionMemo]]. At small input the
+    * pair set (a few dozen rows after banding) replays as a local relation:
+    * a distributed persist there was a measured pessimization (round-2
+    * bench: q24 1.86→4.15 s with the persist). Callers that rewrite the
+    * files under `dir` mid-session must call [[invalidateSessionCaches]],
+    * the standard cache-coherence contract. */
+  private def lshCandidates(s: SparkSession, d: String): DataFrame =
+    SessionMemo.replayed(s, d, "lsh_candidates")(candidatePairs(s, d))
 
   /** Evict every session-scoped memo for `dir` — Bench calls this between
     * repetitions so each timed rep pays the full computation instead of a
     * cache hit. */
   def invalidateSessionCaches(s: SparkSession, d: String): Unit = {
-    invalidateCandidates(s, d)
-    val sig = sigCache.remove((s, d))
-    if (sig != null && !s.sparkContext.isStopped) sig.unpersist()
-    val sp = spanCache.remove((s, d))
-    if (sp != null && !s.sparkContext.isStopped) sp.unpersist()
-    val shc = shCache.remove((s, d))
-    if (shc != null && !s.sparkContext.isStopped) shc.unpersist()
+    SessionMemo.evict(s, d)
     // q345's one-time-build index memo (r17 verdict item 4): evicted per
     // bench rep like every other session memo, so min-of-reps times the
     // BUILD + serve path, not the amortized serve — the bench number is
@@ -105,39 +56,6 @@ object DedupSim {
       if (hit) graft.io.FsUtil.deleteRecursively(new java.io.File(e.getValue._1))
       hit
     }
-    // TextOps' session memos (r18: chunk bands/pairs, q360 decisions)
-    // evict through the same single entry point
-    graft.queries.TextOps.invalidateSessionCaches(s, d)
-  }
-
-  private def lshCandidates(s: SparkSession, d: String): DataFrame = {
-    candCache.entrySet().removeIf { e =>
-      val dead = e.getKey._1.sparkContext.isStopped
-      // bound the cache: one dir per live session — a session moving to a
-      // new dir releases the previous entry's storage (unpersist is a no-op
-      // on the local-relation variant)
-      val stale = !dead && (e.getKey._1 eq s) && e.getKey._2 != d
-      if (stale) e.getValue.unpersist()
-      dead || stale
-    }
-    candCache.computeIfAbsent((s, d), { key =>
-      val pairs = candidatePairs(key._1, key._2)
-      val bytes = localInputBytes(s"${key._2}/documents.parquet")
-      if (bytes > 0 && bytes <= LocalCandidateInputBytes) {
-        import scala.jdk.CollectionConverters._
-        // bounded collect: cap+1 rows at most come back to the driver; an
-        // overflow means the pair set is join-amplified beyond what a local
-        // replay should hold, so fall back to the distributed persist
-        val cap = localCandidateMaxPairs
-        val head = pairs.limit(cap + 1).collect()
-        if (head.length <= cap)
-          key._1.createDataFrame(head.toSeq.asJava, pairs.schema)
-        else
-          pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      } else {
-        pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      }
-    })
   }
 
   /** The distributed candidate-pair plan (no cache). `private[graft]` so
@@ -258,46 +176,15 @@ object DedupSim {
     .map(j => when(col(s"v$j") > 0, lit(1L << j)).otherwise(lit(0L)))
     .reduce(_ + _)
 
-  /** Session-scoped memo of the signature table (doc_id, simhash, n_toks) —
-    * q25 (signature view) and q78 (Hamming near-dup join) both consume it,
-    * so the 60-sum vote aggregation over the token explosion runs ONCE per
-    * (session, dir) instead of once per query (round-4 verdict #8: the vote
-    * pass was ~half of the board's heaviest query when both run in-session).
-    * Same bounded strategy as [[candCache]]: small inputs collect at most
-    * cap+1 rows (signature cardinality = document count, one row per doc)
-    * and replay as a local relation; anything larger — or an overflow —
-    * persists the distributed plan MEMORY_AND_DISK. One dir per live
-    * session; evicted by [[invalidateSessionCaches]]. */
-  private val sigCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  private def localSigMaxRows: Int =
-    sys.props.get("graft.test.localSigMaxRows").map(_.toInt).getOrElse(100000)
-
-  private def simhashSignatures(s: SparkSession, d: String): DataFrame = {
-    sigCache.entrySet().removeIf { e =>
-      val dead = e.getKey._1.sparkContext.isStopped
-      val stale = !dead && (e.getKey._1 eq s) && e.getKey._2 != d
-      if (stale) e.getValue.unpersist()
-      dead || stale
-    }
-    sigCache.computeIfAbsent((s, d), { key =>
-      val sig = simhashVotes(key._1, key._2)
-        .select(col("doc_id"), simhashFromVotes.as("simhash"), col("n_toks"))
-      val bytes = localInputBytes(s"${key._2}/documents.parquet")
-      if (bytes > 0 && bytes <= LocalCandidateInputBytes) {
-        import scala.jdk.CollectionConverters._
-        val cap = localSigMaxRows
-        val head = sig.limit(cap + 1).collect()
-        if (head.length <= cap)
-          key._1.createDataFrame(head.toSeq.asJava, sig.schema)
-        else
-          sig.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      } else {
-        sig.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      }
-    })
-  }
+  /** Session-scoped memo of the signature table (doc_id, simhash, n_toks)
+    * through [[graft.core.SessionMemo]] — q25 (signature view) and q78
+    * (Hamming near-dup join) both consume it, so the 60-sum vote
+    * aggregation over the token explosion runs ONCE per (session, dir)
+    * instead of once per query (round-4 verdict #8: the vote pass was ~half
+    * of the board's heaviest query when both run in-session). */
+  private def simhashSignatures(s: SparkSession, d: String): DataFrame =
+    SessionMemo.replayed(s, d, "simhash_signatures")(simhashVotes(s, d)
+      .select(col("doc_id"), simhashFromVotes.as("simhash"), col("n_toks")))
 
   def q25(s: SparkSession, d: String): DataFrame =
     simhashSignatures(s, d)
@@ -1109,45 +996,38 @@ object DedupSim {
     *
     * Oracle: DuckDB recursive CTE computing the transitive closure with
     * UNION set-semantics (terminates on cycles), then min per source. */
-  /** Edge-count cap below which components are solved by a driver-side
-    * union-find over the collected (bounded) edge list — one Spark job
-    * instead of O(log n)×4 sequential jobs whose launch overhead dominates
-    * at small edge counts. Same size-guard pattern as the q24 candidate
-    * cache; overridable via system property so ScaleSpec can drive the
-    * distributed path. */
-  private def localComponentMaxEdges: Int =
-    sys.props.get("graft.test.localComponentMaxEdges").map(_.toInt).getOrElse(100000)
-
   /** Connected-component labels for an undirected edge list `pairs`
     * (colnames irrelevant; two LONG endpoint columns). Returns one row per
     * edge-touched node: (edge_doc, label) with label = min node id of the
-    * component. Size-guarded: driver union-find under
-    * [[localComponentMaxEdges]], else distributed large-star/small-star.
-    * Exposed private[graft] so ScaleSpec can feed adversarial synthetic
-    * graphs (e.g. a >15-diameter chain) straight into either path. */
-  private[graft] def componentLabels(s: SparkSession, pairs: DataFrame): DataFrame = {
-    val cap = localComponentMaxEdges
-    val head = pairs.limit(cap + 1).collect()
-    if (head.length <= cap) {
-      // driver union-find with path compression; linking the larger root
-      // under the smaller keeps every root the component's min doc_id
-      val parent = scala.collection.mutable.LongMap.empty[Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      head.foreach { row =>
-        val (ra, rb) = (find(row.getLong(0)), find(row.getLong(1)))
-        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
-      }
-      val nodes = head.flatMap(r => Seq(r.getLong(0), r.getLong(1))).distinct
-      import s.implicits._
-      nodes.map(n => (n, find(n))).toSeq.toDF("edge_doc", "label")
-    } else distributedComponentLabels(s, pairs)
-  }
+    * component. Size-guarded: an edge list that fits
+    * [[graft.core.SessionMemo.boundedCollect]] is solved by a driver-side
+    * union-find — one Spark job instead of O(log n)×4 sequential jobs whose
+    * launch overhead dominates at small edge counts — else distributed
+    * large-star/small-star. Exposed private[graft] so ScaleSpec can feed
+    * adversarial synthetic graphs (e.g. a >15-diameter chain) straight
+    * into either path. */
+  private[graft] def componentLabels(s: SparkSession, pairs: DataFrame): DataFrame =
+    SessionMemo.boundedCollect(pairs) match {
+      case Some(head) =>
+        // driver union-find with path compression; linking the larger root
+        // under the smaller keeps every root the component's min doc_id
+        val parent = scala.collection.mutable.LongMap.empty[Long]
+        def find(x: Long): Long = {
+          var r = x
+          while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+          var c = x
+          while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+          r
+        }
+        head.foreach { row =>
+          val (ra, rb) = (find(row.getLong(0)), find(row.getLong(1)))
+          if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+        }
+        val nodes = head.flatMap(r => Seq(r.getLong(0), r.getLong(1))).distinct
+        import s.implicits._
+        nodes.map(n => (n, find(n))).toSeq.toDF("edge_doc", "label")
+      case None => distributedComponentLabels(s, pairs)
+    }
 
   /** Large-star/small-star alternation (Kiveris et al., "Connected
     * Components in MapReduce and Beyond"): each round is two
@@ -1488,40 +1368,11 @@ object DedupSim {
 
   /** The span table is consumed by THREE board entries (q80 reports it,
     * q86 reduces it to coverage, q92 strips it from the corpus) — memoized
-    * per (session, dir) with the [[candCache]] bounded strategy: span
+    * per (session, dir) through [[graft.core.SessionMemo]]; span
     * cardinality is hit-pair-sized (tiny vs the corpus), so small inputs
-    * replay a bounded collect as a local relation and anything larger (or
-    * a cap overflow) persists the distributed plan. Evicted by
-    * [[invalidateSessionCaches]]. */
-  private val spanCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  private def localSpanMaxRows: Int =
-    sys.props.get("graft.test.localSpanMaxRows").map(_.toInt).getOrElse(100000)
-
-  private def spansCached(s: SparkSession, d: String): DataFrame = {
-    spanCache.entrySet().removeIf { e =>
-      val dead = e.getKey._1.sparkContext.isStopped
-      val stale = !dead && (e.getKey._1 eq s) && e.getKey._2 != d
-      if (stale) e.getValue.unpersist()
-      dead || stale
-    }
-    spanCache.computeIfAbsent((s, d), { key =>
-      val spans = substringSpans(key._1, key._2)
-      val bytes = localInputBytes(s"${key._2}/documents.parquet")
-      if (bytes > 0 && bytes <= LocalCandidateInputBytes) {
-        import scala.jdk.CollectionConverters._
-        val cap = localSpanMaxRows
-        val head = spans.limit(cap + 1).collect()
-        if (head.length <= cap)
-          key._1.createDataFrame(head.toSeq.asJava, spans.schema)
-        else
-          spans.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      } else {
-        spans.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      }
-    })
-  }
+    * replay it as a local relation. */
+  private def spansCached(s: SparkSession, d: String): DataFrame =
+    SessionMemo.replayed(s, d, "substring_spans")(substringSpans(s, d))
 
   /** The unordered span table — the distributed plan (no cache).
     * `private[graft]` so tools.PlanCheck audits THIS shape directly: the
@@ -2173,83 +2024,76 @@ object DedupSim {
     boundedBfs(s, q45(s, d).select(col("doc_a"), col("doc_b")),
       maxHops = 3, nSources = 5)
 
-  /** Edge-count cap below which the bounded BFS runs as a driver-side
-    * adjacency walk over the collected (bounded) edge list — r18, the
-    * [[componentLabels]] size-guard discipline: the distributed frontier
-    * form costs hops × (join + distinct + anti-join + eager checkpoint)
-    * sequential jobs whose launch overhead dominates at small edge counts
-    * (measured: q172 ~35 jobs, 1.6-2.0 s for a hit-pair-sized graph).
-    * Overridable via system property so the spec drives both paths. */
-  private def localBfsMaxEdges: Int =
-    sys.props.get("graft.test.localBfsMaxEdges").map(_.toInt).getOrElse(100000)
-
   /** Min-hop BFS within `maxHops` from the `nSources` smallest
     * edge-touched nodes of the undirected edge list `pairs` (two LONG
-    * endpoint columns). Size-guarded: driver adjacency walk under
-    * [[localBfsMaxEdges]], else the iterative frontier form (ONE
-    * equi-join per hop + visited anti-join — the at-scale shape; the
-    * driver path is exactly its fixpoint on a collected graph). */
+    * endpoint columns). Size-guarded like [[componentLabels]]: an edge list
+    * that fits [[graft.core.SessionMemo.boundedCollect]] runs as a driver
+    * adjacency walk, since the distributed frontier form costs hops ×
+    * (join + distinct + anti-join + eager checkpoint) sequential jobs whose
+    * launch overhead dominates at small edge counts (measured: q172 ~35
+    * jobs, 1.6-2.0 s for a hit-pair-sized graph); else the iterative
+    * frontier form (ONE equi-join per hop + visited anti-join — the
+    * at-scale shape; the driver path is exactly its fixpoint on a
+    * collected graph). */
   private[graft] def boundedBfs(s: SparkSession, pairs: DataFrame,
-                                maxHops: Int, nSources: Int): DataFrame = {
-    val cap = localBfsMaxEdges
-    val head = pairs.limit(cap + 1).collect()
-    if (head.length <= cap) {
-      import s.implicits._
-      val adj = scala.collection.mutable.LongMap
-        .empty[scala.collection.mutable.ArrayBuffer[Long]]
-      def add(a: Long, b: Long): Unit =
-        adj.getOrElseUpdate(a, scala.collection.mutable.ArrayBuffer.empty) += b
-      head.foreach { r =>
-        val (a, b) = (r.getLong(0), r.getLong(1)); add(a, b); add(b, a)
-      }
-      val srcs = adj.keysIterator.toArray.sorted.take(nSources)
-      val out = Vector.newBuilder[(Long, Long, Long)]
-      srcs.foreach { src =>
-        val dist = scala.collection.mutable.LongMap.empty[Long]
-        dist(src) = 0L
-        var frontier: Array[Long] = Array(src)
-        var h = 1L
-        while (h <= maxHops && frontier.nonEmpty) {
-          val nxt = scala.collection.mutable.ArrayBuffer.empty[Long]
-          frontier.foreach { n =>
-            adj.getOrElse(n, scala.collection.mutable.ArrayBuffer.empty)
-              .foreach { m => if (!dist.contains(m)) { dist(m) = h; nxt += m } }
+                                maxHops: Int, nSources: Int): DataFrame =
+    SessionMemo.boundedCollect(pairs) match {
+      case Some(head) =>
+        import s.implicits._
+        val adj = scala.collection.mutable.LongMap
+          .empty[scala.collection.mutable.ArrayBuffer[Long]]
+        def add(a: Long, b: Long): Unit =
+          adj.getOrElseUpdate(a, scala.collection.mutable.ArrayBuffer.empty) += b
+        head.foreach { r =>
+          val (a, b) = (r.getLong(0), r.getLong(1)); add(a, b); add(b, a)
+        }
+        val srcs = adj.keysIterator.toArray.sorted.take(nSources)
+        val out = Vector.newBuilder[(Long, Long, Long)]
+        srcs.foreach { src =>
+          val dist = scala.collection.mutable.LongMap.empty[Long]
+          dist(src) = 0L
+          var frontier: Array[Long] = Array(src)
+          var h = 1L
+          while (h <= maxHops && frontier.nonEmpty) {
+            val nxt = scala.collection.mutable.ArrayBuffer.empty[Long]
+            frontier.foreach { n =>
+              adj.getOrElse(n, scala.collection.mutable.ArrayBuffer.empty)
+                .foreach { m => if (!dist.contains(m)) { dist(m) = h; nxt += m } }
+            }
+            frontier = nxt.toArray
+            h += 1
           }
-          frontier = nxt.toArray
-          h += 1
+          dist.foreach { case (n, hh) => out += ((src, n, hh)) }
         }
-        dist.foreach { case (n, hh) => out += ((src, n, hh)) }
-      }
-      out.result().toDF("src", "doc_id", "hops")
-        .orderBy(col("src"), col("doc_id"))
-    } else {
-      val e = pairs.select(col("doc_a").as("es"), col("doc_b").as("et"))
-        .unionAll(pairs.select(col("doc_b").as("es"), col("doc_a").as("et")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val srcs = e.select(col("es").as("n")).distinct()
-          .orderBy(col("n")).limit(nSources)
-          .select(col("n").as("src"))
-        var levels = srcs.select(col("src"), col("src").as("doc_id"),
-          lit(0L).as("hops"))
-        var frontier = levels
-        for (h <- 1 to maxHops) {
-          val nxt = frontier.join(e, col("doc_id") === col("es"))
-            .select(col("src"), col("et").as("doc_id")).distinct()
-            .join(levels.select(col("src"), col("doc_id")), Seq("src", "doc_id"),
-              "left_anti")
-            .select(col("src"), col("doc_id"), lit(h.toLong).as("hops"))
-            // cut the iterative lineage per hop — at depth k the unchecked
-            // plan is exponential in k for the optimizer even when the data
-            // is tiny
-            .localCheckpoint(true)
-          levels = levels.unionAll(nxt)
-          frontier = nxt
-        }
-        levels.orderBy(col("src"), col("doc_id"))
-      } finally { e.unpersist(); () }
+        out.result().toDF("src", "doc_id", "hops")
+          .orderBy(col("src"), col("doc_id"))
+      case None =>
+        val e = pairs.select(col("doc_a").as("es"), col("doc_b").as("et"))
+          .unionAll(pairs.select(col("doc_b").as("es"), col("doc_a").as("et")))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          val srcs = e.select(col("es").as("n")).distinct()
+            .orderBy(col("n")).limit(nSources)
+            .select(col("n").as("src"))
+          var levels = srcs.select(col("src"), col("src").as("doc_id"),
+            lit(0L).as("hops"))
+          var frontier = levels
+          for (h <- 1 to maxHops) {
+            val nxt = frontier.join(e, col("doc_id") === col("es"))
+              .select(col("src"), col("et").as("doc_id")).distinct()
+              .join(levels.select(col("src"), col("doc_id")), Seq("src", "doc_id"),
+                "left_anti")
+              .select(col("src"), col("doc_id"), lit(h.toLong).as("hops"))
+              // cut the iterative lineage per hop — at depth k the unchecked
+              // plan is exponential in k for the optimizer even when the data
+              // is tiny
+              .localCheckpoint(true)
+            levels = levels.unionAll(nxt)
+            frontier = nxt
+          }
+          levels.orderBy(col("src"), col("doc_id"))
+        } finally { e.unpersist(); () }
     }
-  }
   val q172Sql: String = {
     val pairs = q45Sql.replace("ORDER BY doc_a, doc_b", "")
     s"""WITH RECURSIVE pr AS ($pairs),
@@ -2412,23 +2256,11 @@ object DedupSim {
 
   /** Session-scoped memo of the shingle-array table — AQE does not reuse
     * multi-consumer subtrees (BASELINE.md round-5 note), so without the
-    * memo every one of q128's five consumers pays the shingle pass. Same
-    * bounded strategy and eviction as [[sigCache]]. */
-  private val shCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-
-  private def shingleArrays(s: SparkSession, d: String): DataFrame = {
-    shCache.entrySet().removeIf { e =>
-      val dead = e.getKey._1.sparkContext.isStopped
-      val stale = !dead && (e.getKey._1 eq s) && e.getKey._2 != d
-      if (stale) e.getValue.unpersist()
-      dead || stale
-    }
-    shCache.computeIfAbsent((s, d), { key =>
-      shingleArrayPlan(key._1, key._2)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
-  }
+    * memo every one of q128's five consumers pays the shingle pass. Always
+    * persisted through [[graft.core.SessionMemo.persisted]]: a local
+    * relation would lose the doc_id repartition the consumers ride. */
+  private def shingleArrays(s: SparkSession, d: String): DataFrame =
+    SessionMemo.persisted(s, d, "shingle_arrays")(shingleArrayPlan(s, d))
 
   /** Exploded (doc_id, sz, term) view of a shingle-array table — sz rides
     * along from the array, replacing the old per-doc COUNT window. */

@@ -160,22 +160,8 @@ class LlmOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("span memo: overflow past the row cap falls back to persist") {
-    val q80 = graft.SparkEntry.queries("q80_substring_spans")
-    graft.queries.DedupSim.invalidateSessionCaches(spark, d)
-    val localRows = q80(spark, d).collect()
-    // cap 0: any non-empty span set overflows the bounded collect and the
-    // distributed plan is persisted instead of replayed locally
-    sys.props("graft.test.localSpanMaxRows") = "0"
-    try {
-      graft.queries.DedupSim.invalidateSessionCaches(spark, d)
-      val persistedDf = q80(spark, d)
-      assert(persistedDf.collect().map(_.toSeq).toSeq == localRows.map(_.toSeq).toSeq)
-      assert(persistedDf.queryExecution.executedPlan.toString
-        .contains("InMemoryTableScan"))
-    } finally {
-      sys.props.remove("graft.test.localSpanMaxRows")
-      graft.queries.DedupSim.invalidateSessionCaches(spark, d)
-    }
+    MemoOverflow.assertFallsBackToPersist(spark, d,
+      "substring_spans", Seq("q80_substring_spans", "q86_dup_token_coverage"))
   }
 
   test("q97/q98: order-sensitive folds are partitioning-invariant") {

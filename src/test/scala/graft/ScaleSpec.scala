@@ -32,48 +32,75 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("q24 candidate cache: overflow past the pair cap falls back to persist") {
-    val d = "/root/testdata/sf0.001"
-    val q24 = graft.SparkEntry.queries("q24_minhash_lsh_pairs")
-    // baseline: local-relation replay path (cap well above the pair count)
-    graft.queries.DedupSim.invalidateCandidates(spark, d)
-    val localRows = q24(spark, d).collect()
-    // force the overflow branch: cap of 0 pairs means any candidate set
-    // overflows the bounded collect and the distributed plan is persisted
-    sys.props("graft.test.localCandidateMaxPairs") = "0"
-    try {
-      graft.queries.DedupSim.invalidateCandidates(spark, d)
-      val persistedDf = q24(spark, d)
-      val persistedRows = persistedDf.collect()
-      // identical results through either cache strategy
-      assert(persistedRows.map(_.toSeq).toSeq == localRows.map(_.toSeq).toSeq)
-      // and the fallback really is the persisted distributed plan, not a
-      // re-collected local relation
-      assert(persistedDf.queryExecution.executedPlan.toString
-        .contains("InMemoryTableScan"))
-    } finally {
-      sys.props.remove("graft.test.localCandidateMaxPairs")
-      graft.queries.DedupSim.invalidateCandidates(spark, d)
-    }
+    MemoOverflow.assertFallsBackToPersist(spark, "/root/testdata/sf0.001",
+      "lsh_candidates", Seq("q24_minhash_lsh_pairs", "q45_minhash_jaccard_verified"))
   }
 
   test("q25/q78 signature memo: overflow past the row cap falls back to persist") {
+    MemoOverflow.assertFallsBackToPersist(spark, "/root/testdata/sf0.001",
+      "simhash_signatures", Seq("q25_simhash", "q78_simhash_neardup"))
+  }
+
+  test("chunk and decision memos: overflow past the row cap falls back to persist") {
     val d = "/root/testdata/sf0.001"
-    val q25 = graft.SparkEntry.queries("q25_simhash")
-    val q78 = graft.SparkEntry.queries("q78_simhash_neardup")
-    graft.queries.DedupSim.invalidateSessionCaches(spark, d)
-    val local25 = q25(spark, d).collect().map(_.toSeq).toSeq
-    val local78 = q78(spark, d).collect().map(_.toSeq).toSeq
-    sys.props("graft.test.localSigMaxRows") = "0" // any signature set overflows
+    MemoOverflow.assertFallsBackToPersist(spark, d, "chunk_bands+chunk_pairs",
+      Seq("q357_chunk_minhash_neardup", "q368_neardup_decontamination"))
+    MemoOverflow.assertFallsBackToPersist(spark, d, "decisions",
+      Seq("q360_curation_composite", "q363_curation_yield"))
+  }
+
+  test("session memo: eviction by (session, dir), by a dir switch, and per session") {
+    import graft.core.SessionMemo
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val d = "/root/testdata/sf0.001"
+    val d2 = "/root/testdata/sf0.01"
+    val other = spark.newSession()
+    def q(name: String, s: SparkSession, dir: String) =
+      graft.SparkEntry.queries(name)(s, dir).collect()
+    def cachedRdds(s: SparkSession, dir: String): Map[String, Seq[Int]] =
+      SessionMemo.entries(s, dir).map { case (kind, df) =>
+        kind -> df.queryExecution.withCachedData.collect {
+          case r: InMemoryRelation => r.cacheBuilder.cachedColumnBuffers.id
+        }
+      }
+    def persistent = spark.sparkContext.getPersistentRDDs.keySet
     try {
+      // one consumer per memo kind; q361 builds the chunk pairs while
+      // resolving the chunk bands, the nested build. Cap 0 persists every
+      // kind, so each entry owns an RDD the eviction must release.
+      SessionMemo.withLocalRowCap(0) {
+        Seq("q24_minhash_lsh_pairs", "q25_simhash", "q80_substring_spans",
+          "q128_prefix_jaccard_join", "q361_chunk_dedup_clusters",
+          "q360_curation_composite").foreach(q(_, spark, d))
+      }
+      val rdds = cachedRdds(spark, d)
+      assert(rdds.keySet == Set("lsh_candidates", "simhash_signatures",
+        "substring_spans", "shingle_arrays", "chunk_bands", "chunk_pairs",
+        "decisions"))
+      assert(rdds.values.forall(_.nonEmpty), s"unpersisted memo: $rdds")
+      assert(rdds.values.flatten.forall(persistent.contains))
+      q("q25_simhash", other, d)
+      assert(SessionMemo.entries(other, d).keySet == Set("simhash_signatures"))
+
       graft.queries.DedupSim.invalidateSessionCaches(spark, d)
-      val df25 = q25(spark, d)
-      assert(df25.collect().map(_.toSeq).toSeq == local25)
-      assert(q78(spark, d).collect().map(_.toSeq).toSeq == local78)
-      // the fallback really is the persisted distributed plan
-      assert(df25.queryExecution.executedPlan.toString.contains("InMemoryTableScan"))
+      assert(SessionMemo.entries(spark, d).isEmpty)
+      assert(rdds.values.flatten.forall(!persistent.contains(_)))
+      // another session's entries survive the eviction
+      assert(SessionMemo.entries(other, d).keySet == Set("simhash_signatures"))
+
+      // a memo call on a second dir releases every entry of the first
+      SessionMemo.withLocalRowCap(0)(q("q24_minhash_lsh_pairs", spark, d))
+      val candRdds = cachedRdds(spark, d).values.flatten
+      assert(candRdds.nonEmpty && candRdds.forall(persistent.contains))
+      q("q25_simhash", spark, d2)
+      assert(SessionMemo.entries(spark, d).isEmpty)
+      assert(candRdds.forall(!persistent.contains(_)))
+      assert(SessionMemo.entries(spark, d2).keySet == Set("simhash_signatures"))
+      assert(SessionMemo.entries(other, d).keySet == Set("simhash_signatures"))
     } finally {
-      sys.props.remove("graft.test.localSigMaxRows")
       graft.queries.DedupSim.invalidateSessionCaches(spark, d)
+      graft.queries.DedupSim.invalidateSessionCaches(spark, d2)
+      graft.queries.DedupSim.invalidateSessionCaches(other, d)
     }
   }
 
@@ -81,22 +108,20 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     val d = "/root/testdata/sf0.001"
     val q79 = graft.SparkEntry.queries("q79_dedup_clusters")
     val local = q79(spark, d).collect().map(_.toSeq).toSeq
-    sys.props("graft.test.localComponentMaxEdges") = "0" // force distributed path
-    try {
-      val dist = q79(spark, d).collect().map(_.toSeq).toSeq
-      assert(dist == local, "both component paths must reach the same fixpoint")
-    } finally sys.props.remove("graft.test.localComponentMaxEdges")
+    // cap 0 forces the distributed path
+    val dist = graft.core.SessionMemo.withLocalRowCap(0)(
+      q79(spark, d).collect().map(_.toSeq).toSeq)
+    assert(dist == local, "both component paths must reach the same fixpoint")
   }
 
   test("q172 bounded BFS: distributed frontier form equals driver adjacency walk") {
     val d = "/root/testdata/sf0.001"
     val q172 = graft.SparkEntry.queries("q172_bounded_bfs")
     val local = q172(spark, d).collect().map(_.toSeq).toSeq
-    sys.props("graft.test.localBfsMaxEdges") = "0" // force distributed path
-    try {
-      val dist = q172(spark, d).collect().map(_.toSeq).toSeq
-      assert(dist == local, "both BFS paths must produce the same min-hop levels")
-    } finally sys.props.remove("graft.test.localBfsMaxEdges")
+    // cap 0 forces the distributed path
+    val dist = graft.core.SessionMemo.withLocalRowCap(0)(
+      q172(spark, d).collect().map(_.toSeq).toSeq)
+    assert(dist == local, "both BFS paths must produce the same min-hop levels")
   }
 
   test("bounded BFS driver walk: min hops on a branched graph, horizon cut at maxHops") {
@@ -126,15 +151,14 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     val chain = (100L until 140L).map(i => (i, i + 1))
     val clique = Seq((7L, 8L), (8L, 9L), (7L, 9L))
     val edges = (chain ++ clique).toDF("a", "b")
-    sys.props("graft.test.localComponentMaxEdges") = "0" // force distributed path
-    try {
-      val labels = graft.queries.DedupSim.componentLabels(spark, edges)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert((100L to 140L).forall(labels(_) == 100L),
-        s"chain nodes must all label 100, got ${labels.view.filterKeys(_ >= 100L).toMap}")
-      assert(Seq(7L, 8L, 9L).forall(labels(_) == 7L))
-      assert(labels.size == 44)
-    } finally sys.props.remove("graft.test.localComponentMaxEdges")
+    // cap 0 forces the distributed path
+    val labels = graft.core.SessionMemo.withLocalRowCap(0)(
+      graft.queries.DedupSim.componentLabels(spark, edges)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    assert((100L to 140L).forall(labels(_) == 100L),
+      s"chain nodes must all label 100, got ${labels.view.filterKeys(_ >= 100L).toMap}")
+    assert(Seq(7L, 8L, 9L).forall(labels(_) == 7L))
+    assert(labels.size == 44)
   }
 
   test("bucketed tables join without a shuffle (co-located join)") {

@@ -7,8 +7,8 @@ import org.apache.spark.storage.StorageLevel
   * consume within one session: MinHash/LSH candidates (q24/q45), SimHash
   * signatures (q25/q78), substring spans (q80/q86/q92), shingle arrays
   * (q128), corpus chunk bands and pairs (q357/q361/q368) and the q360
-  * decision table (q360/q363/q370/q372). The one policy every memo follows
-  * lives here:
+  * decision table (q360/q363/q365/q370/q372). The one policy every memo
+  * follows lives here:
   *   - Entries are keyed by (session, dir, kind). A live session keeps at
   *     most ONE dir across all kinds: a memo call on a new dir releases
   *     every entry of the previous one, so a long-lived session scanning

@@ -8,4 +8,17 @@ object FsUtil {
     Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
     f.delete(); ()
   }
+
+  /** One process-wide root for per-call scratch dirs, deleted by a single
+    * JVM shutdown hook (one hook per process, not one per call). */
+  private lazy val scratchRoot: java.nio.file.Path = {
+    val root = java.nio.file.Files.createTempDirectory("graft_scratch")
+    sys.addShutdownHook(deleteRecursively(root.toFile)): Unit
+    root
+  }
+
+  /** A fresh dir named `prefix…` under the process scratch root, deleted
+    * at JVM exit with the root. */
+  def scratchDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(scratchRoot, prefix).toString
 }

@@ -2953,9 +2953,7 @@ object DedupSim {
         // cell-partitioned parquet. Corpus-sized scratch: reclaim at JVM
         // exit (the result DataFrame reads it lazily, so deletion can't
         // happen inside this call)
-        val dir = java.nio.file.Files.createTempDirectory("graft_q345_ivf").toString
-        sys.addShutdownHook(
-          graft.io.FsUtil.deleteRecursively(new java.io.File(dir))): Unit
+        val dir = graft.io.FsUtil.scratchDir("graft_q345_ivf")
         ivfAssignAuto(emb, cb)
           .withColumn("cell", col("cell").cast("long"))
           .write.mode("overwrite").partitionBy("cell").parquet(dir)
@@ -3130,9 +3128,7 @@ object DedupSim {
 
     // v1: base index, one-time partitioned build. Corpus-sized scratch:
     // reclaimed at JVM exit (the result reads the index lazily)
-    val idxDir = java.nio.file.Files.createTempDirectory("graft_q351_idx").toString
-    sys.addShutdownHook(
-      graft.io.FsUtil.deleteRecursively(new java.io.File(idxDir))): Unit
+    val idxDir = graft.io.FsUtil.scratchDir("graft_q351_idx")
     // cluster by cell before the partitioned write: exactly ONE file per
     // occupied cell instead of one per (scan task × cell) — the layout the
     // operator itself argues for (guide §6: sensible output file sizing);
@@ -3142,9 +3138,7 @@ object DedupSim {
       .write.mode("overwrite").partitionBy("cell").parquet(idxDir)
 
     // delta arrives as a stream: stage 3 files, one micro-batch each
-    val stagedDir = java.nio.file.Files.createTempDirectory("graft_q351_delta").toString
-    sys.addShutdownHook(
-      graft.io.FsUtil.deleteRecursively(new java.io.File(stagedDir))): Unit
+    val stagedDir = graft.io.FsUtil.scratchDir("graft_q351_delta")
     delta.repartition(3).write.mode("overwrite").parquet(stagedDir)
     val s2 = s.newSession()
     s2.conf.set("spark.sql.shuffle.partitions",
@@ -3297,12 +3291,6 @@ object DedupSim {
     def assigned(df: DataFrame): DataFrame =
       ivfAssignAuto(df, code).withColumn("cell", col("cell").cast("long"))
 
-    def tmpDir(prefix: String): String = {
-      val p = java.nio.file.Files.createTempDirectory(prefix).toString
-      sys.addShutdownHook(
-        graft.io.FsUtil.deleteRecursively(new java.io.File(p))): Unit
-      p
-    }
     def countParquet(dir: String): Long = {
       val stream = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
       try stream.filter(p => p.toString.endsWith(".parquet")).count()
@@ -3314,7 +3302,7 @@ object DedupSim {
     // build discipline); the APPENDS stay unclustered because the
     // per-batch fragmentation is exactly the aftermath this operator
     // exists to compact.
-    val idxDir = tmpDir("graft_q358_idx")
+    val idxDir = graft.io.FsUtil.scratchDir("graft_q358_idx")
     assigned(base).repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(idxDir)
     (0 until 3).foreach { b =>
@@ -3326,7 +3314,7 @@ object DedupSim {
     // COMPACT: cluster by cell, rewrite — one file per occupied cell.
     // `fragmented` is reused by the pre-compaction search below: one
     // listing of the fragmented layout instead of two.
-    val compDir = tmpDir("graft_q358_compact")
+    val compDir = graft.io.FsUtil.scratchDir("graft_q358_compact")
     val fragmented = s.read.parquet(idxDir)
     fragmented.repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(compDir)
@@ -3438,12 +3426,6 @@ object DedupSim {
     val code = frozenBaseCodebook(s, d)
     def assigned(df: DataFrame): DataFrame =
       ivfAssignAuto(df, code).withColumn("cell", col("cell").cast("long"))
-    def tmpDir(prefix: String): String = {
-      val p = java.nio.file.Files.createTempDirectory(prefix).toString
-      sys.addShutdownHook(
-        graft.io.FsUtil.deleteRecursively(new java.io.File(p))): Unit
-      p
-    }
     def countParquet(dir: String): Long = {
       val stream = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
       try stream.filter(p => p.toString.endsWith(".parquet")).count()
@@ -3473,7 +3455,7 @@ object DedupSim {
           col("rnk").cast("long").as("rnk"),
           col("vec_id").cast("long").as("vec_id"), col("cell"), col("cosine"))
 
-    var live = tmpDir("graft_q371_idx")
+    var live = graft.io.FsUtil.scratchDir("graft_q371_idx")
     // cell-clustered base build — one file per occupied cell (q351's
     // build discipline; content-identical, layout only)
     assigned(base).repartition(col("cell"))
@@ -3486,7 +3468,7 @@ object DedupSim {
     // compaction swaps the serving pointer underneath it, which is exactly
     // what the live-pointer indirection below exercises. Each cycle still
     // appends its slice as two micro-batches onto the then-current layout.
-    val stagedDir = tmpDir("graft_q371_stage")
+    val stagedDir = graft.io.FsUtil.scratchDir("graft_q371_stage")
     val livePtr = new java.util.concurrent.atomic.AtomicReference[String](live)
     val s2 = s.newSession()
     s2.conf.set("spark.sql.shuffle.partitions",
@@ -3509,7 +3491,7 @@ object DedupSim {
       val filesAppend = countParquet(live)
       val fragmented = s.read.parquet(live)
       // compact: cluster by cell, rewrite, swap the live pointer
-      val comp = tmpDir(s"graft_q371_compact$cyc")
+      val comp = graft.io.FsUtil.scratchDir(s"graft_q371_compact$cyc")
       fragmented.repartition(col("cell"))
         .write.mode("overwrite").partitionBy("cell").parquet(comp)
       val filesComp = countParquet(comp)

@@ -783,9 +783,10 @@ object LlmOps {
     * no-op there and the frozen cutoffs stay valid. The two training
     * aggregations carry map-side partial agg; scoring is per-row after
     * the broadcast joins — no global ordering anywhere. */
-  private val Q343RefIdCap = 500L
-  private val Q343HeadCut = 4610000L
-  private val Q343TailCut = 4750000L
+  // the constants are shared with q360's one-pass kernel
+  private val Q343RefIdCap = graft.ops.CurationSignals.LmRefIdCap
+  private val Q343HeadCut = graft.ops.CurationSignals.LmHeadCut
+  private val Q343TailCut = graft.ops.CurationSignals.LmTailCut
   def q343(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), expr(

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.{SessionMemo, Tables}
+import graft.ops.CurationSignals
 
 /** Text-analysis operator surface over the `documents` table: the reference's
   * text-quality filters (O17-O20, pa.py:291-309) plus the LLM-data-pipeline
@@ -14,9 +15,8 @@ import graft.core.{SessionMemo, Tables}
   */
 object TextOps {
 
-  /** The reference's hallucination regex, verbatim (pa.py:291-294). Kept to
-    * RE2-compatible constructs so the DuckDB twin matches semantics. */
-  val HallucinationRegex = "\\[.*?\\]|\\(.*?\\)|thanks for watching|thank you for watching"
+  /** The reference's hallucination regex, verbatim (pa.py:291-294). */
+  val HallucinationRegex: String = CurationSignals.HallucinationRegex
 
   /** Exact-equivalent fast path for the hallucination match: each regex
     * alternative is guarded by a cheap substring containment check, so the
@@ -828,30 +828,13 @@ object TextOps {
     * rules relationally — list slicing, LIKE suffix tests, word
     * arithmetic — so every rule's boundary is hash-gated against the
     * operator over live data, not a frozen fixture. */
-  def q338(s: SparkSession, d: String): DataFrame =
-    q338Over(s, Tables.documents(s, d))
-  /** q338 over an injectable doc table: the typed-map pipeline is a
-    * pushdown barrier (Catalyst will not move a predicate below
-    * MapElements), so an incremental caller (q360Where/q370) restricts
-    * the SOURCE here instead of filtering the output. */
-  private[graft] def q338Over(s: SparkSession, docs: DataFrame): DataFrame = {
+  def q338(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    docs.select(col("doc_id"), col("text"))
+    // the page builder is shared with q360's one-pass kernel
+    Tables.documents(s, d).select(col("doc_id"), col("text"))
       .as[(Long, String)]
       .map { case (id, text) =>
-        val ws = text.split(" ")
-        val nL = (ws.length + 5) / 6
-        val page = (0 until nL).map { i =>
-          val base = ws.slice(i * 6, math.min((i + 1) * 6, ws.length)).mkString(" ")
-          val extra =
-            if (i == 0 && id % 13 == 0) " javascript"
-            else if (i == 1 && id % 11 == 0) " lorem ipsum"
-            else if (i == 2 && id % 7 == 0) " {"
-            else ""
-          val term = (i % 3) match { case 0 => "."; case 1 => ""; case _ => "!" }
-          base + extra + term
-        }.mkString("\n")
-        val c = graft.ops.C4Clean.clean(page)
+        val c = graft.ops.C4Clean.clean(CurationSignals.c4Page(id, text))
         (id, c.pageKept, c.nLines.toLong, c.nKept.toLong, c.cleaned.length.toLong)
       }
       .toDF("doc_id", "page_kept", "n_lines", "n_kept", "cleaned_len")
@@ -904,13 +887,9 @@ object TextOps {
     * duplicated-5-gram coverage relationally over the same live
     * column — integer ppm both sides, every rule boundary (the
     * 50-word floor actually splits this corpus) hash-gated. */
-  def q339(s: SparkSession, d: String): DataFrame =
-    q339Over(s, Tables.documents(s, d))
-  /** q339 over an injectable doc table — same pushdown-barrier rationale
-    * as [[q338Over]]. */
-  private[graft] def q339Over(s: SparkSession, docs: DataFrame): DataFrame = {
+  def q339(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    docs.select(col("doc_id"), col("text"))
+    Tables.documents(s, d).select(col("doc_id"), col("text"))
       .as[(Long, String)]
       .map { case (id, text) =>
         val g = graft.ops.GopherQuality.stats(text)
@@ -1574,26 +1553,30 @@ object TextOps {
     * at the tail rate). No RNG anywhere, so the exact sampled set is
     * hash-gated, and re-running the pipeline reproduces it byte-for-byte
     * — the property production sampling jobs need for resumability.
-    * Scale shape: the q343 signal is one row per doc; the coin and the
-    * gate are per-row expressions on top of it. */
+    * Scale shape: q343's bucket is the `lm_bucket` column of the q360
+    * decision memo ([[corpusDecisions]], one row per doc), so the LM
+    * scores each document once per session for q360, q365 and q372; the
+    * coin and the gate are per-row expressions on top of it. */
   private val Q365Rates = Seq("head" -> 1000L, "middle" -> 500L,
     "tail" -> 100L, "unscored" -> 100L)
-  def q365(s: SparkSession, d: String): DataFrame = {
-    val lm = graft.queries.LlmOps.q343(s, d)
-      .select(col("doc_id"), col("bucket"))
+  def q365(s: SparkSession, d: String): DataFrame =
+    bucketSample(corpusDecisions(s, d))
+      .select(col("doc_id"), col("bucket"), col("coin"),
+        col("keep_rate"), col("kept"))
+      .orderBy(col("doc_id"))
+
+  /** q365's sample over a q360 decision table: adds `bucket` (q343's, or
+    * 'unscored'), the md5 `coin`, the bucket's `keep_rate` and `kept`. */
+  private def bucketSample(decisions: DataFrame): DataFrame = {
     val rates = Q365Rates.foldLeft(lit(100L)) { case (acc, (b, r)) =>
       when(col("bucket") === b, lit(r)).otherwise(acc) }
-    Tables.documents(s, d).select(col("doc_id"))
-      .join(lm, Seq("doc_id"), "left")
-      .withColumn("bucket", coalesce(col("bucket"), lit("unscored")))
+    decisions
+      .withColumn("bucket", coalesce(col("lm_bucket"), lit("unscored")))
       .withColumn("coin", expr(
         "cast(conv(substring(md5(cast(doc_id as string)), 1, 15), 16, 10) " +
           "as bigint) % 1000"))
       .withColumn("keep_rate", rates)
       .withColumn("kept", col("coin") < col("keep_rate"))
-      .select(col("doc_id"), col("bucket"), col("coin"),
-        col("keep_rate"), col("kept"))
-      .orderBy(col("doc_id"))
   }
   lazy val q365Sql: String =
     """SELECT d.doc_id, COALESCE(lm.bucket, 'unscored') AS bucket,
@@ -1690,18 +1673,18 @@ object TextOps {
   def q372(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
     val train = docs.filter(col("doc_id") % 5 =!= 0)
-    // Each gate table is consumed TWICE (its funnel-census count and the
-    // survivor join) and `surv` 4× (count, token mass, offsets, slices);
-    // Spark does not share subtrees across union branches, so without a
-    // materialization barrier the q360/q364/q365 signal pipelines each ran
-    // 2× and the three-gate join 4× (guide §1.2/§5: don't recompute what
-    // you already have — measured 7.5 s → the checkpoint halves it). All
-    // four tables are doc-grain (≤ corpus-doc-count rows), never token
-    // grain, so the checkpoint is small by construction.
-    val keep = corpusDecisions(s, d).filter(col("decision") === "keep")
-      .select(col("doc_id")).localCheckpoint()
-    val sampled = q365(s, d).filter(col("kept")).select(col("doc_id"))
-      .localCheckpoint()
+    // The keep and sample gates both read the q360 decision memo, which
+    // is already materialized (a local relation or a persisted plan).
+    // The contamination table is consumed TWICE (its census count and
+    // the survivor join) and `surv` 4× (count, token mass, offsets,
+    // slices); Spark does not share subtrees across union branches, so
+    // without a materialization barrier q364's chunk pipeline ran 2× and
+    // the gate join 4× (guide §1.2/§5: don't recompute what you already
+    // have). Both are doc-grain (≤ corpus-doc-count rows), never token
+    // grain, so the checkpoints are small by construction.
+    val decisions = bucketSample(corpusDecisions(s, d))
+    val keep = decisions.filter(col("decision") === "keep").select(col("doc_id"))
+    val sampled = decisions.filter(col("kept")).select(col("doc_id"))
     val contaminated = q364(s, d).select(col("doc_id")).localCheckpoint()
     val surv = train.select(col("doc_id"), col("text"))
       .join(keep, Seq("doc_id"))
@@ -1913,7 +1896,7 @@ object TextOps {
   // ---------------------------------------------------------------- q360
   /** CURATION COMPOSITE SCORE (round 16, verdict item 7): the final
     * keep/drop/review decision a CCNet/C4-style pipeline actually
-    * executes — the board's per-doc quality signals joined into ONE
+    * executes — the board's per-doc quality signals composed into ONE
     * gated decision table:
     *
     *  - q343 LM bucket (head 3 / middle 2 / tail-or-unscored 0 points),
@@ -1921,76 +1904,53 @@ object TextOps {
     *  - q19 hallucination/length/letter filter (+1 when the doc
     *    survives it — q19 emits survivors only, so presence IS the flag),
     *  - q354 diversity in the healthy band (ttr_ppm in
-    *    [[Q360TtrLo]]..[[Q360TtrHi]], +1 — both keyword-stuffed LOW and
-    *    gibberish HIGH type/token fail),
-    *  - q355 self-entropy ≥ [[Q360MinBpt]] (+1 — template/repetitive
-    *    text reads near zero bits per token).
+    *    [[CurationSignals.TtrLo]]..[[CurationSignals.TtrHi]],
+    *    +1 — both keyword-stuffed LOW and gibberish HIGH type/token fail),
+    *  - q355 self-entropy ≥ [[CurationSignals.MinBpt]] (+1 —
+    *    template/repetitive text reads near zero bits per token).
     *
     * Score 0–10, decision = keep (≥7) / review (≥4) / drop — fixed
     * FROZEN integer cutoffs, CCNet's production shape (constants are the
     * source of truth, stated identically in both engines). Every signal
     * column rides along so downstream audits can explain any decision.
     *
-    * Scale shape: every input is ONE row per doc_id (the signal
-    * aggregations already reduced token-grain work), so the join chain
-    * is O(docs) on the natural key — at 100 TB the signal tables are
-    * bucket-written on doc_id and the joins are exchange-free; the
-    * presentation sorts inside the composed entries are eliminated by
-    * Catalyst (EliminateSorts) under the joins. Integer-only scoring so
-    * the oracle replays the decision bit-for-bit. */
-  private val Q360TtrLo = 300000L
-  private val Q360TtrHi = 900000L
-  private val Q360MinBpt = 1000000L
+    * Scale shape: every signal is row-local, so the table is ONE typed
+    * pass over documents ([[graft.ops.CurationSignals]]) with no join
+    * and no exchange; the only other read is q343's reference model,
+    * collected from the id-capped slice ([[lmReference]], at most 100
+    * documents at any corpus size), fitted once and broadcast. The public
+    * signal entries (q19, q338, q339, q343, q354, q355) keep their
+    * relational plans and are the kernel's parity oracles
+    * (CurationSignalsSpec). Integer-only scoring so the oracle replays
+    * the decision bit-for-bit. */
   def q360(s: SparkSession, d: String): DataFrame =
     corpusDecisions(s, d).orderBy(col("doc_id"))
-  /** q360 restricted to `pred` rows — the predicate is applied INSIDE
-    * each signal leg (not on the composed output): the relational legs
-    * (q343 scoring, q354, q355, q19) push it from there into their scan's
-    * DataFilters, and the typed-map legs (q338/q339, where MapElements is
-    * a pushdown barrier) get the pre-filtered SOURCE via their `Over`
-    * variants — measured round 17: every scan except q343's id-capped
-    * (hence constant-size) model derivation carries the predicate. This
-    * is q370's incremental-refresh entry point: scoring an ingest delta
-    * reads delta rows plus a constant. */
+  /** q360 restricted to `pred` rows: one documents scan carrying `pred`
+    * (pushed into its DataFilters) followed by the signal map, plus the
+    * constant-size model read. This is q370's incremental-refresh entry
+    * point: scoring an ingest delta reads delta rows plus a constant
+    * (Q370PushdownSpec pins both scans). */
   private[graft] def q360Where(s: SparkSession, d: String,
                                pred: Column): DataFrame = {
-    val base = Tables.documents(s, d).select(col("doc_id")).filter(pred)
-    // typed-map legs: restrict the SOURCE (MapElements blocks pushdown)
-    val c4 = q338Over(s, Tables.documents(s, d).filter(pred))
-      .select(col("doc_id"), col("page_kept").as("c4_kept"))
-    val gopher = q339Over(s, Tables.documents(s, d).filter(pred))
-      .select(col("doc_id"), col("kept").as("gopher_kept"))
-    val lm = graft.queries.LlmOps.q343(s, d)
-      .select(col("doc_id"), col("bucket").as("lm_bucket")).filter(pred)
-    val div = q354(s, d).select(col("doc_id"), col("ttr_ppm")).filter(pred)
-    val ent = q355(s, d).select(col("doc_id"), col("bpt_ppm")).filter(pred)
-    val qual = q19(s, d).select(col("doc_id"), lit(true).as("quality_pass"))
-      .filter(pred)
-    val joined = base
-      .join(c4, Seq("doc_id"), "left")
-      .join(gopher, Seq("doc_id"), "left")
-      .join(lm, Seq("doc_id"), "left")
-      .join(div, Seq("doc_id"), "left")
-      .join(ent, Seq("doc_id"), "left")
-      .join(qual, Seq("doc_id"), "left")
-      .withColumn("quality_pass", coalesce(col("quality_pass"), lit(false)))
-    joined
-      .withColumn("score",
-        (when(col("lm_bucket") === "head", 3L)
-           .when(col("lm_bucket") === "middle", 2L).otherwise(0L) +
-         when(col("c4_kept"), 2L).otherwise(0L) +
-         when(col("gopher_kept"), 2L).otherwise(0L) +
-         when(col("quality_pass"), 1L).otherwise(0L) +
-         when(col("ttr_ppm").between(Q360TtrLo, Q360TtrHi), 1L).otherwise(0L) +
-         when(col("bpt_ppm") >= Q360MinBpt, 1L).otherwise(0L)).cast("long"))
-      .withColumn("decision",
-        when(col("score") >= 7, "keep")
-          .when(col("score") >= 4, "review").otherwise("drop"))
-      .select(col("doc_id"), col("c4_kept"), col("gopher_kept"),
-        col("lm_bucket"), col("ttr_ppm"), col("bpt_ppm"),
-        col("quality_pass"), col("score"), col("decision"))
-      .orderBy(col("doc_id"))
+    import s.implicits._
+    val lm = s.sparkContext.broadcast(CurationSignals.BigramModel
+      .fit(lmReference(s, d).as[String].collect()))
+    Tables.documents(s, d).filter(pred)
+      .select(col("doc_id"), col("text"), lower(col("text")))
+      .as[(Long, String, String)]
+      .map { case (id, text, lt) =>
+        CurationSignals.signals(id, text, lt, lm.value) }
+      .toDF(CurationSignals.Columns: _*)
   }
+
+  /** q343's reference slice as the kernel reads it: the lower-cased text
+    * of doc_id % 5 = 0 below [[CurationSignals.LmRefIdCap]]. */
+  private[graft] def lmReference(s: SparkSession, d: String): DataFrame =
+    Tables.documents(s, d)
+      .filter(col("doc_id") % 5 === 0 &&
+        col("doc_id") < CurationSignals.LmRefIdCap)
+      .select(lower(col("text")))
+
   lazy val q360Sql: String = {
     // the signal SQLs are embedded VERBATIM (no outer stripMargin — it
     // would eat the leading '|' of their '||' concat continuation lines)
@@ -1999,9 +1959,9 @@ object TextOps {
          |    + CASE WHEN c4.page_kept THEN 2 ELSE 0 END
          |    + CASE WHEN g.kept THEN 2 ELSE 0 END
          |    + CASE WHEN q.doc_id IS NOT NULL THEN 1 ELSE 0 END
-         |    + CASE WHEN ld.ttr_ppm BETWEEN $Q360TtrLo AND $Q360TtrHi
+         |    + CASE WHEN ld.ttr_ppm BETWEEN ${CurationSignals.TtrLo} AND ${CurationSignals.TtrHi}
          |           THEN 1 ELSE 0 END
-         |    + CASE WHEN ue.bpt_ppm >= $Q360MinBpt THEN 1 ELSE 0 END"""
+         |    + CASE WHEN ue.bpt_ppm >= ${CurationSignals.MinBpt} THEN 1 ELSE 0 END"""
         .stripMargin
     s"""SELECT d.doc_id, c4.page_kept AS c4_kept, g.kept AS gopher_kept,
        |  lm.bucket AS lm_bucket, ld.ttr_ppm, ue.bpt_ppm,
@@ -2073,10 +2033,10 @@ object TextOps {
   // Session-scoped memos (r18, guide §1.2): three corpus-derived tables are
   // each consumed by SEVERAL board entries — the chunk band table
   // (q357/q361/q368), its near-dup pair rollup (q357/q361), and the q360
-  // decision table (q360/q363/q370/q372) — and each entry previously re-ran
-  // the whole derivation pipeline. They ride graft.core.SessionMemo, whose
-  // doc states the policy; values are doc/chunk-grain (corpus-bounded,
-  // never token-grain).
+  // decision table (q360/q363/q365/q370/q372) — and each entry previously
+  // re-ran the whole derivation pipeline. They ride graft.core.SessionMemo,
+  // whose doc states the policy; values are doc/chunk-grain
+  // (corpus-bounded, never token-grain).
   // ------------------------------------------------------------------
 
   /** The corpus chunk-band table, memoized: q357 (self-join), q361 (via
@@ -2095,8 +2055,8 @@ object TextOps {
       chunkPairsOverBands(corpusChunkBands(s, d)))
 
   /** The q360 decision table, memoized: q360 reports it, q363 weights it
-    * by token mass, q372 gates its shard assembly on the keep set, and
-    * q370 slices its base/delta/parity faces from it (private[graft] for
+    * by token mass, q365 samples on its LM bucket, q372 gates its shard
+    * assembly on its keep and sample sets, and q370 slices its base/delta/parity faces from it (private[graft] for
     * that TxnOps consumer). */
   private[graft] def corpusDecisions(s: SparkSession, d: String): DataFrame =
     SessionMemo.replayed(s, d, "decisions")(q360Where(s, d, lit(true)))

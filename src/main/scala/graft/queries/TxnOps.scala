@@ -1946,11 +1946,9 @@ object TxnOps {
     * metadata-sized. */
   def q367(s0: SparkSession, d: String): DataFrame = {
     val s = txnSession(s0)
-    val staged = java.nio.file.Files.createTempDirectory("graft_q367_src").toString
-    val tbl = java.nio.file.Files.createTempDirectory("graft_q367_tbl").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_q367_ckpt").toString
-    Seq(staged, tbl, ckpt).foreach(p => sys.addShutdownHook(
-      graft.io.FsUtil.deleteRecursively(new java.io.File(p))): Unit)
+    val staged = graft.io.FsUtil.scratchDir("graft_q367_src")
+    val tbl = graft.io.FsUtil.scratchDir("graft_q367_tbl")
+    val ckpt = graft.io.FsUtil.scratchDir("graft_q367_ckpt")
     val seqs = graft.queries.TextOps.assembleSequences(
       graft.queries.TextOps.sequenceParts(s, d))
     seqs.repartition(2).write.mode("overwrite").parquet(staged)
@@ -2022,11 +2020,9 @@ object TxnOps {
     * for cross-doc signals, which this composite deliberately has none
     * of). The drive: yesterday's table = base-slice decisions committed
     * at v1; today's crawl (doc_id%7=0) is scored through `q360Where`,
-    * which applies the delta predicate INSIDE each signal leg so every
-    * leg's plan filters at its own scan (a filter on the composed output
-    * strands above the left joins on two legs — measured round 17; the
-    * one non-delta read left is q343's id-capped LM model derivation,
-    * constant-size by construction) — and MERGEs at v2.
+    * whose one documents scan carries the delta predicate ahead of the
+    * per-doc signal map (the one non-delta read left is q343's id-capped
+    * reference model, constant-size by construction) — and MERGEs at v2.
     *
     * Faces, all three required equal: (0) the MAINTAINED table read back
     * from the txn log, (1) the DIRECT full recompute, both row-level
@@ -2036,22 +2032,19 @@ object TxnOps {
     * table once and expects it verbatim under BOTH faces. */
   def q370(s0: SparkSession, d: String): DataFrame = {
     val s = txnSession(s0)
-    val tbl = java.nio.file.Files.createTempDirectory("graft_q370_tbl").toString
-    sys.addShutdownHook(
-      graft.io.FsUtil.deleteRecursively(new java.io.File(tbl))): Unit
+    val tbl = graft.io.FsUtil.scratchDir("graft_q370_tbl")
     val isDelta = col("doc_id") % 7 === 0
-    // ONE six-signal pass for the whole lifecycle: base commit, delta
-    // merge source, and the direct parity face are all slices of the
-    // same per-doc decision table (that per-doc-ness is exactly what the
-    // ivm ≡ direct gate proves), so computing q360Where three times —
-    // two full corpus passes of the signal pipeline — was pure recompute
-    // (guide §1.2). The SCALE property (a delta refresh can score delta
-    // rows plus a constant through q360Where's pushed predicate) is
-    // pinned by Q370PushdownSpec on q360Where directly and is not
-    // weakened by the fixture staging its faces from one pass.
-    // r18: the decision table now rides TextOps' session memo (the same
-    // one q360/q363/q372 consume), so the six-signal pipeline is paid
-    // once per bench rep across the whole curation family. Keyed on the
+    // ONE signal pass for the whole lifecycle: base commit, delta merge
+    // source, and the direct parity face are all slices of the same
+    // per-doc decision table (that per-doc-ness is exactly what the
+    // ivm ≡ direct gate proves), so scoring the corpus three times was
+    // pure recompute (guide §1.2). The SCALE property (a delta refresh
+    // scores delta rows plus a constant through q360Where's pushed
+    // predicate) is pinned by Q370PushdownSpec on q360Where directly and
+    // is not weakened by the fixture staging its faces from one pass.
+    // The decision table rides TextOps' session memo (the same one
+    // q360/q363/q365/q372 consume), so the signal pass is paid once per
+    // bench rep across the whole curation family. Keyed on the
     // PARENT session (s0), not this txn child session: Bench evicts by
     // the parent, and a child-keyed entry would both miss the sharing and
     // dodge the per-rep eviction (one entry per invocation, never freed).

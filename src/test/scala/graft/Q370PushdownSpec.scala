@@ -1,18 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** q370's scale contract, pinned on the physical plan: scoring an ingest
-  * delta through q360Where must read DELTA ROWS PLUS A CONSTANT — every
-  * documents scan either carries the delta predicate in its DataFilters
-  * (the relational legs push it; the typed-map legs get a pre-filtered
-  * source through q338Over/q339Over) or is one of q343's two id-capped
-  * model-derivation scans (constant-size by construction). The hash gate
-  * cannot see this property — a build that silently rescans the corpus
-  * per refresh still produces identical rows — so the plan is the pin. */
+  * delta through q360Where must read DELTA ROWS PLUS A CONSTANT — its one
+  * documents scan carries the delta predicate in its DataFilters, and the
+  * read of q343's reference model (collected eagerly) carries the
+  * constant id cap on its own scan. The hash gate cannot see this
+  * property — a build that silently rescans the corpus per refresh still
+  * produces identical rows — so the plan is the pin. */
 class Q370PushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
@@ -25,27 +24,28 @@ class Q370PushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
+  private val Dir = "/root/testdata/sf0.001"
+
+  /** The FileScan lines of `df`'s physical plan, DataFilters included. */
+  private def scans(df: DataFrame): Seq[String] =
+    df.queryExecution.sparkPlan.toString.linesIterator
+      .filter(_.contains("FileScan parquet")).toSeq
+
+  /** The DataFilters list of one FileScan line. */
+  private def dataFilters(scan: String): String =
+    "DataFilters: \\[([^\\]]*)\\]".r.findFirstMatchIn(scan).map(_.group(1)).getOrElse("")
+
   test("every delta-scoring scan is delta-filtered or id-capped") {
-    val plan = graft.queries.TextOps
-      .q360Where(spark, "/root/testdata/sf0.001", col("doc_id") % 7 === 0)
-      .queryExecution.optimizedPlan.toString
-    val lines = plan.linesIterator.toVector
-    val scanIdx = lines.zipWithIndex.collect {
-      case (l, i) if l.contains("Relation") && l.contains("parquet") => i
-    }
-    assert(scanIdx.size >= 8, s"expected the 9 signal scans, saw ${scanIdx.size}")
-    var withPred = 0
-    var idCapped = 0
-    scanIdx.foreach { i =>
-      // the scan's own filter sits directly above it in the printed tree
-      val blk = lines.slice(math.max(0, i - 3), i + 1).mkString("\n")
-      if (blk.contains("% 7")) withPred += 1
-      else if (blk.contains("< 500")) idCapped += 1
-      else fail(s"scan at plan line $i is neither delta-filtered nor " +
-        s"id-capped:\n$blk")
-    }
-    assert(idCapped == 2,
-      s"exactly q343's two model scans may be full-width, saw $idCapped")
-    assert(withPred == scanIdx.size - 2)
+    val delta = scans(graft.queries.TextOps
+      .q360Where(spark, Dir, col("doc_id") % 7 === 0))
+    assert(delta.size == 1,
+      s"expected one documents scan, saw:\n${delta.mkString("\n")}")
+    assert(dataFilters(delta.head).contains("% 7"),
+      s"the documents scan must carry the delta predicate:\n${delta.head}")
+    val model = scans(graft.queries.TextOps.lmReference(spark, Dir))
+    assert(model.size == 1,
+      s"expected one reference scan, saw:\n${model.mkString("\n")}")
+    assert(dataFilters(model.head).contains("< 500"),
+      s"the reference scan must carry the id cap:\n${model.head}")
   }
 }

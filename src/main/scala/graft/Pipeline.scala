@@ -65,30 +65,22 @@ object Pipeline {
         .load(wavDir)
         .select(col("path"), col("content")))
 
-  /** The O2-O5 kernel sequence: bytes → decode → downmix → peak-normalize →
-    * resample to 16 kHz, plus basename extraction; None on decode failure
-    * (pa.py:91-92). The ONE definition shared by the whole-file decoder
-    * below and ChunkedAudio.decodeChunked — sharing it is what makes the
-    * chunked path's bit-identical guarantee robust to future decode edits. */
-  def decodeToPcm(path: String, bytes: Array[Byte]): Option[(String, Array[Float])] =
-    try {
-      val dec = WavCodec.decode(bytes)
-      val mono = Dsp.downmixMono(dec.samples, dec.channels)
-      val norm = Dsp.peakNormalize(mono)
-      val res = Dsp.resampleLinear(norm, dec.sampleRate, TargetRate)
-      Some((path.substring(path.lastIndexOf('/') + 1), res))
-    } catch { case _: Exception => None }
-
-  /** Decode (path, content) rows — shared by the batch binaryFile scan and
-    * the streaming ingest mode (Streaming.audioIngest). */
+  /** O2-O5: decode (path, content) rows → downmix → peak-normalize →
+    * resample to 16 kHz, named by the path's basename. Decode failures skip
+    * the file (pa.py:91-92). Shared by the batch binaryFile scan and the
+    * streaming ingest mode (Streaming.audioIngest). */
   def decodeWavRows(rows: DataFrame): Dataset[DecodedFile] = {
     import rows.sparkSession.implicits._
     rows
       .as[(String, Array[Byte])]
       .flatMap { case (path, bytes) =>
-        decodeToPcm(path, bytes).map { case (name, res) =>
-          DecodedFile(name, res, TargetRate)
-        }
+        try {
+          val dec = WavCodec.decode(bytes)
+          val mono = Dsp.downmixMono(dec.samples, dec.channels)
+          val norm = Dsp.peakNormalize(mono)
+          val res = Dsp.resampleLinear(norm, dec.sampleRate, TargetRate)
+          Some(DecodedFile(path.substring(path.lastIndexOf('/') + 1), res, TargetRate))
+        } catch { case _: Exception => None }
       }
   }
 
@@ -145,28 +137,14 @@ object Pipeline {
     }
   }
 
-  /** O10-O13: the audio metrics of [[measure]] plus the AudioQc SNR columns,
-    * then the 4-predicate quality filter. */
-  def audioQuality(segments: Dataset[SegmentRow]): DataFrame = {
+  /** O10-O13: the audio metrics of [[measure]], then the 4-predicate
+    * quality filter (pa.py:212-229). */
+  def audioQuality(segments: Dataset[SegmentRow]): DataFrame =
     measure(segments).toDF()
-      // SNR estimate (round-13 AudioQc): noise-floor / speech-level frame
-      // energies + the dB view, surfaced as metadata for downstream
-      // curation filters. NOT part of the quality predicate — the filter
-      // set stays reference-parity (pa.py:212-229). 10 ms frames at the
-      // post-resample 16 kHz rate; int16 sample domain.
-      .withColumn("snr_st", graft.ops.AudioQc.snrStats(
-        expr("transform(samples, x -> cast(round(x * 32768D) as int))"),
-        frameLen = 160))
-      .withColumn("noise_floor_e", col("snr_st.noise_e"))
-      .withColumn("speech_e", col("snr_st.speech_e"))
-      .withColumn("snr_db", when(col("noise_floor_e") > 0,
-        graft.ops.AudioQc.snrDb(col("speech_e"), col("noise_floor_e"))))
-      .drop("snr_st")
       .filter(col("rms") >= MinRms &&
               col("clipping_percent") <= MaxClippingPercent &&
               col("music_ratio") <= MusicEnergyRatio &&
-              col("music_ratio") =!= -1.0) // pa.py:212-229
-  }
+              col("music_ratio") =!= -1.0)
 
   /** O14+O16-O17: over-length guard BEFORE inference (fixing the reference's
     * index-misalignment bug by construction, SURVEY §2.7), then batched

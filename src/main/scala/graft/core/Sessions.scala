@@ -12,15 +12,13 @@ object Sessions {
     * state-store commit overhead (grows with partitions) vs join/agg
     * parallelism (shrinks with partitions). Measured min-of-2 over the 8
     * heaviest stream drives at local[32]/sf0.1: 1 → 42.6 s, 4 → 32.8 s,
-    * 8 → 26.3 s, 16 → 31.9 s. The default follows the session's actual
-    * core count instead of pinning the old constant 4 (the driver also
-    * benches at lower core counts — a constant tuned for one width is
-    * exactly what guide §2 warns against); `SPARK_GRAFT_STREAM_PARTS`
-    * still overrides, and a real deployment sizes this from stream volume.
+    * 8 → 26.3 s, 16 → 31.9 s. The value follows the session's actual
+    * core count, capped at 8, instead of pinning the old constant 4 (a
+    * constant tuned for one width is exactly what guide §2 warns against);
+    * a real deployment sizes this from stream volume.
     */
   def streamShufflePartitions(s: SparkSession): String =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS",
-      math.max(1, math.min(8, s.sparkContext.defaultParallelism)).toString)
+    math.max(1, math.min(8, s.sparkContext.defaultParallelism)).toString
 
   /** A fresh child session with stream-drive shuffle sizing applied. */
   def streamSession(s: SparkSession): SparkSession = {

@@ -133,15 +133,15 @@ object AviMjpeg {
   }
 
   // ------------------------------------------------------------------
-  // CHUNKED (ranged-read) demux — the 100 TB path for multi-GB AVIs,
-  // mirroring ops/ChunkedAudio on the video leg: [[demux]] needs the
-  // whole file as ONE array (breaks at the 2 GB row limit long before a
-  // real surveillance/recording AVI ends). The ranged form never holds
-  // more than one frame: an INDEX pass walks chunk HEADERS only (8-byte
-  // reads, skipping every payload — O(frames) metadata IO regardless of
-  // file size), then frames FETCH individually by (offset, length). The
-  // RangeReader seam is whatever storage serves ranged reads — a local
-  // file, an object store GET with Range, or (in specs) a byte array.
+  // CHUNKED (ranged-read) demux — the 100 TB path for multi-GB AVIs:
+  // [[demux]] needs the whole file as ONE array (breaks at the 2 GB row
+  // limit long before a real surveillance/recording AVI ends). The ranged
+  // form never holds more than one frame: an INDEX pass walks chunk
+  // HEADERS only (8-byte reads, skipping every payload — O(frames)
+  // metadata IO regardless of file size), then frames FETCH individually
+  // by (offset, length). The RangeReader seam is whatever storage serves
+  // ranged reads — a local file, an object store GET with Range, or (in
+  // specs) a byte array.
   // ------------------------------------------------------------------
 
   /** Ranged-read seam: (offset, length) → exactly those bytes. */

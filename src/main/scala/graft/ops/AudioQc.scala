@@ -52,7 +52,7 @@ object AudioQc {
   /** struct(noise_e, speech_e): the lo/hi percentile frame energies of
     * the clip. Defaults: p10 noise floor, p90 speech level. The caller
     * forms the ratio with INTEGER division (`speech_e * 1000 div
-    * noise_e`) or [[snrDb]] for the human-facing decibel view. */
+    * noise_e`), as q328 does. */
   def snrStats(samples: Column, frameLen: Int,
                loNum: Int = 1, loDen: Int = 10,
                hiNum: Int = 9, hiDen: Int = 10): Column = {
@@ -61,9 +61,4 @@ object AudioQc {
       percentileDisc(sorted, loNum, loDen).as("noise_e"),
       percentileDisc(sorted, hiNum, hiDen).as("speech_e"))
   }
-
-  /** Human-facing decibel view: 10·log10(speech/noise). Float — for
-    * reports and filters (`snr_db > 20`), not for hash gates. */
-  def snrDb(speechE: Column, noiseE: Column): Column =
-    lit(10.0) * log10(speechE.cast("double") / noiseE.cast("double"))
 }

@@ -18,12 +18,11 @@ object Segmentation {
 
   /** Per-ms int16-scale energies (left-to-right sum of squares within each
     * ms; a final partial ms covers the tail). This is the CANONICAL energy
-    * unit for VAD: window energies are defined as left-to-right sums of
-    * these per-ms energies — never global prefix-sum differences — so any
-    * ms-aligned slicing of the file computes bit-identical window decisions.
-    * That invariant is what makes the chunked decode path
-    * (ChunkedAudio.scala) produce exactly the whole-file segmentation. */
-  def msEnergies(samples: Array[Float], spms: Int): Array[Double] = {
+    * unit for VAD: window energies are left-to-right sums of these per-ms
+    * energies, never global prefix-sum differences, so a window's decision
+    * depends only on the samples it covers, in one fixed summation order.
+    * PydubParitySpec pins the resulting intervals against pydub's. */
+  private def msEnergies(samples: Array[Float], spms: Int): Array[Double] = {
     val nMs = (samples.length + spms - 1) / spms
     val out = new Array[Double](nMs)
     var m = 0
@@ -40,29 +39,25 @@ object Segmentation {
   }
 
   /** Runs of consecutive silent window starts for start positions
-    * [fromMs, untilMs), as inclusive (first, last) pairs. `e` holds per-ms
-    * energies for ms indices [baseMs, baseMs + e.length) and must extend at
-    * least minSilenceLenMs past untilMs (or to end-of-file); `totalLen` is
-    * the GLOBAL sample count, clamping the final windows. Shared by the
-    * whole-file and chunked paths so both sum the same energies in the same
-    * order. */
-  def silentStartRuns(e: Array[Double], baseMs: Int, spms: Int, totalLen: Long,
-                      fromMs: Int, untilMs: Int,
-                      minSilenceLenMs: Int = MinSilenceLenMs,
-                      silenceThreshDb: Double = SilenceThresholdDb): Seq[(Int, Int)] = {
+    * [0, untilMs), as inclusive (first, last) pairs. `e` holds the file's
+    * per-ms energies ([[msEnergies]]); `totalLen` is the sample count,
+    * clamping the final windows. Each window sums its per-ms energies left
+    * to right. */
+  private def silentStartRuns(e: Array[Double], spms: Int, totalLen: Long, untilMs: Int,
+                              minSilenceLenMs: Int,
+                              silenceThreshDb: Double): Seq[(Int, Int)] = {
     val runs = Seq.newBuilder[(Int, Int)]
     var runStart = -1
     var prev = -2
-    var s = fromMs
+    var s = 0
     while (s < untilMs) {
       val a = s.toLong * spms
       val b = math.min((s + minSilenceLenMs).toLong * spms, totalLen)
       val n = (b - a).toInt
       val silent = if (n <= 0) true else {
-        // ms range of the window relative to e's base
-        val mEnd = math.min((((b - baseMs.toLong * spms) + spms - 1) / spms).toInt, e.length)
+        val mEnd = math.min(((b + spms - 1) / spms).toInt, e.length)
         var acc = 0.0
-        var m = s - baseMs
+        var m = s
         while (m < mEnd) { acc += e(m); m += 1 }
         Dsp.dbfs(math.sqrt(acc / n)) < silenceThreshDb
       }
@@ -96,8 +91,7 @@ object Segmentation {
     * complement within [0, durationMs]. Window energies come from the
     * canonical per-ms energies (see msEnergies) — the scan is
     * O(durationMs * window), with the window in ms units (300 adds per
-    * position), which stays cheap at any file length and keeps the chunked
-    * path bit-identical. */
+    * position), which stays cheap at any file length. */
   def detectNonSilent(samples: Array[Float], rate: Int,
                       minSilenceLenMs: Int = MinSilenceLenMs,
                       silenceThreshDb: Double = SilenceThresholdDb): Seq[Interval] = {
@@ -113,8 +107,8 @@ object Segmentation {
       return if (durationMs > 0) Seq(Interval(0, durationMs.toLong)) else Nil
     }
     val e = msEnergies(samples, spms)
-    val runs = silentStartRuns(e, 0, spms, samples.length.toLong,
-      0, durationMs - minSilenceLenMs + 1, minSilenceLenMs, silenceThreshDb)
+    val runs = silentStartRuns(e, spms, samples.length.toLong,
+      durationMs - minSilenceLenMs + 1, minSilenceLenMs, silenceThreshDb)
     val silent = runs.map { case (f, l) => Interval(f.toLong, (l + minSilenceLenMs).toLong) }
     complement(silent, durationMs.toLong)
   }

@@ -1999,7 +1999,7 @@ object AnalyticsOps {
   def q175(s: SparkSession, d: String): DataFrame = {
     // Measured and REJECTED (r18): a round-robin repartition after the
     // read (guide §2.5's unsplittable-single-file move) to parallelize
-    // the 6×-Expand partial aggregation — QTime min-of-5 1.962 s before
+    // the 6×-Expand partial aggregation — min-of-5 1.962 s before
     // vs 1.926 s after, inside noise: the exchange of the projected rows
     // costs what the parallel expand saves at this volume, and the final
     // distinct phase was already 32-way.

@@ -613,9 +613,9 @@ object DedupSim {
     seedCodebookN(s, d, IvfCells.toLong)
 
   /** The sequential IEEE double fold dot_f32 computes — the DRIVER-side
-    * twin used to resolve probe cells from a literal codebook (q345/q351/
-    * tools.IvfSqrtN share this one definition: its bit-exact order is
-    * load-bearing for oracle parity). */
+    * twin used to resolve probe cells from a literal codebook (q345/q351
+    * share this one definition: its bit-exact order is load-bearing for
+    * oracle parity; the measured faces are in SCALECHECK_r15.md). */
   private[graft] def dotSeqD(a: Array[Float], b: Array[Float]): Double = {
     var acc = 0.0
     var i = 0
@@ -640,8 +640,7 @@ object DedupSim {
   /** Each query's [[IvfProbes]] nearest cells under a literal codebook,
     * resolved driver-side with [[dotSeqD]] and the (score, seed_id)
     * lexicographic tie-break the oracles state — ONE definition for
-    * q345, q351, and tools.IvfSqrtN (a drifted copy here silently
-    * desyncs the measurement tool from the board entry). */
+    * q345 and q351 (a drifted copy would desync the two board entries). */
   private[graft] def probePairsFor(qVecs: Array[(Long, Array[Float])],
       code: Array[(Long, Array[Float])]): Seq[(Long, Long)] =
     qVecs.toSeq.flatMap { case (q, qe) =>
@@ -743,6 +742,8 @@ object DedupSim {
     ivfAssignFrom(emb, cellScores)
   }
 
+  private val ivfGate = new scala.util.DynamicVariable[Int](16)
+
   /** Cell count above which [[ivfAssignAuto]] switches from the literal
     * projection to the broadcast-kernel form. Evidence (SCALECHECK_r16 §1
     * sweep at fixed N=20k): the literal struct-min NEVER enters whole-stage
@@ -752,23 +753,15 @@ object DedupSim {
     * fixed 16-cell size (0.31 s vs 0.19 s). Default 16: the base q59-family
     * operators keep their historical measured plans; every trained/√N
     * codebook takes the kernel, whose plan is O(1) at any cell count.
-    * Overridable via system property so specs force each branch. */
-  private[graft] def ivfLiteralMaxCells: Int =
-    sys.props.get("graft.ivf.literalMaxCells").map(_.toInt).getOrElse(16)
+    * Read on the calling thread when a plan is built. */
+  private[graft] def ivfLiteralMaxCells: Int = ivfGate.value
 
-  /** Run `body` with the literal/kernel gate forced to `maxCells` —
-    * hoisted next to the gate so its property name, default, and override
-    * mechanism live in ONE file (IvfKernelSpec and tools.IvfEstepBench
-    * both drive it). */
-  private[graft] def withIvfGate[T](maxCells: Int)(body: => T): T = {
-    val prev = sys.props.get("graft.ivf.literalMaxCells")
-    sys.props("graft.ivf.literalMaxCells") = maxCells.toString
-    try body
-    finally prev match {
-      case Some(v) => sys.props("graft.ivf.literalMaxCells") = v
-      case None    => sys.props.remove("graft.ivf.literalMaxCells"): Unit
-    }
-  }
+  /** Run `body` with the literal/kernel gate forced to `maxCells` on this
+    * thread only, so a spec can force each branch (IvfKernelSpec) without
+    * the override reaching other threads; the sweep that fixed the default
+    * is SCALECHECK_r16.md §1. */
+  private[graft] def withIvfGate[T](maxCells: Int)(body: => T): T =
+    ivfGate.withValue(maxCells)(body)
 
   /** E-step at ANY codebook size — size-gated over THREE adjudicated forms
     * (round 16, closes the r15 verdict's weak #1):
@@ -2890,7 +2883,7 @@ object DedupSim {
     * q59 scale-weak finding): q59/q219 keep a FIXED 16-cell inverted
     * file, so the per-query candidate scan grows linearly with the
     * corpus — measured 46.4× at 100× data in SCALECHECK_r14. The
-    * production layout keeps cells ∝ √N (tools/IvfScale measured search
+    * production layout keeps cells ∝ √N (SCALECHECK_r14 measured search
     * 1.47× at 100× at recall@3 = 1.0); this entry puts that shape
     * behind the oracle gate:
     *

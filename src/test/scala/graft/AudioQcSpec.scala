@@ -78,12 +78,6 @@ class AudioQcSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(row.getLong(0) == 16L)
     assert(row.getLong(1) == 40000L)
     assert(row.getLong(2) == 40000L * 1000 / 16)
-    // the dB view agrees with the closed form
-    val db = Seq(clip).toDF("s")
-      .select(AudioQc.snrStats(col("s"), 4).as("st"))
-      .select(AudioQc.snrDb(col("st.speech_e"), col("st.noise_e")).as("db"))
-      .head().getDouble(0)
-    assert(math.abs(db - 10.0 * math.log10(40000.0 / 16.0)) < 1e-9)
   }
 
   test("plan is UDF-free, shuffle-free, single-stage (scan-speed at 100 TB)") {

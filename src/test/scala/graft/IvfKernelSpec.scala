@@ -104,4 +104,24 @@ class IvfKernelSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(a == b, s"q345 row $i drifts under the kernel E-step: $a vs $b")
     }
   }
+
+  test("the gate override stays on its own thread") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    // the other thread exists before the override, so it inherits nothing
+    val overridden = new CountDownLatch(1)
+    val seen = new AtomicInteger(-1)
+    val other = new Thread(() => {
+      overridden.await(30, TimeUnit.SECONDS)
+      seen.set(graft.queries.DedupSim.ivfLiteralMaxCells)
+    })
+    other.start()
+    withGate(Int.MaxValue) {
+      assert(graft.queries.DedupSim.ivfLiteralMaxCells == Int.MaxValue)
+      overridden.countDown()
+      other.join(30000)
+    }
+    assert(seen.get == 16)
+    assert(graft.queries.DedupSim.ivfLiteralMaxCells == 16)
+  }
 }

@@ -53,6 +53,69 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       Set((507L, 15507L), (15507L, 30507L), (30507L, 40493L)))
   }
 
+  /** ~3 min of alternating tone bursts and silences at 44.1 kHz: mono
+    * decode, normalization, resampling to 16 kHz and VAD over dozens of
+    * silences, with splits and greedy merges. Deterministic. */
+  private def longWav: Array[Byte] = {
+    val rate = 44100
+    val n = 185 * rate
+    val samples = new Array[Float](n)
+    var i = 0
+    var k = 0
+    while (i < n) {
+      val burstLen = ((1.5 + (k % 7) * 0.8) * rate).toInt
+      val silLen = ((0.35 + 0.05 * (k % 4)) * rate).toInt
+      val freq = 180.0 + 37.0 * (k % 11)
+      var j = 0
+      while (j < burstLen && i < n) {
+        // gentle fade at the edges keeps the burst boundary unambiguous
+        val env = math.min(1.0, math.min(j, burstLen - j) / (0.02 * rate))
+        samples(i) = (0.35 * env * math.sin(2 * math.Pi * freq * j / rate)).toFloat
+        i += 1; j += 1
+      }
+      i += silLen // silence = zeros
+      k += 1
+    }
+    // one short transient owns the global peak, so post-normalization the
+    // tones sit near 0.39 amplitude
+    samples(1000) = 0.9f
+    graft.io.WavCodec.encodeMono16(samples, rate)
+  }
+
+  private def md5Hex(samples: Array[Float]): String = {
+    val buf = java.nio.ByteBuffer.allocate(samples.length * 4)
+    buf.asFloatBuffer().put(samples)
+    java.security.MessageDigest.getInstance("MD5").digest(buf.array())
+      .map(b => f"${b & 0xff}%02x").mkString
+  }
+
+  test("segmentFiles: a 185 s 44.1 kHz file gives the frozen segments and samples") {
+    import spark.implicits._
+    val rows = Seq(("dir/long.wav", longWav)).toDF("path", "content")
+    val got = Pipeline.segmentFiles(Pipeline.decodeWavRows(rows)).collect()
+      .sortBy(_.startMs)
+      .map(s => (s.startMs, s.endMs, s.padStartMs, s.padEndMs, md5Hex(s.samples)))
+      .toSeq
+    // (startMs, endMs, padStartMs, padEndMs, md5 of the big-endian float
+    // samples), frozen literals: a VAD window decision that flips moves an
+    // edge, and a drift in decode or resampling changes a hash
+    assert(got == Seq(
+      (0L, 11989L, 0L, 12189L, "0490179f49ff4091354caed147192e3b"),
+      (12511L, 23039L, 12311L, 23239L, "ae0f2433f14ec53d7274c88153079339"),
+      (23461L, 37939L, 23261L, 38139L, "5f4ef4c51874afd38e70b4bd759be1d7"),
+      (38361L, 47388L, 38161L, 47588L, "32762e777e0f491f65d57645cbe53669"),
+      (47911L, 61939L, 47711L, 62139L, "2df2552c3f62ddfd8428772fe39064e3"),
+      (62411L, 72539L, 62211L, 72739L, "9880690adb227911a65b1d839bbecac9"),
+      (72961L, 83589L, 72761L, 83789L, "3deecc8f61858e096e205167d9c38b2d"),
+      (84111L, 98489L, 83911L, 98689L, "8580a15794df6f8a88a20f449864bb38"),
+      (99010L, 113839L, 98810L, 114039L, "2557202a83c69580d490aa3f74fad52b"),
+      (114311L, 128739L, 114111L, 128939L, "afe979c7eb61ae5259c5cc4050d24f43"),
+      (129210L, 144138L, 129010L, 144338L, "399410a6f4027ebf43d70cf474acecce"),
+      (144561L, 159039L, 144361L, 159239L, "010503ae0b59b7744b92197933df6751"),
+      (159461L, 168488L, 159261L, 168688L, "bd0f31bf60c097e713521d8be0ab8740"),
+      (169011L, 183039L, 168811L, 183239L, "ff73561b7dc135f2963368fc141875a6")))
+  }
+
   test("audio-quality filter rejects by RMS / clipping / music ratio respectively") {
     val segs = Pipeline.segmentFiles(Pipeline.decodeWavDir(spark, wavDir))
     val ok = Pipeline.audioQuality(segs).select("originalName").distinct()
@@ -103,6 +166,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // boxed Double equality: bit-exact, no tolerance
     want.foreach { case (k, v) => assert(got(k) == v, s"segment $k") }
     assert(got.keySet == want.keySet)
+    // the quality stage adds no column of its own: it only filters
+    assert(Pipeline.audioQuality(segs).columns.toSeq == typed.columns.toSeq)
   }
 
   test("measure: an empty slice divides by zero like the Catalyst expressions, per ANSI mode") {

@@ -131,93 +131,4 @@ object AviMjpeg {
       case (f, i) if i % nth == 0 => (i, f)
     }
   }
-
-  // ------------------------------------------------------------------
-  // CHUNKED (ranged-read) demux — the 100 TB path for multi-GB AVIs:
-  // [[demux]] needs the whole file as ONE array (breaks at the 2 GB row
-  // limit long before a real surveillance/recording AVI ends). The ranged
-  // form never holds more than one frame: an INDEX pass walks chunk
-  // HEADERS only (8-byte reads, skipping every payload — O(frames)
-  // metadata IO regardless of file size), then frames FETCH individually
-  // by (offset, length). The RangeReader seam is whatever storage serves
-  // ranged reads — a local file, an object store GET with Range, or (in
-  // specs) a byte array.
-  // ------------------------------------------------------------------
-
-  /** Ranged-read seam: (offset, length) → exactly those bytes. */
-  type RangeReader = (Long, Int) => Array[Byte]
-
-  /** A RangeReader over in-memory bytes (specs / small fixtures). */
-  def rangeReaderOf(bytes: Array[Byte]): RangeReader = (off, len) => {
-    require(off >= 0 && len >= 0 && off + len <= bytes.length,
-      s"range [$off, +$len) outside ${bytes.length} bytes")
-    java.util.Arrays.copyOfRange(bytes, off.toInt, off.toInt + len)
-  }
-
-  final case class FrameRef(idx: Int, offset: Long, length: Int)
-  final case class VideoIndex(width: Int, height: Int, fps: Int,
-                              frames: Vector[FrameRef])
-
-  /** Header-only index pass: same validation as [[demux]] (magic, chunk
-    * walk, avih cross-check), but frame PAYLOADS are never read — each
-    * '00dc' contributes a (offset, length) directory entry. */
-  def index(read: RangeReader, totalLen: Long): VideoIndex = {
-    require(totalLen > 12, "not an AVI: too short")
-    val head = read(0, 12)
-    require(isFourcc(head, 0, "RIFF") && isFourcc(head, 8, "AVI "),
-      "not an AVI: bad RIFF/AVI magic")
-    val riffLen = rdLe32(head, 4)
-    require(riffLen >= 0 && riffLen + 8 <= totalLen, "truncated RIFF payload")
-    var width = 0; var height = 0; var fps = 0; var declared = -1
-    var n = 0
-    val frames = Vector.newBuilder[FrameRef]
-    def walk(from: Long, to: Long): Unit = {
-      var pos = from
-      while (pos + 8 <= to) {
-        val hdr = read(pos, 8)
-        val id = new String(hdr, 0, 4, "US-ASCII")
-        val len = rdLe32(hdr, 4)
-        require(len >= 0 && pos + 8 + len <= to, s"truncated chunk $id")
-        id match {
-          case "LIST" =>
-            val typ = new String(read(pos + 8, 4), 0, 4, "US-ASCII")
-            if (typ == "hdrl" || typ == "movi" || typ == "strl")
-              walk(pos + 12, pos + 8 + len)
-          case "avih" =>
-            val b = read(pos + 8, 48)
-            val usPerFrame = rdLe32(b, 0)
-            require(usPerFrame > 0, "bad avih: zero frame duration")
-            fps = 1000000 / usPerFrame
-            declared = rdLe32(b, 16)
-            width = rdLe32(b, 32)
-            height = rdLe32(b, 36)
-          case "00dc" =>
-            frames += FrameRef(n, pos + 8, len); n += 1
-          case _ => () // payload skipped by size — never read
-        }
-        pos += 8 + len + (len % 2) // word alignment
-      }
-    }
-    walk(12, 8 + riffLen)
-    val fs = frames.result()
-    require(declared >= 0, "missing avih header")
-    require(fs.nonEmpty, "no video frames ('00dc') in movi")
-    require(declared == fs.length,
-      s"avih declares $declared frames, movi carries ${fs.length}")
-    VideoIndex(width, height, fps, fs)
-  }
-
-  /** One frame's bytes by directory entry — the only payload-sized read. */
-  def fetch(read: RangeReader, ref: FrameRef): Array[Byte] =
-    read(ref.offset, ref.length)
-
-  /** [[sampleFrames]] through the ranged path: index (headers only), then
-    * fetch ONLY the sampled frames — total IO = O(frames) header bytes +
-    * the kept frames' payloads, independent of file size. */
-  def sampleFramesChunked(read: RangeReader, totalLen: Long,
-                          nth: Int): Vector[(Int, Array[Byte])] = {
-    require(nth >= 1, s"sampleFrames stride must be >= 1, got $nth")
-    val ix = index(read, totalLen)
-    ix.frames.collect { case fr if fr.idx % nth == 0 => (fr.idx, fetch(read, fr)) }
-  }
 }

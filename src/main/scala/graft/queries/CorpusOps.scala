@@ -280,7 +280,7 @@ object CorpusOps {
     * LOWER-id neighbor above the cosine threshold INSIDE ITS CLUSTER —
     * first-writer-wins applied to semantic duplicates, with the cluster
     * bucketing keeping the pair space Σ cell² instead of N². Reuses
-    * q59/q107's literal-codebook cell assignment (pure projection, zero
+    * q59/q107's broadcast-kernel cell assignment (pure projection, zero
     * shuffle) and the fused CosineF32 kernel; the oracle re-derives the
     * identical cells and the quadratic within-cell neighbor test.
     *

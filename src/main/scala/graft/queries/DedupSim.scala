@@ -592,30 +592,15 @@ object DedupSim {
   private val PqSub = 8
   private val PqCent = 16
 
-  /** The literal-codebook cell-score expression builder — shared by q59
-    * (ANN search), q106 (recall eval) and q107 (Lloyd M-step).
-    *
-    * The coarse codebook is tiny and FIXED (16 seed vectors standing in for
-    * an offline k-means codebook), so collect it once at plan-build time and
-    * embed it as literals. Cell assignment then becomes a pure per-row
-    * projection: all 16 scores in one expression tree, argmin by
-    * lexicographic struct-min — ZERO explode, ZERO shuffle. The round-2
-    * formulation (crossJoin seeds + row_number window) shuffled 16N rows
-    * for the same per-row decision; at 100× the corpus that shuffle is the
-    * operator's bottleneck, this projection is free. Scores are the same
-    * dot_f32 IEEE folds (the seed-norm literal folds constant-fold through
-    * the identical interpreted loop), so assignments match the oracle
-    * bit-for-bit. Returns the embeddings table plus the score-array builder:
-    * an array of (score, seed_id) structs, one entry per codebook cell. */
   /** The frozen seed codebook: the first [[IvfCells]] vectors, collected
     * once at plan-build time. */
   private def seedCodebook(s: SparkSession, d: String): Array[(Long, Array[Float])] =
     seedCodebookN(s, d, IvfCells.toLong)
 
   /** The sequential IEEE double fold dot_f32 computes — the DRIVER-side
-    * twin used to resolve probe cells from a literal codebook (q345/q351
-    * share this one definition: its bit-exact order is load-bearing for
-    * oracle parity; the measured faces are in SCALECHECK_r15.md). */
+    * twin that resolves probe cells and the kernel's cell self-dots (one
+    * definition: its bit-exact order is load-bearing for oracle parity;
+    * the measured faces are in SCALECHECK_r15.md). */
   private[graft] def dotSeqD(a: Array[Float], b: Array[Float]): Double = {
     var acc = 0.0
     var i = 0
@@ -637,19 +622,44 @@ object DedupSim {
       }
       .sortBy(_._1)
 
-  /** Each query's [[IvfProbes]] nearest cells under a literal codebook,
-    * resolved driver-side with [[dotSeqD]] and the (score, seed_id)
-    * lexicographic tie-break the oracles state — ONE definition for
-    * q345 and q351 (a drifted copy would desync the two board entries). */
+  /** The `k` nearest cells of `v` under `code`, nearest first: the score
+    * ||c||² - 2·v·c by [[dotSeqD]], ordered by (score, cell id) under
+    * Spark's double ordering — the tie-break the oracles' window
+    * ORDER BY (score, seed_id) and [[graft.functions.IvfKernel]] state. */
+  private def nearestCells(v: Array[Float], code: Array[(Long, Array[Float])],
+                           k: Int): Seq[Long] =
+    code.toSeq.map { case (cid, ce) => (dotSeqD(ce, ce) - 2.0 * dotSeqD(v, ce), cid) }
+      .sortWith { case ((sa, ca), (sb, cb)) =>
+        val c = org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(sa, sb)
+        c < 0 || (c == 0 && ca < cb)
+      }
+      .take(k).map(_._2)
+
+  /** Each query's [[IvfProbes]] nearest cells under a codebook, resolved
+    * on the driver — the one probe resolver of every IVF search. */
   private[graft] def probePairsFor(qVecs: Array[(Long, Array[Float])],
       code: Array[(Long, Array[Float])]): Seq[(Long, Long)] =
     qVecs.toSeq.flatMap { case (q, qe) =>
-      code.toSeq.map { case (cid, ce) =>
-        (dotSeqD(ce, ce) - 2.0 * dotSeqD(qe, ce), cid) }
-        .sortBy(identity)
-        .take(IvfProbes)
-        .map { case (_, cid) => (q, cid) }
-    }
+      nearestCells(qe, code, IvfProbes).map(cid => (q, cid)) }
+
+  /** The query side of an IVF search: `qs` (q_id, qe) is the probe-query
+    * slice served back as a local relation, `probes` (q_id, qe, cell)
+    * carries one row per probed cell, and `cells` lists the distinct
+    * probed cells ascending (a partition filter for the inverted-file
+    * reads). Ids are cast to `idType`, the corpus' vec_id type. */
+  private final case class ProbeSide(qs: DataFrame, probes: DataFrame, cells: Seq[Long])
+
+  private def probeSide(s: SparkSession, d: String, code: Array[(Long, Array[Float])],
+                        idType: org.apache.spark.sql.types.DataType): ProbeSide = {
+    import s.implicits._
+    val qVecs = probeVectors(s, d)
+    val pairs = probePairsFor(qVecs, code)
+    val qs = qVecs.toSeq.toDF("q_id", "qe").withColumn("q_id", col("q_id").cast(idType))
+    val probes = pairs.toDF("q_id", "cell")
+      .select(col("q_id").cast(idType).as("q_id"), col("cell").cast(idType).as("cell"))
+      .join(broadcast(qs), Seq("q_id"))
+    ProbeSide(qs, probes, pairs.map(_._2).distinct.sorted)
+  }
 
   /** Seed codebook at an arbitrary cell count (q345's √N layout). */
   private[graft] def seedCodebookN(s: SparkSession, d: String,
@@ -659,7 +669,7 @@ object DedupSim {
       .collect()
       .map { r =>
         // fail fast on null elements: getSeq[Float] would silently unbox a
-        // null to 0.0f in the literal codebook, diverging from dot_f32's
+        // null to 0.0f in the codebook, diverging from dot_f32's
         // null-propagating semantics (round-3 advice) — a bad fixture must
         // surface as an error, not a silent substitution
         val raw = r.getSeq[Any](1)
@@ -669,27 +679,9 @@ object DedupSim {
       }
       .sortBy(_._1)
 
-  /** Literal score-array builder for any codebook: an array of
-    * (score, seed_id) structs, one per cell, as a pure projection. */
-  private def cellScoresFor(codebook: Array[(Long, Array[Float])],
-                            vecIdType: org.apache.spark.sql.types.DataType)
-                           (embCol: Column): Column =
-    array(codebook.map { case (sid, ce) =>
-      val ceL = typedLit(ce)
-      struct(
-        (graft.functions.GraftFunctions.dotF32(ceL, ceL) -
-         lit(2.0) * graft.functions.GraftFunctions.dotF32(embCol, ceL)).as("score"),
-        lit(sid).cast(vecIdType).as("seed_id"))
-    }: _*)
-
-  private def ivfCellScores(s: SparkSession, d: String): (DataFrame, Column => Column) = {
-    val emb = Tables.embeddings(s, d)
-    (emb, cellScoresFor(seedCodebook(s, d), emb.schema("vec_id").dataType))
-  }
-
   /** TRAINED coarse codebook (round-7 verdict item 7): `rounds` full Lloyd
-    * iterations over the corpus, each one E-step (the zero-shuffle literal
-    * cell-assignment projection) + M-step (the 16-buffer sumsQ6 typed
+    * iterations over the corpus, each one E-step ([[ivfAssignKernel]], the
+    * zero-shuffle cell assignment) + M-step (the 16-buffer sumsQ6 typed
     * aggregator — integer-exact per-dim q6 sums, never a 64N explode).
     * The new centroid re-QUANTIZES deterministically: q6-mean by
     * truncating integer division, then one correctly-rounded double→float
@@ -707,10 +699,9 @@ object DedupSim {
       seed: Array[(Long, Array[Float])], rounds: Int): Array[(Long, Array[Float])] = {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
-    val vecIdType = emb.schema("vec_id").dataType
     var code = seed
     (0 until rounds).foreach { _ =>
-      val assign = ivfAssignAuto(emb, code)
+      val assign = ivfAssignKernel(emb, code)
       val stats = assign.select(col("cell").cast("long"), col("embedding"))
         .as[(Long, Array[Float])]
         .groupByKey(_._1)
@@ -729,80 +720,10 @@ object DedupSim {
     code
   }
 
-  /** Every vector with its nearest codebook cell — the IVF E-step as a pure
-    * projection. Nearest cell = lexicographic min over (score, seed_id):
-    * same argmin + tie-break the oracle's window ORDER BY (score, seed_id)
-    * states. */
-  private def ivfAssignFrom(emb: DataFrame, cellScores: Column => Column): DataFrame =
-    emb.select(col("vec_id"), col("embedding"),
-      array_min(cellScores(col("embedding"))).getField("seed_id").as("cell"))
+  /** Every vector with its nearest cell of the 16-cell seed codebook. */
+  private[graft] def ivfAssign(s: SparkSession, d: String): DataFrame =
+    ivfAssignKernel(Tables.embeddings(s, d), seedCodebook(s, d))
 
-  private[graft] def ivfAssign(s: SparkSession, d: String): DataFrame = {
-    val (emb, cellScores) = ivfCellScores(s, d)
-    ivfAssignFrom(emb, cellScores)
-  }
-
-  private val ivfGate = new scala.util.DynamicVariable[Int](16)
-
-  /** Cell count above which [[ivfAssignAuto]] switches from the literal
-    * projection to the broadcast-kernel form. Evidence (SCALECHECK_r16 §1
-    * sweep at fixed N=20k): the literal struct-min NEVER enters whole-stage
-    * codegen (the interpreted array_min ordering), so its per-row cost
-    * grows with the cell count immediately — 15× slower than the kernel at
-    * 32 cells, 38× at 141, and only within-noise comparable at the legacy
-    * fixed 16-cell size (0.31 s vs 0.19 s). Default 16: the base q59-family
-    * operators keep their historical measured plans; every trained/√N
-    * codebook takes the kernel, whose plan is O(1) at any cell count.
-    * Read on the calling thread when a plan is built. */
-  private[graft] def ivfLiteralMaxCells: Int = ivfGate.value
-
-  /** Run `body` with the literal/kernel gate forced to `maxCells` on this
-    * thread only, so a spec can force each branch (IvfKernelSpec) without
-    * the override reaching other threads; the sweep that fixed the default
-    * is SCALECHECK_r16.md §1. */
-  private[graft] def withIvfGate[T](maxCells: Int)(body: => T): T =
-    ivfGate.withValue(maxCells)(body)
-
-  /** E-step at ANY codebook size — size-gated over THREE adjudicated forms
-    * (round 16, closes the r15 verdict's weak #1):
-    *
-    *  1. LITERAL PROJECTION (cells ≤ [[ivfLiteralMaxCells]]): all scores in
-    *     one expression tree, argmin by lexicographic struct-min — zero
-    *     shuffle, zero exchange, and the form DuckDB replays verbatim. Two
-    *     measured costs (SCALECHECK_r16 §1): the struct-min ordering never
-    *     enters whole-stage codegen, so the interpreted projection's
-    *     per-row cost grows linearly with cells from the start (15× the
-    *     kernel at 32 cells, 38× at 141); and the PLAN grows with cells ×
-    *     Dim literal nodes — at √N ≈ 10⁵ cells plan construction /
-    *     optimization / task serialization dominate before any row is
-    *     read, the r15 verdict's driver-side scale-killer.
-    *  2. BROADCAST-KERNEL (cells > [[ivfLiteralMaxCells]]): the codebook
-    *     ships ONCE per executor as a Spark broadcast value and a compiled
-    *     [[graft.functions.IvfKernel]] argmin runs inside whole-stage
-    *     codegen ([[graft.functions.IvfNearestCell]]). O(1) plan size at
-    *     any cell count, same zero-shuffle per-row shape, and the SAME
-    *     sequential IEEE double fold + (score, seed_id) tie-break — the
-    *     two forms are bit-interchangeable (IvfKernelSpec asserts equality
-    *     over every fixture and the null/ragged degenerate rows).
-    *  3. BROADCAST-JOIN argmin (crossJoin codebook, partial `min` per
-    *     vector): implemented and MEASURED at the 100× tier in round 15 —
-    *     233.2 s vs the literal form's 72.6 s, 3.2× slower, because the
-    *     join materializes N×cells rows through per-row agg machinery and
-    *     adds a full N-row shuffle. REJECTED for all sizes (SCALECHECK_r15
-    *     §1); the kernel form has the join's O(1) plan WITHOUT its
-    *     exchange, strictly dominating it. */
-  private[graft] def ivfAssignAuto(emb: DataFrame,
-      code: Array[(Long, Array[Float])]): DataFrame =
-    if (code.length <= ivfLiteralMaxCells)
-      ivfAssignFrom(emb, cellScoresFor(code, emb.schema("vec_id").dataType))
-    else ivfAssignKernel(emb, code)
-
-  /** The broadcast-kernel E-step (form 2 of [[ivfAssignAuto]]): flatten the
-    * codebook row-major, precompute each cell's self-dot with [[dotSeqD]]
-    * (the same fold the literal form constant-folds), broadcast once, and
-    * project the argmin through the codegen [[graft.functions
-    * .IvfNearestCell]] expression. Output schema and values match the
-    * literal form exactly (cell cast to the vec_id type). */
   /** One broadcast per (session, codebook CONTENT), bounded (round 17,
     * closing the r16 advisory): q351/q358 assign the same codebook 2–4
     * times per query, and re-broadcasting an identical tens-of-MB payload
@@ -861,6 +782,20 @@ object DedupSim {
     md.digest().map("%02x".format(_)).mkString
   }
 
+  /** The IVF E-step — every vector with its nearest codebook cell, at any
+    * codebook size: flatten the codebook row-major, precompute each cell's
+    * self-dot with [[dotSeqD]], broadcast once per executor, and project
+    * the argmin through the codegen [[graft.functions.IvfNearestCell]]
+    * expression. The plan is O(1) in the cell count, there is no shuffle,
+    * and the scores are the oracles' algebra bit for bit: the sequential
+    * IEEE double fold of dot_f32 and the (score, seed_id) tie-break of
+    * their window ORDER BY (IvfKernelSpec checks it against a literal
+    * struct-min reference, degenerate rows included). Output: vec_id,
+    * embedding, cell (cast to the vec_id type). Measured alternatives: a
+    * literal projection of all scores was never faster (0.31 s against
+    * 0.19 s at 16 cells, 15×–38× slower at 32–141, SCALECHECK_r16 §1),
+    * and a broadcast-join argmin was 3.2× slower than that at the 100×
+    * tier (SCALECHECK_r15 §1). */
   private[graft] def ivfAssignKernel(emb: DataFrame,
       code: Array[(Long, Array[Float])]): DataFrame = {
     require(code.nonEmpty, "IVF kernel assignment needs a non-empty codebook")
@@ -868,8 +803,8 @@ object DedupSim {
     require(code.forall(_._2.length == dim),
       "IVF codebook cells must share one dimensionality")
     // ids MUST ascend: IvfKernel's tie-break and firstId are
-    // position-based while the literal struct-min's are value-based —
-    // the bit-parity contract silently breaks on an unsorted codebook
+    // position-based while the oracles' (score, seed_id) order is
+    // value-based — parity silently breaks on an unsorted codebook
     // (round-16 review; every builder sorts, this enforces it)
     require((1 until code.length).forall(i => code(i - 1)._1 < code(i)._1),
       "IVF kernel codebook ids must be strictly ascending")
@@ -910,22 +845,72 @@ object DedupSim {
       cellCol.cast(emb.schema("vec_id").dataType).as("cell"))
   }
 
-  def q59(s: SparkSession, d: String): DataFrame = {
-    val (emb, cellScores) = ivfCellScores(s, d)
-    val assign = ivfAssignFrom(emb, cellScores)
-    // queries probe their 4 nearest cells: sort the 16-struct array, take 4 —
-    // still a projection; the explode is on the 5-query side only
-    val probes = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
-        explode(slice(array_sort(cellScores(col("embedding"))), 1, IvfProbes)
-          .getField("seed_id")).as("cell"))
-    val wRank = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-    assign.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cosine",
+  /** Exact-cosine top-3 per query over candidate pairs (q_id, qe, vec_id,
+    * embedding): the codegen'd cosine_f32, ranked by (cosine DESC, vec_id)
+    * — the ranking every IVF search and its exact ground truth share. */
+  private def cosineTop3(pairs: DataFrame): DataFrame = {
+    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
+    pairs.withColumn("cosine",
         graft.functions.GraftFunctions.cosineF32(col("qe"), col("embedding")))
-      .withColumn("rnk", row_number().over(wRank))
+      .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= 3)
+  }
+
+  /** The IVF search: each probe query's top-3 among the vectors of its
+    * probed cells, itself excluded. `index` carries (vec_id, embedding,
+    * cell); the broadcast probe list makes the candidate join an
+    * equi-join on cell. */
+  private def probedTop3(index: DataFrame, probes: DataFrame): DataFrame =
+    cosineTop3(index.join(broadcast(probes), Seq("cell"))
+      .filter(col("vec_id") =!= col("q_id")))
+
+  /** The search of the inverted-file entries (q345, q351, q358, q371):
+    * [[probedTop3]] over only the probed cells of a cell-partitioned
+    * index, so the read carries a literal `cell IN (…)` partition filter.
+    * Output (q_id, rnk, vec_id, cell, cosine), ids BIGINT. */
+  private def prunedTop3(index: DataFrame, ps: ProbeSide): DataFrame =
+    probedTop3(index.withColumn("cell", col("cell").cast("long"))
+        .filter(col("cell").isin(ps.cells: _*)), ps.probes)
+      .select(col("q_id").cast("long").as("q_id"), col("rnk").cast("long").as("rnk"),
+        col("vec_id").cast("long").as("vec_id"), col("cell"), col("cosine"))
+
+  /** Every row of `df` with its nearest cell as BIGINT — the rows the
+    * cell-partitioned inverted files of q345/q351/q358/q371 store. */
+  private def cellIndexRows(df: DataFrame, code: Array[(Long, Array[Float])]): DataFrame =
+    ivfAssignKernel(df, code).withColumn("cell", col("cell").cast("long"))
+
+  /** Parquet data files under `dir` (the compaction entries' file census). */
+  private def countParquet(dir: String): Long = {
+    val stream = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try stream.filter(p => p.toString.endsWith(".parquet")).count()
+    finally stream.close()
+  }
+
+  /** Brute-force top-3 of every query in `qs` (q_id, qe) over the corpus. */
+  private def exactTop3(emb: DataFrame, qs: DataFrame): DataFrame =
+    cosineTop3(emb.join(broadcast(qs), col("vec_id") =!= col("q_id")))
+
+  /** recall@3 of an approximate top-3 (q_id, vec_id) against the exact
+    * top-3 of each probe query (vec_id < 5): one row per query with its
+    * hits and hits / 3.0 — the evaluator of q106, q187, q219 and q266. */
+  private def recallAt3(emb: DataFrame, approx: DataFrame): DataFrame = {
+    val qs = emb.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
+    val exact = exactTop3(emb, qs).select(col("q_id"), col("vec_id"))
+    val hits = exact.join(approx, Seq("q_id", "vec_id"), "left_semi")
+      .groupBy(col("q_id")).agg(count(lit(1)).as("hits"))
+    exact.select(col("q_id")).distinct()
+      .join(hits, Seq("q_id"), "left")
+      .select(col("q_id"), coalesce(col("hits"), lit(0L)).as("hits"))
+      .withColumn("recall_at_3", col("hits").cast("double") / 3.0)
+      .orderBy(col("q_id"))
+  }
+
+  def q59(s: SparkSession, d: String): DataFrame = {
+    val emb = Tables.embeddings(s, d)
+    val code = seedCodebook(s, d)
+    val probes = probeSide(s, d, code, emb.schema("vec_id").dataType).probes
+    probedTop3(ivfAssignKernel(emb, code), probes)
       .select(col("q_id"), col("rnk").cast("long").as("rnk"), col("vec_id"),
               col("cell"), col("cosine"))
       .orderBy(col("q_id"), col("rnk"))
@@ -1760,26 +1745,8 @@ object DedupSim {
     * eval query set is always tiny — this is an audit, not a serving path);
     * the comparison join and rollup touch 15 rows. At 100 TB the exact side
     * is the only full scan, and it is one pass. */
-  def q106(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val qs = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-    val exact = emb.join(broadcast(qs), col("vec_id") =!= col("q_id"))
-      .withColumn("cosine",
-        graft.functions.GraftFunctions.cosineF32(col("qe"), col("embedding")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= 3)
-      .select(col("q_id"), col("vec_id"))
-    val ivf = q59(s, d).select(col("q_id"), col("vec_id"))
-    val hits = exact.join(ivf, Seq("q_id", "vec_id"), "left_semi")
-      .groupBy(col("q_id")).agg(count(lit(1)).as("hits"))
-    exact.select(col("q_id")).distinct()
-      .join(hits, Seq("q_id"), "left")
-      .select(col("q_id"), coalesce(col("hits"), lit(0L)).as("hits"))
-      .withColumn("recall_at_3", col("hits").cast("double") / 3.0)
-      .orderBy(col("q_id"))
-  }
+  def q106(s: SparkSession, d: String): DataFrame =
+    recallAt3(Tables.embeddings(s, d), q59(s, d).select(col("q_id"), col("vec_id")))
   val q106Sql: String = {
     def fold(a: String, b: String): String =
       s"list_reduce(list_transform(range(1, ${Dim + 1}), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)), (x,y) -> x+y)"
@@ -1810,8 +1777,8 @@ object DedupSim {
   // ---------------------------------------------------------------- q107
   /** One k-means Lloyd iteration over the embedding corpus — the training
     * step that turns q59's stand-in codebook into a real one: E-step
-    * assigns every vector to its nearest codebook cell (the literal-
-    * projection argmin, zero shuffle), M-step recomputes each cell's
+    * assigns every vector to its nearest codebook cell (the broadcast-
+    * kernel argmin, zero shuffle), M-step recomputes each cell's
     * centroid through the typed CentroidAggregator (integer-quantized
     * element sums — order-independent exact arithmetic, ONE buffer per
     * cell instead of 64 exploded rows per vector). Output long-form
@@ -2382,21 +2349,7 @@ object DedupSim {
         expr("aggregate(zip_with(qc, code, (a, b) -> (a - 128L) * (b - 128L)), 0L, (s, v) -> s + v)"))
       .withColumn("rnk", row_number().over(wA)).filter(col("rnk") <= 3)
       .select(col("q_id"), col("vec_id"))
-    val qsF = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
-    val wE = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-    val exact = emb.join(broadcast(qsF), col("vec_id") =!= col("q_id"))
-      .withColumn("cosine",
-        graft.functions.GraftFunctions.cosineF32(col("qe"), col("embedding")))
-      .withColumn("rnk", row_number().over(wE)).filter(col("rnk") <= 3)
-      .select(col("q_id"), col("vec_id"))
-    val hits = exact.join(approx, Seq("q_id", "vec_id"), "left_semi")
-      .groupBy(col("q_id")).agg(count(lit(1)).as("hits"))
-    exact.select(col("q_id")).distinct()
-      .join(hits, Seq("q_id"), "left")
-      .select(col("q_id"), coalesce(col("hits"), lit(0L)).as("hits"))
-      .withColumn("recall_at_3", col("hits").cast("double") / 3.0)
-      .orderBy(col("q_id"))
+    recallAt3(emb, approx)
   }
   val q187Sql: String = {
     def fold(a: String, b: String): String =
@@ -2449,36 +2402,10 @@ object DedupSim {
   def q219(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
     val code = trainedCodebook(s, d, rounds = 2)
-    val cs: Column => Column = cellScoresFor(code, emb.schema("vec_id").dataType)
-    val assign = ivfAssignFrom(emb, cs)
-    val probes = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
-        explode(slice(array_sort(cs(col("embedding"))), 1, IvfProbes)
-          .getField("seed_id")).as("cell"))
-    val wRank = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-    val approx = assign.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cosine",
-        graft.functions.GraftFunctions.cosineF32(col("qe"), col("embedding")))
-      .withColumn("rnk", row_number().over(wRank))
-      .filter(col("rnk") <= 3)
+    val probes = probeSide(s, d, code, emb.schema("vec_id").dataType).probes
+    val approx = probedTop3(ivfAssignKernel(emb, code), probes)
       .select(col("q_id"), col("vec_id"))
-    val qs = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
-    val wE = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-    val exact = emb.join(broadcast(qs), col("vec_id") =!= col("q_id"))
-      .withColumn("cosine",
-        graft.functions.GraftFunctions.cosineF32(col("qe"), col("embedding")))
-      .withColumn("rnk", row_number().over(wE))
-      .filter(col("rnk") <= 3)
-      .select(col("q_id"), col("vec_id"))
-    val hits = exact.join(approx, Seq("q_id", "vec_id"), "left_semi")
-      .groupBy(col("q_id")).agg(count(lit(1)).as("hits"))
-    exact.select(col("q_id")).distinct()
-      .join(hits, Seq("q_id"), "left")
-      .select(col("q_id"), coalesce(col("hits"), lit(0L)).as("hits"))
-      .withColumn("recall_at_3", col("hits").cast("double") / 3.0)
-      .orderBy(col("q_id"))
+    recallAt3(emb, approx)
   }
   /** Full-64-dim double dot fold in DuckDB SQL — the cross-engine twin of
     * dot_f32's sequential IEEE adds (shared by q219/q266). */
@@ -2617,18 +2544,12 @@ object DedupSim {
     * and the exact-side eval scan. */
   def q266(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
-    val vecIdType = emb.schema("vec_id").dataType
     val code = trainedCodebook(s, d, rounds = 2)
-    val cs: Column => Column = cellScoresFor(code, vecIdType)
-    // driver-side double arithmetic mirrors (same sequential fold order as
+    // driver-side double arithmetic mirror (same sequential fold order as
     // the SQL list_reduce and the column-side aggregate() fold)
     def dotDD(a: Array[Double], b: Array[Double]): Double = {
       var acc = 0.0; var i = 0
       while (i < a.length) { acc += a(i) * b(i); i += 1 }; acc
-    }
-    def dotFF(a: Array[Float], b: Array[Float]): Double = {
-      var acc = 0.0; var i = 0
-      while (i < a.length) { acc += a(i).toDouble * b(i).toDouble; i += 1 }; acc
     }
     // PQ sub-codebook: residuals of seeds 16..31 against their own trained
     // cell (assignment replicated driver-side with the identical argmin) —
@@ -2645,9 +2566,7 @@ object DedupSim {
       }
       .sortBy(_._1)
       .map { case (sid, v) =>
-        val (_, ce) = code.minBy { case (cid, ce) =>
-          (dotFF(ce, ce) - 2.0 * dotFF(v, ce), cid)
-        }
+        val ce = code.toMap.apply(nearestCells(v, code, 1).head)
         (sid, Array.tabulate(Dim)(i => v(i).toDouble - ce(i).toDouble))
       }
     require(pqSeeds.length == PqCent, s"expected $PqCent PQ seed residuals")
@@ -2663,7 +2582,7 @@ object DedupSim {
     // views of this table and `coded` reads it again — without the
     // barrier the argmin-over-cells + residual projection ran 9× (Spark
     // shares no subtrees across union branches; guide §1.2/§5).
-    val assign = ivfAssignFrom(emb, cs)
+    val assign = ivfAssignKernel(emb, code)
       .withColumn("res", resOf(col("embedding"), col("cell").cast("long")))
       .localCheckpoint()
     // per-subspace codebooks, indexed by m: start from seed-residual slices
@@ -2710,10 +2629,7 @@ object DedupSim {
       (col("vec_id") +: col("cell") +:
         (0 until PqM).map(m => codeColFor(pqTrained, m).as(s"code$m"))): _*)
     // query side: 4-probe list, residual per PROBED cell
-    val probes = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"),
-        explode(slice(array_sort(cs(col("embedding"))), 1, IvfProbes)
-          .getField("seed_id")).as("cell"))
+    val probes = probeSide(s, d, code, emb.schema("vec_id").dataType).probes
       .withColumn("q_res", resOf(col("qe"), col("cell").cast("long")))
     def termM(m: Int): Column =
       dotD(sliceM(col("q_res"), m), sliceM(col("q_res"), m)) +
@@ -2729,31 +2645,10 @@ object DedupSim {
       .filter(col("rnk") <= 20)
       .select(col("q_id"), col("qe"), col("vec_id"))
     // refine: exact cosine over ONLY the 20-candidate shortlist
-    val wRef = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-    val approx = emb.select(col("vec_id"), col("embedding"))
-      .join(broadcast(shortlist), Seq("vec_id"))
-      .withColumn("cosine",
-        graft.functions.GraftFunctions.cosineF32(col("qe"), col("embedding")))
-      .withColumn("rnk", row_number().over(wRef))
-      .filter(col("rnk") <= 3)
+    val approx = cosineTop3(emb.select(col("vec_id"), col("embedding"))
+      .join(broadcast(shortlist), Seq("vec_id")))
       .select(col("q_id"), col("vec_id"))
-    // exact ground truth + recall, the q106/q219 protocol
-    val qs = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qe"))
-    val wE = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-    val exact = emb.join(broadcast(qs), col("vec_id") =!= col("q_id"))
-      .withColumn("cosine",
-        graft.functions.GraftFunctions.cosineF32(col("qe"), col("embedding")))
-      .withColumn("rnk", row_number().over(wE))
-      .filter(col("rnk") <= 3)
-      .select(col("q_id"), col("vec_id"))
-    val hits = exact.join(approx, Seq("q_id", "vec_id"), "left_semi")
-      .groupBy(col("q_id")).agg(count(lit(1)).as("hits"))
-    exact.select(col("q_id")).distinct()
-      .join(hits, Seq("q_id"), "left")
-      .select(col("q_id"), coalesce(col("hits"), lit(0L)).as("hits"))
-      .withColumn("recall_at_3", col("hits").cast("double") / 3.0)
-      .orderBy(col("q_id"))
+    recallAt3(emb, approx)
   }
   val q266Sql: String = {
     val fold = foldAllSql _
@@ -2893,10 +2788,10 @@ object DedupSim {
     *    so DuckDB re-derives it bit-identically;
     *  - INDEX BUILD (one-time, O(N·√N), amortized like any ANN build):
     *    every vector assigned to its nearest cell by the zero-shuffle
-    *    literal projection and WRITTEN to parquet PARTITIONED BY cell —
+    *    broadcast-kernel E-step and WRITTEN to parquet PARTITIONED BY cell —
     *    the inverted file as a lakehouse layout;
     *  - SEARCH (the per-query serving cost): each probe query resolves
-    *    its [[IvfProbes]] nearest cells DRIVER-side from the literal
+    *    its [[IvfProbes]] nearest cells DRIVER-side from the
     *    codebook (index metadata, the same sequential IEEE double fold
     *    as dot_f32), so the read-back carries a LITERAL `cell IN (…)`
     *    predicate — partition PRUNING at the file index, never a full
@@ -2906,18 +2801,16 @@ object DedupSim {
     *    kernel (q27/q106's protocol) — the accuracy boundary of the
     *    trade, gated next to the speed shape. */
   /** Session-scoped memo of q345's one-time build — (index dir, trained
-    * codebook) per (session, dir, gate, corpus signature). Closes the r15
+    * codebook) per (session, dir, corpus signature). Closes the r15
     * advisory:
     * repeated q345 invocations in one session no longer retrain and
     * rewrite the corpus-sized index ("amortized one-time build" made
     * literal), and scratch accumulation is one dir per corpus instead of
-    * one per call. The E-step gate value is part of the key so a forced
-    * form (IvfKernelSpec) builds its OWN index rather than silently
-    * reusing the other form's. Evicted when the owning context stops;
-    * dirs reclaimed at JVM exit as before. */
+    * one per call. Evicted when the owning context stops; dirs reclaimed
+    * at JVM exit as before. */
   private val ivfIndexCache =
     new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, Int, String), (String, Array[(Long, Array[Float])])]()
+      (SparkSession, String, String), (String, Array[(Long, Array[Float])])]()
 
   /** Content signature of the embeddings table under `dir`: (name, length,
     * mtime) of every file — part of the q345 memo key so a REGENERATED
@@ -2934,58 +2827,35 @@ object DedupSim {
   }
 
   def q345(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val emb = Tables.embeddings(s, d)
     ivfIndexCache.entrySet().removeIf(_.getKey._1.sparkContext.isStopped)
     val (idxDir, code) = ivfIndexCache.computeIfAbsent(
-      (s, d, ivfLiteralMaxCells, embeddingsSig(d)), { _ =>
+      (s, d, embeddingsSig(d)), { _ =>
         val n = emb.count()
         val cells = math.max(16L, math.round(math.sqrt(n.toDouble)))
         val cb = trainedCodebookFrom(s, d, seedCodebookN(s, d, cells), rounds = 1)
-        // one-time build: the size-gated E-step assignment →
-        // cell-partitioned parquet. Corpus-sized scratch: reclaim at JVM
-        // exit (the result DataFrame reads it lazily, so deletion can't
-        // happen inside this call)
+        // one-time build: the E-step assignment → cell-partitioned
+        // parquet. Corpus-sized scratch: reclaim at JVM exit (the result
+        // DataFrame reads it lazily, so deletion can't happen inside this
+        // call)
         val dir = graft.io.FsUtil.scratchDir("graft_q345_ivf")
-        ivfAssignAuto(emb, cb)
+        ivfAssignKernel(emb, cb)
           .withColumn("cell", col("cell").cast("long"))
           .write.mode("overwrite").partitionBy("cell").parquet(dir)
         (dir, cb)
       })
 
-    // probe cells per query, resolved driver-side from the literal
-    // codebook — metadata-sized (5 queries × cells scores), the SAME
-    // sequential double fold as dot_f32 so the choice matches the oracle
-    val qVecs = probeVectors(s, d)
-    val probePairs = probePairsFor(qVecs, code)
-    val probeCells = probePairs.map(_._2).distinct.sorted
-
-    // the query slice is already on the driver — serve it back as a
-    // LocalRelation instead of scanning the corpus a second time
-    val qs = qVecs.toSeq.toDF("q_id", "qe")
-    val probes = probePairs.toDF("q_id", "cell").join(broadcast(qs), Seq("q_id"))
+    // probe cells per query, resolved driver-side from the codebook —
+    // metadata-sized (5 queries × cells scores); the query slice is
+    // already on the driver and is served back as a LocalRelation
+    // instead of scanning the corpus a second time
+    val ps = probeSide(s, d, code, org.apache.spark.sql.types.LongType)
 
     // search: pruned scan of the inverted file — only probed partitions
-    val index = s.read.parquet(idxDir)
-      .filter(col("cell").isin(probeCells: _*))
-    val wRank = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-    val search = index.join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cosine",
-        graft.functions.GraftFunctions.cosineF32(col("qe"), col("embedding")))
-      .withColumn("rnk", row_number().over(wRank))
-      .filter(col("rnk") <= 3)
-      .select(col("q_id"), col("rnk").cast("long").as("rnk"),
-        col("vec_id").cast("long").as("vec_id"),
-        col("cell").cast("long").as("cell"), col("cosine"))
+    val search = prunedTop3(s.read.parquet(idxDir), ps)
 
     // recall face: exact brute-force top-3 (the q27 kernel) vs the index
-    val wE = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-    val exact = emb.join(broadcast(qs), col("vec_id") =!= col("q_id"))
-      .withColumn("cosine",
-        graft.functions.GraftFunctions.cosineF32(col("qe"), col("embedding")))
-      .withColumn("rnk", row_number().over(wE))
-      .filter(col("rnk") <= 3)
+    val exact = exactTop3(emb, ps.qs)
       .select(col("q_id"), col("vec_id").cast("long").as("vec_id"))
     // both recall-side joins carry rank-bounded tiny tables (≤ 3·|queries|
     // rows) — broadcast them so the face never sort-merge-shuffles
@@ -2997,7 +2867,7 @@ object DedupSim {
     val searchFace = search.select(lit("search").as("face"), col("q_id"),
       col("rnk"), col("vec_id"), col("cell"), col("cosine"),
       lit(null).cast("long").as("hits"))
-    val recallFace = qs.select(col("q_id")).join(broadcast(hits), Seq("q_id"), "left")
+    val recallFace = ps.qs.select(col("q_id")).join(broadcast(hits), Seq("q_id"), "left")
       .select(lit("recall").as("face"), col("q_id"),
         lit(null).cast("long").as("rnk"), lit(null).cast("long").as("vec_id"),
         lit(null).cast("long").as("cell"), lit(null).cast("double").as("cosine"),
@@ -3073,7 +2943,7 @@ object DedupSim {
     * append" claim of the q345 story, gated. A BASE corpus (vec_id%7≠0)
     * builds the cell-partitioned inverted file once; DELTA vectors
     * (vec_id%7=0) then arrive as a 3-file parquet STREAM and each
-    * micro-batch assigns against the FROZEN literal codebook (no
+    * micro-batch assigns against the FROZEN codebook (no
     * retraining — the standard serving contract: codebooks version with
     * the corpus, not with every append) and APPENDS to the live
     * partitioned index. Three gated faces prove the maintenance is
@@ -3111,13 +2981,10 @@ object DedupSim {
   }
 
   def q351(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val emb = Tables.embeddings(s, d)
     val base = emb.filter(col("vec_id") % 7 =!= 0)
     val delta = emb.filter(col("vec_id") % 7 === 0)
     val code = frozenBaseCodebook(s, d)
-    def assigned(df: DataFrame): DataFrame =
-      ivfAssignAuto(df, code).withColumn("cell", col("cell").cast("long"))
 
     // v1: base index, one-time partitioned build. Corpus-sized scratch:
     // reclaimed at JVM exit (the result reads the index lazily)
@@ -3127,7 +2994,7 @@ object DedupSim {
     // operator itself argues for (guide §6: sensible output file sizing);
     // locally it cuts the build's file count ~4× and every later listing
     // and pruned read with it. Content-identical: layout only.
-    assigned(base).repartition(col("cell"))
+    cellIndexRows(base, code).repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(idxDir)
 
     // delta arrives as a stream: stage 3 files, one micro-batch each
@@ -3140,7 +3007,7 @@ object DedupSim {
       .option("maxFilesPerTrigger", "1").parquet(stagedDir)
       .writeStream.outputMode("append").queryName("q351_index_ingest")
       .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        assigned(df.toDF())
+        cellIndexRows(df.toDF(), code)
           .write.mode("append").partitionBy("cell").parquet(idxDir)
         ()
       }
@@ -3165,23 +3032,11 @@ object DedupSim {
         lit(null).cast("double").as("cosine"), nullL.as("n"))
 
     // search: q345's pruned-read shape over the combined index
-    val qVecs = probeVectors(s, d)
-    val probePairs = probePairsFor(qVecs, code)
-    val probeCells = probePairs.map(_._2).distinct.sorted
-    val qs = qVecs.toSeq.toDF("q_id", "qe")
-    val probes = probePairs.toDF("q_id", "cell").join(broadcast(qs), Seq("q_id"))
-    val wRank = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-    val searchFace = index.filter(col("cell").isin(probeCells: _*))
-      .join(broadcast(probes), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cosine",
-        graft.functions.GraftFunctions.cosineF32(col("qe"), col("embedding")))
-      .withColumn("rnk", row_number().over(wRank))
-      .filter(col("rnk") <= 3)
+    val ps = probeSide(s, d, code, org.apache.spark.sql.types.LongType)
+    val searchFace = prunedTop3(index, ps)
       .select(lit("search").as("face"), lit(null).cast("string").as("origin"),
-        col("q_id"), col("rnk").cast("long").as("rnk"),
-        col("vec_id").cast("long").as("vec_id"), col("cell"),
-        col("cosine"), nullL.as("n"))
+        col("q_id"), col("rnk"), col("vec_id"), col("cell"), col("cosine"),
+        nullL.as("n"))
 
     censusFace.unionByName(assignFace).unionByName(searchFace)
       .orderBy(col("face"), col("origin"), col("q_id"), col("rnk"), col("vec_id"))
@@ -3281,14 +3136,7 @@ object DedupSim {
     val base = emb.filter(col("vec_id") % 7 =!= 0)
     val delta = emb.filter(col("vec_id") % 7 === 0)
     val code = frozenBaseCodebook(s, d)
-    def assigned(df: DataFrame): DataFrame =
-      ivfAssignAuto(df, code).withColumn("cell", col("cell").cast("long"))
 
-    def countParquet(dir: String): Long = {
-      val stream = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      try stream.filter(p => p.toString.endsWith(".parquet")).count()
-      finally stream.close()
-    }
 
     // the q351 stream's on-disk aftermath: base build + 3 appended batches.
     // The base is cell-clustered (one file per occupied cell — the q351
@@ -3296,10 +3144,10 @@ object DedupSim {
     // per-batch fragmentation is exactly the aftermath this operator
     // exists to compact.
     val idxDir = graft.io.FsUtil.scratchDir("graft_q358_idx")
-    assigned(base).repartition(col("cell"))
+    cellIndexRows(base, code).repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(idxDir)
     (0 until 3).foreach { b =>
-      assigned(delta.filter(col("vec_id") % 3 === b))
+      cellIndexRows(delta.filter(col("vec_id") % 3 === b), code)
         .write.mode("append").partitionBy("cell").parquet(idxDir)
     }
     val filesBefore = countParquet(idxDir)
@@ -3315,30 +3163,13 @@ object DedupSim {
     require(filesAfter < filesBefore,
       s"compaction must reduce the file count ($filesBefore -> $filesAfter)")
 
-    // pruned search (q345's shape) over either layout
-    val qVecs = probeVectors(s, d)
-    val probePairs = probePairsFor(qVecs, code)
-    val probeCells = probePairs.map(_._2).distinct.sorted
-    val qs = qVecs.toSeq.toDF("q_id", "qe")
-    val probes = probePairs.toDF("q_id", "cell").join(broadcast(qs), Seq("q_id"))
-    val wRank = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
-    // one DataFrame per layout state: each s.read.parquet(dir) builds a
-    // fresh InMemoryFileIndex (a full directory listing of ~cells paths),
-    // so deriving every face of one layout from ONE read halves the
-    // listing count (guide §6: small-file listing cost is real cost)
-    def search(idx: DataFrame): DataFrame =
-      idx.withColumn("cell", col("cell").cast("long"))
-        .filter(col("cell").isin(probeCells: _*))
-        .join(broadcast(probes), Seq("cell"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cosine",
-          graft.functions.GraftFunctions.cosineF32(col("qe"), col("embedding")))
-        .withColumn("rnk", row_number().over(wRank))
-        .filter(col("rnk") <= 3)
-        .select(col("q_id").cast("long").as("q_id"),
-          col("rnk").cast("long").as("rnk"),
-          col("vec_id").cast("long").as("vec_id"), col("cell"), col("cosine"))
+    // pruned search (q345's shape) over either layout. One DataFrame per
+    // layout state: each s.read.parquet(dir) builds a fresh
+    // InMemoryFileIndex (a full directory listing of ~cells paths), so
+    // deriving every face of one layout from ONE read halves the listing
+    // count (guide §6: small-file listing cost is real cost)
+    val ps = probeSide(s, d, code, org.apache.spark.sql.types.LongType)
+    def search(idx: DataFrame): DataFrame = prunedTop3(idx, ps)
     val compacted = s.read.parquet(compDir)
     // ONE collect compares both layouts (r18, guide §1.2): the fragmented
     // and compacted searches are independent subtrees, so a tagged union
@@ -3417,41 +3248,17 @@ object DedupSim {
     val base = emb.filter(col("vec_id") % 7 =!= 0)
     val delta = emb.filter(col("vec_id") % 7 === 0)
     val code = frozenBaseCodebook(s, d)
-    def assigned(df: DataFrame): DataFrame =
-      ivfAssignAuto(df, code).withColumn("cell", col("cell").cast("long"))
-    def countParquet(dir: String): Long = {
-      val stream = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      try stream.filter(p => p.toString.endsWith(".parquet")).count()
-      finally stream.close()
-    }
-    val qVecs = probeVectors(s, d)
-    val probePairs = probePairsFor(qVecs, code)
-    val probeCells = probePairs.map(_._2).distinct.sorted
-    val qs = qVecs.toSeq.toDF("q_id", "qe")
-    val probes = probePairs.toDF("q_id", "cell").join(broadcast(qs), Seq("q_id"))
-    val wRank = Window.partitionBy(col("q_id"))
-      .orderBy(col("cosine").desc, col("vec_id"))
     // search over an already-resolved index DataFrame: every
     // s.read.parquet(dir) builds a fresh InMemoryFileIndex (a directory
     // listing of ~cells paths), so each layout state is read ONCE and all
     // of its faces derive from that one DataFrame (guide §6)
-    def search(idx: DataFrame): DataFrame =
-      idx.withColumn("cell", col("cell").cast("long"))
-        .filter(col("cell").isin(probeCells: _*))
-        .join(broadcast(probes), Seq("cell"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .withColumn("cosine",
-          graft.functions.GraftFunctions.cosineF32(col("qe"), col("embedding")))
-        .withColumn("rnk", row_number().over(wRank))
-        .filter(col("rnk") <= 3)
-        .select(col("q_id").cast("long").as("q_id"),
-          col("rnk").cast("long").as("rnk"),
-          col("vec_id").cast("long").as("vec_id"), col("cell"), col("cosine"))
+    val ps = probeSide(s, d, code, org.apache.spark.sql.types.LongType)
+    def search(idx: DataFrame): DataFrame = prunedTop3(idx, ps)
 
     var live = graft.io.FsUtil.scratchDir("graft_q371_idx")
     // cell-clustered base build — one file per occupied cell (q351's
     // build discipline; content-identical, layout only)
-    assigned(base).repartition(col("cell"))
+    cellIndexRows(base, code).repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(live)
     val census = scala.collection.mutable.Buffer.empty[(String, Long)]
     // ONE long-lived ingest stream serves BOTH cycles (r17 verdict item 5:
@@ -3470,7 +3277,7 @@ object DedupSim {
       .option("maxFilesPerTrigger", "1").parquet(stagedDir)
       .writeStream.outputMode("append").queryName("q371_ingest")
       .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        assigned(df.toDF())
+        cellIndexRows(df.toDF(), code)
           .write.mode("append").partitionBy("cell").parquet(livePtr.get())
         ()
       }

@@ -198,8 +198,8 @@ object LlmOps {
     * so the candidate scan is 64x smaller and the per-candidate cost is
     * M table lookups instead of a 64-dim dot product.
     *
-    * Encoding is a pure per-row projection over a literal codebook (q59's
-    * argmin-by-struct-min trick per subspace — zero explode, zero
+    * Encoding is a pure per-row projection over a literal codebook (an
+    * argmin-by-struct-min per subspace — zero explode, zero
     * shuffle); queries are literal seed vectors, so each per-subspace
     * ADC lookup table is a literal expression array indexed by the stored
     * code. Seed vectors vec_id < 4 stand in for an offline-trained

@@ -28,13 +28,22 @@ object PipelineQueries {
     * no float-formatting hazard between engines. This puts O1-O7, O9, O12,
     * O14-O16, O22, O25-O26 on the oracle board in one stroke (round-5 verdict
     * item 1); the un-rounded values remain asserted in PipelineSpec. */
-  def q30(s: SparkSession, d: String): DataFrame = {
-    val base = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "graft_audio_fixture")
-    val wavDir = base.resolve("wavs").toString
-    val outDir = base.resolve("out").toString
-    graft.fixtures.AudioSynth.writeCorpus(wavDir)
-    graft.Pipeline.run(s, wavDir, outDir)
+  def q30(s: SparkSession, d: String): DataFrame =
+    goldenAudioFace(s, "graft_audio_fixture", "wavs", "*.wav")(
+      graft.fixtures.AudioSynth.writeCorpus(_))
+
+  /** The golden face of every full-pipeline entry (q30, q259, q268, q323,
+    * q342, q326): synthesize a fixture corpus with `write` into
+    * java.io.tmpdir/`fixture`/`sub`, run the pipeline over the files
+    * matching `glob`, and project the metadata rows with the metrics
+    * quantized ×1000 (round-half-up), ordered for the golden VALUES
+    * oracle. */
+  private def goldenAudioFace(s: SparkSession, fixture: String, sub: String,
+                              glob: String)(write: String => Any): DataFrame = {
+    val base = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"), fixture)
+    val inDir = base.resolve(sub).toString
+    write(inDir)
+    graft.Pipeline.run(s, inDir, base.resolve("out").toString, glob = glob)
       .withColumn("wav_name", element_at(split(col("wav_path"), "/"), -1))
       .select(col("original_name"), col("wav_name"), col("text"),
               round(col("rms") * 1000).cast("long").as("rms_q3"),
@@ -850,21 +859,9 @@ object PipelineQueries {
     * so the post-round-trip metadata freezes into a golden VALUES
     * oracle exactly like q30's (quantized metrics, ×1000 round-half-up).
     * A garbage .wav rides along to keep the error-skip path on trial. */
-  def q259(s: SparkSession, d: String): DataFrame = {
-    val base = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "graft_audio_fixture_comp")
-    val wavDir = base.resolve("wavs").toString
-    val outDir = base.resolve("out").toString
-    graft.fixtures.AudioSynth.writeCompressedCorpus(wavDir)
-    graft.Pipeline.run(s, wavDir, outDir)
-      .withColumn("wav_name", element_at(split(col("wav_path"), "/"), -1))
-      .select(col("original_name"), col("wav_name"), col("text"),
-              round(col("rms") * 1000).cast("long").as("rms_q3"),
-              round(col("clipping_percent") * 1000).cast("long").as("clipping_q3"),
-              round(col("music_ratio") * 1000).cast("long").as("music_q3"),
-              col("overlap_flag"))
-      .orderBy(col("original_name"), col("wav_name"))
-  }
+  def q259(s: SparkSession, d: String): DataFrame =
+    goldenAudioFace(s, "graft_audio_fixture_comp", "wavs", "*.wav")(
+      graft.fixtures.AudioSynth.writeCompressedCorpus(_))
   /** Golden literal oracle (GoldenDump --q259), frozen like q30Sql. */
   val q259Sql: String =
     """SELECT * FROM (VALUES
@@ -889,21 +886,9 @@ object PipelineQueries {
     * bytes, the file LOOKS like valid Ogg), and `vorbis_speech_a`'s
     * stub transcript lands on a banned outro phrase, so the TEXT filter
     * chain fires on the Vorbis path too. */
-  def q268(s: SparkSession, d: String): DataFrame = {
-    val base = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "graft_audio_fixture_vorbis")
-    val oggDir = base.resolve("oggs").toString
-    val outDir = base.resolve("out").toString
-    graft.fixtures.AudioSynth.writeVorbisCorpus(oggDir)
-    graft.Pipeline.run(s, oggDir, outDir, glob = "*.ogg")
-      .withColumn("wav_name", element_at(split(col("wav_path"), "/"), -1))
-      .select(col("original_name"), col("wav_name"), col("text"),
-              round(col("rms") * 1000).cast("long").as("rms_q3"),
-              round(col("clipping_percent") * 1000).cast("long").as("clipping_q3"),
-              round(col("music_ratio") * 1000).cast("long").as("music_q3"),
-              col("overlap_flag"))
-      .orderBy(col("original_name"), col("wav_name"))
-  }
+  def q268(s: SparkSession, d: String): DataFrame =
+    goldenAudioFace(s, "graft_audio_fixture_vorbis", "oggs", "*.ogg")(
+      graft.fixtures.AudioSynth.writeVorbisCorpus(_))
   /** Golden literal oracle (GoldenDump --q268), frozen like q30Sql. */
   val q268Sql: String =
     """SELECT * FROM (VALUES
@@ -926,21 +911,9 @@ object PipelineQueries {
     * so the post-round-trip metadata freezes into a golden VALUES oracle
     * exactly like q30/q259/q268's (the one oracle class the codec specs
     * back with structural and round-trip gates). */
-  def q323(s: SparkSession, d: String): DataFrame = {
-    val base = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "graft_audio_fixture_mp3")
-    val mp3Dir = base.resolve("mp3s").toString
-    val outDir = base.resolve("out").toString
-    graft.fixtures.AudioSynth.writeMp3Corpus(mp3Dir)
-    graft.Pipeline.run(s, mp3Dir, outDir, glob = "*.mp3")
-      .withColumn("wav_name", element_at(split(col("wav_path"), "/"), -1))
-      .select(col("original_name"), col("wav_name"), col("text"),
-              round(col("rms") * 1000).cast("long").as("rms_q3"),
-              round(col("clipping_percent") * 1000).cast("long").as("clipping_q3"),
-              round(col("music_ratio") * 1000).cast("long").as("music_q3"),
-              col("overlap_flag"))
-      .orderBy(col("original_name"), col("wav_name"))
-  }
+  def q323(s: SparkSession, d: String): DataFrame =
+    goldenAudioFace(s, "graft_audio_fixture_mp3", "mp3s", "*.mp3")(
+      graft.fixtures.AudioSynth.writeMp3Corpus(_))
   /** Golden literal oracle (GoldenDump --q323), frozen like q30Sql.
     * Three rows: the truncated fixture is ABSENT by design (the frame
     * walk refused it into the per-file error-skip), and the tagged
@@ -970,21 +943,9 @@ object PipelineQueries {
     * lossy-audio e2e discipline; the codec surfaces themselves are
     * round-trip- and hand-frame-gated in Mp3GeneralSpec (bit reservoir,
     * scfsi, preflag, intensity included). */
-  def q342(s: SparkSession, d: String): DataFrame = {
-    val base = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "graft_audio_fixture_mp3g")
-    val mp3Dir = base.resolve("mp3s").toString
-    val outDir = base.resolve("out").toString
-    graft.fixtures.AudioSynth.writeMp3GeneralCorpus(mp3Dir)
-    graft.Pipeline.run(s, mp3Dir, outDir, glob = "*.mp3")
-      .withColumn("wav_name", element_at(split(col("wav_path"), "/"), -1))
-      .select(col("original_name"), col("wav_name"), col("text"),
-              round(col("rms") * 1000).cast("long").as("rms_q3"),
-              round(col("clipping_percent") * 1000).cast("long").as("clipping_q3"),
-              round(col("music_ratio") * 1000).cast("long").as("music_q3"),
-              col("overlap_flag"))
-      .orderBy(col("original_name"), col("wav_name"))
-  }
+  def q342(s: SparkSession, d: String): DataFrame =
+    goldenAudioFace(s, "graft_audio_fixture_mp3g", "mp3s", "*.mp3")(
+      graft.fixtures.AudioSynth.writeMp3GeneralCorpus(_))
   /** Golden literal oracle (GoldenDump --q342), frozen like q323Sql. */
   val q342Sql: String =
     """SELECT * FROM (VALUES
@@ -1008,21 +969,9 @@ object PipelineQueries {
     * (README.md:3). Nine format classes through the FULL pipeline chain
     * in one scan; the garbage file proves the error-skip; golden VALUES
     * (GoldenDump --q326) per the lossy-audio e2e discipline. */
-  def q326(s: SparkSession, d: String): DataFrame = {
-    val base = java.nio.file.Paths.get(
-      System.getProperty("java.io.tmpdir"), "graft_audio_fixture_mixed")
-    val mixDir = base.resolve("mixed").toString
-    val outDir = base.resolve("out").toString
-    graft.fixtures.AudioSynth.writeMixedCorpus(mixDir)
-    graft.Pipeline.run(s, mixDir, outDir, glob = "*")
-      .withColumn("wav_name", element_at(split(col("wav_path"), "/"), -1))
-      .select(col("original_name"), col("wav_name"), col("text"),
-              round(col("rms") * 1000).cast("long").as("rms_q3"),
-              round(col("clipping_percent") * 1000).cast("long").as("clipping_q3"),
-              round(col("music_ratio") * 1000).cast("long").as("music_q3"),
-              col("overlap_flag"))
-      .orderBy(col("original_name"), col("wav_name"))
-  }
+  def q326(s: SparkSession, d: String): DataFrame =
+    goldenAudioFace(s, "graft_audio_fixture_mixed", "mixed", "*")(
+      graft.fixtures.AudioSynth.writeMixedCorpus(_))
   /** Golden literal oracle (GoldenDump --q326), frozen like q30Sql. Nine
     * rows — one per format class, including the round-13 legacy
     * containers (AIFF studio capture, Sun/NeXT AU, NIST SPHERE
@@ -1177,31 +1126,29 @@ object PipelineQueries {
     * model. [[graft.ops.AudioQc]] frames each clip, takes per-frame
     * Σ v² energies, and reads the noise floor (p10 frame) and speech
     * level (p90) by discrete selection; SNR is their INTEGER-division
-    * ratio in parts-per-thousand. The whole operator is Catalyst HOFs
-    * (sequence/transform/slice/aggregate/array_sort — zero UDFs,
-    * per-row, shuffle-free; interpreted, not codegen'd), and the test
-    * signal is synthesized IN the plan too (bursty speech frames at
-    * ±16000 over a ±160 noise bed, all integer), so the DuckDB oracle
-    * restates every step relationally — framing, energies, percentile
-    * rule, ratio — with zero float drift. */
+    * ratio in parts-per-thousand. The test signal is synthesized per
+    * document (bursty speech frames at ±16000 over a ±160 noise bed, all
+    * integer) and measured in one typed map over primitive arrays
+    * (per-row, shuffle-free). The DuckDB oracle restates every step
+    * relationally — framing, energies, percentile rule, ratio — with
+    * zero float drift. */
   def q328(s: SparkSession, d: String): DataFrame = {
-    import graft.ops.AudioQc
-    val docId = col("doc_id")
-    // 3840 samples = 24 frames of 160 (10 ms at 16 kHz); frames j with
-    // j%6<2 are "speech" bursts, the rest the noise bed — all integer
-    val samples = transform(sequence(lit(0), lit(3839)), i => {
-      val j = (i / 160).cast("int")
-      when(j % 6 < 2,
-        ((i * 13 + docId % 7) % 2001 - 1000) * 16)
-        .otherwise(((i * 7 + docId % 11) % 41 - 20) * 8)
-    })
-    Tables.documents(s, d)
-      .select(docId, AudioQc.snrStats(samples, frameLen = 160).as("snr"))
-      .select(docId, col("snr.noise_e").as("noise_e"),
-              col("snr.speech_e").as("speech_e"))
+    import s.implicits._
+    Tables.documents(s, d).select(col("doc_id")).as[Long]
+      .map { id =>
+        // 3840 samples = 24 frames of 160 (10 ms at 16 kHz); frames j with
+        // j%6<2 are "speech" bursts, the rest the noise bed — all integer
+        val samples = Array.tabulate(3840) { i =>
+          if (i / 160 % 6 < 2) (((i * 13 + id % 7) % 2001 - 1000) * 16).toInt
+          else (((i * 7 + id % 11) % 41 - 20) * 8).toInt
+        }
+        val (noise, speech) = graft.ops.AudioQc.snrStats(samples, frameLen = 160)
+        (id, noise, speech)
+      }
+      .toDF("doc_id", "noise_e", "speech_e")
       .selectExpr("doc_id", "noise_e", "speech_e",
                   "(speech_e * 1000) div noise_e as snr_ppk")
-      .orderBy(docId)
+      .orderBy(col("doc_id"))
   }
   val q328Sql: String =
     """WITH samp AS (

@@ -69,6 +69,17 @@ object Streaming {
               col("event_type"), col("n"), col("sum_value"))
   }
 
+  /** A fresh scratch dir holding a copy of `dir`'s events.parquet — the
+    * static snapshot a file-source drive streams over. It lives under the
+    * process scratch root ([[graft.io.FsUtil.scratchDir]]) and goes with
+    * it. */
+  private def stagedSnapshot(dir: String, prefix: String): String = {
+    val staged = graft.io.FsUtil.scratchDir(prefix)
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$dir/events.parquet"),
+      java.nio.file.Paths.get(staged, "events.parquet"))
+    staged
+  }
+
   /** Drive the stream to completion over the static snapshot; returns the
     * final in-memory table (complete output mode). Stages the single events
     * file into a scratch directory — the file-source contract wants a
@@ -77,11 +88,7 @@ object Streaming {
     * before the sink, so the materialized size is bounded by
     * time-range × event-type cardinality, not input rows. */
   def runOnce(spark: SparkSession, dir: String, queryName: String = "graft_stream"): DataFrame = {
-    val staged = java.nio.file.Files.createTempDirectory("graft_stream_src")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      staged.resolve("events.parquet"))
-    val q = windowedCounts(spark, staged.toString)
+    val q = windowedCounts(spark, stagedSnapshot(dir, "graft_stream_src"))
       .writeStream
       .outputMode("complete")
       .format("memory")
@@ -216,13 +223,7 @@ object Streaming {
   /** Drive the interval join over the static snapshot; returns joined pairs. */
   def intervalJoinOnce(spark: SparkSession, dir: String, withinMinutes: Int,
                        queryName: String = "graft_ssjoin"): DataFrame = {
-    def stage(): String = {
-      val staged = java.nio.file.Files.createTempDirectory("graft_ssjoin_src")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"),
-        staged.resolve("events.parquet"))
-      staged.toString
-    }
+    def stage(): String = stagedSnapshot(dir, "graft_ssjoin_src")
     boundedDrive(spark,
       intervalJoinStreams(spark, stage(), stage(), withinMinutes),
       queryName)()._1
@@ -278,32 +279,27 @@ object Streaming {
     // sizing for the board drive; callers must derive any watermark
     // cutoff from the SAME filtered slice, since the stream's watermark
     // only ever sees these rows
-    def stage(): String = {
-      val staged = java.nio.file.Files.createTempDirectory("graft_jwin_src")
-      where match {
-        case None =>
-          java.nio.file.Files.copy(
-            java.nio.file.Paths.get(s"$dir/events.parquet"),
-            staged.resolve("events.parquet"))
-        case Some(w) =>
-          // FileStreamSource lists only the staged root — land ONE flat
-          // file there, not a part-file subdirectory. nanosAsLong first:
-          // the filter job must read whichever events generation is on
-          // disk the same way the stream will.
-          spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-          val tmpOut = staged.resolve("_stage")
-          spark.read.parquet(s"$dir/events.parquet").filter(w).coalesce(1)
-            .write.mode("overwrite").parquet(tmpOut.toString)
-          // File.listFiles, not Files.list: no stream handle to leak
-          val listed = Option(tmpOut.toFile.listFiles()).getOrElse(Array.empty)
-          val part = listed.find(_.getName.endsWith(".parquet"))
-            .getOrElse(throw new IllegalStateException("empty staged slice"))
-          java.nio.file.Files.move(part.toPath, staged.resolve("events.parquet"))
-          Option(tmpOut.toFile.listFiles()).getOrElse(Array.empty)
-            .foreach(f => java.nio.file.Files.deleteIfExists(f.toPath))
-          java.nio.file.Files.deleteIfExists(tmpOut)
-      }
-      staged.toString
+    def stage(): String = where match {
+      case None => stagedSnapshot(dir, "graft_jwin_src")
+      case Some(w) =>
+        val staged = graft.io.FsUtil.scratchDir("graft_jwin_src")
+        // FileStreamSource lists only the staged root — land ONE flat
+        // file there, not a part-file subdirectory. nanosAsLong first:
+        // the filter job must read whichever events generation is on
+        // disk the same way the stream will.
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        val tmpOut = java.nio.file.Paths.get(staged, "_stage")
+        spark.read.parquet(s"$dir/events.parquet").filter(w).coalesce(1)
+          .write.mode("overwrite").parquet(tmpOut.toString)
+        // File.listFiles, not Files.list: no stream handle to leak
+        val listed = Option(tmpOut.toFile.listFiles()).getOrElse(Array.empty)
+        val part = listed.find(_.getName.endsWith(".parquet"))
+          .getOrElse(throw new IllegalStateException("empty staged slice"))
+        java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(staged, "events.parquet"))
+        Option(tmpOut.toFile.listFiles()).getOrElse(Array.empty)
+          .foreach(f => java.nio.file.Files.deleteIfExists(f.toPath))
+        java.nio.file.Files.deleteIfExists(tmpOut)
+        staged
     }
     // memory sink deliberate (round-14 audit): the chained join feeds an
     // HOURLY aggregate — output is bounded by the window count, not pairs
@@ -344,13 +340,7 @@ object Streaming {
                             joinType: String,
                             queryName: String = "graft_ssjoin_out",
                             preFilter: Option[String] = None): DataFrame = {
-    def stage(): String = {
-      val staged = java.nio.file.Files.createTempDirectory("graft_ssjoin_out_src")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"),
-        staged.resolve("events.parquet"))
-      staged.toString
-    }
+    def stage(): String = stagedSnapshot(dir, "graft_ssjoin_out_src")
     boundedDrive(spark,
       intervalJoinStreams(spark, stage(), stage(), withinMinutes, joinType),
       queryName,
@@ -373,13 +363,7 @@ object Streaming {
                              withinMinutes: Int, cutoffUs: Long,
                              queryName: String = "graft_ssjoin_census")
       : (Long, Long, Long, Long) = {
-    def stage(): String = {
-      val staged = java.nio.file.Files.createTempDirectory("graft_ssjoin_cen_src")
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$dir/events.parquet"),
-        staged.resolve("events.parquet"))
-      staged.toString
-    }
+    def stage(): String = stagedSnapshot(dir, "graft_ssjoin_cen_src")
     val matched = new java.util.concurrent.atomic.AtomicLong
     val unmatched = new java.util.concurrent.atomic.AtomicLong
     val unmatchedIdSum = new java.util.concurrent.atomic.AtomicLong
@@ -475,12 +459,9 @@ object Streaming {
     * remains open in state). */
   def spanMergeOnce(spark: SparkSession, dir: String, minSpanUs: Long, maxSpanUs: Long,
                     queryName: String = "graft_spanmerge"): DataFrame = {
-    val staged = java.nio.file.Files.createTempDirectory("graft_spanmerge_src")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      staged.resolve("events.parquet"))
     boundedDrive(spark,
-      spanMergeStream(spark, staged.toString, minSpanUs, maxSpanUs).toDF(),
+      spanMergeStream(spark, stagedSnapshot(dir, "graft_spanmerge_src"),
+        minSpanUs, maxSpanUs).toDF(),
       queryName)()._1
   }
 
@@ -711,11 +692,7 @@ object Streaming {
     * protocol: stage the single events file, one trigger, memory sink). */
   def sessionWindowOnce(spark: SparkSession, dir: String,
                         queryName: String = "graft_sesswin"): DataFrame = {
-    val staged = java.nio.file.Files.createTempDirectory("graft_sesswin_src")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      staged.resolve("events.parquet"))
-    boundedDrive(spark, sessionWindowStream(spark, staged.toString),
+    boundedDrive(spark, sessionWindowStream(spark, stagedSnapshot(dir, "graft_sesswin_src")),
       queryName)()._1
   }
 
@@ -791,12 +768,9 @@ object Streaming {
     // commits, and measurably cheaper for these single-drive runs too
     spark.conf.set(
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    val staged = java.nio.file.Files.createTempDirectory("graft_billing_src")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      staged.resolve("events.parquet"))
     boundedDrive(spark,
-      billingAlertsStream(spark, staged.toString, thresholdCents).toDF(),
+      billingAlertsStream(spark, stagedSnapshot(dir, "graft_billing_src"),
+        thresholdCents).toDF(),
       queryName)()._1
   }
 
@@ -922,12 +896,9 @@ object Streaming {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     spark.conf.set(
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    val staged = java.nio.file.Files.createTempDirectory("graft_sesstimeout_src")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      staged.resolve("events.parquet"))
     boundedDrive(spark,
-      sessionTimeoutStream(spark, staged.toString, gapMinutes).toDF(),
+      sessionTimeoutStream(spark, stagedSnapshot(dir, "graft_sesstimeout_src"),
+        gapMinutes).toDF(),
       queryName)()._1
   }
 

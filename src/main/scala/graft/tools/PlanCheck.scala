@@ -98,7 +98,7 @@ object PlanCheck {
         !p.split("TopKPerGroup", 2)(1).contains("Sort "))
     check("q59_ann_ivf_multiprobe", "IVF assignment is a projection: no vec_id shuffle below probe join")(p =>
       p.contains("BroadcastHashJoin") && !p.contains("CartesianProduct") &&
-        // round-3: cell assignment is a literal-codebook projection — the
+        // cell assignment is a per-row projection (the broadcast-kernel E-step) — the
         // only hash exchange left is the rank window's (q_id), never a
         // 16N-row vec_id shuffle for the argmin
         !p.contains("hashpartitioning(vec_id"))

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -9,8 +8,8 @@ import graft.ops.AudioQc
 
 /** AudioQc (SNR / noise-floor estimation): frame-energy arithmetic,
   * partial-frame drop, the discrete percentile rule, whole-clip edge
-  * cases, the codegen'd no-UDF plan shape, and agreement with a real
-  * decoded clip's known structure. */
+  * cases, the no-UDF shuffle-free plan of a typed per-row map, and
+  * agreement with a real decoded clip's known structure. */
 class AudioQcSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
@@ -21,12 +20,8 @@ class AudioQcSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
-  private def energiesOf(samples: Seq[Int], frameLen: Int): Seq[Long] = {
-    import spark.implicits._
-    Seq(samples).toDF("s")
-      .select(AudioQc.frameEnergies(col("s"), frameLen).as("e"))
-      .head().getSeq[Long](0)
-  }
+  private def energiesOf(samples: Seq[Int], frameLen: Int): Seq[Long] =
+    AudioQc.frameEnergies(samples.toArray, frameLen).toSeq
 
   test("frameEnergies: exact Σv² per frame; trailing partial frame dropped") {
     // 2 full frames of 3 + a 2-sample tail that must be dropped
@@ -39,11 +34,8 @@ class AudioQcSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("percentileDisc: floor((n-1)*p) selection, both ends, ties") {
-    import spark.implicits._
     def pick(sorted: Seq[Long], num: Int, den: Int): Long =
-      Seq(sorted).toDF("e")
-        .select(AudioQc.percentileDisc(col("e"), num, den).as("v"))
-        .head().getLong(0)
+      AudioQc.percentileDisc(sorted.toArray, num, den).get
     val ten = (1L to 10L).toSeq
     assert(pick(ten, 1, 10) == 1L) // floor(9*0.1)=0
     assert(pick(ten, 9, 10) == 9L) // floor(9*0.9)=8
@@ -54,15 +46,12 @@ class AudioQcSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("sub-frame clip: snrStats yields NULL metrics, not a runtime error") {
-    import spark.implicits._
-    val row = Seq(Seq(1, 2, 3)).toDF("s") // shorter than one 160-frame
-      .select(AudioQc.snrStats(col("s"), frameLen = 160).as("st"))
-      .selectExpr("st.noise_e", "st.speech_e").head()
-    assert(row.isNullAt(0) && row.isNullAt(1))
+    // shorter than one 160-frame
+    val (noise, speech) = AudioQc.snrStats(Array(1, 2, 3), frameLen = 160)
+    assert(noise.isEmpty && speech.isEmpty)
   }
 
   test("snrStats + ratio: bursty signal → speech/noise percentiles exact") {
-    import spark.implicits._
     // 10 frames of 4: two loud frames (amp 100 → e=40000), eight quiet
     // (amp 2 → e=16). p10 = sorted[0] = 16, p90 = sorted[8] = 16? No —
     // sorted: eight 16s then two 40000s; index floor(9*0.9)=8 → 40000.
@@ -70,30 +59,25 @@ class AudioQcSpec extends AnyFunSuite with BeforeAndAfterAll {
       val a = if (j == 3 || j == 7) 100 else 2
       Seq(a, -a, a, -a)
     }
-    val row = Seq(clip).toDF("s")
-      .select(AudioQc.snrStats(col("s"), frameLen = 4).as("st"))
-      .selectExpr("st.noise_e", "st.speech_e",
-                  "(st.speech_e * 1000) div st.noise_e as ppk")
-      .head()
-    assert(row.getLong(0) == 16L)
-    assert(row.getLong(1) == 40000L)
-    assert(row.getLong(2) == 40000L * 1000 / 16)
+    val (Some(noise), Some(speech)) = AudioQc.snrStats(clip.toArray, frameLen = 4)
+    assert(noise == 16L)
+    assert(speech == 40000L)
+    assert(speech * 1000 / noise == 40000L * 1000 / 16)
   }
 
   test("plan is UDF-free, shuffle-free, single-stage (scan-speed at 100 TB)") {
-    // non-literal source so constant folding can't collapse the operator
-    val df = spark.range(4)
-      .select(transform(sequence(lit(0), lit(7)),
-        i => (i + col("id")).cast("int")).as("s"))
-      .select(AudioQc.snrStats(col("s"), 2).as("st"))
+    import spark.implicits._
+    // the q328 shape: a typed per-row map over a non-literal source, so
+    // constant folding can't collapse the operator
+    val df = spark.range(4).as[Long]
+      .map(id => AudioQc.snrStats(Array.tabulate(8)(i => (i + id).toInt), 2))
+      .toDF("noise_e", "speech_e")
     val plan = df.queryExecution.executedPlan.toString
-    // Catalyst expressions only: no UDF sinks, and — the scale claim —
-    // no Exchange anywhere (per-row operator, never a shuffle). HOF
-    // lambdas are expression-codegen'd but keep their Project outside a
-    // WholeStageCodegen span; that's Spark's design, not a regression.
+    // no UDF sinks, and — the scale claim — no Exchange anywhere
+    // (per-row operator, never a shuffle)
     assert(!plan.contains("BatchEvalPython") && !plan.contains("ScalaUDF"))
     assert(!plan.contains("Exchange"))
-    assert(df.selectExpr("st.speech_e").head().getLong(0) > 0L)
+    assert(df.select("speech_e").head().getLong(0) > 0L)
   }
 
   test("real decoded audio: silence-padded tone clip has the expected gap") {
@@ -105,11 +89,8 @@ class AudioQcSpec extends AnyFunSuite with BeforeAndAfterAll {
     val wav = graft.io.WavCodec.encodeMono16(pad ++ tone, rate)
     val dec = graft.io.WavCodec.decode(wav)
     val ints = dec.samples.map(f => math.round(f * 32768f))
-    import spark.implicits._
-    val row = Seq(ints.toSeq).toDF("s")
-      .select(AudioQc.snrStats(col("s"), frameLen = rate / 40).as("st"))
-      .selectExpr("st.noise_e", "st.speech_e").head()
-    assert(row.getLong(0) == 0L)       // digital-silence noise floor
-    assert(row.getLong(1) > 1000000L)  // tone frames carry real energy
+    val (Some(noise), Some(speech)) = AudioQc.snrStats(ints, frameLen = rate / 40)
+    assert(noise == 0L)          // digital-silence noise floor
+    assert(speech > 1000000L)    // tone frames carry real energy
   }
 }

@@ -66,51 +66,4 @@ class AviMjpegSpec extends AnyFunSuite {
       assert(java.util.Arrays.equals(f, v.frames(i)))
     }
   }
-
-  test("chunked (ranged) demux is bit-identical to whole-file demux") {
-    val v = Video(32, 24, 24, frames(11, 32, 24))
-    val avi = AviMjpeg.mux(v)
-    val whole = AviMjpeg.demux(avi)
-    val ix = AviMjpeg.index(AviMjpeg.rangeReaderOf(avi), avi.length.toLong)
-    assert((ix.width, ix.height, ix.fps) == ((whole.width, whole.height, whole.fps)))
-    assert(ix.frames.size == whole.frames.size)
-    ix.frames.foreach { fr =>
-      assert(java.util.Arrays.equals(
-        AviMjpeg.fetch(AviMjpeg.rangeReaderOf(avi), fr), whole.frames(fr.idx)),
-        s"frame ${fr.idx} differs through the ranged path")
-    }
-  }
-
-  test("ranged sampling reads headers + kept frames only, never the file") {
-    val v = Video(32, 24, 24, frames(12, 32, 24))
-    val avi = AviMjpeg.mux(v)
-    var totalRead = 0L
-    var maxSingle = 0
-    val counting: AviMjpeg.RangeReader = (off, len) => {
-      totalRead += len
-      maxSingle = math.max(maxSingle, len)
-      AviMjpeg.rangeReaderOf(avi)(off, len)
-    }
-    // index pass alone: header-sized reads only — no read may span a
-    // frame payload, and the total is a small fraction of the file
-    AviMjpeg.index(counting, avi.length.toLong)
-    val indexBytes = totalRead
-    assert(maxSingle <= 48, s"index pass read a $maxSingle-byte range")
-    assert(indexBytes < avi.length / 4,
-      s"index pass read $indexBytes of ${avi.length} bytes")
-    // sampling every 4th: payload IO = exactly the kept frames' bytes
-    totalRead = 0
-    val kept = AviMjpeg.sampleFramesChunked(counting, avi.length.toLong, 4)
-    assert(kept.map(_._1) == Vector(0, 4, 8))
-    val keptBytes = kept.map(_._2.length.toLong).sum
-    assert(totalRead == indexBytes + keptBytes,
-      s"ranged sampling read $totalRead, expected headers ($indexBytes) + " +
-        s"kept frames ($keptBytes)")
-    // the matching whole-file sample agrees byte-for-byte
-    val viaWhole = AviMjpeg.sampleFrames(AviMjpeg.demux(avi), 4)
-    assert(kept.map(_._1) == viaWhole.map(_._1))
-    kept.zip(viaWhole).foreach { case ((_, a), (_, b)) =>
-      assert(java.util.Arrays.equals(a, b))
-    }
-  }
 }

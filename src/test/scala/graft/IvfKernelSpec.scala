@@ -1,16 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The IVF E-step's broadcast-kernel form (round 16, verdict r15 weak #1):
-  * [[graft.queries.DedupSim.ivfAssignKernel]] must be BIT-interchangeable
-  * with the literal-projection form at any codebook size — same sequential
-  * IEEE double fold, same (score, seed_id) tie-break, same degenerate-row
-  * answers — because `ivfAssignAuto` switches between them on cell count
-  * alone and the oracle replays only the literal form's algebra. */
+import graft.functions.GraftFunctions.dotF32
+import graft.queries.DedupSim
+
+/** The IVF E-step and probe resolver against the algebra the DuckDB
+  * oracles state: [[graft.queries.DedupSim.ivfAssignKernel]] and
+  * `probePairsFor` must be BIT-interchangeable with a literal struct-min
+  * over every cell's (dot_f32(ce,ce) - 2·dot_f32(x,ce), seed_id) — same
+  * sequential IEEE double fold, same (score, seed_id) tie-break, same
+  * degenerate-row answers. The literal form lives here, as the reference. */
 class IvfKernelSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
@@ -24,22 +27,34 @@ class IvfKernelSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val d = "/root/testdata/sf0.001"
 
-  /** The gate override lives next to the gate itself (round-16 review). */
-  private def withGate[T](maxCells: Int)(body: => T): T =
-    graft.queries.DedupSim.withIvfGate(maxCells)(body)
+  /** The literal reference: one (score, seed_id) struct per cell. */
+  private def cellScores(code: Array[(Long, Array[Float])])(emb: Column): Column =
+    array(code.toSeq.map { case (sid, ce) =>
+      val ceL = typedLit(ce)
+      struct((dotF32(ceL, ceL) - lit(2.0) * dotF32(emb, ceL)).as("score"),
+        lit(sid).as("seed_id"))
+    }: _*)
+
+  /** vec_id → nearest cell by the literal struct-min. */
+  private def literalAssign(emb: DataFrame,
+                            code: Array[(Long, Array[Float])]): Map[Long, Long] =
+    emb.select(col("vec_id").cast("long"),
+        array_min(cellScores(code)(col("embedding"))).getField("seed_id"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+
+  private def kernelAssign(emb: DataFrame,
+                           code: Array[(Long, Array[Float])]): Map[Long, Long] =
+    DedupSim.ivfAssignKernel(emb, code)
+      .select(col("vec_id").cast("long"), col("cell").cast("long"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
 
   test("kernel assignment matches the literal projection bit-for-bit " +
        "on the fixture corpus (22 and 64 cells)") {
     val emb = graft.core.Tables.embeddings(spark, d)
     for (cells <- Seq(22L, 64L)) {
-      val code = graft.queries.DedupSim.seedCodebookN(spark, d, cells)
-      val lit = withGate(Int.MaxValue) {
-        graft.queries.DedupSim.ivfAssignAuto(emb, code) }
-        .select(col("vec_id").cast("long"), col("cell").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      val ker = graft.queries.DedupSim.ivfAssignKernel(emb, code)
-        .select(col("vec_id").cast("long"), col("cell").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      val code = DedupSim.seedCodebookN(spark, d, cells)
+      val lit = literalAssign(emb, code)
+      val ker = kernelAssign(emb, code)
       assert(ker.size == lit.size && ker == lit,
         s"kernel/literal assignment divergence at $cells cells")
     }
@@ -48,7 +63,7 @@ class IvfKernelSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("degenerate rows (null embedding, ragged length, null element) " +
        "agree with the literal struct-min's nulls-first answer") {
     import spark.implicits._
-    val code = graft.queries.DedupSim.seedCodebookN(spark, d, 16L)
+    val code = DedupSim.seedCodebookN(spark, d, 16L)
     val dim = code.head._2.length
     val good = Array.fill(dim)(0.25f)
     val raggy = Array.fill(dim - 1)(0.25f)
@@ -61,17 +76,8 @@ class IvfKernelSpec extends AnyFunSuite with BeforeAndAfterAll {
       (103L, None: Option[Seq[Option[Float]]]))
       .toDF("vec_id", "embedding")
       .select(col("vec_id"), col("embedding").cast("array<float>"))
-    def runBoth(): (Map[Long, Long], Map[Long, Long]) = {
-      val lit = withGate(Int.MaxValue) {
-        graft.queries.DedupSim.ivfAssignAuto(emb, code) }
-        .select(col("vec_id"), col("cell").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      val ker = graft.queries.DedupSim.ivfAssignKernel(emb, code)
-        .select(col("vec_id"), col("cell").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-      (lit, ker)
-    }
-    val (lit, ker) = runBoth()
+    val lit = literalAssign(emb, code)
+    val ker = kernelAssign(emb, code)
     assert(lit == ker, s"degenerate-row divergence: literal=$lit kernel=$ker")
     // and the degenerate rows all resolve to the SMALLEST seed id — the
     // nulls-first struct-min documented in IvfKernel.firstId
@@ -81,47 +87,29 @@ class IvfKernelSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("ivfAssignAuto gates on cell count: kernel expression above the " +
-       "threshold, literal struct-min below") {
+  test("probePairsFor gives the array_sort struct order's probe cells, " +
+       "a duplicated centroid's score tie going to the lower cell id") {
     val emb = graft.core.Tables.embeddings(spark, d)
-    val code = graft.queries.DedupSim.seedCodebookN(spark, d, 22L)
-    val below = withGate(128) {
-      graft.queries.DedupSim.ivfAssignAuto(emb, code) }
-    val above = withGate(8) {
-      graft.queries.DedupSim.ivfAssignAuto(emb, code) }
-    assert(!below.queryExecution.analyzed.toString.contains("ivf_nearest_cell"),
-      "below the gate the plan must keep the literal projection")
-    assert(above.queryExecution.analyzed.toString.contains("ivf_nearest_cell"),
-      "above the gate the plan must carry the broadcast-kernel expression")
-  }
-
-  test("q345 end-to-end with the kernel form forced matches the default run") {
-    val base = graft.queries.DedupSim.q345(spark, d).collect()
-    val kern = withGate(0) { graft.queries.DedupSim.q345(spark, d) }.collect()
-    assert(base.length == kern.length,
-      s"row count drift: ${base.length} vs ${kern.length}")
-    base.zip(kern).zipWithIndex.foreach { case ((a, b), i) =>
-      assert(a == b, s"q345 row $i drifts under the kernel E-step: $a vs $b")
+    val qVecs = DedupSim.probeVectors(spark, d)
+    val seed = DedupSim.seedCodebookN(spark, d, 16L)
+    // copy query 0's nearest centroid into another cell: the two cells
+    // then score identically for every query, and query 0 probes both
+    val near = DedupSim.probePairsFor(qVecs, seed).head._2
+    val twin = if (near == seed.last._1) seed.head._1 else seed.last._1
+    val nearVec = seed.find(_._1 == near).get._2
+    val dup = seed.map { case (id, v) => (id, if (id == twin) nearVec.clone() else v) }
+    for ((name, code) <- Seq("seed" -> seed, "duplicated centroid" -> dup)) {
+      val viaSort = emb.filter(col("vec_id") < 5)
+        .select(col("vec_id").cast("long"),
+          slice(array_sort(cellScores(code)(col("embedding"))), 1, DedupSim.IvfProbes)
+            .getField("seed_id"))
+        .collect().map(r => (r.getLong(0), r.getSeq[Long](1))).toMap
+      val resolved = DedupSim.probePairsFor(qVecs, code)
+        .groupBy(_._1).map { case (q, ps) => (q, ps.map(_._2)) }
+      assert(resolved == viaSort, s"$name codebook: $resolved vs $viaSort")
     }
-  }
-
-  test("the gate override stays on its own thread") {
-    import java.util.concurrent.{CountDownLatch, TimeUnit}
-    import java.util.concurrent.atomic.AtomicInteger
-    // the other thread exists before the override, so it inherits nothing
-    val overridden = new CountDownLatch(1)
-    val seen = new AtomicInteger(-1)
-    val other = new Thread(() => {
-      overridden.await(30, TimeUnit.SECONDS)
-      seen.set(graft.queries.DedupSim.ivfLiteralMaxCells)
-    })
-    other.start()
-    withGate(Int.MaxValue) {
-      assert(graft.queries.DedupSim.ivfLiteralMaxCells == Int.MaxValue)
-      overridden.countDown()
-      other.join(30000)
-    }
-    assert(seen.get == 16)
-    assert(graft.queries.DedupSim.ivfLiteralMaxCells == 16)
+    val q0 = DedupSim.probePairsFor(qVecs, dup).filter(_._1 == qVecs.head._1).map(_._2)
+    assert(q0.take(2) == Seq(math.min(near, twin), math.max(near, twin)),
+      s"tied cells must probe lower id first: $q0")
   }
 }

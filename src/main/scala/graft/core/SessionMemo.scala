@@ -6,8 +6,9 @@ import org.apache.spark.storage.StorageLevel
 /** Session-scoped memo of derived tables that several board entries
   * consume within one session: MinHash/LSH candidates (q24/q45), SimHash
   * signatures (q25/q78), substring spans (q80/q86/q92), shingle arrays
-  * (q128), corpus chunk bands and pairs (q357/q361/q368) and the q360
-  * decision table (q360/q363/q365/q370/q372). The one policy every memo
+  * (q128), corpus chunk bands and pairs (q357/q361/q368), the q360
+  * decision table (q360/q363/q365/q370, and q372 through its flag table)
+  * and q372's doc-grain flag table. The one policy every memo
   * follows lives here:
   *   - Entries are keyed by (session, dir, kind). A live session keeps at
   *     most ONE dir across all kinds: a memo call on a new dir releases
@@ -60,15 +61,29 @@ object SessionMemo {
     if (head.length <= cap) Some(head) else None
   }
 
+  /** [[boundedCollect]] of a table with at most one row per document of
+    * `d` (doc_id is the documents key): when the documents footers count
+    * at most the row cap, the table is collected whole in one job instead
+    * of the limit scan's partition-by-partition rounds. */
+  private[graft] def docGrainCollect(df: DataFrame, d: String): Option[Array[Row]] =
+    graft.io.ParquetStats.rowCount(s"$d/documents.parquet") match {
+      case Some(n) if n <= rowCap.value => Some(df.collect())
+      case _ => boundedCollect(df)
+    }
+
   /** The memoized `build` for (s, d, kind): a local relation when the
     * documents input under `d` is small and the table fits the row cap,
-    * else the persisted distributed plan. */
-  private[graft] def replayed(s: SparkSession, d: String, kind: String)
-                              (build: => DataFrame): DataFrame =
+    * else the persisted distributed plan. A `docGrain` table (at most one
+    * row per document) is collected through [[docGrainCollect]]. */
+  private[graft] def replayed(s: SparkSession, d: String, kind: String,
+                              docGrain: Boolean = false)
+                             (build: => DataFrame): DataFrame =
     memo(s, d, kind) {
       val df = build
       val local =
-        if (isSmallLocal(s"$d/documents.parquet")) boundedCollect(df) else None
+        if (!isSmallLocal(s"$d/documents.parquet")) None
+        else if (docGrain) docGrainCollect(df, d)
+        else boundedCollect(df)
       local match {
         case Some(rows) =>
           import scala.jdk.CollectionConverters._

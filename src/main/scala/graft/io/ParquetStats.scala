@@ -23,6 +23,39 @@ object ParquetStats {
     else if (f.getName.endsWith(".parquet") && f.length() > 0) Seq(f)
     else Seq.empty
 
+  /** The row count of every parquet file under `path` (file or
+    * directory), from the footers' num_rows alone (no Hadoop file system,
+    * no row group decoded); None when there is no file or a footer is
+    * not a plain one. */
+  def rowCount(path: String): Option[Long] = {
+    val files = listParquet(new java.io.File(path))
+    val counts = files.map(footerRows)
+    if (files.isEmpty || counts.contains(None)) None else Some(counts.flatten.sum)
+  }
+
+  /** A file's num_rows: its footer is the thrift FileMetaData that ends
+    * 8 bytes before the end, followed by its 4-byte little-endian length
+    * and the "PAR1" magic. */
+  private def footerRows(f: java.io.File): Option[Long] = {
+    val raf = new java.io.RandomAccessFile(f, "r")
+    try {
+      val tail = new Array[Byte](8)
+      raf.seek(raf.length() - 8)
+      raf.readFully(tail)
+      val len = java.nio.ByteBuffer.wrap(tail, 0, 4)
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+      if (new String(tail, 4, 4, "US-ASCII") != "PAR1" || len <= 0 ||
+          len > raf.length() - 12) None
+      else {
+        val footer = new Array[Byte](len)
+        raf.seek(raf.length() - 8 - len)
+        raf.readFully(footer)
+        Some(org.apache.parquet.format.Util.readFileMetaData(
+          new java.io.ByteArrayInputStream(footer), true).getNum_rows)
+      }
+    } finally raf.close()
+  }
+
   /** min/max of an INT64 column across every row group of every parquet
     * file under `path` (file or directory), from footer statistics only.
     * None when any populated row group lacks stats for the column (the

@@ -17,6 +17,10 @@ import scala.collection.mutable
   *  - `qualityPass`: q19's length/letter/hallucination predicate;
   *  - `score` and `decision`: q360's integer composite and its cutoffs.
   *
+  * q364's chunk pass shares the tokenization: [[tokens]] splits a text
+  * as the chunk and sequence entries do, and [[chunkFingerprints]] gives
+  * the distinct md5s of its windows.
+  *
   * Two string operations keep Spark's semantics rather than Java's:
   * `trim` strips only U+0020 ([[spaceTrim]]), and the lower-cased text is
   * taken as an input, computed by the caller with Spark's `lower`, so the
@@ -133,6 +137,26 @@ object CurationSignals {
     * tab or newline yields a leading empty token. */
   def wsSplit(s: String): Array[String] = Whitespace.split(s, -1)
 
+  /** A text's whitespace tokens as the board's chunk and sequence entries
+    * split it: [[spaceTrim]], then [[wsSplit]], with empty tokens dropped. */
+  def tokens(text: String): Array[String] =
+    if (text == null) Array.empty else wsSplit(spaceTrim(text)).filter(_.nonEmpty)
+
+  /** The distinct fingerprints of a token array's windows of `w` tokens at
+    * stride `st` (the last window may be short; none for an empty array):
+    * the md5 hex of each window's tokens joined by one space, as Spark's
+    * `md5(array_join(toks, ' '))` computes it. */
+  def chunkFingerprints(toks: Array[String], w: Int, st: Int): Array[String] = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val hex = java.util.HexFormat.of()
+    val n = toks.length
+    val nChunks = if (n == 0) 0 else 1 + (math.max(n - w, 0) + st - 1) / st
+    (0 until nChunks).iterator.map { k =>
+      val window = toks.slice(k * st, k * st + w).mkString(" ")
+      hex.formatHex(md.digest(window.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    }.distinct.toArray
+  }
+
   /** q338's page: the document's words in six-word lines with a cycling
     * terminal mark, plus the hazards injected on doc_id % 13 / 11 / 7. */
   def c4Page(id: Long, text: String): String = {
@@ -159,7 +183,7 @@ object CurationSignals {
 
   /** q354's ttr_ppm and q355's bpt_ppm, both None without tokens. */
   private def lexical(lower: String): (Option[Long], Option[Long]) = {
-    val toks = wsSplit(spaceTrim(lower)).filter(_.nonEmpty)
+    val toks = tokens(lower)
     val n = toks.length.toLong
     if (n == 0L) (None, None)
     else {

@@ -31,7 +31,7 @@ object CatalogOps {
     // own session like every catalog sibling (q292/q297/q298/q299): the
     // registration and the created tables never leak into the board run
     val s = s0.newSession()
-    val wh = java.nio.file.Files.createTempDirectory("graft_q289_wh").toString
+    val wh = graft.io.FsUtil.scratchDir("graft_q289_wh")
     // the catalog object is cached per session by name; the warehouse is
     // re-resolved from the conf on every operation, so repeated runs with
     // fresh temp warehouses share one registration
@@ -106,7 +106,7 @@ object CatalogOps {
   def q292(s0: SparkSession, d: String): DataFrame = {
     val s = s0.newSession()
     graft.plans.SqlDml.ensure(s)
-    val wh = java.nio.file.Files.createTempDirectory("graft_q292_wh").toString
+    val wh = graft.io.FsUtil.scratchDir("graft_q292_wh")
     s.conf.set("spark.sql.catalog.gdml", classOf[graft.sources.GraftCatalog].getName)
     s.conf.set("spark.sql.catalog.gdml.warehouse", wh)
     s.sql("CREATE NAMESPACE IF NOT EXISTS gdml.db")
@@ -242,7 +242,7 @@ object CatalogOps {
   def q297(s0: SparkSession, d: String): DataFrame = {
     val s = s0.newSession()
     graft.plans.SqlDml.ensure(s)
-    val wh = java.nio.file.Files.createTempDirectory("graft_q297_wh").toString
+    val wh = graft.io.FsUtil.scratchDir("graft_q297_wh")
     s.conf.set("spark.sql.catalog.gevo", classOf[graft.sources.GraftCatalog].getName)
     s.conf.set("spark.sql.catalog.gevo.warehouse", wh)
     s.sql("CREATE NAMESPACE IF NOT EXISTS gevo.db")
@@ -311,8 +311,8 @@ object CatalogOps {
       graft.core.Sessions.streamShufflePartitions(s))
     s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val wh = java.nio.file.Files.createTempDirectory("graft_q298_wh").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_q298_ckpt").toString
+    val wh = graft.io.FsUtil.scratchDir("graft_q298_wh")
+    val ckpt = graft.io.FsUtil.scratchDir("graft_q298_ckpt")
     s.conf.set("spark.sql.catalog.gst", classOf[graft.sources.GraftCatalog].getName)
     s.conf.set("spark.sql.catalog.gst.warehouse", wh)
     s.sql("CREATE NAMESPACE IF NOT EXISTS gst.db")
@@ -381,7 +381,7 @@ object CatalogOps {
     val s = s0.newSession() // inherits the session extensions (parser)
     s.conf.set("spark.sql.shuffle.partitions",
       graft.core.Sessions.streamShufflePartitions(s))
-    val wh = java.nio.file.Files.createTempDirectory("graft_q299_wh").toString
+    val wh = graft.io.FsUtil.scratchDir("graft_q299_wh")
     s.conf.set("spark.sql.catalog.gmt", classOf[graft.sources.GraftCatalog].getName)
     s.conf.set("spark.sql.catalog.gmt.warehouse", wh)
     graft.plans.SqlDml.ensure(s)
@@ -459,7 +459,7 @@ object CatalogOps {
     * file index) and that a FAILED RTAS aborts without litter. */
   def q303(s0: SparkSession, d: String): DataFrame = {
     val s = s0.newSession()
-    val wh = java.nio.file.Files.createTempDirectory("graft_q303_wh").toString
+    val wh = graft.io.FsUtil.scratchDir("graft_q303_wh")
     s.conf.set("spark.sql.catalog.gpt", classOf[graft.sources.GraftCatalog].getName)
     s.conf.set("spark.sql.catalog.gpt.warehouse", wh)
     s.sql("CREATE NAMESPACE IF NOT EXISTS gpt.db")
@@ -540,7 +540,7 @@ object CatalogOps {
   def q309(s0: SparkSession, d: String): DataFrame = {
     val s = s0.newSession()
     s.conf.set("spark.sql.shuffle.partitions", "4")
-    val wh = java.nio.file.Files.createTempDirectory("graft_q309_wh").toString
+    val wh = graft.io.FsUtil.scratchDir("graft_q309_wh")
     s.conf.set("spark.sql.catalog.gmd", classOf[graft.sources.GraftCatalog].getName)
     s.conf.set("spark.sql.catalog.gmd.warehouse", wh)
     s.sql("CREATE NAMESPACE IF NOT EXISTS gmd.db")
@@ -606,7 +606,7 @@ object CatalogOps {
   def q311(s0: SparkSession, d: String): DataFrame = {
     val s = s0.newSession()
     s.conf.set("spark.sql.shuffle.partitions", "4")
-    val wh = java.nio.file.Files.createTempDirectory("graft_q311_wh").toString
+    val wh = graft.io.FsUtil.scratchDir("graft_q311_wh")
     s.conf.set("spark.sql.catalog.grc", classOf[graft.sources.GraftCatalog].getName)
     s.conf.set("spark.sql.catalog.grc.warehouse", wh)
     s.sql("CREATE NAMESPACE IF NOT EXISTS grc.db")
@@ -702,7 +702,7 @@ object CatalogOps {
   def q313(s0: SparkSession, d: String): DataFrame = {
     val s = s0.newSession()
     s.conf.set("spark.sql.shuffle.partitions", "4")
-    val wh = java.nio.file.Files.createTempDirectory("graft_q313_wh").toString
+    val wh = graft.io.FsUtil.scratchDir("graft_q313_wh")
     s.conf.set("spark.sql.catalog.gcd", classOf[graft.sources.GraftCatalog].getName)
     s.conf.set("spark.sql.catalog.gcd.warehouse", wh)
     s.sql("CREATE NAMESPACE IF NOT EXISTS gcd.db")
@@ -780,7 +780,7 @@ object CatalogOps {
   def q314(s0: SparkSession, d: String): DataFrame = {
     val s = s0.newSession()
     s.conf.set("spark.sql.shuffle.partitions", "4")
-    val wh = java.nio.file.Files.createTempDirectory("graft_q314_wh").toString
+    val wh = graft.io.FsUtil.scratchDir("graft_q314_wh")
     s.conf.set("spark.sql.catalog.gan", classOf[graft.sources.GraftCatalog].getName)
     s.conf.set("spark.sql.catalog.gan.warehouse", wh)
     s.sql("CREATE NAMESPACE IF NOT EXISTS gan.db")
@@ -839,7 +839,7 @@ object CatalogOps {
   def q315(s0: SparkSession, d: String): DataFrame = {
     val s = s0.newSession()
     s.conf.set("spark.sql.shuffle.partitions", "4")
-    val wh = java.nio.file.Files.createTempDirectory("graft_q315_wh").toString
+    val wh = graft.io.FsUtil.scratchDir("graft_q315_wh")
     s.conf.set("spark.sql.catalog.gtp", classOf[graft.sources.GraftCatalog].getName)
     s.conf.set("spark.sql.catalog.gtp.warehouse", wh)
     s.sql("CREATE NAMESPACE IF NOT EXISTS gtp.db")
@@ -904,7 +904,7 @@ object CatalogOps {
   def q316(s0: SparkSession, d: String): DataFrame = {
     val s = s0.newSession()
     s.conf.set("spark.sql.shuffle.partitions", "4")
-    val wh = java.nio.file.Files.createTempDirectory("graft_q316_wh").toString
+    val wh = graft.io.FsUtil.scratchDir("graft_q316_wh")
     s.conf.set("spark.sql.catalog.gcv", classOf[graft.sources.GraftCatalog].getName)
     s.conf.set("spark.sql.catalog.gcv.warehouse", wh)
     s.sql("CREATE NAMESPACE IF NOT EXISTS gcv.db")
@@ -979,7 +979,7 @@ object CatalogOps {
   def q317(s0: SparkSession, d: String): DataFrame = {
     val s = s0.newSession()
     s.conf.set("spark.sql.shuffle.partitions", "4")
-    val wh = java.nio.file.Files.createTempDirectory("graft_q317_wh").toString
+    val wh = graft.io.FsUtil.scratchDir("graft_q317_wh")
     s.conf.set("spark.sql.catalog.gdv", classOf[graft.sources.GraftCatalog].getName)
     s.conf.set("spark.sql.catalog.gdv.warehouse", wh)
     s.sql("CREATE NAMESPACE IF NOT EXISTS gdv.db")

@@ -575,11 +575,11 @@ object CorpusOps {
       graft.core.Sessions.streamShufflePartitions(s2))
     // update-mode IVM sinks emit on data arrival; skip the no-data batch
     s2.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val staged = java.nio.file.Files.createTempDirectory("graft_q209_src").toString
+    val staged = graft.io.FsUtil.scratchDir("graft_q209_src")
     Tables.documents(s, d)
       .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
       .repartition(3).write.mode("overwrite").parquet(staged)
-    val viewDir = java.nio.file.Files.createTempDirectory("graft_q209_view").toString
+    val viewDir = graft.io.FsUtil.scratchDir("graft_q209_view")
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("source", StringType),
       StructField("lang", StringType), StructField("n_chars", LongType)))
@@ -634,10 +634,10 @@ object CorpusOps {
       graft.core.Sessions.streamShufflePartitions(s2))
     // update-mode IVM sinks emit on data arrival; skip the no-data batch
     s2.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val staged = java.nio.file.Files.createTempDirectory("graft_q210_src").toString
+    val staged = graft.io.FsUtil.scratchDir("graft_q210_src")
     Tables.documents(s, d).select(col("doc_id"), col("n_chars"))
       .repartition(3).write.mode("overwrite").parquet(staged)
-    val sampDir = java.nio.file.Files.createTempDirectory("graft_q210_samp").toString
+    val sampDir = graft.io.FsUtil.scratchDir("graft_q210_samp")
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("n_chars", LongType)))
     val q = s2.readStream.schema(schema)
@@ -770,7 +770,7 @@ object CorpusOps {
     * faces aggregate (one union, as_of column) so the gate pins the
     * visible ROW SET, not just counts. */
   def q212(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_q212_tbl").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_q212_tbl")
     val li = Tables.lineitem(s, d)
       .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
     graft.io.TxnLog.commit(li.filter(expr("l_orderkey % 3 = 0")), dir)
@@ -813,7 +813,7 @@ object CorpusOps {
     * files) is asserted in TxnLogSpec — a rowset oracle can't see file
     * counts, and must not. */
   def q213(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_q213_tbl").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_q213_tbl")
     val part = Tables.part(s, d)
       .select(col("p_partkey"), col("p_brand"), col("p_retailprice"))
     (0 until 3).foreach(i =>
@@ -860,18 +860,18 @@ object CorpusOps {
       graft.core.Sessions.streamShufflePartitions(s2))
     // update-mode IVM sinks emit on data arrival; skip the no-data batch
     s2.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val staged = java.nio.file.Files.createTempDirectory("graft_q214_src").toString
+    val staged = graft.io.FsUtil.scratchDir("graft_q214_src")
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
     (0 until 3).foreach { i =>
-      val tmp = java.nio.file.Files.createTempDirectory("graft_q214_tmp").toString
+      val tmp = graft.io.FsUtil.scratchDir("graft_q214_tmp")
       docs.filter(expr(s"doc_id % 3 = $i")).coalesce(1).write.mode("overwrite").parquet(tmp)
       val one = new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet")).head
       val dst = new java.io.File(s"$staged/f$i.parquet")
       java.nio.file.Files.move(one.toPath, dst.toPath)
       dst.setLastModified(1000000L * (i + 1)) // fix the arrival order
     }
-    val tbl = java.nio.file.Files.createTempDirectory("graft_q214_tbl").toString
+    val tbl = graft.io.FsUtil.scratchDir("graft_q214_tbl")
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("source", StringType),
       StructField("lang", StringType), StructField("n_chars", LongType)))
@@ -923,7 +923,7 @@ object CorpusOps {
     * vacuum (the recovery window). Both faces are oracle-stated: as-of 1
     * = the full table, latest = everything but the deleted segment. */
   def q216(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_q216_tbl").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_q216_tbl")
     val cust = Tables.customer(s, d)
       .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
     graft.io.TxnLog.commit(cust, dir)
@@ -960,7 +960,7 @@ object CorpusOps {
     * vacuum — every step's ledger entry is a literal the oracle states,
     * because the protocol makes each one deterministic. */
   def q215(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_q215_tbl").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_q215_tbl")
     val nat = Tables.nation(s, d)
       .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
     graft.io.TxnLog.commit(nat.filter(expr("n_nationkey % 2 = 0")).coalesce(1), dir)
@@ -997,7 +997,7 @@ object CorpusOps {
     * pins the history ledger: actions A,D,A,R and an untouched vacuum
     * watermark. */
   def q217(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_q217_tbl").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_q217_tbl")
     val cust = Tables.customer(s, d)
       .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
     graft.io.TxnLog.commit(cust.filter(expr("c_custkey % 2 = 0")), dir)

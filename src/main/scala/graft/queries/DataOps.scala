@@ -617,7 +617,7 @@ object DataOps {
     * required fields makes Avro's resolving decoder skip the bytes of
     * unprojected columns (AvroSourceSpec pins that plus type fidelity). */
   def q224(s: SparkSession, d: String): DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_q224_avro").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_q224_avro")
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"))
     val schema = docs.schema

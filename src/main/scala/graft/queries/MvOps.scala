@@ -62,7 +62,7 @@ object MvOps {
   def q278(s: SparkSession, d: String): DataFrame = {
     val li = Tables.lineitem(s, d) // also ensures the rule is live on s
     val basePath = s"$d/lineitem.parquet"
-    val mvDir = java.nio.file.Files.createTempDirectory("graft_q278_mv").toString
+    val mvDir = graft.io.FsUtil.scratchDir("graft_q278_mv")
     val mvPath = s"$mvDir/mv"
 
     val dec = DecimalType(18, 4)
@@ -281,8 +281,8 @@ object MvOps {
   def q280(s: SparkSession, d: String): DataFrame = {
     import graft.io.TxnLog
     val orders = Tables.orders(s, d) // ensures the rule is live on s
-    val dir = java.nio.file.Files.createTempDirectory("graft_q280_tbl").toString
-    val mvDir = java.nio.file.Files.createTempDirectory("graft_q280_mv").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_q280_tbl")
+    val mvDir = graft.io.FsUtil.scratchDir("graft_q280_mv")
     val dec = DecimalType(18, 4)
     // fixture sizing + single-scan staging (round-9 verdict item 2; r18
     // widened): the IVM-routing claim needs the lifecycle, not order

@@ -504,7 +504,7 @@ object PipelineQueries {
     * not). */
   def q82(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.types._
-    val staged = java.nio.file.Files.createTempDirectory("graft_q82_src").toString
+    val staged = graft.io.FsUtil.scratchDir("graft_q82_src")
     Tables.events(s, d)
       .select(col("event_id"), col("ts_t"), col("user_id"), col("event_type"))
       .repartition(3)

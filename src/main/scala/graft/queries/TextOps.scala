@@ -1449,12 +1449,14 @@ object TextOps {
     * — factored so the spec can force several G values (the output is
     * provably G-independent) and so q367's shard writer reuses the same
     * offsets. */
-  private[graft] def q366Assembly(docs: DataFrame, g: Long): DataFrame = {
-    require(g >= 1L, s"group width must be >= 1, got $g")
-    val toks = docs.select(col("doc_id"),
+  private[graft] def q366Assembly(docs: DataFrame, g: Long): DataFrame =
+    q366Offsets(docs.select(col("doc_id"),
       expr("size(filter(split(trim(text), '\\\\s+'), x -> x <> ''))")
-        .cast("long").as("n_tok"))
-      .withColumn("grp", expr(s"doc_id div $g"))
+        .cast("long").as("n_tok")), g)
+  /** The two-level scan over a (doc_id, n_tok) table. */
+  private def q366Offsets(nTok: DataFrame, g: Long): DataFrame = {
+    require(g >= 1L, s"group width must be >= 1, got $g")
+    val toks = nTok.withColumn("grp", expr(s"doc_id div $g"))
     // (1) group sums — map-side partial, √N-sized result at G = √range
     val grpSums = toks.groupBy(col("grp")).agg(sum(col("n_tok")).as("g_sum"))
     // (2) group-level exclusive cumsum (window over the √N group table)
@@ -1466,17 +1468,20 @@ object TextOps {
     // (3) within-group exclusive cumsum — PARTITIONED window, parallel
     val wIn = Window.partitionBy(col("grp")).orderBy(col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    toks
+    withSeqSpan(toks
       .withColumn("in_off", sum(col("n_tok")).over(wIn) - col("n_tok"))
       .join(broadcast(grpOffsets), Seq("grp"))
-      .withColumn("tok_off", col("g_off") + col("in_off"))
-      .select(col("doc_id"), col("n_tok"), col("tok_off"),
-        expr(s"tok_off div $Q366SeqLen").as("seq_first"),
-        expr(s"(tok_off + greatest(n_tok - 1L, 0L)) div $Q366SeqLen")
-          .as("seq_last"),
-        expr(s"tok_off % $Q366SeqLen").as("seq_off"))
+      .withColumn("tok_off", col("g_off") + col("in_off")))
       .orderBy(col("doc_id"))
   }
+  /** q366's output columns from (doc_id, n_tok, tok_off): the first and
+    * last sequence a doc covers and its offset in the first. */
+  private def withSeqSpan(off: DataFrame): DataFrame =
+    off.select(col("doc_id"), col("n_tok"), col("tok_off"),
+      expr(s"tok_off div $Q366SeqLen").as("seq_first"),
+      expr(s"(tok_off + greatest(n_tok - 1L, 0L)) div $Q366SeqLen")
+        .as("seq_last"),
+      expr(s"tok_off % $Q366SeqLen").as("seq_off"))
   /** Sequence PARTS for the shard writer (q367): one row per (doc,
     * covered sequence) with the doc's token slice for that sequence —
     * q366's offsets composed with q349's slice idiom. A doc covering
@@ -1491,7 +1496,7 @@ object TextOps {
     * only (doc_id, n_tok, grp) triples. */
   private[graft] def sequenceParts(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    sequencePartsOver(docs, q366GroupWidthFor(d, docs))
+    sequencePartsAt(docs, q366Assembly(docs, q366GroupWidthFor(d, docs)))
   }
   /** Assembled sequences from a parts table: per seq_id, the part count
     * and the packed token array in deterministic tok_off order (the ONE
@@ -1502,19 +1507,17 @@ object TextOps {
       count(lit(1)).as("n_parts"),
       expr("flatten(transform(sort_array(collect_list(struct(tok_off, toks))), " +
         "x -> x.toks))").as("toks"))
-  /** [[sequenceParts]] over an arbitrary (doc_id, text) doc set — q372
-    * assembles the post-curation SURVIVOR corpus; G from the unfiltered
-    * table's footer range stays valid (a superset range only widens
-    * groups). */
-  private[graft] def sequencePartsOver(docs: DataFrame, g: Long): DataFrame = {
+  /** [[sequenceParts]] for the docs of `docs` that an offsets table
+    * (doc_id, n_tok, tok_off, seq_first, seq_last) places: q367 passes
+    * q366's offsets of the whole corpus, q372 its survivors' offsets. Only
+    * the placed docs are tokenized (the join runs first). */
+  private[graft] def sequencePartsAt(docs: DataFrame, off: DataFrame): DataFrame = {
     val L = Q366SeqLen
-    val off = q366Assembly(docs, g)
+    off.filter(col("n_tok") > 0)
       .select(col("doc_id"), col("n_tok"), col("tok_off"),
               col("seq_first"), col("seq_last"))
-    val toks = docs.select(col("doc_id"),
-      expr("filter(split(trim(text), '\\\\s+'), x -> x <> '')").as("t"))
-    off.filter(col("n_tok") > 0)
-      .join(toks, Seq("doc_id"))
+      .join(docs.select(col("doc_id"), col("text")), Seq("doc_id"))
+      .withColumn("t", expr("filter(split(trim(text), '\\\\s+'), x -> x <> '')"))
       .withColumn("seq_id", explode(expr("sequence(seq_first, seq_last)")))
       .select(col("doc_id"), col("seq_id"), col("tok_off"),
         expr(s"slice(t, CAST(greatest(seq_id * $L - tok_off, 0L) + 1 AS INT), " +
@@ -1606,28 +1609,72 @@ object TextOps {
     * q343's reference LM). Output: each CONTAMINATED train doc with its
     * hit count, chunk count, and integer hit share.
     *
-    * Scale shape: a REAL benchmark probe is benchmark-sized (constant at
-    * 100 TB — benchmarks don't grow with the crawl) and broadcasts; but
-    * THIS gate's doc_id%5=0 stand-in is 20% of the corpus's chunks —
-    * corpus-proportional — so a forced broadcast hint here is exactly
-    * the at-scale OOM pattern q352 removed (r16 ADVICE). The semi-join
-    * strategy is therefore delegated to AQE's runtime statistics (the
-    * q352 discipline): a genuinely constant-sized probe broadcasts on
-    * its measured size, the stand-in shuffles — either way nothing is
-    * forced resident. Per-doc rollups ride the fp→doc aggregation. */
-  def q364(s: SparkSession, d: String): DataFrame = {
-    val ch = tokenChunks(s, d).select(col("doc_id"), col("chunk_fp")).distinct()
-    val bench = ch.filter(col("doc_id") % 5 === 0)
-      .select(col("chunk_fp")).distinct()
-    val train = ch.filter(col("doc_id") % 5 =!= 0)
-    val perDoc = train.groupBy(col("doc_id")).agg(count(lit(1)).as("n_chunks"))
-    val hits = train.join(bench, Seq("chunk_fp"), "left_semi")
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hit_chunks"))
-    hits.join(perDoc, Seq("doc_id"))
+    * Scale shape: one typed pass per document ([[chunkFingerprints]])
+    * splits the text once and emits its DISTINCT window fingerprints; the
+    * benchmark slice's set is built once, from the same pass over the
+    * slice's rows. A REAL benchmark is constant-sized (benchmarks don't
+    * grow with the crawl), so its set fits the bounded collect
+    * ([[SessionMemo.docGrainCollect]]) and is broadcast: every train doc
+    * then scores its hits inside the same map, with no exchange. THIS
+    * gate's doc_id%5=0 stand-in is 20% of the corpus's chunks, so it
+    * grows with the corpus; past the row cap the set stays distributed
+    * and the hits are a relational join on chunk_fp (AQE picks the
+    * strategy on measured size, the q352 discipline), so nothing
+    * corpus-proportional is ever forced resident. q372's flag table reads
+    * the same pass. The relational form it replaced (tokenChunks →
+    * distinct → left_semi) is the parity reference in ChunkHitsSpec. */
+  def q364(s: SparkSession, d: String): DataFrame =
+    chunkHits(d, Tables.documents(s, d))
+      .filter(col("n_hit_chunks") > 0)
       .select(col("doc_id"), col("n_hit_chunks"), col("n_chunks"),
         expr("n_hit_chunks * 1000000L div n_chunks").as("hit_ppm"))
       .orderBy(col("doc_id"))
+
+  /** The benchmark stand-in: q343's reference slice convention. */
+  private val BenchSlice = col("doc_id") % 5 === 0
+
+  /** The per-document chunk pass: doc_id, n_tok and the doc's distinct
+    * [[chunkWindows]] fingerprints (`fps`), from ONE tokenization of its
+    * text ([[CurationSignals.tokens]], the same split rule). */
+  private def chunkFingerprints(docs: DataFrame): DataFrame = {
+    import docs.sparkSession.implicits._
+    docs.select(col("doc_id"), col("text")).as[(Long, String)]
+      .map { case (id, text) =>
+        val toks = CurationSignals.tokens(text)
+        (id, toks.length.toLong,
+          CurationSignals.chunkFingerprints(toks, Q349Window, Q349Stride)) }
+      .toDF("doc_id", "n_tok", "fps")
   }
+
+  /** Every doc of `docs` with `train` (outside the benchmark slice),
+    * n_tok, its distinct chunk count and how many of those chunks the
+    * benchmark slice also holds (0 for benchmark docs). */
+  private[graft] def chunkHits(d: String, docs: DataFrame): DataFrame = {
+    val s = docs.sparkSession
+    import s.implicits._
+    val fp = chunkFingerprints(docs).withColumn("train", !BenchSlice)
+    val benchDocs = chunkFingerprints(docs.filter(BenchSlice)).select(col("fps"))
+    SessionMemo.docGrainCollect(benchDocs, d) match {
+      case Some(rows) =>
+        val bench = s.sparkContext.broadcast(
+          rows.iterator.flatMap(_.getSeq[String](0)).toSet)
+        fp.select(col("doc_id"), col("train"), col("n_tok"), col("fps"))
+          .as[(Long, Boolean, Long, Array[String])].map { case (id, train, n, fps) =>
+          (id, train, n, fps.length.toLong,
+            if (train) fps.count(bench.value.contains).toLong else 0L) }
+          .toDF("doc_id", "train", "n_tok", "n_chunks", "n_hit_chunks")
+      case None =>
+        val bench = benchDocs.select(explode(col("fps")).as("chunk_fp"))
+          .distinct().withColumn("hit", lit(true))
+        fp.withColumn("n_chunks", size(col("fps")).cast("long"))
+          .select(col("doc_id"), col("train"), col("n_tok"), col("n_chunks"),
+            explode_outer(col("fps")).as("chunk_fp"))
+          .join(bench, Seq("chunk_fp"), "left")
+          .groupBy(col("doc_id"), col("train"), col("n_tok"), col("n_chunks"))
+          .agg(count(when(col("train"), col("hit"))).as("n_hit_chunks"))
+    }
+  }
+
   val q364Sql: String = {
     s"""WITH $chunkFpSqlCtes,
       |bench AS (SELECT DISTINCT fp FROM ch WHERE doc_id % 5 = 0),
@@ -1662,72 +1709,76 @@ object TextOps {
     * pinned by the md5 of its packed token stream against the oracle's
     * positional replay — so the gate certifies the exact bytes a trainer
     * would consume, not just the bookkeeping. The survivor policy is
-    * stated identically in both engines; the group width comes from the
-    * UNFILTERED table's footer range (a superset range only widens
-    * groups — output is G-independent anyway, Q366GroupWidthSpec).
+    * stated identically in both engines.
     *
-    * Scale shape: the gates are doc-grain joins on doc_id over
-    * already-reduced signal tables; the assembly is q367's (two
-    * token-payload exchanges, bounded groups); everything upstream
-    * keeps its own entry's measured posture. */
+    * Scale shape: every gate is a per-document flag, so the funnel is
+    * ONE doc-grain flag table over all documents ([[curationFlags]]:
+    * train, keep, sampled, contaminated, n_tok), held by the session memo
+    * as a local relation under the row cap and persisted past it, and
+    * ONE conditional aggregate over it. n_sequences is
+    * ceil(total_tokens / 2048) exactly, because the survivors' tokens
+    * occupy global positions 0…T−1 with no gap. The survivors' offsets
+    * are q366's exclusive prefix sum over the table's n_tok, taken on the
+    * driver when the survivor rows fit the bounded collect and by q366's
+    * two-level scan otherwise (its group width from the unfiltered
+    * table's footer range: a superset range only widens groups, and the
+    * output is G-independent, Q366GroupWidthSpec). Face 1 slices and
+    * packs the survivors' text as q367 does (sequencePartsAt →
+    * assembleSequences). A pass reads documents once, tokenizes each
+    * document once for the flags and each survivor once more for its
+    * slices, and holds no checkpoint: the memo's local relation holds no
+    * blocks, and its persisted form is released by the memo's eviction. */
   def q372(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    val train = docs.filter(col("doc_id") % 5 =!= 0)
-    // The keep and sample gates both read the q360 decision memo, which
-    // is already materialized (a local relation or a persisted plan).
-    // The contamination table is consumed TWICE (its census count and
-    // the survivor join) and `surv` 4× (count, token mass, offsets,
-    // slices); Spark does not share subtrees across union branches, so
-    // without a materialization barrier q364's chunk pipeline ran 2× and
-    // the gate join 4× (guide §1.2/§5: don't recompute what you already
-    // have). Both are doc-grain (≤ corpus-doc-count rows), never token
-    // grain, so the checkpoints are small by construction.
-    val decisions = bucketSample(corpusDecisions(s, d))
-    val keep = decisions.filter(col("decision") === "keep").select(col("doc_id"))
-    val sampled = decisions.filter(col("kept")).select(col("doc_id"))
-    val contaminated = q364(s, d).select(col("doc_id")).localCheckpoint()
-    val surv = train.select(col("doc_id"), col("text"))
-      .join(keep, Seq("doc_id"))
-      .join(sampled, Seq("doc_id"))
-      .join(contaminated, Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-    // NOT checkpointed (measured round 17): seqs feeds the n_sequences
-    // census row and the per-sequence face, but the census COUNT prunes
-    // the heavy toks-assembly aggregate entirely (column pruning through
-    // the Aggregate), so the "duplicate" evaluation is metadata-cheap —
-    // a barrier here forces full token-array materialization and
-    // regressed the query 5.1 → 9.5 s.
-    val seqs = assembleSequences(
-      sequencePartsOver(surv, q366GroupWidthFor(d, docs)))
+    val flags = curationFlags(s, d, docs)
+    val surv = col("train") && col("keep") && col("sampled") && !col("contaminated")
     val nullL = lit(null).cast("long")
     val nullS = lit(null).cast("string")
-    def cnt(name: String, df: DataFrame): DataFrame =
-      df.agg(count(lit(1)).cast("long").as("n"))
-        .select(lit(0L).as("face"), lit(name).as("metric"), col("n"),
-          nullL.as("seq_id"), nullL.as("n_parts"), nullL.as("n_tok"),
-          nullS.as("seq_md5"))
-    val totToks = surv
-      .select(expr("size(filter(split(trim(text), '\\\\s+'), x -> x <> ''))")
-        .cast("long").as("nt"))
-      .agg(coalesce(sum(col("nt")), lit(0L)).as("n"))
-      .select(lit(0L).as("face"), lit("total_tokens").as("metric"), col("n"),
+    def n(flag: Column): Column = count(when(flag, lit(1)))
+    val funnel = flags
+      .agg(count(lit(1)).as("docs_total"), n(col("train")).as("train_docs"),
+        n(col("keep")).as("keep_docs"), n(col("sampled")).as("sampled_docs"),
+        n(col("contaminated")).as("decon_flagged"), n(surv).as("survivor_docs"),
+        coalesce(sum(when(surv, col("n_tok"))), lit(0L)).as("total_tokens"))
+      .withColumn("n_sequences",
+        expr(s"(total_tokens + ${Q366SeqLen - 1}) div $Q366SeqLen"))
+      .unpivot(Array.empty[Column], "metric", "n")
+      .select(lit(0L).as("face"), col("metric"), col("n"),
         nullL.as("seq_id"), nullL.as("n_parts"), nullL.as("n_tok"),
         nullS.as("seq_md5"))
-    val funnel = cnt("docs_total", docs)
-      .unionByName(cnt("train_docs", train))
-      .unionByName(cnt("keep_docs", keep))
-      .unionByName(cnt("sampled_docs", sampled))
-      .unionByName(cnt("decon_flagged", contaminated))
-      .unionByName(cnt("survivor_docs", surv))
-      .unionByName(cnt("n_sequences", seqs))
-      .unionByName(totToks)
-    val seqFace = seqs.select(lit(1L).as("face"), nullS.as("metric"),
-      nullL.as("n"), col("seq_id"), col("n_parts"),
-      size(col("toks")).cast("long").as("n_tok"),
-      md5(array_join(col("toks"), " ")).as("seq_md5"))
+    val survTok = flags.filter(surv).select(col("doc_id"), col("n_tok"))
+    val offsets = SessionMemo.boundedCollect(survTok) match {
+      case Some(rows) =>
+        val placed = rows.map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+        val at = placed.scanLeft(0L)(_ + _._2)
+        withSeqSpan(s.createDataFrame(placed.zip(at).map { case ((id, nt), off) =>
+          (id, nt, off) }.toSeq).toDF("doc_id", "n_tok", "tok_off"))
+      case None => q366Offsets(survTok, q366GroupWidthFor(d, docs))
+    }
+    val seqFace = assembleSequences(sequencePartsAt(docs, offsets))
+      .select(lit(1L).as("face"), nullS.as("metric"),
+        nullL.as("n"), col("seq_id"), col("n_parts"),
+        size(col("toks")).cast("long").as("n_tok"),
+        md5(array_join(col("toks"), " ")).as("seq_md5"))
     funnel.unionByName(seqFace)
       .orderBy(col("face"), col("metric"), col("seq_id"))
   }
+
+  /** q372's doc-grain flag table over ALL documents: doc_id, train (outside
+    * the benchmark slice), keep (q360 decision), sampled (q365 coin),
+    * contaminated (a train doc sharing a window with the slice, q364) and
+    * n_tok. The keep and sample gates read the q360 decision memo; the
+    * contamination flag and n_tok come from q364's chunk pass. */
+  private def curationFlags(s: SparkSession, d: String, docs: DataFrame): DataFrame =
+    SessionMemo.replayed(s, d, "curation_flags", docGrain = true) {
+      val decisions = bucketSample(corpusDecisions(s, d, Some(docs)))
+        .select(col("doc_id"), (col("decision") === "keep").as("keep"),
+          col("kept").as("sampled"))
+      chunkHits(d, docs).join(decisions, Seq("doc_id"))
+        .select(col("doc_id"), col("train"), col("keep"), col("sampled"),
+          (col("n_hit_chunks") > 0).as("contaminated"), col("n_tok"))
+    }
+
   lazy val q372Sql: String =
     """WITH q360v AS (
       |""".stripMargin + q360Sql + """
@@ -1818,7 +1869,7 @@ object TextOps {
     * the bipartite join. A REAL benchmark band table is benchmark-sized
     * and AQE broadcasts it on measured size; this gate's doc_id%5=0
     * stand-in is corpus-proportional, so the strategy is delegated to
-    * AQE rather than hinted — the q364 round-17 discipline. */
+    * AQE rather than hinted — the q352 discipline. */
   def q368(s: SparkSession, d: String): DataFrame =
     bipartiteBandHits(corpusChunkBands(s, d), col("doc_id") % 5 === 0)
       .orderBy(col("doc_id"))
@@ -1930,12 +1981,12 @@ object TextOps {
     * constant-size model read. This is q370's incremental-refresh entry
     * point: scoring an ingest delta reads delta rows plus a constant
     * (Q370PushdownSpec pins both scans). */
-  private[graft] def q360Where(s: SparkSession, d: String,
-                               pred: Column): DataFrame = {
+  private[graft] def q360Where(docs: DataFrame, pred: Column): DataFrame = {
+    val s = docs.sparkSession
     import s.implicits._
     val lm = s.sparkContext.broadcast(CurationSignals.BigramModel
-      .fit(lmReference(s, d).as[String].collect()))
-    Tables.documents(s, d).filter(pred)
+      .fit(lmReference(docs).as[String].collect()))
+    docs.filter(pred)
       .select(col("doc_id"), col("text"), lower(col("text")))
       .as[(Long, String, String)]
       .map { case (id, text, lt) =>
@@ -1945,8 +1996,8 @@ object TextOps {
 
   /** q343's reference slice as the kernel reads it: the lower-cased text
     * of doc_id % 5 = 0 below [[CurationSignals.LmRefIdCap]]. */
-  private[graft] def lmReference(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
+  private[graft] def lmReference(docs: DataFrame): DataFrame =
+    docs
       .filter(col("doc_id") % 5 === 0 &&
         col("doc_id") < CurationSignals.LmRefIdCap)
       .select(lower(col("text")))
@@ -2033,10 +2084,11 @@ object TextOps {
   // Session-scoped memos (r18, guide §1.2): three corpus-derived tables are
   // each consumed by SEVERAL board entries — the chunk band table
   // (q357/q361/q368), its near-dup pair rollup (q357/q361), and the q360
-  // decision table (q360/q363/q365/q370/q372) — and each entry previously
-  // re-ran the whole derivation pipeline. They ride graft.core.SessionMemo,
-  // whose doc states the policy; values are doc/chunk-grain
-  // (corpus-bounded, never token-grain).
+  // decision table (q360/q363/q365/q370, and q372 through its flag table)
+  // — and each entry previously re-ran the whole derivation pipeline. They
+  // ride graft.core.SessionMemo, whose doc states the policy, as does
+  // q372's doc-grain flag table ([[curationFlags]]); values are
+  // doc/chunk-grain (corpus-bounded, never token-grain).
   // ------------------------------------------------------------------
 
   /** The corpus chunk-band table, memoized: q357 (self-join), q361 (via
@@ -2055,11 +2107,14 @@ object TextOps {
       chunkPairsOverBands(corpusChunkBands(s, d)))
 
   /** The q360 decision table, memoized: q360 reports it, q363 weights it
-    * by token mass, q365 samples on its LM bucket, q372 gates its shard
-    * assembly on its keep and sample sets, and q370 slices its base/delta/parity faces from it (private[graft] for
-    * that TxnOps consumer). */
-  private[graft] def corpusDecisions(s: SparkSession, d: String): DataFrame =
-    SessionMemo.replayed(s, d, "decisions")(q360Where(s, d, lit(true)))
+    * by token mass, q365 samples on its LM bucket, q372's flag table takes
+    * its keep and sample gates from it, and q370 slices its
+    * base/delta/parity faces from it (private[graft] for that TxnOps
+    * consumer). `docs` is the caller's documents read, when it has one. */
+  private[graft] def corpusDecisions(s: SparkSession, d: String,
+                                     docs: Option[DataFrame] = None): DataFrame =
+    SessionMemo.replayed(s, d, "decisions", docGrain = true)(
+      q360Where(docs.getOrElse(Tables.documents(s, d)), lit(true)))
 
   // ---------------------------------------------------------------- q357
   /** CHUNK-LEVEL MINHASH NEAR-DUP (round 16, verdict item 4): q352

@@ -51,7 +51,7 @@ object TxnOps {
     * face-0 ledger row pins the action chain AAX. */
   def q221(s0: SparkSession, d: String): DataFrame = {
     val s = txnSession(s0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_q221_tbl").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_q221_tbl")
     val cust = Tables.customer(s, d)
       .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
     TxnLog.commit(cust.filter(expr("c_custkey % 2 = 0")).coalesce(1), dir)
@@ -119,7 +119,7 @@ object TxnOps {
     * version 5 is absent from the output, which IS the compaction claim. */
   def q222(s0: SparkSession, d: String): DataFrame = {
     val s = txnSession(s0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_q222_tbl").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_q222_tbl")
     val cust = Tables.customer(s, d)
       .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
     TxnLog.commit(cust.filter(expr("c_custkey % 2 = 0")).coalesce(1), dir)
@@ -185,7 +185,7 @@ object TxnOps {
     * the pruned scan aggregates to exactly the full-table filter. */
   def q223(s0: SparkSession, d: String): DataFrame = {
     val s = txnSession(s0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_q223_tbl").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_q223_tbl")
     val ord = Tables.orders(s, d)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
         year(col("o_orderdate")).cast("long").as("o_oyear"))
@@ -238,7 +238,7 @@ object TxnOps {
     * reconcile into one column). */
   def q265(s0: SparkSession, d: String): DataFrame = {
     val s = txnSession(s0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_q265_tbl").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_q265_tbl")
     val ord = Tables.orders(s, d)
       .select(col("o_orderkey"), col("o_totalprice"),
         year(col("o_orderdate")).cast("long").as("o_oyear"))
@@ -292,7 +292,7 @@ object TxnOps {
     * invariance: the rewrite changed layout, not content). */
   def q267(s0: SparkSession, d: String): DataFrame = {
     val s = txnSession(s0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_q267_tbl").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_q267_tbl")
     // Fixture sizing (round-9 verdict item 2): the operator claim — zone
     // maps skip files through the log on either curve dimension — needs
     // unordered appends and a rewrite, not the whole fact table; the
@@ -389,7 +389,7 @@ object TxnOps {
     *      full read (two optimizes changed layout, never content). */
   def q291(s0: SparkSession, d: String): DataFrame = {
     val s = txnSession(s0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_q291_tbl").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_q291_tbl")
     // fixture sizing + single-scan staging: the q267 note applies
     val base = Tables.lineitem(s, d).select(
       col("l_orderkey").as("ok"), col("l_linenumber").cast("long").as("ln"),
@@ -490,7 +490,7 @@ object TxnOps {
     * untouched by metadata surgery). */
   def q269(s0: SparkSession, d: String): DataFrame = {
     val s = txnSession(s0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_q269_tbl").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_q269_tbl")
     // fixture sizing + single-scan staging (round-9 verdict item 2): the
     // two-level-planning claim is about METADATA (checkpoint-carried
     // stats), so the even-orderkey half carries it at half the staging
@@ -572,7 +572,7 @@ object TxnOps {
     * the final table — the IVM identity across the whole lifecycle. */
   def q271(s0: SparkSession, d: String): DataFrame = {
     val s = txnSession(s0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_q271_tbl").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_q271_tbl")
     // fixture sizing (round-9 verdict item 2): the incremental-index claim
     // needs a multi-action lifecycle, not corpus bulk — the %6∈{0,3} third
     // halves the tokenize work of the previous %3∈{0,1} slice, and the
@@ -682,7 +682,7 @@ object TxnOps {
     * engines (int expression added to a double once). */
   def q272(s0: SparkSession, d: String): DataFrame = {
     val s = txnSession(s0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_q272_tbl").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_q272_tbl")
     val base = Tables.orders(s, d).filter(expr("o_orderkey % 3 = 0"))
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
     TxnLog.commit(base.filter(expr("o_orderkey % 2 = 0")).repartition(1), dir)
@@ -739,8 +739,8 @@ object TxnOps {
     * and migration rehearsals all cost one manifest, not a copy. */
   def q228(s0: SparkSession, d: String): DataFrame = {
     val s = txnSession(s0)
-    val src = java.nio.file.Files.createTempDirectory("graft_q228_src").toString
-    val dst = java.nio.file.Files.createTempDirectory("graft_q228_dst").toString
+    val src = graft.io.FsUtil.scratchDir("graft_q228_src")
+    val dst = graft.io.FsUtil.scratchDir("graft_q228_dst")
     val cust = Tables.customer(s, d)
       .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
     TxnLog.commit(cust.filter(expr("c_custkey % 2 = 0")).coalesce(1), src)
@@ -815,8 +815,8 @@ object TxnOps {
     * a 100 TB streaming ingest. */
   def q229(s0: SparkSession, d: String): DataFrame = {
     val s = txnSession(s0)
-    val staged = java.nio.file.Files.createTempDirectory("graft_q229_src").toString
-    val tbl = java.nio.file.Files.createTempDirectory("graft_q229_tbl").toString
+    val staged = graft.io.FsUtil.scratchDir("graft_q229_src")
+    val tbl = graft.io.FsUtil.scratchDir("graft_q229_tbl")
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("user_id"), col("event_type"))
     ev.repartition(3).write.mode("overwrite").parquet(staged)
@@ -878,7 +878,7 @@ object TxnOps {
     * increment is bounded by the commits since the cursor, not the table. */
   def q231(s0: SparkSession, d: String): DataFrame = {
     val s = txnSession(s0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_q231_tbl").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_q231_tbl")
     val cust = Tables.customer(s, d)
       .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
     def fold(state: DataFrame, fromV: Long, toV: Long): (DataFrame, Long, Long) = {
@@ -978,7 +978,7 @@ object TxnOps {
     * never rewrites a file; old files simply don't store it. */
   def q232(s0: SparkSession, d: String): DataFrame = {
     val s = txnSession(s0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_q232_tbl").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_q232_tbl")
     val cust = Tables.customer(s, d)
       .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
     TxnLog.commit(cust.filter(expr("c_custkey % 2 = 0"))
@@ -1035,7 +1035,7 @@ object TxnOps {
     * cannot exclude, not the table. */
   def q233(s0: SparkSession, d: String): DataFrame = {
     val s = txnSession(s0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_q233_tbl").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_q233_tbl")
     val cust = Tables.customer(s, d).select(col("c_custkey"))
     (0 until 4).foreach { m =>
       TxnLog.commitWithBloom(
@@ -1097,7 +1097,7 @@ object TxnOps {
     * query and O(interval). */
   def q234(s0: SparkSession, d: String): DataFrame = {
     val s = txnSession(s0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_q234_tbl").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_q234_tbl")
     val cust = Tables.customer(s, d)
       .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
     TxnLog.commit(cust.filter(expr("c_custkey % 2 = 0")).coalesce(1), dir) // v1
@@ -1184,7 +1184,7 @@ object TxnOps {
     * sized cost, where full compaction would rewrite the table. */
   def q237(s0: SparkSession, d: String): DataFrame = {
     val s = txnSession(s0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_q237_tbl").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_q237_tbl")
     val cust = Tables.customer(s, d)
       .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
     TxnLog.commit(cust.coalesce(1), dir)                                  // v1
@@ -1260,7 +1260,7 @@ object TxnOps {
     * q229 is the matching exactly-once SINK.) */
   def q239(s0: SparkSession, d: String): DataFrame = {
     val s = txnSession(s0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_q239_tbl").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_q239_tbl")
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
     (0 until 3).foreach(i =>
@@ -1307,8 +1307,8 @@ object TxnOps {
     * and the replayed txn's resolved version (1). */
   def q240(s0: SparkSession, d: String): DataFrame = {
     val s = txnSession(s0)
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_q240_src").toString
-    val dstDir = java.nio.file.Files.createTempDirectory("graft_q240_dst").toString
+    val srcDir = graft.io.FsUtil.scratchDir("graft_q240_src")
+    val dstDir = graft.io.FsUtil.scratchDir("graft_q240_dst")
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
     (0 until 3).foreach(i =>
@@ -1367,7 +1367,7 @@ object TxnOps {
     * 100 TB ingest rates. */
   def q241(s0: SparkSession, d: String): DataFrame = {
     val s = txnSession(s0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_q241_tbl").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_q241_tbl")
     val cust = Tables.customer(s, d)
       .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
     TxnLog.addConstraint(dir, "bal_nonneg", "c_acctbal >= 0")
@@ -1429,7 +1429,7 @@ object TxnOps {
     * rows (its exact delete+insert pair). */
   def q242(s0: SparkSession, d: String): DataFrame = {
     val s = txnSession(s0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_q242_tbl").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_q242_tbl")
     val cust = Tables.customer(s, d)
       .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
     TxnLog.commit(cust.filter(expr("c_custkey % 2 = 0")).coalesce(1), dir) // v1
@@ -1496,7 +1496,7 @@ object TxnOps {
     * AARR at version 4. */
   def q247(s0: SparkSession, d: String): DataFrame = {
     val s = txnSession(s0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_q247_tbl").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_q247_tbl")
     val cust = Tables.customer(s, d)
       .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
     TxnLog.commit(cust.filter(expr("c_custkey % 2 = 0")).coalesce(1), dir) // v1
@@ -1561,7 +1561,7 @@ object TxnOps {
     * manifest write, and the next compaction materializes it for free. */
   def q274(s0: SparkSession, d: String): DataFrame = {
     val s = txnSession(s0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_q274_tbl").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_q274_tbl")
     val base = Tables.orders(s, d)
       .select(col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
     TxnLog.commit(base.filter(expr("o_orderkey % 2 = 0")).coalesce(1), dir)
@@ -1634,7 +1634,7 @@ object TxnOps {
     * commit refuses loudly (TxnLogSpec). */
   def q277(s0: SparkSession, d: String): DataFrame = {
     val s = txnSession(s0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_q277_tbl").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_q277_tbl")
     val base = Tables.orders(s, d).select(col("o_orderkey"), col("o_orderpriority"))
     def slice(p: String) = base.filter(col("o_orderpriority") === p).coalesce(1)
     val prevClock = TxnLog.clock
@@ -1701,7 +1701,7 @@ object TxnOps {
     * probe older than the youngest table refuses loudly (TxnLogSpec). */
   def q281(s0: SparkSession, d: String): DataFrame = {
     val s = txnSession(s0)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q281").toString
+    val tmp = graft.io.FsUtil.scratchDir("graft_q281")
     val (factDir, dimDir) = (s"$tmp/fact", s"$tmp/dim")
     val orders = Tables.orders(s, d)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
@@ -1765,7 +1765,7 @@ object TxnOps {
     * the v2 face and break the oracle. */
   def q283(s0: SparkSession, d: String): DataFrame = {
     val s = txnSession(s0)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q283").toString
+    val tmp = graft.io.FsUtil.scratchDir("graft_q283")
     val (dir, cacheDir) = (s"$tmp/tbl", s"$tmp/cache")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(cacheDir))
     val cust = Tables.customer(s, d).select(col("c_custkey"), col("c_mktsegment"),
@@ -1816,7 +1816,7 @@ object TxnOps {
     * per segment without knowing file boundaries. */
   def q284(s0: SparkSession, d: String): DataFrame = {
     val s = txnSession(s0)
-    val dir = java.nio.file.Files.createTempDirectory("graft_q284_tbl").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_q284_tbl")
     val cust = Tables.customer(s, d)
     // v1-v2: the NARROW table (no balance column), two files
     val narrow = cust.select(col("c_custkey"), col("c_mktsegment"))
@@ -1869,9 +1869,9 @@ object TxnOps {
     * replayed epoch) and the action ledger (exactly 3 `T` versions). */
   def q285(s0: SparkSession, d: String): DataFrame = {
     val s = txnSession(s0)
-    val staged = java.nio.file.Files.createTempDirectory("graft_q285_src").toString
-    val tbl = java.nio.file.Files.createTempDirectory("graft_q285_tbl").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_q285_ckpt").toString
+    val staged = graft.io.FsUtil.scratchDir("graft_q285_src")
+    val tbl = graft.io.FsUtil.scratchDir("graft_q285_tbl")
+    val ckpt = graft.io.FsUtil.scratchDir("graft_q285_ckpt")
     Tables.events(s, d).select(col("event_id"), col("event_type"), col("value"))
       .repartition(3).write.mode("overwrite").parquet(staged)
     import org.apache.spark.sql.types._
@@ -2096,7 +2096,7 @@ object TxnOps {
     * table. */
   def q287(s0: SparkSession, d: String): DataFrame = {
     val s = txnSession(s0)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q287").toString
+    val tmp = graft.io.FsUtil.scratchDir("graft_q287")
     val (fDir, dDir) = (s"$tmp/fact", s"$tmp/dim")
     val orders = Tables.orders(s, d)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
@@ -2199,7 +2199,7 @@ object TxnOps {
     * duplicated) and the action ledger (exactly 3 `T` epochs). */
   def q288(s0: SparkSession, d: String): DataFrame = {
     val s = txnSession(s0)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q288").toString
+    val tmp = graft.io.FsUtil.scratchDir("graft_q288")
     val (srcDir, dstDir, ckpt) = (s"$tmp/src", s"$tmp/dst", s"$tmp/ckpt")
     val docs = Tables.documents(s, d)
       .select(col("doc_id"), col("source"), col("lang"), col("n_chars"))
@@ -2269,7 +2269,7 @@ object TxnOps {
     * DSv2 path. */
   def q290(s0: SparkSession, d: String): DataFrame = {
     val s = txnSession(s0)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_q290").toString
+    val tmp = graft.io.FsUtil.scratchDir("graft_q290")
     val (srcDir, dstDir, ckpt) = (s"$tmp/src", s"$tmp/dst", s"$tmp/ckpt")
     // fixture sizing + single-scan staging: the q271 note applies
     val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))

@@ -655,7 +655,7 @@ object Streaming {
     * lets q334 share the batch entry's native-ASOF oracle. */
   def asOfJoinTwoWaves(spark: SparkSession, versions: DataFrame, probes: DataFrame,
                        queryName: String = "graft_asof_stream"): DataFrame = {
-    val staged = java.nio.file.Files.createTempDirectory("graft_asof_src")
+    val staged = java.nio.file.Paths.get(graft.io.FsUtil.scratchDir("graft_asof_src"))
     val cols = Seq("user_id", "ts_us", "kind", "payload", "probe_id")
     versions.selectExpr(cols: _*).coalesce(1)
       .write.mode("append").parquet(staged.toString)
@@ -916,14 +916,14 @@ object Streaming {
                          schema: StructType,
                          queryName: String = "graft_latededup"): (DataFrame, Long) = {
     def onePart(df: DataFrame, tag: String): java.nio.file.Path = {
-      val out = java.nio.file.Files.createTempDirectory(s"graft_latededup_$tag")
+      val out = java.nio.file.Paths.get(graft.io.FsUtil.scratchDir(s"graft_latededup_$tag"))
       df.coalesce(1).write.mode("overwrite").parquet(out.toString)
       java.nio.file.Paths.get(java.nio.file.Files.list(out).toArray.map(_.toString)
         .filter(_.endsWith(".parquet")).min)
     }
     val files = Seq(onePart(recent, "recent"), onePart(barrier, "barrier"),
                     onePart(late, "late"))
-    val staged = java.nio.file.Files.createTempDirectory("graft_latededup_src")
+    val staged = java.nio.file.Paths.get(graft.io.FsUtil.scratchDir("graft_latededup_src"))
     java.nio.file.Files.copy(files.head, staged.resolve("wave0.parquet"))
     val stream = spark.readStream.schema(schema).parquet(staged.toString)
       .withWatermark("ts_t", delay)
@@ -959,7 +959,7 @@ object Streaming {
     * files at 1 file/batch is exactly 3). */
   def availableNowOnce(spark: SparkSession, dir: String,
                        queryName: String = "graft_availnow"): (DataFrame, Long) = {
-    val staged = java.nio.file.Files.createTempDirectory("graft_availnow_src").toString
+    val staged = graft.io.FsUtil.scratchDir("graft_availnow_src")
     eventsStatic(spark, dir)
       .select(col("event_type"), col("value"))
       .repartition(3)
@@ -1028,7 +1028,7 @@ object Streaming {
                         late: DataFrame, delay: String,
                         queryName: String = "graft_lateaudit"): (DataFrame, Long) = {
     def onePart(df: DataFrame, tag: String): java.nio.file.Path = {
-      val out = java.nio.file.Files.createTempDirectory(s"graft_lateaudit_$tag")
+      val out = java.nio.file.Paths.get(graft.io.FsUtil.scratchDir(s"graft_lateaudit_$tag"))
       df.coalesce(1).write.mode("overwrite").parquet(out.toString)
       val part = java.nio.file.Files.list(out).toArray.map(_.toString)
         .filter(p => p.endsWith(".parquet") && !p.endsWith("_SUCCESS")).min
@@ -1036,7 +1036,7 @@ object Streaming {
     }
     val files = Seq(onePart(recent, "recent"), onePart(barrier, "barrier"),
                     onePart(late, "late"))
-    val staged = java.nio.file.Files.createTempDirectory("graft_lateaudit_src")
+    val staged = java.nio.file.Paths.get(graft.io.FsUtil.scratchDir("graft_lateaudit_src"))
     val schema = StructType(Seq(
       StructField("ts_t", TimestampType), StructField("event_type", StringType),
       StructField("value", DoubleType)))

@@ -96,7 +96,7 @@ class CurationSignalsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
 
   private def assertParity(d: String): Unit = {
-    val kernel = TextOps.q360Where(spark, d, lit(true))
+    val kernel = TextOps.q360Where(Tables.documents(spark, d), lit(true))
     assert(kernel.columns.toSeq == "doc_id" +: Scored)
     assertColumns(d, kernel, relational(d), Scored)
     assertColumns(d, TextOps.q365(spark, d), relationalQ365(d),
@@ -170,7 +170,7 @@ class CurationSignalsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .write.parquet(s"$adversarialDir/documents.parquet")
     assertParity(adversarialDir)
     // the null rules hold on the kernel's own output, not just in parity
-    val k = TextOps.q360Where(spark, adversarialDir, lit(true))
+    val k = TextOps.q360Where(Tables.documents(spark, adversarialDir), lit(true))
     assert(byDoc(k, "lm_bucket")(8L) == null && byDoc(k, "lm_bucket")(9L) == null)
     Seq(1L, 2L, 3L).foreach { id =>
       assert(byDoc(k, "ttr_ppm")(id) == null && byDoc(k, "bpt_ppm")(id) == null)

@@ -37,12 +37,13 @@ class Q370PushdownSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("every delta-scoring scan is delta-filtered or id-capped") {
     val delta = scans(graft.queries.TextOps
-      .q360Where(spark, Dir, col("doc_id") % 7 === 0))
+      .q360Where(graft.core.Tables.documents(spark, Dir), col("doc_id") % 7 === 0))
     assert(delta.size == 1,
       s"expected one documents scan, saw:\n${delta.mkString("\n")}")
     assert(dataFilters(delta.head).contains("% 7"),
       s"the documents scan must carry the delta predicate:\n${delta.head}")
-    val model = scans(graft.queries.TextOps.lmReference(spark, Dir))
+    val model = scans(graft.queries.TextOps.lmReference(
+      graft.core.Tables.documents(spark, Dir)))
     assert(model.size == 1,
       s"expected one reference scan, saw:\n${model.mkString("\n")}")
     assert(dataFilters(model.head).contains("< 500"),

@@ -130,85 +130,59 @@ object TxnLog {
     (rel, files)
   }
 
-  /** Driver-side parquet row count from the file's own footer — no Spark
-    * job, metadata bytes only. */
-  private def parquetRowCount(path: String): Long = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(path), new org.apache.hadoop.conf.Configuration())
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try r.getRecordCount finally r.close()
+  /** Zone-map lines (`rel<TAB>col<TAB>min<TAB>max`, integral bounds of
+    * `cast(c as long)`) of `rels`' files — `@` refs included. From the
+    * parquet FOOTERS on the driver, no Spark job, when every file vouches
+    * for every column ([[ParquetStats.longRanges]]; the Iceberg
+    * manifest-stats move: a post-write scan would re-read data to
+    * recompute what the footer states). Otherwise one files × columns
+    * aggregate grouped by input file. A file all-null in `c` gets no `c`
+    * line on either path. */
+  private def zoneMaps(spark: SparkSession, dir: String, rels: Seq[String],
+                       cols: Seq[String]): Vector[String] = {
+    import ParquetStats.LongRange
+    val footers = rels.toVector.map(rel =>
+      rel -> ParquetStats.longRanges(resolve(dir, rel), cols))
+    if (!footers.exists(_._2.contains(LongRange.Unknown)))
+      footers.flatMap { case (rel, ranges) =>
+        cols.zip(ranges).collect { case (c, LongRange.Bounds(mn, mx)) => s"$rel\t$c\t$mn\t$mx" }
+      }
+    else {
+      val byAbs: Map[String, String] = rels.map(rel =>
+        Paths.get(resolve(dir, rel)).toAbsolutePath.normalize.toString -> rel).toMap
+      val withFile = spark.read.option("mergeSchema", "true")
+        .parquet(byAbs.keys.toSeq: _*)
+        .withColumn("__f", input_file_name())
+      val aggs = cols.flatMap(c => Seq(
+        min(col(c).cast("long")).as(s"__mn_$c"),
+        max(col(c).cast("long")).as(s"__mx_$c")))
+      val rows = withFile.groupBy(col("__f")).agg(aggs.head, aggs.tail: _*)
+        .collect() // files-sized: metadata, never data
+      rows.toVector.flatMap { r =>
+        val abs = new java.net.URI(r.getAs[String]("__f")).getPath
+        val rel = byAbs.getOrElse(abs, throw new IllegalStateException(
+          s"scanned file $abs is not among the zone-mapped files"))
+        cols.flatMap { c =>
+          val mn = r.getAs[Any](s"__mn_$c"); val mx = r.getAs[Any](s"__mx_$c")
+          if (mn == null || mx == null) None // all-null file: no entry
+          else Some(s"$rel\t$c\t$mn\t$mx")
+        }
+      }
+    }
   }
 
-  /** Sidecar stat lines (`rel<TAB>col<TAB>min<TAB>max`) derived from the
-    * parquet FOOTERS on the driver — no Spark job: the writer just
-    * produced these files, and their row-group statistics already hold
-    * exact integral min/max (the Iceberg manifest-stats move; guide §6 —
-    * the post-write stats SCAN re-read data to recompute what the footer
-    * metadata states). Returns None (caller falls back to the scan) on
-    * anything non-exact: missing statistics, a non-integral physical
-    * type, or a column absent from a file. All-null chunks contribute
-    * nothing; a file all-null in `c` gets no `c` line — the scan path's
-    * exact behavior. */
-  private def footerStatsLines(dir: String, rels: Seq[String],
-                               cols: Seq[String]): Option[Vector[String]] = {
-    import org.apache.parquet.column.statistics.{IntStatistics, LongStatistics}
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import scala.jdk.CollectionConverters._
-    val conf = new org.apache.hadoop.conf.Configuration()
-    // `exact` flags the fall-back-to-scan cases explicitly (an earlier
-    // version used non-local `return None` from inside Java forEach
-    // lambdas — NonLocalReturnControl across Java frames, deprecated and
-    // gone in Scala 3, and one broader catch away from mis-returning)
-    var exact = true
-    try {
-      val out = Vector.newBuilder[String]
-      rels.iterator.takeWhile(_ => exact).foreach { rel =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(s"$dir/$rel"), conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
-          val blocks = r.getFooter.getBlocks.asScala.toVector
-          cols.iterator.takeWhile(_ => exact).foreach { c =>
-            var mn = Long.MaxValue; var mx = Long.MinValue
-            var seen = false; var matched = false
-            for (blk <- blocks if exact;
-                 cc <- blk.getColumns.asScala if exact &&
-                   cc.getPath.toDotString == c) {
-              matched = true
-              // Logical-type guard: Int/Long PHYSICAL statistics are only
-              // LongType-exact when the column's annotation is absent or a
-              // signed integer width. A timestamp (INT64 micros), decimal
-              // (unscaled), date, or unsigned column satisfies the caller's
-              // "LongType-castable" contract but its footer bounds live on
-              // a different scale than the scan fallback's cast-to-long
-              // values — recording them would mis-prune files. Fall back.
-              val ann = cc.getPrimitiveType.getLogicalTypeAnnotation
-              val annExact = ann == null || (ann match {
-                case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation => i.isSigned
-                case _ => false
-              })
-              val st = cc.getStatistics
-              if (!annExact || st == null || st.isEmpty)
-                exact = false // stats absent or not LongType-scaled: scan
-              else if (st.hasNonNullValue) st match {
-                case s: LongStatistics =>
-                  mn = math.min(mn, s.getMin); mx = math.max(mx, s.getMax)
-                  seen = true
-                case s: IntStatistics =>
-                  mn = math.min(mn, s.getMin.toLong)
-                  mx = math.max(mx, s.getMax.toLong); seen = true
-                case _ => exact = false // non-integral physical: scan
-              }
-            }
-            if (exact) {
-              if (!matched && blocks.nonEmpty) exact = false // column absent
-              else if (seen) out += s"$rel\t$c\t$mn\t$mx"
-            }
-          }
-        } finally r.close()
-      }
-      if (exact) Some(out.result()) else None
-    } catch { case scala.util.control.NonFatal(_) => None }
+  /** Publish `lines` as version `v`'s stats sidecar (`v%05d.stats`). */
+  private def writeZoneStats(dir: String, v: Long, lines: Seq[String]): Unit =
+    writeMetaFile(statsPath(dir, v), lines.mkString("", "\n", "\n"))
+
+  /** Replace `p` with `content` atomically: a reader sees the old file or
+    * the new one, never a partial write. */
+  private def writeMetaFile(p: Path, content: String): Unit = {
+    val tmp = Files.createTempFile(p.getParent, ".meta-", ".tmp")
+    Files.write(tmp, content.getBytes("UTF-8"))
+    Files.move(tmp, p, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    ()
   }
 
   /** [[writeData]] for rewrites that may legitimately produce ZERO rows
@@ -232,7 +206,7 @@ object TxnLog {
     df.write.mode("errorifexists").parquet(s"$dir/$rel")
     val files = new java.io.File(s"$dir/$rel").listFiles()
       .filter(_.getName.endsWith(".parquet")).map(f => s"$rel/${f.getName}").sorted.toVector
-    if (files.nonEmpty && files.forall(f => parquetRowCount(s"$dir/$f") == 0L)) {
+    if (files.nonEmpty && files.forall(f => ParquetStats.rowCount(s"$dir/$f").contains(0L))) {
       val d = new java.io.File(s"$dir/$rel")
       Option(d.listFiles()).foreach(_.foreach(_.delete())); d.delete()
       None
@@ -450,7 +424,9 @@ object TxnLog {
     * parquet footer is opened (at 100 TB the footers alone are a
     * listing-and-IO storm; manifest stats are the metadata-sized answer).
     * `statsCols` must be integral-valued (LongType-castable); all-null
-    * files simply omit their entry. The sidecar lands AFTER the manifest
+    * files simply omit their entry. Without `knownStats` the bounds come
+    * from [[zoneMaps]]: the written footers, else one scan of the
+    * just-written files. The sidecar lands AFTER the manifest
     * claim — a reader racing the gap sees no stats and keeps the files,
     * which is always sound. */
   def commitWithStats(df: DataFrame, dir: String, statsCols: Seq[String],
@@ -464,36 +440,14 @@ object TxnLog {
     while (!tryClaim(dir, v, "A", files)) v += 1
     // Writer-known stats (the Iceberg-writer path): a writer that just
     // partitioned by the stats column already KNOWS every file's bounds —
-    // e.g. a partition-value commit has min = max = the value — so the
-    // post-write stats scan is pure waste. The bounds apply to every file
+    // e.g. a partition-value commit has min = max = the value — so
+    // deriving them again is pure waste. The bounds apply to every file
     // of this commit; a too-wide bound only costs pruning, never rows.
-    val lines = knownStats match {
+    writeZoneStats(dir, v, knownStats match {
       case Some(ks) =>
         files.flatMap(rel => ks.map { case (c, mn, mx) => s"$rel\t$c\t$mn\t$mx" })
-      case None =>
-        // footer-derived when exact (driver metadata, no job); else one
-        // tiny job over only the just-written files — result is
-        // (files × statsCols)-sized either way, metadata, never data
-        footerStatsLines(dir, files, statsCols).getOrElse {
-          val withRel = spark.read.parquet(files.map(rel => s"$dir/$rel"): _*)
-            .withColumn("__rel", substring_index(input_file_name(), "/", -2))
-          val aggs = statsCols.flatMap(c => Seq(
-            min(col(c).cast("long")).as(s"__mn_$c"), max(col(c).cast("long")).as(s"__mx_$c")))
-          val rows = withRel.groupBy(col("__rel")).agg(aggs.head, aggs.tail: _*).collect()
-          rows.toVector.flatMap { r =>
-            statsCols.flatMap { c =>
-              val mn = r.getAs[Any](s"__mn_$c"); val mx = r.getAs[Any](s"__mx_$c")
-              if (mn == null || mx == null) None
-              else Some(s"${r.getAs[String]("__rel")}\t$c\t$mn\t$mx")
-            }
-          }
-        }
-    }
-    val tmp = Files.createTempFile(logDir(dir), ".stats-", ".tmp")
-    Files.write(tmp, (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    Files.move(tmp, statsPath(dir, v),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      case None => zoneMaps(spark, dir, files, statsCols)
+    })
     v
   }
 
@@ -546,11 +500,7 @@ object TxnLog {
       val hex = merged.map(x => f"$x%016x").mkString
       s"${r.getAs[String]("__rel")}\t$bloomCol\t$hex"
     }
-    val tmp = Files.createTempFile(logDir(dir), ".bloom-", ".tmp")
-    Files.write(tmp, (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    Files.move(tmp, bloomPath(dir, v),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    writeMetaFile(bloomPath(dir, v), lines.mkString("", "\n", "\n"))
     v
   }
 
@@ -672,8 +622,8 @@ object TxnLog {
   /** ANALYZE: build min/max zone maps for the CURRENT snapshot's files
     * WITHOUT rewriting a byte — the statement a 100 TB table that was
     * ingested before stats existed (or arrived via clone/migration)
-    * needs: one metadata-sized job over the visible files (per-file
-    * min/max, grouped by input file — result is files × columns rows),
+    * needs: the visible files' [[zoneMaps]] (their footers, else one
+    * metadata-sized job grouped by input file — files × columns rows),
     * merged into the HEAD version's sidecar (new lines win over stale
     * ones for the same (file, column)). Visibility composes with the
     * two-level layer: [[statsTwoLevel]] reads sidecars from the newest
@@ -697,36 +647,12 @@ object TxnLog {
         s"column $c is dir-encoded (partition column): its values prune " +
           "from the file PATH already — analyze covers data columns")
     }
-    val byAbs: Map[String, String] =
-      snap.files.map(rel => resolve(dir, rel) -> rel).toMap
-    val withRel = spark.read.option("mergeSchema", "true")
-      .parquet(byAbs.keys.toSeq: _*)
-      .withColumn("__f", input_file_name())
-    val aggs = statsCols.flatMap(c => Seq(
-      min(col(c).cast("long")).as(s"__mn_$c"),
-      max(col(c).cast("long")).as(s"__mx_$c")))
-    val rows = withRel.groupBy(col("__f")).agg(aggs.head, aggs.tail: _*)
-      .collect() // files-sized: metadata, never data
-    val fresh = rows.toVector.flatMap { r =>
-      val abs = new java.net.URI(r.getAs[String]("__f")).getPath
-      val rel = byAbs.getOrElse(abs, throw new IllegalStateException(
-        s"scanned file $abs is not in the snapshot"))
-      statsCols.flatMap { c =>
-        val mn = r.getAs[Any](s"__mn_$c"); val mx = r.getAs[Any](s"__mx_$c")
-        if (mn == null || mx == null) None // all-null file: no entry
-        else Some(s"$rel\t$c\t$mn\t$mx")
-      }
-    }
+    val fresh = zoneMaps(spark, dir, snap.files, statsCols)
     val freshKeys = fresh.map(l => l.split("\t").take(2).mkString("\t")).toSet
     val kept = statsSidecar(dir, v).collect {
       case (rel, c, mn, mx) if !freshKeys(s"$rel\t$c") => s"$rel\t$c\t$mn\t$mx"
     }
-    val lines = kept ++ fresh
-    val tmp = Files.createTempFile(logDir(dir), ".stats-", ".tmp")
-    Files.write(tmp, (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    Files.move(tmp, statsPath(dir, v),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    writeZoneStats(dir, v, kept ++ fresh)
     fresh.size.toLong
   }
 
@@ -1066,11 +992,7 @@ object TxnLog {
         (Seq("M rename", o, n) ++ sc.toVector.sorted).mkString("\t")
       } ++
       snap.drops.map(d => s"M drop\t$d") ++ statLines ++ bloomLines
-    val tmp = Files.createTempFile(logDir(dir), ".ckpt-", ".tmp")
-    Files.write(tmp, (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    Files.move(tmp, checkpointPath(dir, v),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    writeMetaFile(checkpointPath(dir, v), lines.mkString("", "\n", "\n"))
     v
   }
 
@@ -1365,7 +1287,7 @@ object TxnLog {
     * exchange on the curve key plus a per-partition-count job
     * (globalPrefixSum's scheme, fused here so the binned rows flow
     * straight into the partitioner — no ordinal column, no second full
-    * pass). Stats land post-claim via the ordinary post-write scan; a
+    * pass). Stats land post-claim via [[zoneMaps]] of the new files; a
     * reader racing the gap keeps all files (sound, never wrong). */
   def optimizeZorder(spark: SparkSession, dir: String, colX: String,
                      colY: String, numFiles: Int,
@@ -1381,7 +1303,7 @@ object TxnLog {
         numFiles, bounds, n)
       if (tryClaim(dir, base + 1, "R noop", files)) {
         val v = base + 1
-        writeZoneStats(spark, dir, v, files, Seq(colX, colY))
+        writeZoneStats(dir, v, zoneMaps(spark, dir, files, Seq(colX, colY)))
         return v
       }
       val d = new java.io.File(s"$dir/$rel")
@@ -1446,38 +1368,6 @@ object TxnLog {
     writeData(out, dir)
   }
 
-  /** Post-write zone maps for the given columns (the commitWithStats
-    * post-scan, scoped to a rewrite's files), published as version `v`'s
-    * stats sidecar. A reader racing the claim→sidecar gap keeps all
-    * files — sound, never wrong. */
-  private def writeZoneStats(spark: SparkSession, dir: String, v: Long,
-                             files: Seq[String], cols: Seq[String]): Unit = {
-    // footer-derived when exact (driver metadata, no job); else the
-    // original post-write scan over only the rewrite's files
-    val lines = footerStatsLines(dir, files, cols).getOrElse {
-      val withRel = spark.read.parquet(files.map(f => s"$dir/$f"): _*)
-        .withColumn("__rel", substring_index(input_file_name(), "/", -2))
-      val aggs = cols.flatMap(c => Seq(
-        min(col(c).cast("long")).as(s"__mn_$c"),
-        max(col(c).cast("long")).as(s"__mx_$c")))
-      val statRows = withRel.groupBy(col("__rel")).agg(aggs.head, aggs.tail: _*)
-        .collect()
-      statRows.toVector.flatMap { r =>
-        cols.flatMap { c =>
-          val mn = r.getAs[Any](s"__mn_$c"); val mx = r.getAs[Any](s"__mx_$c")
-          if (mn == null || mx == null) None
-          else Some(s"${r.getAs[String]("__rel")}\t$c\t$mn\t$mx")
-        }
-      }
-    }
-    val tmp = Files.createTempFile(logDir(dir), ".stats-", ".tmp")
-    Files.write(tmp, (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    Files.move(tmp, statsPath(dir, v),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    ()
-  }
-
   // ------------------------------------------------------------------
   // INCREMENTAL CLUSTERING (the Delta liquid-clustering shape): the
   // clustering spec is TABLE METADATA, and each OPTIMIZE pass rewrites
@@ -1493,14 +1383,6 @@ object TxnLog {
 
   private def clusteringPath(dir: String): Path = logDir(dir).resolve("clustering")
   private def clusteredSetPath(dir: String): Path = logDir(dir).resolve("clustered-files")
-
-  private def writeMetaFile(p: Path, content: String): Unit = {
-    val tmp = Files.createTempFile(p.getParent, ".meta-", ".tmp")
-    Files.write(tmp, content.getBytes("UTF-8"))
-    Files.move(tmp, p, java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    ()
-  }
 
   /** Record the clustering spec (the `ALTER TABLE ... CLUSTER BY` slot).
     * Takes effect on the next [[optimizeClustered]]; single-writer
@@ -1575,7 +1457,7 @@ object TxnLog {
           numFiles, bounds, n)
         if (tryClaim(dir, base + 1, "R noop", files)) {
           val v = base + 1
-          writeZoneStats(spark, dir, v, files, Seq(cx, cy))
+          writeZoneStats(dir, v, zoneMaps(spark, dir, files, Seq(cx, cy)))
           writeMetaFile(clusteringPath(dir),
             s"cols\t$cx\t$cy\t${tie.mkString(",")}\n" +
               s"bounds\t${bounds._1}\t${bounds._2}\t${bounds._3}\t${bounds._4}\n")
@@ -1607,7 +1489,7 @@ object TxnLog {
       val body = cands.map("-" + _) ++ files.map("+" + _)
       if (tryClaim(dir, base + 1, "X noop", body)) {
         val v = base + 1
-        writeZoneStats(spark, dir, v, files, Seq(cx, cy))
+        writeZoneStats(dir, v, zoneMaps(spark, dir, files, Seq(cx, cy)))
         writeMetaFile(clusteredSetPath(dir),
           (clustered ++ files).toVector.sorted.mkString("", "\n", "\n"))
         return v
@@ -2576,13 +2458,7 @@ object TxnLog {
     val carried = statsTwoLevel(srcDir).collect {
       case (rel, c, mn, mx) if visible(rel) => s"${ext(rel)}\t$c\t$mn\t$mx"
     }.distinct
-    if (carried.nonEmpty) {
-      val tmp = Files.createTempFile(logDir(dstDir), ".stats-", ".tmp")
-      Files.write(tmp, (carried.mkString("\n") + "\n").getBytes("UTF-8"))
-      Files.move(tmp, statsPath(dstDir, v),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-    }
+    if (carried.nonEmpty) writeZoneStats(dstDir, v, carried)
     snap.dvs.foreach { case (dvFiles, keyCols, _) => // renames empty → offset 0
       var dv = currentVersion(dstDir) + 1
       while (!tryClaim(dstDir, dv, "D " + keyCols.mkString(","), dvFiles.map(ext))) dv += 1
@@ -2809,11 +2685,7 @@ object TxnLog {
     val prior = constraints(dir)
     require(!prior.exists(_._1 == name), s"constraint '$name' already exists")
     val lines = (prior :+ ((name, expr))).map { case (n, e) => s"$n\t$e" }
-    val tmp = Files.createTempFile(logDir(dir), ".constraints-", ".tmp")
-    Files.write(tmp, (lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    Files.move(tmp, constraintsPath(dir),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    writeMetaFile(constraintsPath(dir), lines.mkString("", "\n", "\n"))
   }
 
   /** The registered (name, expression) constraints, declaration order. */
@@ -3007,11 +2879,7 @@ object TxnLog {
       .toSeq
     // watermark FIRST: a reader that races the deletes already sees the
     // new floor and refuses vacuumed versions
-    val tmp = Files.createTempFile(logDir(dir), ".minv-", ".tmp")
-    Files.write(tmp, (newMin.toString + "\n").getBytes("UTF-8"))
-    Files.move(tmp, logDir(dir).resolve("min-version"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    writeMetaFile(logDir(dir).resolve("min-version"), newMin.toString + "\n")
     victims.foreach(rel => Files.deleteIfExists(Paths.get(dir, rel)))
     // drop commit dirs (and nested partition dirs) that hold no data now
     def pruneEmpty(f: java.io.File): Boolean = { // true = subtree removed

@@ -5,9 +5,7 @@ import java.util
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -19,7 +17,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.io.TxnLog
+import graft.io.{ParquetStats, TxnLog}
 
 /** TABLE-CHANGES-AS-A-STREAM: a DSv2 micro-batch source over an
   * [[graft.io.TxnLog]] table — the streaming half of the commit protocol
@@ -97,9 +95,7 @@ object TxnStreamSource {
     val files = TxnLog.addedFilesBetween(dir, 0L, TxnLog.currentVersion(dir),
       ignoreChanges = true)
     require(files.nonEmpty, s"$dir has no committed data files to infer from")
-    val in = HadoopInputFile.fromPath(new HPath(files.head), new Configuration())
-    val r = ParquetFileReader.open(in)
-    try toSpark(r.getFooter.getFileMetaData.getSchema) finally r.close()
+    toSpark(ParquetStats.schema(files.head))
   }
 
   private[sources] def toSpark(m: MessageType): StructType = {
@@ -303,9 +299,7 @@ private[sources] class TxnStreamReaderFactory(required: StructType)
     // projection pushdown THROUGH the codec: the requested read schema
     // keeps unprojected columns' pages out of the decode entirely; it is
     // cut from this file's footer so repetition levels match exactly
-    val fr = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new HPath(p.file), conf))
-    val fileSchema = try fr.getFooter.getFileMetaData.getSchema finally fr.close()
+    val fileSchema = ParquetStats.schema(p.file)
     val projected0 = TxnStreamSource.projectFrom(fileSchema, required.fieldNames)
     // a file carrying NONE of the required columns still has rows to
     // deliver (as all-null) — keep one file column to drive iteration

@@ -49,18 +49,24 @@ import org.apache.spark.sql.functions.{abs, coalesce, col, count, explode, expr,
   * (time travel is unaffected) while the latest view plans only the
   * compacted files.
   *
-  * Concurrency contract (round-7 advice; made explicit round 9): APPEND
-  * commits (A) never conflict — the version-retry loop is enough,
-  * because folding them in either order yields the same table. Every
-  * commit that READS first (compact, CoW delete, deleteVector, update,
-  * merge) claims EXACTLY version base+1 (compare-and-swap on the
-  * version counter) and, on losing, re-reads the new visible set and
-  * re-derives before trying again — serializability by serial
-  * re-execution. The full commit-pair semantics are the documented
-  * matrix at [[classifyConflict]]; keyed writers additionally accept
-  * `isolation = Isolation.Abort` to surface conflicting concurrent
-  * writes to the application instead of transparently re-executing.
-  * Vacuum stays single-writer by contract.
+  * Commit protocol. Every writer stages its data first ([[stage]]: a
+  * fresh `part-<uuid>`, flat or moved into the shared `pdata` tree),
+  * then claims a version by one of two rules. A write that reads
+  * nothing (append, txn append, column-mapping action, version-pinned
+  * restore, clone) takes ANY free slot ([[claimNext]]): folding such
+  * commits in either order yields the same table. A write DERIVED from
+  * a snapshot (compact, CoW delete/update, deleteVector, update, merge,
+  * OPTIMIZE) claims EXACTLY base+1 in [[casLoop]]: each pass reads
+  * `base`, runs the writer's attempt, passes the [[claimFence]] test
+  * seam and compare-and-swaps base+1. On a loss the loop discards the
+  * attempt's staged files (nothing else deletes them; a crash leaves
+  * orphans for vacuum), applies the writer's `isolation` under its own
+  * conflict marker ([[classifyConflict]]; `Isolation.Abort` throws on a
+  * conflicting interleaved commit) and re-derives from the new
+  * snapshot — serializability by serial re-execution. The replace
+  * fallback of merge and of the file-granular DML is one more pass of
+  * the same loop, so it keeps the writer's isolation. Vacuum stays
+  * single-writer by contract.
   *
   * Delete vectors (merge-on-read): `deleteVector` commits the matching
   * rows' KEY VALUES (metadata-sized) instead of rewriting the visible
@@ -121,13 +127,52 @@ object TxnLog {
     if (ms.isEmpty) 0L else ms.last._1
   }
 
-  private def writeData(df: DataFrame, dir: String): (String, Vector[String]) = {
-    val rel = s"part-${java.util.UUID.randomUUID().toString}"
-    df.write.mode("errorifexists").parquet(s"$dir/$rel")
-    val files = new java.io.File(s"$dir/$rel").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(f => s"$rel/${f.getName}").sorted.toVector
-    require(files.nonEmpty, "commit of an empty dataframe writes no files")
-    (rel, files)
+  /** Staged data files (relative paths, sorted), unreferenced until a
+    * claim lists them, and the one action that removes them. */
+  private final case class Staged(files: Vector[String], discard: () => Unit)
+
+  /** The one staged write: `df` under a fresh `part-<uuid>` — flat, or
+    * hive dir-encoded by `partCols`. `shared` then MOVES the leaves into
+    * the table's shared `pdata/col=val/...` tree (renames, zero data
+    * bytes) with the uuid prefixed to each file name, so concurrent
+    * writers never collide. A partitioned write of zero rows stages no
+    * files. `dropEmpty` decides emptiness from the written FOOTERS —
+    * every file holds zero rows — and then discards the stage and
+    * returns no files: one pass, where a localCheckpoint + isEmpty
+    * pre-probe would evaluate the rewrite twice. On current Spark an
+    * empty job writes one zero-row file, but the rule does not encode
+    * that: several empty files must still count as empty. The forall
+    * short-circuits on the first file with rows. */
+  private def stage(df: DataFrame, dir: String, partCols: Seq[String] = Nil,
+                    shared: Boolean = false, dropEmpty: Boolean = false): Staged = {
+    require(!shared || partCols.nonEmpty,
+      "partitioned shared write needs at least one partition column")
+    val uuid = java.util.UUID.randomUUID().toString
+    val rel = s"part-$uuid"
+    val root = new java.io.File(s"$dir/$rel")
+    val writer = df.write.mode("errorifexists")
+    (if (partCols.isEmpty) writer else writer.partitionBy(partCols: _*)).parquet(root.getPath)
+    val written = walkParquet(dir, rel)
+    val staged =
+      if (!shared) Staged(written, () => FsUtil.deleteRecursively(root))
+      else {
+        val files = written.map { f =>
+          val sub = f.stripPrefix(s"$rel/") // col=val/.../name.parquet
+          val i = sub.lastIndexOf('/')
+          val tgt = s"pdata/${sub.take(i)}/$uuid-${sub.drop(i + 1)}"
+          val tp = Paths.get(dir, tgt)
+          Files.createDirectories(tp.getParent)
+          Files.move(Paths.get(dir, f), tp)
+          tgt
+        }
+        FsUtil.deleteRecursively(root)
+        Staged(files, () => files.foreach(f => Files.deleteIfExists(Paths.get(dir, f))): Unit)
+      }
+    if (staged.files.isEmpty ||
+        dropEmpty && staged.files.forall(f => ParquetStats.rowCount(s"$dir/$f").contains(0L))) {
+      staged.discard()
+      Staged(Vector.empty, () => ())
+    } else staged
   }
 
   /** Zone-map lines (`rel<TAB>col<TAB>min<TAB>max`, integral bounds of
@@ -185,36 +230,9 @@ object TxnLog {
     ()
   }
 
-  /** [[writeData]] for rewrites that may legitimately produce ZERO rows
-    * (a delete that empties every touched file): ONE pass — write, then
-    * decide emptiness from the written footers on the driver. Replaces
-    * the localCheckpoint + isEmpty pre-probe, which evaluated the whole
-    * rewrite twice (materialize, then rescan for the write) — at 100 TB
-    * that is a second full shuffle/scan of the rewrite (guide §1.2/§5).
-    * The empty case is "every written file holds zero footer rows" — on
-    * current Spark an empty job writes exactly one zero-row metadata file
-    * (only partition 0 emits), but the decision deliberately does NOT
-    * encode that internal detail: a future FileFormatWriter emitting
-    * several empty part files must still take the removal-only path, not
-    * commit zero-row data files into the manifest (ADVICE r17). The
-    * forall short-circuits on the first file with rows, so the non-empty
-    * case usually costs one footer read; any non-empty outcome keeps the
-    * file list writeData would have produced, byte-identical layout
-    * included. */
-  private def writeDataIfRows(df: DataFrame, dir: String): Option[(String, Vector[String])] = {
-    val rel = s"part-${java.util.UUID.randomUUID().toString}"
-    df.write.mode("errorifexists").parquet(s"$dir/$rel")
-    val files = new java.io.File(s"$dir/$rel").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(f => s"$rel/${f.getName}").sorted.toVector
-    if (files.nonEmpty && files.forall(f => ParquetStats.rowCount(s"$dir/$f").contains(0L))) {
-      val d = new java.io.File(s"$dir/$rel")
-      Option(d.listFiles()).foreach(_.foreach(_.delete())); d.delete()
-      None
-    } else Some((rel, files))
-  }
-
-  /** Relative paths of every parquet leaf under `dir/rel`, any depth —
-    * the partitioned-commit sibling of [[writeData]]'s flat listing. */
+  /** Relative paths of every parquet leaf under `dir/rel`, any depth,
+    * sorted (a flat stage's files, or a partitioned one's `col=val`
+    * leaves). */
   private def walkParquet(dir: String, rel: String): Vector[String] = {
     def walk(f: java.io.File, prefix: String): Vector[String] =
       Option(f.listFiles()).map(_.toVector).getOrElse(Vector.empty).flatMap { c =>
@@ -250,13 +268,7 @@ object TxnLog {
   def commitPartitioned(df: DataFrame, dir: String, partCols: Seq[String],
                         replace: Boolean = false): Long = {
     require(partCols.nonEmpty, "commitPartitioned needs at least one partition column")
-    val rel = s"part-${java.util.UUID.randomUUID().toString}"
-    df.write.mode("errorifexists").partitionBy(partCols: _*).parquet(s"$dir/$rel")
-    val files = walkParquet(dir, rel)
-    require(files.nonEmpty, "commit of an empty dataframe writes no files")
-    var v = currentVersion(dir) + 1
-    while (!tryClaim(dir, v, if (replace) "R" else "A", files)) v += 1
-    v
+    appendData(df, dir, if (replace) "R" else "A", partCols)._1
   }
 
   /** Partitioned commit into the table's SHARED hive tree (`pdata/...`)
@@ -267,50 +279,20 @@ object TxnLog {
     * `part-<uuid>` segments read as "conflicting directory structures".
     * Landing every partitioned commit under one `pdata/col=val/...` root
     * gives any number of commits one basePath, so the catalog's native
-    * parquet scan (and its partition pruning) just works. The staged
-    * write MOVES into place — renames, zero data bytes — with the commit
-    * uuid prefixed to each file name so concurrent writers never
-    * collide; a crash mid-move leaves only unreferenced orphans, which
-    * is vacuum's ordinary jurisdiction. */
+    * parquet scan (and its partition pruning) just works ([[stage]]
+    * moves the files there); a crash mid-move leaves only unreferenced
+    * orphans, which is vacuum's ordinary jurisdiction. */
   def commitPartitionedShared(df: DataFrame, dir: String, partCols: Seq[String],
                               replace: Boolean = false): Long = {
-    val files = stagePartitionedShared(df, dir, partCols)
+    val files = stage(df, dir, partCols, shared = true).files
     // Empty source: a partitioned write of zero rows stages no files
-    // (hive dir-encoding has nowhere to land them). Mirror the DML
-    // path's replaceCommitValidated empty branch — `INSERT INTO pt
-    // SELECT ... WHERE false` is a valid, common possibly-empty ETL
-    // increment and must no-op, not error; an empty OVERWRITE truncates
-    // (commits an empty R), the Delta-style contract.
-    if (files.isEmpty && !replace) return currentVersion(dir)
-    var v = currentVersion(dir) + 1
-    while (!tryClaim(dir, v, if (replace) "R" else "A", files)) v += 1
-    v
-  }
-
-  /** The shared-tree write half of [[commitPartitionedShared]]: stage a
-    * partitioned write, rename its leaves into `pdata/col=val/...` with
-    * the staging uuid prefixed, return the manifest-ready relative paths
-    * (unreferenced until a claim lands — a caller that loses its CAS
-    * deletes them; a crash leaves orphans for vacuum). */
-  private def stagePartitionedShared(df: DataFrame, dir: String,
-                                     partCols: Seq[String]): Vector[String] = {
-    require(partCols.nonEmpty,
-      "partitioned shared write needs at least one partition column")
-    val uuid = java.util.UUID.randomUUID().toString
-    val stage = s"part-$uuid"
-    df.write.mode("errorifexists").partitionBy(partCols: _*).parquet(s"$dir/$stage")
-    val staged = walkParquet(dir, stage) // empty source ⇒ empty (caller decides)
-    val files = staged.map { rel =>
-      val sub = rel.stripPrefix(s"$stage/") // col=val/.../name.parquet
-      val i = sub.lastIndexOf('/')
-      val tgt = s"pdata/${sub.take(i)}/$uuid-${sub.drop(i + 1)}"
-      val tp = Paths.get(dir, tgt)
-      Files.createDirectories(tp.getParent)
-      Files.move(Paths.get(dir, rel), tp)
-      tgt
-    }
-    graft.io.FsUtil.deleteRecursively(new java.io.File(s"$dir/$stage"))
-    files
+    // (hive dir-encoding has nowhere to land them). Like the DML
+    // replace fallback's empty stage, `INSERT INTO pt SELECT ... WHERE
+    // false` is a valid, common possibly-empty ETL increment and must
+    // no-op, not error; an empty OVERWRITE truncates (commits an empty
+    // R), the Delta-style contract.
+    if (files.isEmpty && !replace) currentVersion(dir)
+    else claimNext(dir, if (replace) "R" else "A", files)
   }
 
   /** Stage `df`'s rows as UNREFERENCED data files — invisible by
@@ -320,33 +302,19 @@ object TxnLog {
     * pre-swap state, its output stages here, and the swap is the single
     * manifest claim. Flat tables stage a plain `part-<uuid>` dir;
     * partitioned tables stage into the shared `pdata` tree. An empty
-    * source stages ZERO files (valid: the claim then commits an empty
-    * visible set — REPLACE to empty). A caller that aborts deletes the
-    * returned paths; a crash leaves orphans for vacuum, like every
-    * other write path. */
+    * partitioned source stages ZERO files (valid: the claim then commits
+    * an empty visible set — REPLACE to empty). A caller that aborts
+    * deletes the returned paths; a crash leaves orphans for vacuum, like
+    * every other write path. */
   private[graft] def stageOnly(df: DataFrame, dir: String,
                                partCols: Seq[String]): Vector[String] =
-    if (partCols.nonEmpty) stagePartitionedShared(df, dir, partCols)
-    else {
-      val rel = s"part-${java.util.UUID.randomUUID().toString}"
-      df.write.mode("errorifexists").parquet(s"$dir/$rel")
-      val files = Option(new java.io.File(s"$dir/$rel").listFiles())
-        .getOrElse(Array.empty[java.io.File])
-        .filter(_.getName.endsWith(".parquet"))
-        .map(f => s"$rel/${f.getName}").sorted.toVector
-      if (files.isEmpty) // zero rows: drop the empty staging dir
-        graft.io.FsUtil.deleteRecursively(new java.io.File(s"$dir/$rel"))
-      files
-    }
+    stage(df, dir, partCols, shared = partCols.nonEmpty).files
 
   /** The claim half of [[stageOnly]]: one REPLACE commit whose visible
-    * set is exactly the staged files. CAS-safe like every claim — a
-    * concurrent commit just moves the version this replace lands at. */
-  private[graft] def claimStagedReplace(dir: String, files: Seq[String]): Long = {
-    var v = currentVersion(dir) + 1
-    while (!tryClaim(dir, v, "R", files)) v += 1
-    v
-  }
+    * set is exactly the staged files, at any free slot — a concurrent
+    * commit just moves the version this replace lands at. */
+  private[graft] def claimStagedReplace(dir: String, files: Seq[String]): Long =
+    claimNext(dir, "R", files)
 
   /** The dir-encoded partition value of `column` in a manifest path, if
     * the file was written under a `column=value` segment. */
@@ -357,8 +325,6 @@ object TxnLog {
       .collectFirst { case (c, v) if c == column =>
         java.net.URLDecoder.decode(v, "UTF-8") }
 
-  /** Write the manifest body to a temp file and atomically claim version
-    * `v` by hard link. Returns false if `v` was already taken. */
   /** Commit-time clock, micros. Overridable seam (like [[claimFence]]) so
     * specs and deterministic fixtures can inject logical timestamps; the
     * monotonicity clamp in [[tryClaim]] applies either way. */
@@ -378,6 +344,8 @@ object TxnLog {
     else Files.getLastModifiedTime(p).toInstant.toEpochMilli * 1000L
   }
 
+  /** Write the manifest body to a temp file and atomically claim version
+    * `v` by hard link. Returns false if `v` was already taken. */
   private def tryClaim(dir: String, v: Long, marker: String, files: Seq[String]): Boolean = {
     Files.createDirectories(logDir(dir))
     // in-commit timestamp, clamped MONOTONIC against the newest manifest
@@ -395,11 +363,63 @@ object TxnLog {
     } finally Files.deleteIfExists(tmp)
   }
 
-  private def commitWith(df: DataFrame, dir: String, marker: String): Long = {
-    val (_, files) = writeData(df, dir)
+  /** The any-slot claim: the first free version from the head on, for
+    * writes that commute with every commit before them. */
+  private def claimNext(dir: String, marker: String, files: Seq[String]): Long = {
     var v = currentVersion(dir) + 1
-    while (!tryClaim(dir, v, marker, files)) v += 1 // append-type: any slot works
+    while (!tryClaim(dir, v, marker, files)) v += 1
     v
+  }
+
+  /** Stage `df` (flat, or per-commit hive tree by `partCols`) and claim
+    * any slot under `marker`; returns (version, staged files). */
+  private def appendData(df: DataFrame, dir: String, marker: String,
+                         partCols: Seq[String] = Nil): (Long, Vector[String]) = {
+    val files = stage(df, dir, partCols).files
+    require(files.nonEmpty, "commit of an empty dataframe writes no files")
+    (claimNext(dir, marker, files), files)
+  }
+
+  /** One pass of a snapshot-derived writer ([[casLoop]]). */
+  private sealed trait Attempt
+
+  /** Nothing to commit at this snapshot: the writer returns `version`. */
+  private final case class Done(version: Long) extends Attempt
+
+  /** Claim base+1 with `marker` and `body`. `staged` is discarded if the
+    * claim loses; `keys` are the key values the pass writes, for the
+    * isolation check; `onWin` runs once with the won version (post-claim
+    * sidecars). */
+  private final case class Claim(marker: String, body: Seq[String],
+                                 staged: Seq[Staged],
+                                 keys: Option[DataFrame] = None,
+                                 onWin: Long => Unit = _ => ()) extends Attempt
+
+  /** The exact-slot loop every snapshot-derived writer runs: read `base`,
+    * run `attempt`, pass [[claimFence]], CAS base+1. On a loss: discard
+    * the pass's staged files, apply `isolation` with the writer's own
+    * `conflictMarker` and `keyCols` ([[enforceIsolation]]), and run a
+    * fresh pass on the new snapshot. */
+  private def casLoop(spark: SparkSession, dir: String,
+                      isolation: Isolation = Isolation.Rederive,
+                      conflictMarker: String = "R", keyCols: Seq[String] = Nil)
+                     (attempt: Long => Attempt): Long = {
+    @annotation.tailrec
+    def pass(): Long = {
+      val base = currentVersion(dir)
+      attempt(base) match {
+        case Done(v) => v
+        case c: Claim =>
+          claimFence()
+          if (tryClaim(dir, base + 1, c.marker, c.body)) { c.onWin(base + 1); base + 1 }
+          else {
+            c.staged.foreach(_.discard())
+            enforceIsolation(spark, dir, base, conflictMarker, isolation, c.keys, keyCols)
+            pass()
+          }
+      }
+    }
+    pass()
   }
 
   /** Atomically commit `df` as the next version; returns the version won.
@@ -412,7 +432,7 @@ object TxnLog {
     * this raw entry point is for single-writer maintenance loops (e.g. the
     * streaming IVM view) that own the table by contract. */
   def commit(df: DataFrame, dir: String, replace: Boolean = false): Long =
-    commitWith(df, dir, if (replace) "R" else "A")
+    appendData(df, dir, if (replace) "R" else "A")._1
 
   private def statsPath(dir: String, v: Long): Path =
     logDir(dir).resolve(f"v$v%05d.stats")
@@ -435,9 +455,7 @@ object TxnLog {
     knownStats.foreach(ks => require(ks.map(_._1).toSet == statsCols.toSet,
       s"knownStats columns ${ks.map(_._1)} must match statsCols $statsCols"))
     val spark = df.sparkSession
-    val (_, files) = writeData(df, dir)
-    var v = currentVersion(dir) + 1
-    while (!tryClaim(dir, v, "A", files)) v += 1
+    val (v, files) = appendData(df, dir, "A")
     // Writer-known stats (the Iceberg-writer path): a writer that just
     // partitioned by the stats column already KNOWS every file's bounds —
     // e.g. a partition-value commit has min = max = the value — so
@@ -480,9 +498,7 @@ object TxnLog {
     * 4-long words with bit_or — metadata-sized, map-side combined. */
   def commitWithBloom(df: DataFrame, dir: String, bloomCol: String): Long = {
     val spark = df.sparkSession
-    val (_, files) = writeData(df, dir)
-    var v = currentVersion(dir) + 1
-    while (!tryClaim(dir, v, "A", files)) v += 1
+    val (v, files) = appendData(df, dir, "A")
     val withRel = spark.read.parquet(files.map(rel => s"$dir/$rel"): _*)
       .withColumn("__rel", substring_index(input_file_name(), "/", -2))
       .withColumn("__hex", expr(s"md5(concat('bloom:', cast($bloomCol as string)))"))
@@ -1193,59 +1209,38 @@ object TxnLog {
         renameCols(keyCols, later), "left_anti")
     }
 
-  /** Run one replace-commit with conflict RE-VALIDATION: build the new
-    * visible set from the current snapshot, then claim EXACTLY base+1. If
-    * a concurrent commit interleaved (append, delete vector, another
-    * replace), the claim loses, the stale rewrite's data files are
-    * removed (no manifest ever referenced them — they are invisible by
-    * protocol), and the build re-runs against the new snapshot. This is
-    * what makes compact/delete safe against the lost-update race instead
-    * of silently dropping an interleaved append. */
-  private def replaceCommitValidated(spark: SparkSession, dir: String,
-                                     noop: Boolean = false,
-                                     mergeSchema: Boolean = false,
-                                     partitionBy: Seq[String] = Nil)
-                                    (build: DataFrame => DataFrame): Long = {
-    while (true) {
-      val base = currentVersion(dir)
-      // flat-branch rewrites flow straight into one write; only the
-      // partitioned branch probes isEmpty and stages, so only it pins
-      // the batch first
-      val df0 = build(read(spark, dir, mergeSchema = mergeSchema))
-      val df = if (partitionBy.isEmpty) df0 else df0.localCheckpoint()
-      // `partitionBy` keeps a PARTITIONED table's layout through the
-      // rewrite (the SQL DML fallback on catalog tables): the replace
-      // lands in the shared pdata tree, so later catalog scans still see
-      // one hive structure instead of a flat/partitioned mix
-      val (files, cleanup) =
-        if (partitionBy.isEmpty) {
-          val (rel, fs) = writeData(df, dir)
-          (fs, () => {
-            val d = new java.io.File(s"$dir/$rel")
-            Option(d.listFiles()).foreach(_.foreach(_.delete())); d.delete(); ()
-          })
-        } else if (df.isEmpty) {
-          // a partitioned write of ZERO rows produces no kv dirs — commit
-          // an empty R instead (the visible set resets to nothing; the
-          // empty read serves the stored DDL schema)
-          (Vector.empty[String], () => ())
-        } else {
-          val fs = stagePartitionedShared(df, dir, partitionBy)
-          (fs, () => fs.foreach(f =>
-            Files.deleteIfExists(Paths.get(dir, f))): Unit)
-        }
-      // `noop` = the caller guarantees the rewrite is LOGICALLY identity
-      // (compact: layout changes, content doesn't — pending vectors were
-      // already applied on the read it rewrote). Recorded in the marker —
-      // the Delta `operation=OPTIMIZE` pattern — so the change feed can
-      // skip the snapshot diff for pure compactions by metadata alone.
-      if (tryClaim(dir, base + 1, if (noop) "R noop" else "R", files)) return base + 1
-      // lost the CAS: a commit interleaved since `base` — discard the stale
-      // rewrite (unreferenced by any manifest, so invisible) and rebuild
-      cleanup()
-    }
-    throw new IllegalStateException("unreachable")
+  /** One replace pass: `build` over the latest read becomes the whole
+    * visible set. `partitionBy` keeps a PARTITIONED table's layout
+    * through the rewrite (the SQL DML fallback on catalog tables): the
+    * replace lands in the shared pdata tree, so later catalog scans still
+    * see one hive structure; a zero-row partitioned rewrite stages no
+    * files and commits an empty R (the empty read serves the stored DDL
+    * schema). `noop` = the caller guarantees the rewrite is LOGICALLY
+    * identity (compact: layout changes, content doesn't — pending vectors
+    * were already applied on the read it rewrote). Recorded in the
+    * marker — the Delta `operation=OPTIMIZE` pattern — so the change
+    * feed can skip the snapshot diff for pure compactions by metadata
+    * alone. */
+  private def replacePass(spark: SparkSession, dir: String,
+                          noop: Boolean = false,
+                          mergeSchema: Boolean = false,
+                          partitionBy: Seq[String] = Nil,
+                          keys: Option[DataFrame] = None)
+                         (build: DataFrame => DataFrame): Claim = {
+    val s = stage(build(read(spark, dir, mergeSchema = mergeSchema)), dir,
+      partitionBy, shared = partitionBy.nonEmpty)
+    Claim(if (noop) "R noop" else "R", s.files, Seq(s), keys)
   }
+
+  /** A replace-commit with conflict RE-VALIDATION: [[replacePass]] in
+    * [[casLoop]]. An interleaved commit (append, delete vector, another
+    * replace) makes the claim lose and the build re-run against the new
+    * snapshot — what makes compact/delete safe against the lost-update
+    * race instead of silently dropping an interleaved append. */
+  private def replaceCommitValidated(spark: SparkSession, dir: String,
+                                     noop: Boolean = false)
+                                    (build: DataFrame => DataFrame): Long =
+    casLoop(spark, dir)(_ => replacePass(spark, dir, noop)(build))
 
   /** Compact: rewrite the current visible set as one replace-commit
     * (re-validated against concurrent commits — see above). Prior versions
@@ -1291,26 +1286,29 @@ object TxnLog {
     * reader racing the gap keeps all files (sound, never wrong). */
   def optimizeZorder(spark: SparkSession, dir: String, colX: String,
                      colY: String, numFiles: Int,
-                     tieCols: Seq[String]): Long = {
-    while (true) {
-      val base = currentVersion(dir)
+                     tieCols: Seq[String]): Long =
+    zorderAll(spark, dir, colX, colY, tieCols, numFiles, "optimizeZorder")((_, _, _) => ())
+
+  /** The full z-order rewrite of [[optimizeZorder]] and of the first
+    * [[optimizeClustered]] pass, in [[casLoop]]: one `R noop` replace of
+    * the latest read, zone maps of the new files on the won version,
+    * then `onWin(version, files, bounds)`. */
+  private def zorderAll(spark: SparkSession, dir: String, colX: String,
+                        colY: String, tieCols: Seq[String], numFiles: Int,
+                        op: String)
+                       (onWin: (Long, Vector[String], (Long, Long, Long, Long)) => Unit): Long =
+    casLoop(spark, dir) { _ =>
       val cur = read(spark, dir).localCheckpoint()
       // ONE aggregation: row count + both dimensions' 16-bit-normalization
       // bounds (metadata-row job)
       val (n, bounds) = countAndBounds(cur, colX, colY)
-      require(n > 0, "optimizeZorder on an empty table")
-      val (rel, files) = zTiledFiles(spark, dir, cur, colX, colY, tieCols,
-        numFiles, bounds, n)
-      if (tryClaim(dir, base + 1, "R noop", files)) {
-        val v = base + 1
-        writeZoneStats(dir, v, zoneMaps(spark, dir, files, Seq(colX, colY)))
-        return v
-      }
-      val d = new java.io.File(s"$dir/$rel")
-      Option(d.listFiles()).foreach(_.foreach(_.delete())); d.delete()
+      require(n > 0, s"$op on an empty table")
+      val s = zTiledFiles(spark, dir, cur, colX, colY, tieCols, numFiles, bounds, n)
+      Claim("R noop", s.files, Seq(s), onWin = { v =>
+        writeZoneStats(dir, v, zoneMaps(spark, dir, s.files, Seq(colX, colY)))
+        onWin(v, s.files, bounds)
+      })
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   private def countAndBounds(cur: DataFrame, colX: String,
                              colY: String): (Long, (Long, Long, Long, Long)) = {
@@ -1328,12 +1326,12 @@ object TxnLog {
     * the data's own bounds, and what keeps an incremental pass's codes
     * on the same curve as the frame-setting full pass), global position
     * in (z, tieCols...) order, bin = floor((ordinal−1)·numFiles / n).
-    * One range exchange + a per-partition-count job; returns writeData's
-    * (rel dir, relative files). */
+    * One range exchange + a per-partition-count job; returns the flat
+    * stage. */
   private def zTiledFiles(spark: SparkSession, dir: String, cur: DataFrame,
                           colX: String, colY: String, tieCols: Seq[String],
                           numFiles: Int, bounds: (Long, Long, Long, Long),
-                          n: Long): (String, Vector[String]) = {
+                          n: Long): Staged = {
     import org.apache.spark.sql.Row
     val (mnX, mxX, mnY, mxY) = bounds
     def norm(c: String, mn: Long, mx: Long) =
@@ -1365,7 +1363,7 @@ object TxnLog {
     }.partitionBy(part).values
     val out = spark.createDataFrame(rows,
       org.apache.spark.sql.types.StructType(cur.schema.fields))
-    writeData(out, dir)
+    stage(out, dir)
   }
 
   // ------------------------------------------------------------------
@@ -1446,58 +1444,36 @@ object TxnLog {
     val (cx, cy, tie, bounds0) = clusteringOf(dir).getOrElse(
       throw new IllegalArgumentException(
         s"no clustering spec on $dir: call clusterBy first"))
-    if (bounds0.isEmpty) {
-      // first pass: full rewrite, frame-setting
-      while (true) {
-        val base = currentVersion(dir)
-        val cur = read(spark, dir).localCheckpoint()
-        val (n, bounds) = countAndBounds(cur, cx, cy)
-        require(n > 0, "optimizeClustered on an empty table")
-        val (rel, files) = zTiledFiles(spark, dir, cur, cx, cy, tie,
-          numFiles, bounds, n)
-        if (tryClaim(dir, base + 1, "R noop", files)) {
-          val v = base + 1
-          writeZoneStats(dir, v, zoneMaps(spark, dir, files, Seq(cx, cy)))
+    if (bounds0.isEmpty) // first pass: full rewrite, frame-setting
+      zorderAll(spark, dir, cx, cy, tie, numFiles, "optimizeClustered") {
+        case (_, files, (mnX, mxX, mnY, mxY)) =>
           writeMetaFile(clusteringPath(dir),
             s"cols\t$cx\t$cy\t${tie.mkString(",")}\n" +
-              s"bounds\t${bounds._1}\t${bounds._2}\t${bounds._3}\t${bounds._4}\n")
+              s"bounds\t$mnX\t$mxX\t$mnY\t$mxY\n")
           writeMetaFile(clusteredSetPath(dir), files.sorted.mkString("", "\n", "\n"))
-          return v
-        }
-        val d = new java.io.File(s"$dir/$rel")
-        Option(d.listFiles()).foreach(_.foreach(_.delete())); d.delete()
       }
-      throw new IllegalStateException("unreachable")
-    }
-    while (true) {
-      val base = currentVersion(dir)
+    else casLoop(spark, dir) { base =>
       val snap = snapshotAt(dir, base)
       require(snap.scoped.isEmpty && snap.renames.isEmpty && snap.drops.isEmpty,
         "pending scoped vectors / column mapping: compact() first " +
           "(materializes), then re-run optimizeClustered")
       val clustered = clusteredFiles(dir).intersect(snap.files.toSet)
       val cands = snap.files.filter(f => !clustered(f) && !f.startsWith("@"))
-      if (cands.isEmpty) return base
       // partition-aware candidate read: hive-layout commit files keep
       // their dir-encoded partition column (the rewrite stores it in-file
       // afterward — the readFileSet unions reconcile the two by name)
-      val cur = readLeavesRaw(spark, dir, cands).localCheckpoint()
-      val n = cur.count()
-      if (n == 0) return base
-      val (rel, files) = zTiledFiles(spark, dir, cur, cx, cy, tie,
-        numFiles, bounds0.get, n)
-      val body = cands.map("-" + _) ++ files.map("+" + _)
-      if (tryClaim(dir, base + 1, "X noop", body)) {
-        val v = base + 1
-        writeZoneStats(dir, v, zoneMaps(spark, dir, files, Seq(cx, cy)))
-        writeMetaFile(clusteredSetPath(dir),
-          (clustered ++ files).toVector.sorted.mkString("", "\n", "\n"))
-        return v
+      lazy val cur = readLeavesRaw(spark, dir, cands).localCheckpoint()
+      lazy val n = cur.count()
+      if (cands.isEmpty || n == 0) Done(base)
+      else {
+        val s = zTiledFiles(spark, dir, cur, cx, cy, tie, numFiles, bounds0.get, n)
+        Claim("X noop", cands.map("-" + _) ++ s.files.map("+" + _), Seq(s), onWin = { v =>
+          writeZoneStats(dir, v, zoneMaps(spark, dir, s.files, Seq(cx, cy)))
+          writeMetaFile(clusteredSetPath(dir),
+            (clustered ++ s.files).toVector.sorted.mkString("", "\n", "\n"))
+        })
       }
-      val d = new java.io.File(s"$dir/$rel")
-      Option(d.listFiles()).foreach(_.foreach(_.delete())); d.delete()
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** PARTIAL compaction: bin-pack only the visible files SMALLER than
@@ -1519,32 +1495,27 @@ object TxnLog {
   def compactSmall(spark: SparkSession, dir: String, thresholdBytes: Long,
                    targetFiles: Int = 1): Long = {
     require(thresholdBytes > 0 && targetFiles >= 1, "bad compactSmall sizing")
-    while (true) {
-      val base = currentVersion(dir)
+    casLoop(spark, dir) { base =>
       val snap = snapshotAt(dir, base)
       // pending UPDATE vectors bind to file sets an exchange would break —
       // materialize them with a full rewrite instead (the Delta rule:
       // OPTIMIZE rewrites DVs away)
       // column-mapped snapshots also take the full rewrite: the packer
       // below reads raw files, which would bypass the rename layer
-      if (snap.scoped.nonEmpty || snap.renames.nonEmpty || snap.drops.nonEmpty)
-        return compact(spark, dir, targetFiles)
-      val smalls = snap.files.filter(f => !f.startsWith("@") &&
+      lazy val smalls = snap.files.filter(f => !f.startsWith("@") &&
         Files.size(Paths.get(dir, f)) < thresholdBytes)
-      if (smalls.size < 2) return base
-      val packed = spark.read.parquet(smalls.map(resolve(dir, _)): _*)
-        .coalesce(targetFiles) // single use: flows straight into the write
-      val (rel, files) = writeData(packed, dir)
-      // `X noop`: record-identity by construction — the packed adds ARE
-      // the removed rows (vectors untouched on both sides), so the change
-      // feed can skip the diff by metadata alone (the R-noop pattern)
-      val body = smalls.map("-" + _) ++ files.map("+" + _)
-      if (tryClaim(dir, base + 1, "X noop", body)) return base + 1
-      // lost the CAS: the small-file set may be stale — discard, re-derive
-      val dd = new java.io.File(s"$dir/$rel")
-      Option(dd.listFiles()).foreach(_.foreach(_.delete())); dd.delete()
+      if (snap.scoped.nonEmpty || snap.renames.nonEmpty || snap.drops.nonEmpty)
+        replacePass(spark, dir, noop = true)(_.coalesce(targetFiles)) // = compact
+      else if (smalls.size < 2) Done(base)
+      else {
+        val s = stage(spark.read.parquet(smalls.map(resolve(dir, _)): _*)
+          .coalesce(targetFiles), dir) // single use: flows straight into the write
+        // `X noop`: record-identity by construction — the packed adds ARE
+        // the removed rows (vectors untouched on both sides), so the change
+        // feed can skip the diff by metadata alone (the R-noop pattern)
+        Claim("X noop", smalls.map("-" + _) ++ s.files.map("+" + _), Seq(s))
+      }
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Row-level DELETE, copy-on-write: rewrite the visible set without the
@@ -1575,8 +1546,8 @@ object TxnLog {
                   isolation: Isolation = Isolation.Rederive,
                   widenTo: Option[org.apache.spark.sql.types.StructType] = None,
                   partitionBy: Seq[String] = Nil): Long =
-    rewriteWhere(spark, dir, cond, isolation, "deleteWhere", widenTo,
-      partitionBy)((df, hit) => df.filter(!hit))
+    rewriteWhere(spark, dir, cond, isolation, widenTo, partitionBy)(
+      (df, hit) => df.filter(!hit))
 
   /** Row-level UPDATE, FILE-GRANULAR copy-on-write: same touched-file
     * discovery and `X` exchange as [[deleteWhere]], with matched rows
@@ -1594,8 +1565,7 @@ object TxnLog {
     require(set.nonEmpty, "updateWhere needs at least one SET expression")
     require(set.map(_._1).distinct.size == set.size,
       "updateWhere assigns a column twice")
-    rewriteWhere(spark, dir, cond, isolation, "updateWhere", widenTo,
-      partitionBy) { (df, hit) =>
+    rewriteWhere(spark, dir, cond, isolation, widenTo, partitionBy) { (df, hit) =>
       val bySet = set.toMap
       val types = df.schema.map(f => f.name -> f.dataType).toMap
       require(bySet.keySet.subsetOf(types.keySet),
@@ -1626,59 +1596,79 @@ object TxnLog {
           df.columns.toSeq.filterNot(s.fieldNames.contains).map(col): _*)
     }
 
-  /** Shared skeleton of [[deleteWhere]]/[[updateWhere]]: find the files a
-    * predicate touches, rewrite only them through `transform` (which sees
-    * the null-safe hit column), exchange. */
+  /** Shared skeleton of [[deleteWhere]]/[[updateWhere]]: the
+    * [[exchange]] whose touched files hold a row the predicate hits and
+    * whose rewrite applies `transform` (which sees the null-safe hit
+    * column) to the touched slice — or to the whole table on the replace
+    * fallback. Nothing touched is a no-op. An exchange classifies as a
+    * content rewrite, so under Abort it conflicts with any interleaved
+    * rewrite or keyed op. */
   private def rewriteWhere(spark: SparkSession, dir: String, cond: Column,
-                           isolation: Isolation, op: String,
-                           widenTo: Option[org.apache.spark.sql.types.StructType] = None,
-                           partitionBy: Seq[String] = Nil)
+                           isolation: Isolation,
+                           widenTo: Option[org.apache.spark.sql.types.StructType],
+                           partitionBy: Seq[String])
                           (transform: (DataFrame, Column) => DataFrame): Long = {
     val hit = coalesce(cond, lit(false))
-    // post-ADD-COLUMN tables mix file schemas: merge footers so no file's
-    // stored values are silently dropped by single-footer inference
-    def readFiles(paths: Seq[String]) = widenTo match {
-      case Some(_) => spark.read.option("mergeSchema", "true").parquet(paths: _*)
-      case None    => spark.read.parquet(paths: _*)
-    }
-    while (true) {
-      val base = currentVersion(dir)
+    exchange(spark, dir, isolation, "R", Nil, None, widenTo, partitionBy)(
+      _.filter(hit), _.map(transform(_, hit)), transform(_, hit))
+  }
+
+  /** Can this snapshot's change commit as an `X` exchange of flat files?
+    * Not with pending vectors or column mapping (a vector would suppress
+    * re-added keys; raw file reads bypass the mapping), `@` clone refs
+    * (their bytes belong to the source table) or hive-layout files (a
+    * leaf read loses the dir-encoded partition column). */
+  private def exchangeable(snap: Snapshot): Boolean =
+    snap.dvs.isEmpty && snap.scoped.isEmpty && snap.renames.isEmpty &&
+      snap.drops.isEmpty && snap.files.forall(f => !f.startsWith("@") && f.count(_ == '/') == 1)
+
+  /** The FILE-GRANULAR EXCHANGE behind [[merge]], [[mergeGrammar]] and
+    * [[rewriteWhere]], one [[casLoop]] pass per snapshot. One scan of the
+    * visible files, tagged with each row's file, keeps the rows that
+    * `touches`; ONLY those files are rewritten — `rewrite` maps the
+    * touched slice (None when nothing is touched) to the rows replacing
+    * it (None: nothing to add) — and the commit is an `X`: remove the
+    * touched files, add the rewrite's, or remove only when the rewrite
+    * holds no rows. Nothing removed and nothing added is a no-op. A
+    * snapshot that is not [[exchangeable]] takes one replace of
+    * `whole(latest read)` instead, which materializes what blocked the
+    * exchange; `partitionBy` keeps a partitioned table's layout through
+    * it. `widenTo` serves every read at the caller's declared schema,
+    * with footers merged (post-ADD-COLUMN tables mix file schemas, and
+    * single-footer inference would drop a column some files store). Both
+    * kinds of pass run under the caller's `isolation`, judged as
+    * `conflictMarker` with `keys` on `keyCols`. The driver-side touched
+    * list is metadata-sized (file names, not rows). */
+  private def exchange(spark: SparkSession, dir: String, isolation: Isolation,
+                       conflictMarker: String, keyCols: Seq[String],
+                       keys: Option[DataFrame],
+                       widenTo: Option[org.apache.spark.sql.types.StructType],
+                       partitionBy: Seq[String])
+                      (touches: DataFrame => DataFrame,
+                       rewrite: Option[DataFrame] => Option[DataFrame],
+                       whole: DataFrame => DataFrame): Long = {
+    def readFiles(rels: Seq[String]): DataFrame = widenSlice(
+      (if (widenTo.isEmpty) spark.read else spark.read.option("mergeSchema", "true"))
+        .parquet(rels.map(resolve(dir, _)): _*), widenTo)
+    casLoop(spark, dir, isolation, conflictMarker, keyCols) { base =>
       val snap = snapshotAt(dir, base)
-      if (snap.files.isEmpty) return base
-      if (snap.dvs.nonEmpty || snap.scoped.nonEmpty ||
-          snap.renames.nonEmpty || snap.drops.nonEmpty ||
-          snap.files.exists(f => f.startsWith("@") || f.count(_ == '/') != 1))
-        // with a declared schema the fallback read must also merge footers,
-        // or widenSlice would NULL-fill a column some files do store;
-        // partitioned catalog tables keep their hive layout through it
-        return replaceCommitValidated(spark, dir,
-            mergeSchema = widenTo.nonEmpty, partitionBy = partitionBy)(cur =>
-          transform(widenSlice(cur, widenTo), hit))
-      val withFile = widenSlice(readFiles(snap.files.map(resolve(dir, _))), widenTo)
-        .withColumn("__rel", substring_index(input_file_name(), "/", -2))
-      val touched = withFile.filter(hit)
-        .select(col("__rel")).distinct().collect().map(_.getString(0)).sorted
-      if (touched.isEmpty) return base
-      val slice = widenSlice(readFiles(touched.map(resolve(dir, _))), widenTo)
-      val rewritten = transform(slice, hit)
-      val (relFiles, body) = writeDataIfRows(rewritten, dir) match {
-        case None => (None, touched.map("-" + _).toVector)
-        case Some((rel, files)) =>
-          (Some(rel), touched.map("-" + _).toVector ++ files.map("+" + _))
+      lazy val untouched = rewrite(None)
+      if (snap.files.isEmpty && untouched.isEmpty) Done(base)
+      else if (!exchangeable(snap))
+        replacePass(spark, dir, mergeSchema = widenTo.nonEmpty,
+          partitionBy = partitionBy, keys = keys)(cur => whole(widenSlice(cur, widenTo)))
+      else {
+        val touched =
+          if (snap.files.isEmpty) Vector.empty
+          else touches(readFiles(snap.files)
+              .withColumn("__rel", substring_index(input_file_name(), "/", -2)))
+            .select(col("__rel")).distinct().collect().map(_.getString(0)).sorted.toVector
+        val staged = (if (touched.isEmpty) untouched else rewrite(Some(readFiles(touched))))
+          .map(stage(_, dir, dropEmpty = true))
+        val body = touched.map("-" + _) ++ staged.toVector.flatMap(_.files.map("+" + _))
+        if (body.isEmpty) Done(base) else Claim("X", body, staged.toSeq, keys)
       }
-      claimFence()
-      if (tryClaim(dir, base + 1, "X", body)) return base + 1
-      relFiles.foreach { rel =>
-        val d = new java.io.File(s"$dir/$rel")
-        Option(d.listFiles()).foreach(_.foreach(_.delete())); d.delete()
-      }
-      // an exchange classifies as a content rewrite — under Abort it
-      // conflicts with any interleaved rewrite or keyed op (the key
-      // DataFrame is never consulted for the 'r' attempt class)
-      enforceIsolation(spark, dir, base, "R", isolation,
-        spark.emptyDataFrame, Nil)
     }
-    throw new IllegalStateException("unreachable")
   }
 
   // ------------------------------------------------------------------
@@ -1715,9 +1705,7 @@ object TxnLog {
     val snap = snapshotAt(dir, Long.MaxValue) // also: fail fast on a non-table
     require(!snap.drops.contains(oldName) && !snap.drops.contains(newName),
       s"rename $oldName -> $newName touches a dropped column")
-    var v = currentVersion(dir) + 1
-    while (!tryClaim(dir, v, s"M rename\t$oldName\t$newName", Seq.empty)) v += 1
-    v
+    claimNext(dir, s"M rename\t$oldName\t$newName", Seq.empty)
   }
 
   /** Metadata-only column drop; returns the version won. Refused while a
@@ -1734,9 +1722,7 @@ object TxnLog {
       }
     require(!liveKeys.contains(name),
       s"cannot drop '$name': a pending delete/update vector keys on it")
-    var v = currentVersion(dir) + 1
-    while (!tryClaim(dir, v, s"M drop\t$name", Seq.empty)) v += 1
-    v
+    claimNext(dir, s"M drop\t$name", Seq.empty)
   }
 
   // ------------------------------------------------------------------
@@ -1769,16 +1755,20 @@ object TxnLog {
     case object Conflict extends Resolution
   }
 
-  /** How a keyed writer ([[update]] / [[deleteVector]] / [[merge]])
-    * resolves a lost CAS. [[Isolation.Rederive]] (default) re-runs on
-    * the new snapshot — full serializability by serial re-execution.
+  /** How a row-level writer resolves a lost CAS. Six writers take it:
+    * the keyed [[update]], [[deleteVector]], [[merge]] and [[mergeInto]]
+    * (and SQL MERGE), and the file-granular [[deleteWhere]] and
+    * [[updateWhere]]; it holds on every pass, the replace fallback
+    * included. [[Isolation.Rederive]] (default) re-runs on the new
+    * snapshot — full serializability by serial re-execution.
     * [[Isolation.Abort]] throws [[ConcurrentWriteException]] when any
     * interleaved commit classifies as [[Resolution.Conflict]] — the
     * write-serializable surface for callers whose write encodes a
     * read-modify-write computed OUTSIDE the engine from the stale
     * snapshot, where transparent re-execution is exactly the lost
     * update it looks like. Appends and content-identity maintenance
-    * (compact / zorder / compactSmall) never abort anyone. */
+    * (compact / zorder / clustering / compactSmall) take no isolation:
+    * they always re-derive and never abort anyone. */
   sealed trait Isolation
   object Isolation {
     case object Rederive extends Isolation
@@ -1788,12 +1778,17 @@ object TxnLog {
   final class ConcurrentWriteException(msg: String)
     extends RuntimeException(msg)
 
-  /** The commit-pair conflict matrix. `attempt` is the loser's manifest
-    * marker, `interleaved` one winner's; `keysOverlap` is consulted only
-    * for keyed winners (U/D) and may be expensive (a semi-join), hence
-    * by-name. Marker classes: blind append (`A`/`T`), content-identity
-    * maintenance (`R noop`/`X noop`), content-changing rewrite
-    * (`R`/`X`), keyed row ops (`U`/`D`).
+  /** The commit-pair conflict matrix. `attempt` is the loser's conflict
+    * marker, `interleaved` one winner's manifest marker; `keysOverlap` is
+    * consulted only for keyed winners (U/D) and may be expensive (a
+    * semi-join), hence by-name. Marker classes: blind append (`A`/`T`),
+    * content-identity maintenance (`R noop`/`X noop`), content-changing
+    * rewrite (`R`/`X`), keyed row ops (`U`/`D`). A writer's conflict
+    * marker is its own on every pass, whatever its manifest says:
+    * [[update]] and [[merge]]/[[mergeInto]] attempt as `U <keyCols>`
+    * (merge's write set IS its source keys, so its `X` exchange and its
+    * `R` replace fallback both classify as keyed), [[deleteVector]] as
+    * `D <keyCols>`, and [[deleteWhere]]/[[updateWhere]] as a rewrite.
     *
     *   attempt \ interleaved | append | maintenance | rewrite  | keyed (U/D)
     *   append                | none   | none        | none     | none
@@ -1804,7 +1799,7 @@ object TxnLog {
     * Appends never conflict in either role (fold-order-independent).
     * Maintenance re-runs under everything and aborts no one — its
     * content is identity, so re-execution loses nothing. A
-    * content-changing rewrite (CoW delete, restore, merge's replace
+    * content-changing rewrite (CoW delete, restore, any replace
     * fallback) invalidates every stale read wholesale: keyed attempts
     * conflict with it, and two rewrites conflict with each other (their
     * key sets are implicit in predicates, unknowable from manifests —
@@ -1840,27 +1835,28 @@ object TxnLog {
 
   /** Do our keys intersect an interleaved U/D commit's key files? Key
     * files are metadata-sized, so the semi-join is broadcast-cheap.
-    * Different key-column sets are incomparable → conservative true. */
-  private def keyedOverlap(spark: SparkSession, dir: String, keys: DataFrame,
+    * No keys, or different key-column sets, are incomparable →
+    * conservative true. */
+  private def keyedOverlap(spark: SparkSession, dir: String, keys: Option[DataFrame],
                            keyCols: Seq[String], marker: String,
                            body: Vector[String]): Boolean = {
     val theirCols = marker.drop(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    if (theirCols.toSet != keyCols.toSet) return true
+    if (keys.isEmpty || theirCols.toSet != keyCols.toSet) return true
     val rels =
       if (marker.startsWith("U ")) body.collect { case l if l.startsWith("V ") => l.drop(2) }
       else body
     rels.isEmpty ||
       spark.read.parquet(rels.map(resolve(dir, _)): _*)
-        .join(keys, keyCols.toSeq, "left_semi").limit(1).count() > 0
+        .join(keys.get, keyCols.toSeq, "left_semi").limit(1).count() > 0
   }
 
-  /** Abort-mode gate, called by a keyed writer that just lost its CAS:
-    * classify every interleaved commit and throw on the first
+  /** Abort-mode gate, called by [[casLoop]] after a lost CAS: classify
+    * every interleaved commit and throw on the first
     * [[Resolution.Conflict]]; returning normally means every pair
-    * re-derives and the caller may loop. */
+    * re-derives and the loop runs another pass. */
   private def enforceIsolation(spark: SparkSession, dir: String, base: Long,
                                attemptMarker: String, isolation: Isolation,
-                               keys: DataFrame, keyCols: Seq[String]): Unit =
+                               keys: Option[DataFrame], keyCols: Seq[String]): Unit =
     if (isolation == Isolation.Abort)
       interleavedSince(dir, base).foreach { case (v, m, body) =>
         if (classifyConflict(attemptMarker, m,
@@ -1872,9 +1868,10 @@ object TxnLog {
               "transparent serial re-execution")
       }
 
-  /** Test seam: runs between a keyed writer's snapshot read and its CAS
-    * claim, so specs can deterministically interleave a conflicting
-    * commit (thread races can't pin who loses). No-op in production. */
+  /** Test seam: [[casLoop]] runs it between every snapshot-derived
+    * writer's staged attempt and its CAS claim, so specs can
+    * deterministically interleave a conflicting commit (thread races
+    * can't pin who loses). No-op in production. */
   private[graft] var claimFence: () => Unit = () => ()
 
   /** Row-level DELETE, merge-on-read: commit the matching rows' distinct
@@ -1899,19 +1896,15 @@ object TxnLog {
     require(keyCols.forall(c => !c.contains(",") && c.trim.nonEmpty),
       s"key column names must be comma-free: $keyCols")
     val marker = "D " + keyCols.mkString(",")
-    while (true) {
-      val base = currentVersion(dir)
+    casLoop(spark, dir, isolation, marker, keyCols) { base =>
       val keys = read(spark, dir).filter(expr(predicate))
         .select(keyCols.map(col): _*).distinct().localCheckpoint()
-      if (keys.isEmpty) return base
-      val (rel, files) = writeData(keys, dir)
-      claimFence()
-      if (tryClaim(dir, base + 1, marker, files)) return base + 1
-      val d = new java.io.File(s"$dir/$rel")
-      Option(d.listFiles()).foreach(_.foreach(_.delete())); d.delete()
-      enforceIsolation(spark, dir, base, marker, isolation, keys, keyCols)
+      if (keys.isEmpty) Done(base)
+      else {
+        val s = stage(keys, dir)
+        Claim(marker, s.files, Seq(s), Some(keys))
+      }
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Row-level UPDATE, merge-on-read and ATOMIC: one `U <keyCols>`
@@ -1940,41 +1933,33 @@ object TxnLog {
     require(set.nonEmpty, "update needs at least one SET expression")
     require(keyCols.forall(c => !c.contains(",") && c.trim.nonEmpty),
       s"key column names must be comma-free: $keyCols")
-    while (true) {
-      val base = currentVersion(dir)
+    val marker = "U " + keyCols.mkString(",")
+    casLoop(spark, dir, isolation, marker, keyCols) { base =>
       val cur = read(spark, dir)
       val matching = cur.filter(expr(predicate)).localCheckpoint()
-      if (matching.isEmpty) return base
-      val keys = matching.select(keyCols.map(col): _*).distinct().localCheckpoint()
-      // the vector deletes BY KEY — if a visible row shares a matched
-      // key without matching the predicate, committing would silently
-      // erase it (suppressed by the vector, never re-inserted). Refuse
-      // loudly: key identity is the caller's contract, and the check is
-      // one semi-join count over the same read the update already paid.
-      val covered = cur.join(keys, keyCols, "left_semi").count()
-      val matched = matching.count()
-      require(covered == matched,
-        s"keyCols $keyCols do not identify the matched rows: ${covered - matched} " +
-          "non-matching row(s) share a matched key and would be lost — update by " +
-          "a unique key, or widen the predicate to cover them")
-      val updated = set.foldLeft(matching) { case (df, (c, e)) =>
-        df.withColumn(c, expr(e))
-      }.select(cur.columns.map(col).toSeq: _*) // single use: flows into writeData
-      val (vrel, vfiles) = writeData(keys, dir)
-      val (arel, afiles) = writeData(updated, dir)
-      val body = vfiles.map("V " + _) ++ afiles.map("+" + _)
-      claimFence()
-      if (tryClaim(dir, base + 1, "U " + keyCols.mkString(","), body)) return base + 1
-      // lost the CAS: both stale dirs are invisible (unreferenced) — drop
-      // them, then abort or re-derive per the isolation contract
-      Seq(vrel, arel).foreach { rel =>
-        val dd = new java.io.File(s"$dir/$rel")
-        Option(dd.listFiles()).foreach(_.foreach(_.delete())); dd.delete()
+      if (matching.isEmpty) Done(base)
+      else {
+        val keys = matching.select(keyCols.map(col): _*).distinct().localCheckpoint()
+        // the vector deletes BY KEY — if a visible row shares a matched
+        // key without matching the predicate, committing would silently
+        // erase it (suppressed by the vector, never re-inserted). Refuse
+        // loudly: key identity is the caller's contract, and the check is
+        // one semi-join count over the same read the update already paid.
+        val covered = cur.join(keys, keyCols, "left_semi").count()
+        val matched = matching.count()
+        require(covered == matched,
+          s"keyCols $keyCols do not identify the matched rows: ${covered - matched} " +
+            "non-matching row(s) share a matched key and would be lost — update by " +
+            "a unique key, or widen the predicate to cover them")
+        val updated = set.foldLeft(matching) { case (df, (c, e)) =>
+          df.withColumn(c, expr(e))
+        }.select(cur.columns.map(col).toSeq: _*) // single use: flows into the stage
+        val vec = stage(keys, dir)
+        val adds = stage(updated, dir)
+        Claim(marker, vec.files.map("V " + _) ++ adds.files.map("+" + _),
+          Seq(vec, adds), Some(keys))
       }
-      enforceIsolation(spark, dir, base, "U " + keyCols.mkString(","),
-        isolation, keys, keyCols)
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** MERGE INTO (upsert): rows of `source` whose `keyCols` match an
@@ -1984,22 +1969,23 @@ object TxnLog {
     * files are rewritten (matched rows dropped, all source rows appended),
     * and the commit is an `X` exchange — remove touched, add rewritten —
     * so a merge touching 1 of 10⁶ files moves one file's bytes, not
-    * 100 TB. Conflict story follows compact/delete: the exchange claims
-    * EXACTLY base+1 (CAS) and on losing re-derives the touched set against
-    * the new snapshot (the touched-file list itself is what a concurrent
-    * commit invalidates). With delete vectors PENDING, a source key the
-    * vector covers would be suppressed on read even after its re-insert —
-    * so merge falls back to one validated replace-commit, which
-    * materializes the vectors and keeps upsert semantics exact.
+    * 100 TB ([[exchange]]). Conflict story follows compact/delete: the
+    * exchange claims EXACTLY base+1 (CAS) and on losing re-derives the
+    * touched set against the new snapshot (the touched-file list itself
+    * is what a concurrent commit invalidates) — or aborts per
+    * `isolation`, classed as `U <keyCols>` on every pass. With delete
+    * vectors PENDING, a source key the vector covers would be suppressed
+    * on read even after its re-insert — so merge falls back to one
+    * validated replace-commit, which materializes the vectors and keeps
+    * upsert semantics exact.
     * `source` must carry the target schema — unless `evolveSchema`:
     * then source columns ABSENT from the target widen the table (the
     * Delta autoMerge move: rewritten/new files carry the new column,
     * untouched files simply don't store it, and a `mergeSchema = true`
     * read reconciles by name — adding a column never rewrites 100 TB),
     * and target columns absent from the source fill NULL on inserted
-    * rows. The driver-side touched-file list is metadata-sized (file
-    * names, not rows). Returns the version won (current version
-    * unchanged for an empty source). */
+    * rows. Returns the version won (current version unchanged for an
+    * empty source). */
   def merge(spark: SparkSession, dir: String, source: DataFrame,
             keyCols: Seq[String],
             isolation: Isolation = Isolation.Rederive,
@@ -2008,46 +1994,17 @@ object TxnLog {
     val src = source.localCheckpoint()
     if (src.isEmpty) return currentVersion(dir)
     val srcKeys = src.select(keyCols.map(col): _*).distinct().localCheckpoint()
-    while (true) {
-      val base = currentVersion(dir)
-      val snap = snapshotAt(dir, base)
-      // Pending vectors OR shallow-clone references: fall back to one
-      // validated replace-commit. Vectors would suppress re-inserted keys;
-      // external (`@`) files can't be exchanged — they belong to the
-      // source table, so the rewrite must localize them anyway. Hive-layout
-      // commits fall back too: a leaf read loses the dir-encoded partition
-      // column (read() routes through readFileSet's basePath grouping).
-      if (snap.dvs.nonEmpty || snap.scoped.nonEmpty ||
-          snap.renames.nonEmpty || snap.drops.nonEmpty ||
-          snap.files.exists(f => f.startsWith("@") || f.count(_ == '/') != 1))
-        return replaceCommitValidated(spark, dir)(cur =>
-          cur.join(srcKeys, keyCols, "left_anti")
-            .unionByName(src, allowMissingColumns = evolveSchema))
-      val withFile = spark.read.parquet(snap.files.map(resolve(dir, _)): _*)
-        .withColumn("__rel", substring_index(input_file_name(), "/", -2))
-      val touched = withFile.join(srcKeys, keyCols, "left_semi")
-        .select(col("__rel")).distinct().collect().map(_.getString(0)).sorted
-      val rewritten =
-        if (touched.isEmpty) src
-        else spark.read.parquet(touched.map(resolve(dir, _)).toSeq: _*)
-          .join(srcKeys, keyCols, "left_anti")
-          .unionByName(src, allowMissingColumns = evolveSchema)
-      // single evaluation: the rewrite flows straight into the write (no
-      // checkpoint — it fed only this write, so materializing it first
-      // doubled the scan+join work; guide §1.2)
-      val (rel, files) = writeData(rewritten, dir)
-      val body = touched.map("-" + _).toVector ++ files.map("+" + _)
-      claimFence()
-      if (tryClaim(dir, base + 1, "X", body)) return base + 1
-      // lost the CAS — the touched-file set may be stale; discard, then
-      // abort or re-derive per the isolation contract (the attempt
-      // classifies as `U`-like: merge's write set IS its source keys)
-      val d = new java.io.File(s"$dir/$rel")
-      Option(d.listFiles()).foreach(_.foreach(_.delete())); d.delete()
-      enforceIsolation(spark, dir, base, "U " + keyCols.mkString(","),
-        isolation, srcKeys, keyCols)
-    }
-    throw new IllegalStateException("unreachable")
+    def upsert(target: DataFrame): DataFrame =
+      target.join(srcKeys, keyCols, "left_anti")
+        .unionByName(src, allowMissingColumns = evolveSchema)
+    // the rewrite flows straight into the stage (no checkpoint — it feeds
+    // only that write, so materializing it first would double the
+    // scan+join work); with nothing touched it is the source itself
+    exchange(spark, dir, isolation, "U " + keyCols.mkString(","), keyCols,
+      Some(srcKeys), None, Nil)(
+      _.join(srcKeys, keyCols, "left_semi"),
+      slice => Some(slice.fold(src)(upsert)),
+      upsert)
   }
 
   /** Conditional-action spec for [[mergeInto]] — the full MERGE grammar
@@ -2209,7 +2166,7 @@ object TxnLog {
     * (Delta's `whenMatched.delete / whenMatched.updateExpr /
     * whenNotMatched.insertAll`). Same at-scale property: ONE semi-join
     * finds the files containing a matched key, only those files are
-    * rewritten through [[applyMergeActions]], and the commit is an `X`
+    * rewritten through [[applyMergeGrammar]], and the commit is an `X`
     * exchange — untouched files never move. Deletes that empty every
     * touched file commit an exchange with removes only (no adds).
     * Concurrency, pending-vector fallback, and isolation follow
@@ -2254,52 +2211,21 @@ object TxnLog {
       else Some(grammar.notMatchedBySource
         .map(_._1.map(c => coalesce(c, lit(false))).getOrElse(lit(true)))
         .reduce(_ || _))
-    // post-ADD-COLUMN tables mix file schemas: with a declared schema in
-    // play, merge footers so no file's stored values are NULL-filled
-    def readFiles(paths: Seq[String]) = widenTo match {
-      case Some(_) => spark.read.option("mergeSchema", "true").parquet(paths: _*)
-      case None    => spark.read.parquet(paths: _*)
-    }
-    while (true) {
-      val base = currentVersion(dir)
-      val snap = snapshotAt(dir, base)
-      // hive-layout commits join the fallback set: leaf reads would lose
-      // the dir-encoded partition column (readFileSet's basePath grouping
-      // exists for exactly this; read() routes through it)
-      if (snap.dvs.nonEmpty || snap.scoped.nonEmpty ||
-          snap.renames.nonEmpty || snap.drops.nonEmpty ||
-          snap.files.exists(f => f.startsWith("@") || f.count(_ == '/') != 1))
-        return replaceCommitValidated(spark, dir,
-            mergeSchema = widenTo.nonEmpty, partitionBy = partitionBy)(cur =>
-          applyMergeGrammar(widenSlice(cur, widenTo), src, keyCols, grammar))
-      val withFile = widenSlice(readFiles(snap.files.map(resolve(dir, _))), widenTo)
-        .withColumn("__rel", substring_index(input_file_name(), "/", -2))
-      val touched = (bySrcHit match {
+    def merged(target: DataFrame): DataFrame =
+      applyMergeGrammar(target, src, keyCols, grammar)
+    exchange(spark, dir, isolation, "U " + keyCols.mkString(","), keyCols,
+      Some(srcKeys), widenTo, partitionBy)(
+      withFile => bySrcHit match {
         case None => withFile.join(srcKeys, keyCols, "left_semi")
         case Some(h) =>
           withFile.join(srcKeys.withColumn("__sm", lit(true)), keyCols, "left")
             .filter(col("__sm").isNotNull || h)
-      }).select(col("__rel")).distinct().collect().map(_.getString(0)).sorted
-      val targetSlice = widenSlice(
-        if (touched.isEmpty) read(spark, dir, mergeSchema = widenTo.nonEmpty).limit(0)
-        else readFiles(touched.map(resolve(dir, _)).toSeq), widenTo)
-      val rewritten = applyMergeGrammar(targetSlice, src, keyCols, grammar)
-      val (relFiles, body) = writeDataIfRows(rewritten, dir) match {
-        case None => (None, touched.map("-" + _).toVector)
-        case Some((rel, files)) =>
-          (Some(rel), touched.map("-" + _).toVector ++ files.map("+" + _))
-      }
-      if (body.isEmpty) return base // no matches, no inserts: a no-op statement
-      claimFence()
-      if (tryClaim(dir, base + 1, "X", body)) return base + 1
-      relFiles.foreach { rel =>
-        val d = new java.io.File(s"$dir/$rel")
-        Option(d.listFiles()).foreach(_.foreach(_.delete())); d.delete()
-      }
-      enforceIsolation(spark, dir, base, "U " + keyCols.mkString(","),
-        isolation, srcKeys, keyCols)
-    }
-    throw new IllegalStateException("unreachable")
+      },
+      // nothing touched: the grammar runs over an empty target at the
+      // table's schema (only its inserts can fire)
+      slice => Some(merged(slice.getOrElse(widenSlice(
+        read(spark, dir, mergeSchema = widenTo.nonEmpty).limit(0), widenTo)))),
+      merged)
   }
 
   /** CONVERT IN PLACE (Delta's `CONVERT TO DELTA`): turn a directory of
@@ -2398,12 +2324,10 @@ object TxnLog {
     val target = snapshotAt(dir, toVersion)
     if (target.dvs.isEmpty && target.scoped.isEmpty &&
         target.renames.isEmpty && target.drops.isEmpty) {
-      var v = currentVersion(dir) + 1
       // R-commit re-listing the target's files: restore commutes with
       // nothing (it REPLACES), so any slot is as correct as base+1 — the
       // restored content is version-pinned, not snapshot-derived
-      while (!tryClaim(dir, v, "R", target.files)) v += 1
-      v
+      claimNext(dir, "R", target.files)
     } else {
       val frozen = read(spark, dir, Some(toVersion)).localCheckpoint()
       replaceCommitValidated(spark, dir)(_ => frozen)
@@ -2449,8 +2373,7 @@ object TxnLog {
         "transplant — compact the source first (materializes the mapping)")
     def ext(rel: String): String =
       if (rel.startsWith("@")) rel else s"@$srcAbs/$rel" // already-external refs pass through
-    var v = currentVersion(dstDir) + 1
-    while (!tryClaim(dstDir, v, "A", snap.files.map(ext))) v += 1
+    val v = claimNext(dstDir, "A", snap.files.map(ext))
     // carry the source's zone maps for the referenced files (keyed by the
     // external ref, which is how the clone's scanPruned will look them up)
     // — cloning preserves PLANNING metadata, not just data visibility
@@ -2460,8 +2383,7 @@ object TxnLog {
     }.distinct
     if (carried.nonEmpty) writeZoneStats(dstDir, v, carried)
     snap.dvs.foreach { case (dvFiles, keyCols, _) => // renames empty → offset 0
-      var dv = currentVersion(dstDir) + 1
-      while (!tryClaim(dstDir, dv, "D " + keyCols.mkString(","), dvFiles.map(ext))) dv += 1
+      claimNext(dstDir, "D " + keyCols.mkString(","), dvFiles.map(ext))
     }
     currentVersion(dstDir)
   }
@@ -2487,18 +2409,14 @@ object TxnLog {
     require(writerId.nonEmpty && !writerId.contains(" ") && !writerId.contains("\n"),
       s"writerId must be a space-free token: '$writerId'")
     txnVersion(dir, writerId, batchId).getOrElse(
-      commitWith(df, dir, s"T $writerId $batchId"))
+      appendData(df, dir, s"T $writerId $batchId")._1)
   }
 
   /** Append already-written relative file paths as the next version — the
     * batch-write commit for executor-side writers (no replay identity, so
     * no txn marker; the claim loop takes any free slot like any append). */
-  def commitFiles(dir: String, relFiles: Seq[String]): Long = {
-    Files.createDirectories(logDir(dir))
-    var v = currentVersion(dir) + 1
-    while (!tryClaim(dir, v, "A", relFiles.sorted)) v += 1
-    v
-  }
+  def commitFiles(dir: String, relFiles: Seq[String]): Long =
+    claimNext(dir, "A", relFiles.sorted)
 
   /** File-granular sibling of [[commitIdempotent]] for writers that
     * produced their data files THEMSELVES (the DSv2 streaming sink's
@@ -2513,12 +2431,8 @@ object TxnLog {
                             relFiles: Seq[String]): Long = {
     require(writerId.nonEmpty && !writerId.contains(" ") && !writerId.contains("\n"),
       s"writerId must be a space-free token: '$writerId'")
-    txnVersion(dir, writerId, batchId).getOrElse {
-      Files.createDirectories(logDir(dir))
-      var v = currentVersion(dir) + 1
-      while (!tryClaim(dir, v, s"T $writerId $batchId", relFiles.sorted)) v += 1
-      v
-    }
+    txnVersion(dir, writerId, batchId).getOrElse(
+      claimNext(dir, s"T $writerId $batchId", relFiles.sorted))
   }
 
   /** DESCRIBE HISTORY: one row per committed version — (version, action,

@@ -25,7 +25,7 @@ class CatalogEvolutionSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   private def freshTable(tag: String): (String, String) = {
-    val wh = java.nio.file.Files.createTempDirectory(s"graft_evo_$tag").toString
+    val wh = graft.io.FsUtil.scratchDir(s"graft_evo_$tag")
     spark.conf.set("spark.sql.catalog.ge", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.ge.warehouse", wh)
     spark.sql(s"CREATE NAMESPACE IF NOT EXISTS ge.db")
@@ -121,7 +121,7 @@ class CatalogEvolutionSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("partitioned CREATE TABLE + INSERT land the hive col=val layout") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_evo_part").toString
+    val wh = graft.io.FsUtil.scratchDir("graft_evo_part")
     spark.conf.set("spark.sql.catalog.ge.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS ge.db")
     spark.sql("CREATE TABLE ge.db.pt (k BIGINT, v DOUBLE, p STRING) PARTITIONED BY (p)")
@@ -201,7 +201,7 @@ class CatalogEvolutionSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("REPLACE TABLE swaps the partition spec both directions") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_evo_rp").toString
+    val wh = graft.io.FsUtil.scratchDir("graft_evo_rp")
     spark.conf.set("spark.sql.catalog.ge", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.ge.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS ge.db")
@@ -232,7 +232,7 @@ class CatalogEvolutionSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the possibly-empty ETL increment: `INSERT ... WHERE false` must be
     // a valid no-op on a PARTITIONED catalog table (zero rows stage zero
     // files under hive dir-encoding), matching the unpartitioned path
-    val wh = java.nio.file.Files.createTempDirectory("graft_evo_emptyins").toString
+    val wh = graft.io.FsUtil.scratchDir("graft_evo_emptyins")
     spark.conf.set("spark.sql.catalog.ge.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS ge.db")
     spark.sql("CREATE TABLE ge.db.ept (k BIGINT, p STRING) PARTITIONED BY (p)")
@@ -255,7 +255,7 @@ class CatalogEvolutionSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("partitioned CTAS through the catalog (create + partitioned write)") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_evo_ctas").toString
+    val wh = graft.io.FsUtil.scratchDir("graft_evo_ctas")
     spark.conf.set("spark.sql.catalog.ge.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS ge.db")
     spark.sql("""CREATE TABLE ge.db.ctas PARTITIONED BY (par) AS
@@ -277,7 +277,7 @@ class CatalogEvolutionSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("RENAME TABLE is a directory-level move; data and history survive") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_evo_ren").toString
+    val wh = graft.io.FsUtil.scratchDir("graft_evo_ren")
     spark.conf.set("spark.sql.catalog.ge.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS ge.db")
     spark.sql("CREATE TABLE ge.db.orig (k BIGINT, v DOUBLE)")

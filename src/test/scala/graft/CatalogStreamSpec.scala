@@ -25,7 +25,7 @@ class CatalogStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   private def fresh(tag: String): (String, String) = {
-    val wh = java.nio.file.Files.createTempDirectory(s"graft_cstream_$tag").toString
+    val wh = graft.io.FsUtil.scratchDir(s"graft_cstream_$tag")
     spark.conf.set("spark.sql.catalog.gs", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gs.warehouse", wh)
     spark.sql(s"CREATE NAMESPACE IF NOT EXISTS gs.db")
@@ -37,8 +37,8 @@ class CatalogStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (t, _) = fresh("filt")
     spark.sql(s"INSERT INTO $t SELECT id, CASE WHEN id % 2 = 0 THEN 'a' ELSE 'b' END, CAST(id AS DOUBLE) FROM range(0, 50)")
     spark.sql(s"INSERT INTO $t SELECT id, CASE WHEN id % 2 = 0 THEN 'a' ELSE 'b' END, CAST(id AS DOUBLE) FROM range(50, 100)")
-    val out = java.nio.file.Files.createTempDirectory("graft_cstream_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cstream_ck").toString
+    val out = graft.io.FsUtil.scratchDir("graft_cstream_out")
+    val ckpt = graft.io.FsUtil.scratchDir("graft_cstream_ck")
     val q = spark.readStream.option("maxVersionsPerTrigger", "1").table(t)
       .filter(col("grp") === "a") // must NOT be lost to advertised pushdown
       .select(col("k"))
@@ -55,7 +55,7 @@ class CatalogStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (t, _) = fresh("tt")
     spark.sql(s"INSERT INTO $t VALUES (1, 'a', 1.0)")
     spark.sql(s"INSERT INTO $t VALUES (2, 'b', 2.0)")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cstream_ttck").toString
+    val ckpt = graft.io.FsUtil.scratchDir("graft_cstream_ttck")
     val e = intercept[Exception] {
       val q = spark.readStream.table(s"$t VERSION AS OF 1")
         .writeStream.format("noop").option("checkpointLocation", ckpt).start()
@@ -78,7 +78,7 @@ class CatalogStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.sql(s"INSERT INTO $t SELECT id, 'g', CAST(id AS DOUBLE) " +
         s"FROM range(${i * 10}, ${i * 10 + 10})")
     }
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cstream_admck").toString
+    val ckpt = graft.io.FsUtil.scratchDir("graft_cstream_admck")
     val seen = scala.collection.mutable.ArrayBuffer.empty[Seq[Long]]
     def drive(trigger: Option[org.apache.spark.sql.streaming.Trigger]): Unit = {
       var w = spark.readStream.option("maxBytesPerTrigger", "1").table(t)
@@ -113,7 +113,7 @@ class CatalogStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dstDir = srcDir.stripSuffix("wsrc") + "wdst"
     spark.sql(s"CREATE TABLE $dst (k BIGINT, grp STRING, v DOUBLE)")
     spark.sql(s"INSERT INTO $src VALUES (1, 'a', 1.0), (2, 'b', 2.0)")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cstream_wck").toString
+    val ckpt = graft.io.FsUtil.scratchDir("graft_cstream_wck")
     def drive(): Unit = {
       val q = spark.readStream.table(src)
         .writeStream.option("checkpointLocation", ckpt).outputMode("append")

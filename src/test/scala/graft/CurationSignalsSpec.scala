@@ -29,7 +29,7 @@ class CurationSignalsSpec extends AnyFunSuite with BeforeAndAfterAll {
     .getOrCreate()
 
   private lazy val adversarialDir =
-    java.nio.file.Files.createTempDirectory("graft_curation_adv").toString
+    graft.io.FsUtil.scratchDir("graft_curation_adv")
 
   override def afterAll(): Unit = {
     spark.stop()

@@ -25,7 +25,7 @@ class EventsGenerationSpec extends AnyFunSuite with BeforeAndAfterAll {
   /** Rewrite the real events table as the legacy shape: ts as raw nanos
     * int64 (what TIMESTAMP(NANOS) parquet reads as under nanosAsLong). */
   private def stageLegacy(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_evgen").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_evgen")
     graft.core.Tables.events(spark, "/root/testdata/sf0.001")
       .selectExpr("event_id", "ts_us * 1000L AS ts", "user_id", "event_type",
         "value", "props")

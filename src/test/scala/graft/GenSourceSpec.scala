@@ -79,7 +79,7 @@ class GenSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   // -- StoreSource: the DSv2 WRITE face ---------------------------------
 
   private def storeDir(name: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_store_$name")
+    val d = java.nio.file.Paths.get(graft.io.FsUtil.scratchDir(s"graft_store_$name"))
     d.toFile.deleteOnExit()
     d.toString
   }

@@ -24,7 +24,7 @@ class MaintenanceSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   private def fresh(tag: String): (String, String) = {
-    val wh = java.nio.file.Files.createTempDirectory(s"graft_maint_$tag").toString
+    val wh = graft.io.FsUtil.scratchDir(s"graft_maint_$tag")
     spark.conf.set("spark.sql.catalog.gm", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gm.warehouse", wh)
     spark.sql(s"CREATE NAMESPACE IF NOT EXISTS gm.db")
@@ -97,7 +97,7 @@ class MaintenanceSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("DESCRIBE DETAIL is the metadata-only current-state card") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_maint_dd").toString
+    val wh = graft.io.FsUtil.scratchDir("graft_maint_dd")
     spark.conf.set("spark.sql.catalog.gm", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gm.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS gm.db")
@@ -118,7 +118,7 @@ class MaintenanceSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("SHOW PARTITIONS lists live partitions from manifest paths only") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_maint_sp").toString
+    val wh = graft.io.FsUtil.scratchDir("graft_maint_sp")
     spark.conf.set("spark.sql.catalog.gm", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gm.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS gm.db")
@@ -240,7 +240,7 @@ class MaintenanceSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("SHALLOW CLONE of a partitioned source refuses loudly") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_maint_clpart").toString
+    val wh = graft.io.FsUtil.scratchDir("graft_maint_clpart")
     spark.conf.set("spark.sql.catalog.gm.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS gm.db")
     spark.sql("""CREATE TABLE gm.db.pt (k BIGINT, p STRING) PARTITIONED BY (p)""")
@@ -300,7 +300,7 @@ class MaintenanceSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("ANALYZE refuses partition columns (path prunes them already)") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_maint_anlzp").toString
+    val wh = graft.io.FsUtil.scratchDir("graft_maint_anlzp")
     spark.conf.set("spark.sql.catalog.gm.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS gm.db")
     spark.sql("CREATE TABLE gm.db.apt (k BIGINT, p STRING) PARTITIONED BY (p)")
@@ -311,7 +311,7 @@ class MaintenanceSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("TBLPROPERTIES: create/set/unset persist; REPLACE resets; vacuum policy") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_maint_props").toString
+    val wh = graft.io.FsUtil.scratchDir("graft_maint_props")
     spark.conf.set("spark.sql.catalog.gm.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS gm.db")
     spark.sql("""CREATE TABLE gm.db.pt2 (k BIGINT)
@@ -333,7 +333,7 @@ class MaintenanceSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("CONVERT TO GRAFT edges: layout mismatches and double-convert refuse") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_maint_conv").toString
+    val wh = graft.io.FsUtil.scratchDir("graft_maint_conv")
     spark.conf.set("spark.sql.catalog.gm", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gm.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS gm.db")
@@ -401,7 +401,7 @@ class MaintenanceSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("DV-write policy: DELETE commits a vector instead of rewriting files") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_maint_dvw").toString
+    val wh = graft.io.FsUtil.scratchDir("graft_maint_dvw")
     spark.conf.set("spark.sql.catalog.gm", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gm.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS gm.db")
@@ -465,7 +465,7 @@ class MaintenanceSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("table_changes composes with vector DML and merge-on-read scans") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_maint_cdfv").toString
+    val wh = graft.io.FsUtil.scratchDir("graft_maint_cdfv")
     spark.conf.set("spark.sql.catalog.gm", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gm.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS gm.db")
@@ -493,7 +493,7 @@ class MaintenanceSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("RESTORE composes with vectors: a vectored target materializes") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_maint_rstv").toString
+    val wh = graft.io.FsUtil.scratchDir("graft_maint_rstv")
     spark.conf.set("spark.sql.catalog.gm", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gm.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS gm.db")
@@ -543,7 +543,7 @@ class MaintenanceSqlSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("SHALLOW CLONE carries TBLPROPERTIES: the fork keeps its DML policy") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_maint_clp").toString
+    val wh = graft.io.FsUtil.scratchDir("graft_maint_clp")
     spark.conf.set("spark.sql.catalog.gm", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gm.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS gm.db")

@@ -35,7 +35,7 @@ class MvRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val baseDir = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_mvspec").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_mvspec")
     val rnd = new scala.util.Random(11)
     (0 until 4000)
       .map(i => (s"g${i % 7}", s"h${i % 3}", rnd.nextInt(1000).toDouble / 4, i.toLong))
@@ -179,7 +179,7 @@ class MvRewriteSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.functions._
     // a "table" that is a list of files, read file-set style (the txn-log
     // read shape): two part files
-    val dir = java.nio.file.Files.createTempDirectory("graft_mvspec_multi").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_mvspec_multi")
     base.filter(col("id") % 2 === 0).coalesce(1).write.parquet(s"$dir/p0")
     base.filter(col("id") % 2 === 1).coalesce(1).write.parquet(s"$dir/p1")
     def files(sub: String) = java.nio.file.Files.list(

@@ -170,7 +170,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("Sinks.appendIgnore: INSERT OR IGNORE semantics across batches") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft_sink").resolve("t").toString
+    val path = java.nio.file.Paths.get(graft.io.FsUtil.scratchDir("graft_sink")).resolve("t").toString
     val b1 = Seq(("k1", 1, "first"), ("k1", 2, "dup-in-batch"), ("k2", 1, "first"))
       .toDF("wav_path", "ord", "text")
     assert(graft.io.Sinks.appendIgnore(spark, b1, path, "wav_path", Seq("ord")) == 2)
@@ -388,7 +388,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("q74 BPE merges match hand-computed segmentations (right-boundary guard)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bpe").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_bpe")
     Seq((1L, "there to", 8L), (2L, "a.b", 3L), (3L, "and", 3L))
       .toDF("doc_id", "text", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -439,7 +439,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val textA = "the quick brown fox jumps over the lazy dog"
     val textC = "completely unrelated words about spark catalyst optimizer internals"
-    val dir = java.nio.file.Files.createTempDirectory("graft_simdedup").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_simdedup")
     // two files -> two micro-batches (maxFilesPerTrigger=1): state must
     // carry doc 1's signature into the second batch
     Seq((1L, textA), (3L, textC)).toDF("doc_id", "text")
@@ -455,7 +455,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out(4L)._2 && out(4L)._3 == 1L)
     // signature parity: the streaming Scala twin must equal q25's
     // expression-pipeline simhash for the same texts
-    val qdir = java.nio.file.Files.createTempDirectory("graft_simpar").toString
+    val qdir = graft.io.FsUtil.scratchDir("graft_simpar")
     Seq((1L, textA), (2L, textA), (3L, textC), (4L, textA)).toDF("doc_id", "text")
       .coalesce(1).write.mode("overwrite").parquet(s"$qdir/documents.parquet")
     val batchSig = graft.SparkEntry.queries("q25_simhash")(spark, qdir)
@@ -468,7 +468,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("streaming dedup: duplicates across micro-batches drop within the watermark") {
     import spark.implicits._
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft_sdedup").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_sdedup")
     def batch(rows: Seq[(Long, String, String)]): Unit =
       rows.toDF("k", "ts_s", "payload")
         .selectExpr("k", "cast(ts_s as timestamp) as ts", "payload")
@@ -537,7 +537,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
       .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
       .limit(500)
-    val dir = java.nio.file.Files.createTempDirectory("graft_orc")
+    val dir = java.nio.file.Paths.get(graft.io.FsUtil.scratchDir("graft_orc"))
     li.write.mode("overwrite").orc(s"$dir/orc")
     val back = spark.read.orc(s"$dir/orc")
     assert(back.schema == li.schema) // ORC preserves types exactly
@@ -550,7 +550,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
       .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
       .limit(500)
-    val dir = java.nio.file.Files.createTempDirectory("graft_io")
+    val dir = java.nio.file.Paths.get(graft.io.FsUtil.scratchDir("graft_io"))
     li.write.mode("overwrite").option("header", "true").csv(s"$dir/csv")
     li.write.mode("overwrite").json(s"$dir/json")
     val fromCsv = spark.read.option("header", "true").option("inferSchema", "true")
@@ -590,7 +590,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val docs =
       Seq((1L, s"$shared u1 u2 u3"), (2L, s"x1 x2 $shared y1")) ++
         (100L to 117L).map(i => (i, s"p$i q$i $hot"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_q80").toString
+    val dir = graft.io.FsUtil.scratchDir("graft_q80")
     docs.toDF("doc_id", "text")
       .selectExpr("doc_id", "text", "'en' AS lang", "'t' AS source",
                   "length(text) AS n_chars")
@@ -662,7 +662,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // time-split into two arrival files: equal ts always lands in one file,
     // so per-key cross-trigger order stays (ts, event_id)
     val cut = raw.selectExpr("CAST(approx_percentile(ts_us, 0.5) AS BIGINT)").head.getLong(0)
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_tws_src").toString
+    val streamDir = graft.io.FsUtil.scratchDir("graft_tws_src")
     val fileCols = Seq("event_id", "ts", "user_id", "event_type", "value", "props").map(col)
     raw.filter(col("ts_us") <= cut).select(fileCols: _*).coalesce(1).write.parquet(s"$streamDir/a")
     val q = Streaming.billingAlertsStream(s2, streamDir + "/a", thresholdCents = 100000L)
@@ -703,10 +703,10 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     s2.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val dir = "/root/testdata/sf0.001"
-    val staged = java.nio.file.Files.createTempDirectory("graft_ssr_src")
+    val staged = java.nio.file.Paths.get(graft.io.FsUtil.scratchDir("graft_ssr_src"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/events.parquet"), staged.resolve("events.parquet"))
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ssr_ckpt").toString
+    val ckpt = graft.io.FsUtil.scratchDir("graft_ssr_ckpt")
     val q = Streaming.billingAlertsStream(s2, staged.toString, thresholdCents = 100000L)
       .writeStream.outputMode("append").format("memory").queryName("ssr_spec")
       .option("checkpointLocation", ckpt).start()
@@ -738,7 +738,7 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // early-emitted session uncontinuable by construction (any continuing
     // event would have ts <= end+gap <= wm1 < cut < batch-2 ts)
     val cut = raw.selectExpr("CAST(approx_percentile(ts_us, 0.5) AS BIGINT)").head.getLong(0)
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_timer_src").toString
+    val streamDir = graft.io.FsUtil.scratchDir("graft_timer_src")
     val fileCols = Seq("event_id", "ts", "user_id", "event_type", "value", "props").map(col)
     raw.filter(col("ts_us") <= cut).select(fileCols: _*).coalesce(1).write.parquet(s"$streamDir/a")
     val q = Streaming.sessionTimeoutStream(s2, streamDir + "/a", gapMinutes = 30)

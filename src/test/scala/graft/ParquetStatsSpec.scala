@@ -36,7 +36,7 @@ class ParquetStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def tmp(): String = {
-    val d = Files.createTempDirectory("graft_footerspec").toFile
+    val d = new java.io.File(graft.io.FsUtil.scratchDir("graft_footerspec"))
     dirs += d
     d.getPath
   }

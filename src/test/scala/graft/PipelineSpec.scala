@@ -25,7 +25,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private val base = Files.createTempDirectory("graft_pipeline_spec")
+  private val base = java.nio.file.Paths.get(graft.io.FsUtil.scratchDir("graft_pipeline_spec"))
   private def wavDir = base.resolve("wavs").toString
   private def outDir = base.resolve("out").toString
 

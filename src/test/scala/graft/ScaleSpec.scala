@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the 100 TB playbook in executable form. */
 class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private val warehouse = java.nio.file.Files.createTempDirectory("graft_wh")
+  private val warehouse = java.nio.file.Paths.get(graft.io.FsUtil.scratchDir("graft_wh"))
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -196,7 +196,7 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("partitioned writes prune partitions at the scan (PartitionFilters)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").resolve("orders").toString
+    val dir = java.nio.file.Paths.get(graft.io.FsUtil.scratchDir("graft_part")).resolve("orders").toString
     spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
       .write.mode("overwrite").partitionBy("o_orderstatus").parquet(dir)
     // directory layout: one subdir per status

@@ -26,7 +26,7 @@ class SqlDmlSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** Fresh catalog table under a temp warehouse; returns (sqlName, dir). */
   private def freshTable(tag: String): (String, String) = {
-    val wh = java.nio.file.Files.createTempDirectory(s"graft_sqldml_$tag").toString
+    val wh = graft.io.FsUtil.scratchDir(s"graft_sqldml_$tag")
     spark.conf.set("spark.sql.catalog.gt", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gt.warehouse", wh)
     spark.sql(s"CREATE NAMESPACE IF NOT EXISTS gt.db")
@@ -155,7 +155,7 @@ class SqlDmlSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("DML on a partitioned catalog table keeps the hive layout (scans stay native)") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_sqldml_pdml").toString
+    val wh = graft.io.FsUtil.scratchDir("graft_sqldml_pdml")
     spark.conf.set("spark.sql.catalog.gt", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gt.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS gt.db")
@@ -234,7 +234,7 @@ class SqlDmlSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("nested-field SET targets are refused loudly, not silently dropped") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_sqldml_nested").toString
+    val wh = graft.io.FsUtil.scratchDir("graft_sqldml_nested")
     spark.conf.set("spark.sql.catalog.gt", classOf[graft.sources.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gt.warehouse", wh)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS gt.db")

@@ -20,7 +20,7 @@ class TxnLogSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   private def freshTable(): String =
-    java.nio.file.Files.createTempDirectory("graft_txnspec").toString
+    graft.io.FsUtil.scratchDir("graft_txnspec")
 
   test("commits are linear versions; time travel reads exactly the prefix") {
     val dir = freshTable()
@@ -1392,7 +1392,7 @@ class TxnLogSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.functions._
     val T = graft.io.TxnLog
     val C = graft.io.ResultCache
-    val tmp = java.nio.file.Files.createTempDirectory("graft_rcache")
+    val tmp = java.nio.file.Paths.get(graft.io.FsUtil.scratchDir("graft_rcache"))
     val dir = tmp.resolve("tbl").toString
     val cache = tmp.resolve("cache").toString
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(cache))
@@ -1611,5 +1611,152 @@ class TxnLogSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the table refills normally afterward
     T.commit(Seq((9L, "z")).toDF("k", "s"), dir)
     assert(T.read(spark, dir).count() == 1L)
+  }
+
+  // ---------------------------------------------------------------------
+  // ONE COMMIT PROTOCOL: every snapshot-derived writer runs the same
+  // exact-slot loop, so every one reaches the fence, survives a lost CAS
+  // and leaves no staged file behind.
+  // ---------------------------------------------------------------------
+
+  /** Every data file some manifest of `dir` lists (`+`, `-` and `V `
+    * body prefixes stripped), as dataFileCensus paths. */
+  private def referencedFiles(dir: String): Set[String] = {
+    val ld = java.nio.file.Paths.get(dir, "_txnlog")
+    val s = java.nio.file.Files.list(ld)
+    val ms = try s.toArray.map(_.toString).filter(_.endsWith(".manifest")) finally s.close()
+    ms.toSet.flatMap { (m: String) =>
+      new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(m)), "UTF-8")
+        .split("\n").drop(1).filter(_.nonEmpty)
+        .map(l => java.nio.file.Paths.get(dir, l.stripPrefix("V ").stripPrefix("+")
+          .stripPrefix("-")).toString)
+    }
+  }
+
+  /** k 1-10 and k 11-20 (x = 10k) in two flat files. */
+  private def twoFileTable(): String = {
+    import spark.implicits._
+    val dir = freshTable()
+    graft.io.TxnLog.commit((1L to 10L).map(k => (k, k * 10L)).toDF("k", "x").coalesce(1), dir)
+    graft.io.TxnLog.commit((11L to 20L).map(k => (k, k * 10L)).toDF("k", "x").coalesce(1), dir)
+    dir
+  }
+
+  private def keyed(dir: String): Map[Long, Long] =
+    graft.io.TxnLog.read(spark, dir).select("k", "x").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  {
+    val T = graft.io.TxnLog
+    val all = (1L to 20L).map(k => k -> k * 10L).toMap + (100L -> 1000L)
+    def src(): org.apache.spark.sql.DataFrame = {
+      import spark.implicits._
+      Seq((3L, -3L), (99L, 990L)).toDF("k", "x")
+    }
+    // (writer, setup beyond the two-file table, the write, the marker it
+    // committed at the parent, its effect once the injected append landed)
+    val writers: Seq[(String, String => Unit, String => Long, String, String => Unit)] = Seq(
+      ("compact", _ => (), T.compact(spark, _, numFiles = 1), "R noop", { dir =>
+        assert(keyed(dir) == all)
+        assert(T.fileScanPlan(dir)._2.size == 1)
+      }),
+      ("optimizeZorder", _ => (), T.optimizeZorder(spark, _, "k", "x", 2, Seq("k")), "R noop",
+        { dir =>
+          assert(keyed(dir) == all)
+          assert(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "_txnlog",
+            f"v${T.currentVersion(dir)}%05d.stats")))
+        }),
+      ("optimizeClustered, first pass", T.clusterBy(_, "k", "x"),
+        T.optimizeClustered(spark, _, 2), "R noop", { dir =>
+          assert(keyed(dir) == all)
+          assert(T.clusteredFiles(dir) == T.fileScanPlan(dir)._2.map(
+            _.stripPrefix(dir + "/")).toSet)
+        }),
+      ("optimizeClustered, incremental pass", { dir =>
+        T.clusterBy(dir, "k", "x")
+        T.optimizeClustered(spark, dir, 2)
+        T.compact(spark, dir) // its file is unclustered: the pass has a candidate
+      }, T.optimizeClustered(spark, _, 1), "X noop", { dir =>
+        assert(keyed(dir) == all)
+        assert(T.fileScanPlan(dir)._2.map(_.stripPrefix(dir + "/")).toSet
+          .subsetOf(T.clusteredFiles(dir)), "the injected append was not clustered")
+      }),
+      ("compactSmall", _ => (), T.compactSmall(spark, _, 1L << 20), "X noop", { dir =>
+        assert(keyed(dir) == all)
+        assert(T.fileScanPlan(dir)._2.size == 1, "the injected small file was not packed")
+      }),
+      ("deleteWhere", _ => (),
+        T.deleteWhere(spark, _, org.apache.spark.sql.functions.col("k") <= 3L), "X",
+        dir => assert(keyed(dir) == all -- Seq(1L, 2L, 3L))),
+      ("updateWhere", _ => (), T.updateWhere(spark, _,
+        Seq("x" -> org.apache.spark.sql.functions.lit(-1L)),
+        org.apache.spark.sql.functions.col("k") === 2L), "X",
+        dir => assert(keyed(dir) == all + (2L -> -1L))),
+      ("deleteVector", _ => (), T.deleteVector(spark, _, "k = 2", Seq("k")), "D k",
+        dir => assert(keyed(dir) == all - 2L)),
+      ("update", _ => (), T.update(spark, _, "k = 2", Seq("x" -> "-1L"), Seq("k")), "U k",
+        dir => assert(keyed(dir) == all + (2L -> -1L))),
+      ("merge", _ => (), T.merge(spark, _, src(), Seq("k")), "X",
+        dir => assert(keyed(dir) == all + (3L -> -3L) + (99L -> 990L))),
+      ("mergeInto", _ => (), T.mergeInto(spark, _, src(), Seq("k"),
+        T.MergeActions(updateSet = Some(Seq("x" -> "src_x")))), "X",
+        dir => assert(keyed(dir) == all + (3L -> -3L) + (99L -> 990L))))
+
+    writers.foreach { case (name, setup, write, marker, effect) =>
+      test(s"lost CAS: $name re-derives over a blind append and leaves no staged file") {
+        import spark.implicits._
+        val dir = twoFileTable()
+        setup(dir)
+        val base = T.currentVersion(dir)
+        var fired = false
+        val v = try {
+          fenceOnce {
+            fired = true
+            T.commit(Seq((100L, 1000L)).toDF("k", "x").coalesce(1), dir)
+          }
+          write(dir)
+        } finally T.claimFence = () => ()
+        assert(fired, s"$name never reached the claim fence")
+        assert(v == base + 2 && T.currentVersion(dir) == base + 2,
+          s"$name won v$v over base v$base")
+        assert(manifestBody(dir, base + 1).head == "A")
+        assert(manifestBody(dir, v).head == marker)
+        effect(dir)
+        assert(dataFileCensus(dir) == referencedFiles(dir),
+          s"$name left unreferenced data files: " +
+            (dataFileCensus(dir) -- referencedFiles(dir)).mkString(", "))
+      }
+    }
+
+    // With a pending delete vector each of these takes its replace
+    // fallback; the injected update rewrites key 3, which every write
+    // below also targets, so Abort must throw and leave only the winner.
+    val fallbacks: Seq[(String, String => Long)] = Seq(
+      ("merge", T.merge(spark, _, src(), Seq("k"), isolation = T.Isolation.Abort)),
+      ("mergeInto", T.mergeInto(spark, _, src(), Seq("k"),
+        T.MergeActions(updateSet = Some(Seq("x" -> "src_x"))), isolation = T.Isolation.Abort)),
+      ("deleteWhere", T.deleteWhere(spark, _, org.apache.spark.sql.functions.col("k") === 3L,
+        isolation = T.Isolation.Abort)),
+      ("updateWhere", T.updateWhere(spark, _,
+        Seq("x" -> org.apache.spark.sql.functions.lit(-1L)),
+        org.apache.spark.sql.functions.col("k") === 3L, isolation = T.Isolation.Abort)))
+
+    fallbacks.foreach { case (name, write) =>
+      test(s"$name over a pending delete vector keeps Isolation.Abort on the replace fallback") {
+        val dir = twoFileTable()
+        T.deleteVector(spark, dir, "k = 5", Seq("k"))
+        intercept[T.ConcurrentWriteException] {
+          try {
+            fenceOnce(T.update(spark, dir, "k = 3", Seq("x" -> "0L"), Seq("k")))
+            write(dir)
+          } finally T.claimFence = () => ()
+        }
+        val m = keyed(dir)
+        assert(m(3L) == 0L, "the winner's update must survive")
+        assert(!m.contains(5L) && !m.contains(99L) && m(2L) == 20L,
+          "the aborted write must leave no trace")
+        assert(dataFileCensus(dir) == referencedFiles(dir), "the aborted stage was kept")
+      }
+    }
   }
 }

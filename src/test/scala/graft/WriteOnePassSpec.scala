@@ -25,7 +25,7 @@ class WriteOnePassSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_wop").toString
+    graft.io.FsUtil.scratchDir("graft_wop")
 
   private def table(dir: String): Unit = {
     import spark.implicits._

@@ -19,7 +19,7 @@ class AvroSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft_avrospec").toString
+    graft.io.FsUtil.scratchDir("graft_avrospec")
 
   private val wideSchema = StructType(Seq(
     StructField("id", LongType, nullable = false),

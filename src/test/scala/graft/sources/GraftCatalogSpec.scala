@@ -24,7 +24,7 @@ class GraftCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private lazy val wh = {
-    val d = java.nio.file.Files.createTempDirectory("graft_catspec").toString
+    val d = graft.io.FsUtil.scratchDir("graft_catspec")
     spark.conf.set("spark.sql.catalog.g.warehouse", d)
     spark.sql("CREATE NAMESPACE IF NOT EXISTS g.db")
     d

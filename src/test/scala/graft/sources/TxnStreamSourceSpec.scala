@@ -23,7 +23,7 @@ class TxnStreamSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = spark.stop()
 
   private def freshTable(): String =
-    java.nio.file.Files.createTempDirectory("graft_txnstream").toString
+    graft.io.FsUtil.scratchDir("graft_txnstream")
 
   private def stream(dir: String, opts: Map[String, String] = Map.empty): DataFrame =
     opts.foldLeft(spark.readStream.format(classOf[TxnStreamSource].getName)
@@ -81,7 +81,7 @@ class TxnStreamSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("checkpoint restart resumes at the committed version, no duplicates") {
     val dir = freshTable()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_txnstream_ck").toString
+    val ckpt = graft.io.FsUtil.scratchDir("graft_txnstream_ck")
     import spark.implicits._
     TxnLog.commit(Seq(1L).toDF("v").coalesce(1), dir)
     TxnLog.commit(Seq(2L).toDF("v").coalesce(1), dir)
@@ -247,7 +247,7 @@ class TxnStreamSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("admission control replays exactly-once across a checkpoint restart") {
     val dir = freshTable()
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_adm_ckpt").toString
+    val ckpt = graft.io.FsUtil.scratchDir("graft_adm_ckpt")
     import spark.implicits._
     (1 to 4).foreach(i => TxnLog.commit(Seq(i.toLong).toDF("v").coalesce(1), dir))
     val run1 = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Long])]

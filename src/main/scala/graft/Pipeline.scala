@@ -6,6 +6,15 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Observation, SparkSessi
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.unsafe.types.UTF8String
+
 import graft.io.WavCodec
 import graft.ops.{Dsp, Inference, Segmentation}
 
@@ -205,24 +214,63 @@ object Pipeline {
 
   /** Writes each row's segment WAV into `outDir`; the file's path, or null
     * when the write fails. */
-  private def wavPath(outDir: String): Column = {
-    val writeUdf = udf { (name: String, startMs: Long, endMs: Long,
-                          samples: Array[Float], rate: Int) =>
-      val stem = name.lastIndexOf('.') match {
-        case -1 => name
-        case i  => name.substring(0, i)
+  private def wavPath(outDir: String): Column =
+    ColumnBridge.column(WavExport(outDir, Seq(col("originalName"), col("startMs"),
+      col("endMs"), col("samples"), col("frameRate")).map(ColumnBridge.expression)))
+
+  /** The export of [[wavPath]] as one Catalyst expression over (name,
+    * startMs, endMs, samples, rate). A Scala UDF would deserialize the
+    * ARRAY<FLOAT> argument element by element, boxing every sample; this
+    * copies it out of the row as one primitive array. It is not
+    * deterministic, which stops Catalyst from pushing the isNotNull filter
+    * below the projection and evaluating the write twice per row. A null
+    * time or rate gives null. */
+  private[graft] final case class WavExport(outDir: String, children: Seq[Expression])
+      extends Expression {
+    override lazy val deterministic: Boolean = false
+    override def nullable: Boolean = true
+    override def dataType: DataType = StringType
+
+    def write(name: UTF8String, startMs: Long, endMs: Long, samples: ArrayData,
+              rate: Int): UTF8String = {
+      val n = name.toString
+      val stem = n.lastIndexOf('.') match {
+        case -1 => n
+        case i  => n.substring(0, i)
       }
       val fileName = f"${stem}_${startMs / 1000}%04ds_${endMs / 1000}%04ds.wav"
       try {
         val p = Paths.get(outDir, fileName)
-        Files.write(p, WavCodec.encodeMono16(samples, rate))
-        p.toString
+        Files.write(p, WavCodec.encodeMono16(samples.toFloatArray(), rate))
+        UTF8String.fromString(p.toString)
       } catch { case _: Exception => null }
-    }.asNondeterministic() // side-effecting: stop Catalyst from pushing the
-                           // isNotNull filter below the projection and
-                           // evaluating the write twice per row
-    writeUdf(col("originalName"), col("startMs"), col("endMs"),
-             col("samples"), col("frameRate"))
+    }
+
+    override def eval(input: InternalRow): Any = {
+      val Seq(name, start, end, samples, rate) = children.map(_.eval(input))
+      if (start == null || end == null || rate == null) null
+      else write(name.asInstanceOf[UTF8String], start.asInstanceOf[Long],
+        end.asInstanceOf[Long], samples.asInstanceOf[ArrayData], rate.asInstanceOf[Int])
+    }
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val self = ctx.addReferenceObj("wavExport", this)
+      val Seq(name, start, end, samples, rate) = children.map(_.genCode(ctx))
+      def orNull(e: ExprCode) = s"${e.isNull} ? null : ${e.value}"
+      ev.copy(code = code"""
+        |${name.code}
+        |${start.code}
+        |${end.code}
+        |${samples.code}
+        |${rate.code}
+        |UTF8String ${ev.value} = ${start.isNull} || ${end.isNull} || ${rate.isNull} ? null :
+        |  $self.write(${orNull(name)}, ${start.value}, ${end.value}, ${orNull(samples)},
+        |    ${rate.value});
+        |boolean ${ev.isNull} = ${ev.value} == null;""".stripMargin)
+    }
+
+    override protected def withNewChildrenInternal(
+        newChildren: IndexedSeq[Expression]): WavExport = copy(children = newChildren)
   }
 
   /** O23-O24: the metadata table — project the 7 reference columns plus a

@@ -54,17 +54,17 @@ object LegacyAudio {
   private def pcmBeToFloat(data: Array[Byte], bits: Int): Array[Float] = {
     val db = ByteBuffer.wrap(data).order(ByteOrder.BIG_ENDIAN)
     bits match {
-      case 8 => data.map(b => b / 128.0f) // SIGNED (unlike WAV's PCM8)
+      case 8 => WavCodec.floats(data.length)(i => data(i) / 128.0f) // SIGNED (unlike WAV's PCM8)
       case 16 =>
-        Array.tabulate(data.length / 2)(i => db.getShort(i * 2) / 32768.0f)
+        WavCodec.floats(data.length / 2)(i => db.getShort(i * 2) / 32768.0f)
       case 24 =>
-        Array.tabulate(data.length / 3) { i =>
+        WavCodec.floats(data.length / 3) { i =>
           val v = (data(i * 3) << 16) | ((data(i * 3 + 1) & 0xff) << 8) |
             (data(i * 3 + 2) & 0xff)
           v / 8388608.0f
         }
       case 32 =>
-        Array.tabulate(data.length / 4)(i =>
+        WavCodec.floats(data.length / 4)(i =>
           (db.getInt(i * 4) / 2147483648.0).toFloat)
       case other =>
         throw new IllegalArgumentException(s"PCM width $other unsupported")
@@ -73,8 +73,8 @@ object LegacyAudio {
 
   /** G.711 byte expansion → float, shared by all three containers. */
   private def g711ToFloat(data: Array[Byte], aLaw: Boolean): Array[Float] =
-    if (aLaw) data.map(b => G711Codec.aLawDecodeSample(b) / 32768.0f)
-    else data.map(b => G711Codec.muLawDecodeSample(b) / 32768.0f)
+    if (aLaw) WavCodec.floats(data.length)(i => G711Codec.aLawDecodeSample(data(i)) / 32768.0f)
+    else WavCodec.floats(data.length)(i => G711Codec.muLawDecodeSample(data(i)) / 32768.0f)
 
   /** PCM16 sample bytes in either order — the shared encoder tail. */
   private def writePcm16(out: ByteArrayOutputStream, pcm: Array[Short],
@@ -175,11 +175,11 @@ object LegacyAudio {
         case "sowt" => // byte-swapped PCM16 (little-endian), OS X native
           require(bits == 16, s"sowt requires 16-bit, got $bits")
           val ldb = ByteBuffer.wrap(data).order(ByteOrder.LITTLE_ENDIAN)
-          Array.tabulate(data.length / 2)(i => ldb.getShort(i * 2) / 32768.0f)
+          WavCodec.floats(data.length / 2)(i => ldb.getShort(i * 2) / 32768.0f)
         case "fl32" | "FL32" =>
           require(bits == 32, s"fl32 requires 32-bit, got $bits")
           val db = ByteBuffer.wrap(data).order(ByteOrder.BIG_ENDIAN)
-          Array.tabulate(data.length / 4)(i => db.getFloat(i * 4))
+          WavCodec.floats(data.length / 4)(i => db.getFloat(i * 4))
         case "ulaw" | "ULAW" => g711ToFloat(data, aLaw = false)
         case "alaw" | "ALAW" => g711ToFloat(data, aLaw = true)
         case other =>
@@ -252,7 +252,7 @@ object LegacyAudio {
         case 5 => pcmBeToFloat(data, 32)
         case 6 =>
           val db = ByteBuffer.wrap(data).order(ByteOrder.BIG_ENDIAN)
-          Array.tabulate(len / 4)(i => db.getFloat(i * 4))
+          WavCodec.floats(len / 4)(i => db.getFloat(i * 4))
         case 27 => g711ToFloat(data, aLaw = true)
         case other => throw new IllegalArgumentException(
           s"AU encoding $other (${EncodingNames.getOrElse(other, "unknown")}) unsupported")
@@ -335,7 +335,7 @@ object LegacyAudio {
               s"SPHERE sample_byte_format '$other' unsupported for 2-byte pcm")
           }
           val db = ByteBuffer.wrap(data).order(order)
-          Array.tabulate(data.length / 2)(i => db.getShort(i * 2) / 32768.0f)
+          WavCodec.floats(data.length / 2)(i => db.getShort(i * 2) / 32768.0f)
         case (c, 1) if c.startsWith("ulaw") || c.startsWith("mu-law") =>
           g711ToFloat(data, aLaw = false)
         case (c, 1) if c.startsWith("pcm") => // 1-byte pcm is signed

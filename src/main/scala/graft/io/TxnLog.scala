@@ -1052,10 +1052,6 @@ object TxnLog {
     }
   }
 
-  /** Visible data file set (relative paths) at version `upto`. */
-  private def visibleAt(dir: String, upto: Long): Vector[String] =
-    snapshotAt(dir, upto).files
-
   /** Oldest version whose data files are still on disk (advanced by
     * vacuum); reads below it fail loudly instead of hitting deleted
     * files mid-scan. */

@@ -41,7 +41,7 @@ object WavCodec {
         bytes(2) == 'a' && bytes(3) == 'C') {
       val (info, ints) = FlacCodec.decode(bytes)
       val scale = (1 << (info.bps - 1)).toFloat
-      return Decoded(ints.map(_ / scale), info.channels, info.sampleRate)
+      return Decoded(floats(ints.length)(i => ints(i) / scale), info.channels, info.sampleRate)
     }
     // the legacy speech-corpus containers (LegacyAudio): AIFF/AIFC
     // ("FORM"), Sun/NeXT AU (".snd"), NIST SPHERE ("NIST") — the
@@ -86,39 +86,54 @@ object WavCodec {
     require(channels > 0 && rate > 0, s"bad fmt: channels=$channels rate=$rate")
     val db = ByteBuffer.wrap(data).order(ByteOrder.LITTLE_ENDIAN)
     val samples: Array[Float] = (fmtCode, bits) match {
-      case (1, 16) =>
+      case (1, 16) => // the hot lane: one primitive loop over the LE byte pairs
         val n = data.length / 2
-        Array.tabulate(n)(i => db.getShort(i * 2) / 32768.0f)
+        val out = new Array[Float](n)
+        var i = 0
+        while (i < n) {
+          out(i) = ((data(2 * i) & 0xff) | (data(2 * i + 1) << 8)).toShort / 32768.0f
+          i += 1
+        }
+        out
       case (1, 8) => // PCM8 is unsigned
-        Array.tabulate(data.length)(i => ((data(i) & 0xff) - 128) / 128.0f)
+        floats(data.length)(i => ((data(i) & 0xff) - 128) / 128.0f)
       case (1, 24) =>
         // PCM24: 3-byte little-endian signed — the studio capture width.
         // The high byte sign-extends through the shift (byte -> int)
-        val n = data.length / 3
-        Array.tabulate(n) { i =>
+        floats(data.length / 3) { i =>
           val v = (data(i * 3) & 0xff) | ((data(i * 3 + 1) & 0xff) << 8) |
             (data(i * 3 + 2) << 16)
           v / 8388608.0f
         }
       case (1, 32) =>
-        val n = data.length / 4
-        Array.tabulate(n)(i => (db.getInt(i * 4) / 2147483648.0).toFloat)
+        floats(data.length / 4)(i => (db.getInt(i * 4) / 2147483648.0).toFloat)
       case (3, 32) =>
-        val n = data.length / 4
-        Array.tabulate(n)(i => db.getFloat(i * 4))
+        floats(data.length / 4)(i => db.getFloat(i * 4))
       case (7, 8) => // G.711 µ-law: per-byte integer expansion
-        data.map(b => G711Codec.muLawDecodeSample(b) / 32768.0f)
+        floats(data.length)(i => G711Codec.muLawDecodeSample(data(i)) / 32768.0f)
       case (6, 8) => // G.711 A-law
-        data.map(b => G711Codec.aLawDecodeSample(b) / 32768.0f)
+        floats(data.length)(i => G711Codec.aLawDecodeSample(data(i)) / 32768.0f)
       case (0x11, 4) =>
         // IMA ADPCM rides the compressed-codec path (AdpcmCodec owns the
         // block layer; mono is its documented scope) — the transparent
         // dispatch pydub/ffmpeg gives the reference for "other formats"
         require(channels == 1, s"ADPCM decode is mono-scoped, got $channels channels")
-        AdpcmCodec.decodeWav(bytes)._2.map(_ / 32768.0f)
+        val pcm = AdpcmCodec.decodeWav(bytes)._2
+        floats(pcm.length)(i => pcm(i) / 32768.0f)
       case other => throw new IllegalArgumentException(s"unsupported wav format $other")
     }
     Decoded(samples, channels, rate)
+  }
+
+  /** `n` decoded samples, `sample(i)` each, filled by one primitive loop:
+    * the sample lane of every decode branch here and in [[LegacyAudio]].
+    * `Array.tabulate` and `Array.map` would box each sample through their
+    * generic element type. */
+  private[io] def floats(n: Int)(sample: Int => Float): Array[Float] = {
+    val out = new Array[Float](n)
+    var i = 0
+    while (i < n) { out(i) = sample(i); i += 1 }
+    out
   }
 
   /** Encode mono float PCM to PCM16 WAV bytes (clamping to full scale). */

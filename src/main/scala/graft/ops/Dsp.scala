@@ -156,51 +156,58 @@ object Dsp {
     n.toDouble / samples.length * 100.0
   }
 
-  /** Single-pole RC low-pass filter (pydub low_pass_filter semantics). */
-  def lowPass(samples: Array[Float], cutoffHz: Double, rate: Int): Array[Float] = {
-    if (samples.isEmpty) return samples
-    val rc = 1.0 / (2 * math.Pi * cutoffHz)
-    val dt = 1.0 / rate
-    val alpha = (dt / (rc + dt)).toFloat
-    val out = new Array[Float](samples.length)
-    out(0) = samples(0) // pydub seeds the recursion with the raw first sample
-    var i = 1
-    while (i < samples.length) {
-      out(i) = out(i - 1) + alpha * (samples(i) - out(i - 1))
-      i += 1
-    }
-    out
-  }
-
-  /** Single-pole RC high-pass filter (pydub high_pass_filter semantics). */
-  def highPass(samples: Array[Float], cutoffHz: Double, rate: Int): Array[Float] = {
-    if (samples.isEmpty) return samples
-    val rc = 1.0 / (2 * math.Pi * cutoffHz)
-    val dt = 1.0 / rate
-    val alpha = (rc / (rc + dt)).toFloat
-    val out = new Array[Float](samples.length)
-    out(0) = samples(0)
-    var i = 1
-    while (i < samples.length) {
-      out(i) = alpha * (out(i - 1) + samples(i) - samples(i - 1))
-      i += 1
-    }
-    out
-  }
-
   /** Music-ratio heuristic (O12, pa.py:191-210): band-limit to speech range
     * (HP 100 Hz → LP 7.5 kHz), then compare out-of-band (bass < 80 Hz +
     * treble > 8 kHz) energy against in-band energy, with the reference's
     * numeric-stability floors preserved verbatim (total_rms >= 1,
     * speech_energy >= 1 — int16 scale). Errors map to the -1.0 sentinel at
-    * the caller. */
+    * the caller.
+    *
+    * One pass with no intermediate array. The four filters are pydub's
+    * single-pole RC low_pass_filter / high_pass_filter, each seeded with
+    * its input's first sample: HP 100 Hz → LP 7.5 kHz gives the
+    * band-limited signal `c`, and LP 80 Hz and HP 8 kHz of `c` give bass and
+    * treble. The loop carries the four filter states and the three
+    * int16-scale sums of squares, and updates each with the float
+    * expression, in the order, of the filter-by-filter composition, so the
+    * result is bit-identical to it (DspSpec keeps that composition as the
+    * reference). */
   def musicRatio(samples: Array[Float], rate: Int): Double = {
-    val calc = lowPass(highPass(samples, 100.0, rate), 7500.0, rate)
-    var totalRms = rmsInt16(calc)
-    if (totalRms < 1) totalRms = 1
-    val bassRms = rmsInt16(lowPass(calc, 80.0, rate))
-    val trebleRms = rmsInt16(highPass(calc, 8000.0, rate))
-    val nonSpeech = bassRms + trebleRms
+    val n = samples.length
+    if (n == 0) return 0.0 // every RMS is 0: 0 / max(1, 1 - 0)
+    def rc(cutoffHz: Double) = 1.0 / (2 * math.Pi * cutoffHz)
+    val dt = 1.0 / rate
+    def lowAlpha(cutoffHz: Double) = (dt / (rc(cutoffHz) + dt)).toFloat
+    def highAlpha(cutoffHz: Double) = (rc(cutoffHz) / (rc(cutoffHz) + dt)).toFloat
+    val aBand = highAlpha(100.0)
+    val aSpeech = lowAlpha(7500.0)
+    val aBass = lowAlpha(80.0)
+    val aTreble = highAlpha(8000.0)
+    var x = samples(0) // previous input sample
+    var h = x          // HP 100 Hz of the input
+    var c = h          // LP 7.5 kHz of h
+    var bass = c       // LP 80 Hz of c
+    var treble = c     // HP 8 kHz of c
+    def sq(v: Float) = { val d = v.toDouble * 32767.0; d * d }
+    var cAcc = sq(c)
+    var bassAcc = cAcc
+    var trebleAcc = cAcc
+    var i = 1
+    while (i < n) {
+      val xi = samples(i)
+      h = aBand * (h + xi - x)
+      val ci = c + aSpeech * (h - c)
+      bass = bass + aBass * (ci - bass)
+      treble = aTreble * (treble + ci - c)
+      x = xi
+      c = ci
+      cAcc += sq(c)
+      bassAcc += sq(bass)
+      trebleAcc += sq(treble)
+      i += 1
+    }
+    val totalRms = math.max(1.0, math.sqrt(cAcc / n))
+    val nonSpeech = math.sqrt(bassAcc / n) + math.sqrt(trebleAcc / n)
     val speech = math.max(1.0, totalRms - nonSpeech)
     nonSpeech / speech
   }

@@ -41,26 +41,60 @@ object Segmentation {
   /** Runs of consecutive silent window starts for start positions
     * [0, untilMs), as inclusive (first, last) pairs. `e` holds the file's
     * per-ms energies ([[msEnergies]]); `totalLen` is the sample count,
-    * clamping the final windows. Each window sums its per-ms energies left
-    * to right. */
+    * clamping the final windows.
+    *
+    * A window is silent when its left-to-right energy sum ([[windowSum]])
+    * is quiet; that sum is the only definition. Quietness is monotone in
+    * the sum, so a full window is decided in O(1) from a sliding sum
+    * (`+ e(s + w - 1) - e(s - 1)`) whenever the sliding sum's error bound
+    * cannot flip the decision: `quiet(sum + slack)` proves silent,
+    * `!quiet(sum - slack)` proves loud. The bound covers both the sliding
+    * updates (two roundings each) and the exact sum's own summation error,
+    * each with a factor-2 margin, and the sum is recomputed exactly every
+    * [[ResyncSteps]] steps, so the slack stays near 1e-12 of the energies
+    * seen since. An undecided window, a clamped tail window, and one where
+    * the sliding sum is not finite (NaN or infinite energies) are summed
+    * exactly. */
   private def silentStartRuns(e: Array[Double], spms: Int, totalLen: Long, untilMs: Int,
                               minSilenceLenMs: Int,
                               silenceThreshDb: Double): Seq[(Int, Int)] = {
+    val w = minSilenceLenMs
+    val full = w.toLong * spms // samples in an unclamped window
+    def quiet(acc: Double, n: Long): Boolean = Dsp.dbfs(math.sqrt(acc / n)) < silenceThreshDb
+    def exactSilent(s: Int): Boolean = {
+      val a = s.toLong * spms
+      val b = math.min((s + w).toLong * spms, totalLen)
+      b - a <= 0 || quiet(windowSum(e, s, math.min(((b + spms - 1) / spms).toInt, e.length)), b - a)
+    }
+    val gamma = w * RoundOff // bounds the relative error of a w-term exact sum
+    var sum = 0.0   // sliding sum of window s - 1, unless a resync is due
+    var err = 0.0   // bound on |sum - the real sum of its window's energies|
+    var sinceSync = ResyncSteps // steps since sum was exact; ResyncSteps = resync now
     val runs = Seq.newBuilder[(Int, Int)]
     var runStart = -1
     var prev = -2
     var s = 0
     while (s < untilMs) {
-      val a = s.toLong * spms
-      val b = math.min((s + minSilenceLenMs).toLong * spms, totalLen)
-      val n = (b - a).toInt
-      val silent = if (n <= 0) true else {
-        val mEnd = math.min(((b + spms - 1) / spms).toInt, e.length)
-        var acc = 0.0
-        var m = s
-        while (m < mEnd) { acc += e(m); m += 1 }
-        Dsp.dbfs(math.sqrt(acc / n)) < silenceThreshDb
-      }
+      val silent =
+        if (w <= 0 || (s + w).toLong * spms > totalLen) { sinceSync = ResyncSteps; exactSilent(s) }
+        else {
+          if (sinceSync < ResyncSteps) {
+            val t = sum + e(s + w - 1)
+            sum = t - e(s - 1)
+            err += RoundOff * (math.abs(t) + math.abs(sum))
+            sinceSync += 1
+          } else {
+            sum = windowSum(e, s, s + w)
+            err = gamma * sum
+            sinceSync = 0
+          }
+          val slack = err + gamma * (math.abs(sum) + err)
+          val hi = sum + slack
+          if (!(hi < Double.PositiveInfinity)) { sinceSync = ResyncSteps; exactSilent(s) }
+          else if (quiet(hi, full)) true
+          else if (!quiet(math.max(sum - slack, 0.0), full)) false
+          else exactSilent(s)
+        }
       if (silent) {
         if (runStart < 0) { runStart = s; prev = s }
         else if (s == prev + 1) prev = s
@@ -70,6 +104,19 @@ object Segmentation {
     }
     if (runStart >= 0) runs += ((runStart, prev))
     runs.result()
+  }
+
+  /** Twice the unit roundoff of a double: the error bounds above carry a
+    * factor-2 margin over the textbook ones. */
+  private val RoundOff = math.pow(2, -52)
+  private val ResyncSteps = 1024
+
+  /** e(from) + … + e(until - 1), left to right: the window energy. */
+  private def windowSum(e: Array[Double], from: Int, until: Int): Double = {
+    var acc = 0.0
+    var m = from
+    while (m < until) { acc += e(m); m += 1 }
+    acc
   }
 
   /** Non-silent complement of silent ranges within [0, durationMs). */
@@ -89,9 +136,10 @@ object Segmentation {
     * is strictly below the threshold; contiguous silent window starts merge
     * into silent ranges ([start, lastStart + window]); non-silent = the
     * complement within [0, durationMs]. Window energies come from the
-    * canonical per-ms energies (see msEnergies) — the scan is
-    * O(durationMs * window), with the window in ms units (300 adds per
-    * position), which stays cheap at any file length. */
+    * canonical per-ms energies (see msEnergies); the scan slides one
+    * window sum along them, so it is O(durationMs) plus an exact re-sum of
+    * a window every 1024 steps and wherever the sliding sum is too close to
+    * the threshold to decide (see silentStartRuns). */
   def detectNonSilent(samples: Array[Float], rate: Int,
                       minSilenceLenMs: Int = MinSilenceLenMs,
                       silenceThreshDb: Double = SilenceThresholdDb): Seq[Interval] = {

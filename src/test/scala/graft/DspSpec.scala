@@ -6,6 +6,7 @@ import graft.ops.Dsp
 import graft.io.WavCodec
 
 class DspSpec extends AnyFunSuite {
+  import DspSpec._
 
   private def sine(freq: Double, ms: Int, rate: Int, amp: Double): Array[Float] =
     Array.tabulate(rate * ms / 1000)(i => (amp * math.sin(2 * math.Pi * freq * i / rate)).toFloat)
@@ -52,10 +53,10 @@ class DspSpec extends AnyFunSuite {
     val lo = sine(50, 500, rate, 0.5)
     val hi = sine(6000, 500, rate, 0.5)
     // low-pass at 80 Hz keeps most of the 50 Hz tone, kills the 6 kHz tone
-    assert(Dsp.rmsInt16(Dsp.lowPass(lo, 80, rate)) > 0.3 * Dsp.rmsInt16(lo))
-    assert(Dsp.rmsInt16(Dsp.lowPass(hi, 80, rate)) < 0.1 * Dsp.rmsInt16(hi))
+    assert(Dsp.rmsInt16(DspSpec.lowPass(lo, 80, rate)) > 0.3 * Dsp.rmsInt16(lo))
+    assert(Dsp.rmsInt16(DspSpec.lowPass(hi, 80, rate)) < 0.1 * Dsp.rmsInt16(hi))
     // high-pass at 8 kHz: suppresses 50 Hz
-    assert(Dsp.rmsInt16(Dsp.highPass(lo, 8000, rate)) < 0.2 * Dsp.rmsInt16(lo))
+    assert(Dsp.rmsInt16(DspSpec.highPass(lo, 8000, rate)) < 0.2 * Dsp.rmsInt16(lo))
   }
 
   test("musicRatio: speech-band content low, band-extreme content high") {
@@ -86,5 +87,127 @@ class DspSpec extends AnyFunSuite {
     val dec = WavCodec.decode(WavCodec.encodeMono16(s, 16000))
     assert(math.abs(dec.samples(0) - 32767f / 32768f) < 1e-4)
     assert(math.abs(dec.samples(1) + 32767f / 32768f) < 1e-4)
+  }
+
+  private def assertSameRatio(what: String, x: Array[Float], rate: Int): Unit = {
+    val got = Dsp.musicRatio(x, rate)
+    val want = musicRatioFourPass(x, rate)
+    assert(java.lang.Double.doubleToLongBits(got) == java.lang.Double.doubleToLongBits(want),
+      s"$what: one-pass $got vs four-pass $want")
+  }
+
+  test("musicRatio is bit-identical to the four-pass composition: edge inputs") {
+    assertSameRatio("empty", Array.empty[Float], 16000)
+    assertSameRatio("one sample", Array(0.25f), 16000)
+    assertSameRatio("one zero", Array(0f), 16000)
+    val s = sine(440, 200, 16000, 0.4)
+    s(1000) = Float.NaN
+    assertSameRatio("NaN", s, 16000)
+    assertSameRatio("leading NaN", Float.NaN +: sine(440, 50, 16000, 0.4), 16000)
+    assertSameRatio("infinity", Array(0.1f, Float.PositiveInfinity, 0.2f), 16000)
+    assertSameRatio("silence", new Array[Float](16000), 16000)
+  }
+
+  test("musicRatio is bit-identical to the four-pass composition: subnormal silence tails") {
+    // a burst that decays into long near-zero tails: the filter states pass
+    // through the subnormal range, where float rounding is the least regular
+    val rnd = new scala.util.Random(7)
+    (0 until 20).foreach { k =>
+      val burst = sine(200 + 97 * k, 300, 16000, 0.5)
+      val tail = Array.fill(16000)(
+        if (rnd.nextInt(4) == 0) java.lang.Float.MIN_VALUE * rnd.nextInt(1000) else 0f)
+      val x = burst ++ tail ++ Array.fill(400)(rnd.nextFloat() * 1e-38f)
+      assertSameRatio(s"tail $k", x, 16000)
+      assert(x.exists(v => v != 0f && math.abs(v) < java.lang.Float.MIN_NORMAL))
+    }
+  }
+
+  test("musicRatio is bit-identical to the four-pass composition at 8, 16 and 48 kHz") {
+    val rnd = new scala.util.Random(11)
+    for (rate <- Seq(8000, 16000, 48000); k <- 0 until 10) {
+      val x = speechLike(rnd, rate, 3000 + 700 * k)
+      assertSameRatio(s"$rate Hz #$k", x, rate)
+    }
+  }
+
+  test("musicRatio is bit-identical to the four-pass composition on a 5-minute file") {
+    val x = speechLike(new scala.util.Random(5), 16000, 5 * 60 * 1000)
+    assertSameRatio("5 min", x, 16000)
+  }
+}
+
+object DspSpec {
+
+  /** Single-pole RC low-pass filter (pydub low_pass_filter semantics): the
+    * filter `Dsp.musicRatio` runs in one pass, kept here as its reference. */
+  def lowPass(samples: Array[Float], cutoffHz: Double, rate: Int): Array[Float] = {
+    if (samples.isEmpty) return samples
+    val rc = 1.0 / (2 * math.Pi * cutoffHz)
+    val dt = 1.0 / rate
+    val alpha = (dt / (rc + dt)).toFloat
+    val out = new Array[Float](samples.length)
+    out(0) = samples(0) // pydub seeds the recursion with the raw first sample
+    var i = 1
+    while (i < samples.length) {
+      out(i) = out(i - 1) + alpha * (samples(i) - out(i - 1))
+      i += 1
+    }
+    out
+  }
+
+  /** Single-pole RC high-pass filter (pydub high_pass_filter semantics). */
+  def highPass(samples: Array[Float], cutoffHz: Double, rate: Int): Array[Float] = {
+    if (samples.isEmpty) return samples
+    val rc = 1.0 / (2 * math.Pi * cutoffHz)
+    val dt = 1.0 / rate
+    val alpha = (rc / (rc + dt)).toFloat
+    val out = new Array[Float](samples.length)
+    out(0) = samples(0)
+    var i = 1
+    while (i < samples.length) {
+      out(i) = alpha * (out(i - 1) + samples(i) - samples(i - 1))
+      i += 1
+    }
+    out
+  }
+
+  /** The filter-by-filter music ratio (four filter passes, four arrays,
+    * three RMS passes): the reference `Dsp.musicRatio` must equal bit for bit. */
+  def musicRatioFourPass(samples: Array[Float], rate: Int): Double = {
+    val calc = lowPass(highPass(samples, 100.0, rate), 7500.0, rate)
+    var totalRms = Dsp.rmsInt16(calc)
+    if (totalRms < 1) totalRms = 1
+    val bassRms = Dsp.rmsInt16(lowPass(calc, 80.0, rate))
+    val trebleRms = Dsp.rmsInt16(highPass(calc, 8000.0, rate))
+    val nonSpeech = bassRms + trebleRms
+    val speech = math.max(1.0, totalRms - nonSpeech)
+    nonSpeech / speech
+  }
+
+  /** `ms` of speech-like audio at `rate`: bursts of two partials under a
+    * |sin| envelope, 0.3–3 s each, separated by 150–1050 ms gaps of
+    * silence or faint noise. */
+  def speechLike(rnd: scala.util.Random, rate: Int, ms: Int): Array[Float] = {
+    val out = new Array[Float]((ms.toLong * rate / 1000).toInt)
+    var i = 0
+    while (i < out.length) {
+      val burst = math.min(out.length - i, rate * (300 + rnd.nextInt(2700)) / 1000)
+      val (f0, amp) = (90.0 + rnd.nextInt(200), 0.05 + 0.6 * rnd.nextDouble())
+      var j = 0
+      while (j < burst) {
+        val t = j.toDouble / rate
+        val env = math.abs(math.sin(math.Pi * j / burst))
+        out(i + j) = (amp * env * (0.7 * math.sin(2 * math.Pi * f0 * t) +
+          0.3 * math.sin(2 * math.Pi * 3.1 * f0 * t))).toFloat
+        j += 1
+      }
+      i += burst
+      val gap = math.min(out.length - i, rate * (150 + rnd.nextInt(900)) / 1000)
+      val noise = if (rnd.nextBoolean()) 0f else 1e-4f * rnd.nextInt(10)
+      j = 0
+      while (j < gap) { out(i + j) = noise * (rnd.nextFloat() - 0.5f); j += 1 }
+      i += gap
+    }
+    out
   }
 }

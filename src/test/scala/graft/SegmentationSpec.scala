@@ -11,6 +11,7 @@ import graft.ops.Segmentation.Interval
   * Properties use raw ScalaCheck generators with a fixed seed walk (the
   * scalatest-scalacheck bridge artifact is not among the pinned deps). */
 class SegmentationSpec extends AnyFunSuite {
+  import SegmentationSpec.detectNonSilentExact
 
   /** Deterministic 200-case property driver. */
   private def forAllSampled[A](gen: Gen[A])(check: A => Unit): Unit =
@@ -124,5 +125,135 @@ class SegmentationSpec extends AnyFunSuite {
     val iv = r.head
     // pydub-style boundaries land within one window of the true burst edges
     assert(math.abs(iv.startMs - 1000) <= 300 && math.abs(iv.endMs - 2000) <= 300)
+  }
+
+  private def assertSameVad(what: String, x: Array[Float], rate: Int,
+                            minSilenceLenMs: Int = Segmentation.MinSilenceLenMs,
+                            threshDb: Double = Segmentation.SilenceThresholdDb): Unit = {
+    val got = Segmentation.detectNonSilent(x, rate, minSilenceLenMs, threshDb)
+    val want = detectNonSilentExact(x, rate, minSilenceLenMs, threshDb)
+    assert(got == want, s"$what: sliding $got vs exact $want")
+  }
+
+  /** The float RMS of a window at -35 dBFS (energies and dbfs share the
+    * 32767 scale). */
+  private val thresholdAmp = math.pow(10, -35.0 / 20)
+
+  test("detectNonSilent equals the exact per-window scan: edge inputs") {
+    assertSameVad("empty", Array.empty[Float], 16000)
+    assertSameVad("one sample", Array(0.5f), 16000)
+    val s = DspSpec.speechLike(new scala.util.Random(3), 16000, 6000)
+    s(20000) = Float.NaN
+    assertSameVad("NaN", s, 16000)
+    val inf = s.clone(); inf(30000) = Float.PositiveInfinity
+    assertSameVad("infinity", inf, 16000)
+    assertSameVad("NaN at both ends", Float.NaN +: s.drop(1).dropRight(1) :+ Float.NaN, 16000)
+    (0 to 3).foreach(w => assertSameVad(s"window $w ms", s, 16000, minSilenceLenMs = w))
+  }
+
+  test("detectNonSilent equals the exact scan on subnormal-heavy silence tails") {
+    val rnd = new scala.util.Random(17)
+    (0 until 10).foreach { k =>
+      val burst = DspSpec.speechLike(rnd, 16000, 1500)
+      val tail = Array.fill(16000 * 3)(
+        if (rnd.nextInt(3) == 0) java.lang.Float.MIN_VALUE * rnd.nextInt(100000) else 0f)
+      assertSameVad(s"tail $k", burst ++ tail ++ burst, 16000)
+    }
+  }
+
+  test("detectNonSilent equals the exact scan where windows straddle -35 dBFS") {
+    // tones at -35 dBFS x (1 +- r) for r from 1e-6 to 1, cut by loud bursts,
+    // so window sums after a burst sit within the sliding sum's slack
+    val rnd = new scala.util.Random(23)
+    for (e <- -6 to 0; sign <- Seq(-1, 1); k <- 0 until 4) {
+      val amp = thresholdAmp * (1 + sign * math.pow(10, e) * (0.5 + rnd.nextDouble()))
+      val x = Array.tabulate(16000 * 4) { i =>
+        val tone = (amp * math.sqrt(2) * math.sin(2 * math.Pi * 1000 * i / 16000)).toFloat
+        if (i % 16000 < 200 * (k + 1)) 0.9f * math.signum(tone) else tone
+      }
+      assertSameVad(s"r=${sign}e$e #$k", x, 16000)
+    }
+  }
+
+  test("detectNonSilent equals the exact scan when the threshold is a window's own energy") {
+    // a constant stretch after a loud burst: every window there has one
+    // exact sum S; thresholds at dbfs(S) and its float neighbours leave the
+    // sliding sum undecided, so the decision falls back to the exact sum
+    val x = Array.fill(16000)(0.9f) ++ Array.fill(16000 * 2)(0.0177f) ++ Array.fill(8000)(0.5f)
+    val v = 0.0177f.toDouble * 32767.0
+    val perMs = (0 until 16).foldLeft(0.0)((acc, _) => acc + v * v)
+    val window = (0 until 300).foldLeft(0.0)((acc, _) => acc + perMs)
+    val db = graft.ops.Dsp.dbfs(math.sqrt(window / (300 * 16)))
+    Seq(db, math.nextUp(db), math.nextDown(db)).foreach { t =>
+      assertSameVad(s"threshold $t", x, 16000, threshDb = t)
+    }
+    assert(detectNonSilentExact(x, 16000, 300, db) !=
+      detectNonSilentExact(x, 16000, 300, math.nextUp(db)))
+  }
+
+  test("detectNonSilent equals the exact scan on the clamped tail windows") {
+    // lengths that end in a partial ms and in every offset of the last window
+    val rnd = new scala.util.Random(29)
+    (0 until 40).foreach { k =>
+      val len = 16000 * 2 + rnd.nextInt(16000)
+      val x = DspSpec.speechLike(rnd, 16000, 3000).take(len)
+      assertSameVad(s"len $len", x, 16000)
+    }
+  }
+
+  test("detectNonSilent equals the exact scan at 8, 16 and 48 kHz") {
+    val rnd = new scala.util.Random(31)
+    for (rate <- Seq(8000, 16000, 48000); k <- 0 until 5)
+      assertSameVad(s"$rate Hz #$k", DspSpec.speechLike(rnd, rate, 20000), rate)
+  }
+
+  test("detectNonSilent equals the exact scan on a 5-minute file") {
+    assertSameVad("5 min", DspSpec.speechLike(new scala.util.Random(37), 16000, 300000), 16000)
+  }
+}
+
+object SegmentationSpec {
+
+  /** The per-window scan `Segmentation.detectNonSilent` replaced: every
+    * window start re-sums its per-ms energies left to right, O(durationMs x
+    * window). Kept as the reference the sliding scan must equal. */
+  def detectNonSilentExact(samples: Array[Float], rate: Int, minSilenceLenMs: Int,
+                           silenceThreshDb: Double): Seq[Interval] = {
+    val spms = rate / 1000
+    val durationMs = samples.length / spms
+    if (durationMs < minSilenceLenMs)
+      return if (durationMs > 0) Seq(Interval(0, durationMs.toLong)) else Nil
+    val nMs = (samples.length + spms - 1) / spms
+    val e = Array.tabulate(nMs) { m =>
+      var acc = 0.0
+      var i = m * spms
+      while (i < math.min(m * spms + spms, samples.length)) {
+        val v = samples(i).toDouble * 32767.0; acc += v * v; i += 1
+      }
+      acc
+    }
+    val totalLen = samples.length.toLong
+    val silentStarts = (0 until durationMs - minSilenceLenMs + 1).filter { s =>
+      val a = s.toLong * spms
+      val b = math.min((s + minSilenceLenMs).toLong * spms, totalLen)
+      val n = (b - a).toInt
+      if (n <= 0) true else {
+        val mEnd = math.min(((b + spms - 1) / spms).toInt, e.length)
+        var acc = 0.0
+        var m = s
+        while (m < mEnd) { acc += e(m); m += 1 }
+        graft.ops.Dsp.dbfs(math.sqrt(acc / n)) < silenceThreshDb
+      }
+    }
+    // contiguous silent starts merge into [first, last + window) ranges
+    val silent = Seq.newBuilder[Interval]
+    var i = 0
+    while (i < silentStarts.length) {
+      var j = i
+      while (j + 1 < silentStarts.length && silentStarts(j + 1) == silentStarts(j) + 1) j += 1
+      silent += Interval(silentStarts(i).toLong, (silentStarts(j) + minSilenceLenMs).toLong)
+      i = j + 1
+    }
+    Segmentation.complement(silent.result(), durationMs.toLong)
   }
 }

@@ -185,9 +185,9 @@ object Bench {
     // min of N in-process repetitions (round-4 verdict: driver-machine
     // contention produced a phantom 2.1x gate breach; the min cuts that
     // noise). Every session-scoped memo (the graft.core.SessionMemo
-    // registry plus q345's index memo) is evicted before EVERY rep so each
-    // rep pays the full computation — without the eviction the min would
-    // report a cache hit, not the query.
+    // registry, IVF index dirs included) is evicted before EVERY rep so
+    // each rep pays the full computation — without the eviction the min
+    // would report a cache hit, not the query.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt
     val mins = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     for (_ <- 1 to reps) {

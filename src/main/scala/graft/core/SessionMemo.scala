@@ -3,18 +3,28 @@ package graft.core
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
-/** Session-scoped memo of derived tables that several board entries
-  * consume within one session: MinHash/LSH candidates (q24/q45), SimHash
-  * signatures (q25/q78), substring spans (q80/q86/q92), shingle arrays
-  * (q128), corpus chunk bands and pairs (q357/q361/q368), the q360
-  * decision table (q360/q363/q365/q370, and q372 through its flag table)
-  * and q372's doc-grain flag table. The one policy every memo
-  * follows lives here:
-  *   - Entries are keyed by (session, dir, kind). A live session keeps at
-  *     most ONE dir across all kinds: a memo call on a new dir releases
-  *     every entry of the previous one, so a long-lived session scanning
-  *     many dirs does not accumulate pinned blocks. Entries of stopped
-  *     sessions are dropped on the next access.
+/** Session-scoped memo of derived values that several board entries
+  * consume within one session: the one place that decides when such a
+  * value dies and what dying releases. Its kinds:
+  *   - DataFrames, released by unpersist: `lsh_candidates` (q24/q45),
+  *     `simhash_signatures` (q25/q78), `substring_spans` (q80/q86/q92),
+  *     `shingle_arrays` (q128), `chunk_bands`/`chunk_pairs`
+  *     (q357/q361/q368), `decisions` (q360/q363/q365/q370) and q372's
+  *     doc-grain flag table `curation_flags`;
+  *   - index dirs ([[Owned]]), released by deleting the dir: q345's
+  *     inverted file `ivf_index` and `ivf_base_index`, the frozen-codebook
+  *     base that q351, q358 and q371 share. Both are stamped with the
+  *     embeddings files' signature, so a regenerated corpus misses.
+  *
+  * The one policy every kind follows:
+  *   - Entries are keyed by (session, dir, kind) and hold the value, its
+  *     stamp and its release action; every way an entry is dropped runs
+  *     the action. A lookup under another stamp releases and rebuilds.
+  *   - A live session keeps at most ONE dir across all kinds: a memo call
+  *     on a new dir releases every entry of the previous one, so a
+  *     long-lived session scanning many dirs holds no blocks or index dirs
+  *     of the dirs it left. Entries of stopped sessions are released and
+  *     dropped on the next access.
   *   - [[replayed]] sizes the reuse to the input. Under [[LocalInputBytes]]
   *     of local documents parquet the table is collected once, at most
   *     cap + 1 rows ([[boundedCollect]]), and replayed as a local relation:
@@ -28,12 +38,22 @@ import org.apache.spark.storage.StorageLevel
   *     map), so lookups go through get/putIfAbsent, never computeIfAbsent,
   *     whose nested use on one ConcurrentHashMap may throw or deadlock. A
   *     lost race discards one duplicate build.
-  *   - [[evict]] drops every kind for (session, dir). Callers that rewrite
-  *     the files under a dir mid-session must evict it (through
-  *     `DedupSim.invalidateSessionCaches`, which also sweeps the q345
-  *     index memo), the standard cache-coherence contract; Bench and the
-  *     benchmark workloads evict before every timed pass so each pass pays
-  *     the full computation. */
+  *   - [[evict]] releases every kind for (session, dir). Callers that
+  *     rewrite the files under a dir mid-session must evict it (through
+  *     `DedupSim.invalidateSessionCaches`); Bench and the benchmark
+  *     workloads evict before every timed pass.
+  *
+  * A DataFrame that reads an [[Owned]] dir (q345's result, q351's base ∪
+  * delta) lives as long as the entry: execute or plan it before evicting
+  * its (session, dir) or calling a memo on another dir. `Verify`, `Bench`,
+  * `ScaleBench`, `PlanCheck` and perfbench all do.
+  *
+  * Two caches stay outside, keyed on no (session, dir): `DedupSim`'s IVF
+  * kernel cache is keyed by (SparkContext, codebook md5) and also serves
+  * the child sessions `foreachBatch` runs in, so holding it here would
+  * make the memo branch on its caller; `GraftSqlTable`'s inferred-schema
+  * cache is keyed on (dir, version) pairs, whose schema no commit
+  * changes. */
 object SessionMemo {
 
   /** Documents-input size up to which [[replayed]] tries a local replay. */
@@ -44,8 +64,14 @@ object SessionMemo {
 
   private val rowCap = new scala.util.DynamicVariable[Int](LocalRowCap)
 
+  /** A value built into a scratch dir that its memo entry owns. */
+  private[graft] final case class Owned[T](dir: String, value: T)
+
+  /** One entry: its stamp, its value and what dropping it releases. */
+  private final case class Slot(stamp: String, value: Any, release: () => Unit)
+
   private val memos = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
+    (SparkSession, String, String), Slot]()
 
   /** Runs `body` with the bounded-collect cap set to `cap` on this thread,
     * so specs can drive the persist and distributed fallbacks without a
@@ -78,7 +104,7 @@ object SessionMemo {
   private[graft] def replayed(s: SparkSession, d: String, kind: String,
                               docGrain: Boolean = false)
                              (build: => DataFrame): DataFrame =
-    memo(s, d, kind) {
+    frame(s, d, kind) {
       val df = build
       val local =
         if (!isSmallLocal(s"$d/documents.parquet")) None
@@ -96,45 +122,64 @@ object SessionMemo {
     * the physical partitioning a local relation would lose. */
   private[graft] def persisted(s: SparkSession, d: String, kind: String)
                                (build: => DataFrame): DataFrame =
-    memo(s, d, kind)(build.persist(StorageLevel.MEMORY_AND_DISK))
+    frame(s, d, kind)(build.persist(StorageLevel.MEMORY_AND_DISK))
 
-  /** Drops and unpersists every memo of (s, d). */
+  /** The memoized `build` for (s, d, kind) under `stamp`, built into a
+    * fresh scratch dir that releasing the entry (or a failed build)
+    * deletes. */
+  private[graft] def owned[T](s: SparkSession, d: String, kind: String, stamp: String)
+                             (build: String => T): Owned[T] =
+    memo(s, d, kind, stamp) {
+      val dir = graft.io.FsUtil.scratchDir(s"graft_$kind")
+      try Owned(dir, build(dir))
+      catch { case e: Throwable => delete(dir); throw e }
+    }((o: Owned[T]) => delete(o.dir))
+
+  /** Releases and drops every memo of (s, d). */
   private[graft] def evict(s: SparkSession, d: String): Unit =
     memos.entrySet().removeIf { e =>
       val hit = (e.getKey._1 eq s) && e.getKey._2 == d
-      if (hit) release(e.getKey._1, e.getValue)
+      if (hit) e.getValue.release()
       hit
     }
 
-  /** The memos of (s, d) by kind. */
-  private[graft] def entries(s: SparkSession, d: String): Map[String, DataFrame] = {
+  /** The memo values of (s, d) by kind. */
+  private[graft] def entries(s: SparkSession, d: String): Map[String, Any] = {
     import scala.jdk.CollectionConverters._
     memos.asScala.collect {
-      case ((s1, d1, kind), df) if (s1 eq s) && d1 == d => kind -> df
+      case ((s1, d1, kind), slot) if (s1 eq s) && d1 == d => kind -> slot.value
     }.toMap
   }
 
-  private def memo(s: SparkSession, d: String, kind: String)
-                  (value: => DataFrame): DataFrame = {
+  /** An unstamped DataFrame memo, released by unpersist (a no-op on a
+    * local relation). */
+  private def frame(s: SparkSession, d: String, kind: String)
+                   (build: => DataFrame): DataFrame =
+    memo(s, d, kind, "")(build)((df: DataFrame) =>
+      if (!s.sparkContext.isStopped) df.unpersist(): Unit)
+
+  private def memo[T](s: SparkSession, d: String, kind: String, stamp: String)
+                     (build: => T)(release: T => Unit): T = {
     memos.entrySet().removeIf { e =>
       val dead = e.getKey._1.sparkContext.isStopped
-      val stale = !dead && (e.getKey._1 eq s) && e.getKey._2 != d
-      if (stale) release(s, e.getValue)
-      dead || stale
+      val stale = dead || ((e.getKey._1 eq s) && e.getKey._2 != d)
+      if (stale) e.getValue.release()
+      stale
     }
     val key = (s, d, kind)
     val existing = memos.get(key)
-    if (existing != null) existing
+    if (existing != null && existing.stamp == stamp) existing.value.asInstanceOf[T]
     else {
-      val fresh = value
+      if (existing != null && memos.remove(key, existing)) existing.release()
+      val v = build
+      val fresh = Slot(stamp, v, () => release(v))
       val prev = memos.putIfAbsent(key, fresh)
-      if (prev != null) { release(s, fresh); prev } else fresh
+      if (prev != null) { fresh.release(); prev.value.asInstanceOf[T] } else v
     }
   }
 
-  /** Unpersist is a no-op on a local relation. */
-  private def release(s: SparkSession, df: DataFrame): Unit =
-    if (!s.sparkContext.isStopped) df.unpersist()
+  private def delete(dir: String): Unit =
+    graft.io.FsUtil.deleteRecursively(new java.io.File(dir))
 
   /** Whether `path` is a local file tree of at most [[LocalInputBytes]];
     * an absent or non-local path counts as large. */

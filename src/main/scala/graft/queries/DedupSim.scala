@@ -44,19 +44,7 @@ object DedupSim {
   /** Evict every session-scoped memo for `dir` — Bench calls this between
     * repetitions so each timed rep pays the full computation instead of a
     * cache hit. */
-  def invalidateSessionCaches(s: SparkSession, d: String): Unit = {
-    SessionMemo.evict(s, d)
-    // q345's one-time-build index memo (r17 verdict item 4): evicted per
-    // bench rep like every other session memo, so min-of-reps times the
-    // BUILD + serve path, not the amortized serve — the bench number is
-    // the honest cost. The scratch dir goes with the entry (the prior
-    // rep's count() has completed by the time Bench calls this).
-    ivfIndexCache.entrySet().removeIf { e =>
-      val hit = (e.getKey._1 eq s) && e.getKey._2 == d
-      if (hit) graft.io.FsUtil.deleteRecursively(new java.io.File(e.getValue._1))
-      hit
-    }
-  }
+  def invalidateSessionCaches(s: SparkSession, d: String): Unit = SessionMemo.evict(s, d)
 
   /** The distributed candidate-pair plan (no cache). `private[graft]` so
     * tools.PlanCheck audits THIS shape — the q24 entry itself may replay a
@@ -730,7 +718,7 @@ object DedupSim {
     * per call is a driver/executor retention leak at the 10⁵-cell scale
     * this form exists for. The r16 cache keyed on array INSTANCE identity
     * and never evicted within a session — every fresh-but-equal codebook
-    * (frozenBaseCodebook builds one per invocation) added a broadcast
+    * (the q351/q358 base codebook, then rebuilt per invocation) added a broadcast
     * that the map's strong reference kept alive forever. Now: the key is
     * an md5 CONTENT digest (O(cells·dim) driver-side — trivial next to
     * the broadcast itself, and it makes cross-invocation rebuilds of the
@@ -2773,6 +2761,21 @@ object DedupSim {
        |ORDER BY q_id""".stripMargin
   }
 
+  /** Content signature of the embeddings table under `dir`: (name, length,
+    * mtime) of every file — the stamp of the IVF index memos (q345's index,
+    * the q351/q358/q371 base), so a REGENERATED corpus in a long-lived
+    * session rebuilds the index instead of silently serving stale vectors
+    * (round-16 review). Driver-side fs metadata only; local paths, like
+    * every Tables read in this harness. */
+  private def embeddingsSig(d: String): String = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(walk)
+      else Seq(f)
+    val root = new java.io.File(s"$d/embeddings.parquet")
+    walk(root).map(f => s"${f.getName}:${f.length}:${f.lastModified}")
+      .mkString("|")
+  }
+
   // ---------------------------------------------------------------- q345
   /** √N-CELL PARTITIONED IVF INDEX (round 15; closes the r14 verdict's
     * q59 scale-weak finding): q59/q219 keep a FIXED 16-cell inverted
@@ -2799,51 +2802,25 @@ object DedupSim {
     *    O(√N) rows read per query under √N cells;
     *  - RECALL face: hits@3 per query vs the exact brute-force cosine
     *    kernel (q27/q106's protocol) — the accuracy boundary of the
-    *    trade, gated next to the speed shape. */
-  /** Session-scoped memo of q345's one-time build — (index dir, trained
-    * codebook) per (session, dir, corpus signature). Closes the r15
-    * advisory:
-    * repeated q345 invocations in one session no longer retrain and
-    * rewrite the corpus-sized index ("amortized one-time build" made
-    * literal), and scratch accumulation is one dir per corpus instead of
-    * one per call. Evicted when the owning context stops; dirs reclaimed
-    * at JVM exit as before. */
-  private val ivfIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, String), (String, Array[(Long, Array[Float])])]()
-
-  /** Content signature of the embeddings table under `dir`: (name, length,
-    * mtime) of every file — part of the q345 memo key so a REGENERATED
-    * corpus in a long-lived session invalidates the cached index instead
-    * of silently serving stale vectors (round-16 review). Driver-side fs
-    * metadata only; local paths, like every Tables read in this harness. */
-  private def embeddingsSig(d: String): String = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(walk)
-      else Seq(f)
-    val root = new java.io.File(s"$d/embeddings.parquet")
-    walk(root).map(f => s"${f.getName}:${f.length}:${f.lastModified}")
-      .mkString("|")
-  }
-
+    *    trade, gated next to the speed shape.
+    *
+    * The one-time build is the session memo kind `ivf_index`: the
+    * trained codebook, with the cell-partitioned index written into the
+    * memo-owned dir. Repeated q345 calls in one session neither retrain
+    * nor rewrite the corpus-sized index, and the dir is deleted when the
+    * memo releases the entry, so the result must run before its
+    * (session, dir) is evicted or the session moves to another dir. */
   def q345(s: SparkSession, d: String): DataFrame = {
     val emb = Tables.embeddings(s, d)
-    ivfIndexCache.entrySet().removeIf(_.getKey._1.sparkContext.isStopped)
-    val (idxDir, code) = ivfIndexCache.computeIfAbsent(
-      (s, d, embeddingsSig(d)), { _ =>
+    val SessionMemo.Owned(idxDir, code) =
+      SessionMemo.owned(s, d, "ivf_index", embeddingsSig(d)) { dir =>
         val n = emb.count()
         val cells = math.max(16L, math.round(math.sqrt(n.toDouble)))
         val cb = trainedCodebookFrom(s, d, seedCodebookN(s, d, cells), rounds = 1)
-        // one-time build: the E-step assignment → cell-partitioned
-        // parquet. Corpus-sized scratch: reclaim at JVM exit (the result
-        // DataFrame reads it lazily, so deletion can't happen inside this
-        // call)
-        val dir = graft.io.FsUtil.scratchDir("graft_q345_ivf")
-        ivfAssignKernel(emb, cb)
-          .withColumn("cell", col("cell").cast("long"))
+        cellIndexRows(emb, cb)
           .write.mode("overwrite").partitionBy("cell").parquet(dir)
-        (dir, cb)
-      })
+        cb
+      }
 
     // probe cells per query, resolved driver-side from the codebook —
     // metadata-sized (5 queries × cells scores); the query slice is
@@ -2939,15 +2916,80 @@ object DedupSim {
   }
 
   // ---------------------------------------------------------------- q351
+  /** The q351/q358/q371 BASE index, the memo kind `ivf_base_index`: the
+    * frozen serving codebook (the first √Nbase BASE (vec_id%7≠0) vectors
+    * by vec_id — codebooks version with the corpus, not with every
+    * append) and the base vectors assigned against it, clustered by cell
+    * so the partitioned write lands ONE file per occupied cell (guide §6).
+    * Consumers append their deltas to their own dirs, never here. */
+  private def frozenBaseIndex(s: SparkSession,
+      d: String): SessionMemo.Owned[Array[(Long, Array[Float])]] =
+    SessionMemo.owned(s, d, "ivf_base_index", embeddingsSig(d)) { dir =>
+      val base = Tables.embeddings(s, d).filter(col("vec_id") % 7 =!= 0)
+      val cells = math.max(16L, math.round(math.sqrt(base.count().toDouble)))
+      val code = base.orderBy(col("vec_id")).limit(cells.toInt)
+        .select(col("vec_id").cast("long"), col("embedding"))
+        .collect()
+        .map { r =>
+          val raw = r.getSeq[Any](1)
+          require(raw != null && raw.forall(_ != null),
+            s"frozen codebook seed ${r.getLong(0)} contains null element(s)")
+          (r.getLong(0), raw.map(_.asInstanceOf[Float]).toArray)
+        }
+        .sortBy(_._1)
+      cellIndexRows(base, code).repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell").parquet(dir)
+      code
+    }
+
+  /** One index layout over `dirs`: one read per dir, unioned (a read of
+    * several partitioned roots refuses to infer their partitions). */
+  private def readIndex(s: SparkSession, dirs: Seq[String]): DataFrame =
+    dirs.map(s.read.parquet(_)).reduce(_ unionByName _)
+
+  /** The output shape of q351/q358/q371, (face, origin, q_id, rnk,
+    * vec_id, cell, cosine, n): (origin, n) counts as `face` rows, and the
+    * pruned search over `index` as "search" rows. */
+  private def countFace(face: String, counts: DataFrame): DataFrame = {
+    val nullL = lit(null).cast("long")
+    counts.select(lit(face).as("face"), col("origin"), nullL.as("q_id"), nullL.as("rnk"),
+      nullL.as("vec_id"), nullL.as("cell"), lit(null).cast("double").as("cosine"), col("n"))
+  }
+  private def searchFace(index: DataFrame, ps: ProbeSide): DataFrame =
+    prunedTop3(index, ps).select(lit("search").as("face"), lit(null).cast("string").as("origin"),
+      col("q_id"), col("rnk"), col("vec_id"), col("cell"), col("cosine"),
+      lit(null).cast("long").as("n"))
+
+  /** The ingest stream of q351/q371: each file staged under `stagedDir`
+    * is one micro-batch, assigned against the frozen `code` and appended
+    * cell-partitioned to the dir `target` names at that moment. */
+  private def ivfIngest(s: SparkSession, name: String, delta: DataFrame,
+      stagedDir: String, code: Array[(Long, Array[Float])],
+      target: () => String): org.apache.spark.sql.streaming.StreamingQuery = {
+    val s2 = s.newSession()
+    s2.conf.set("spark.sql.shuffle.partitions",
+      graft.core.Sessions.streamShufflePartitions(s2))
+    s2.readStream.schema(delta.schema)
+      .option("maxFilesPerTrigger", "1").parquet(stagedDir)
+      .writeStream.outputMode("append").queryName(name)
+      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+        cellIndexRows(df.toDF(), code)
+          .write.mode("append").partitionBy("cell").parquet(target())
+        ()
+      }
+      .start()
+  }
+
   /** STREAMING ANN INDEX MAINTENANCE (round 15): the "incremental on
     * append" claim of the q345 story, gated. A BASE corpus (vec_id%7≠0)
-    * builds the cell-partitioned inverted file once; DELTA vectors
-    * (vec_id%7=0) then arrive as a 3-file parquet STREAM and each
-    * micro-batch assigns against the FROZEN codebook (no
-    * retraining — the standard serving contract: codebooks version with
-    * the corpus, not with every append) and APPENDS to the live
-    * partitioned index. Three gated faces prove the maintenance is
-    * exact:
+    * builds the cell-partitioned inverted file once per session
+    * ([[frozenBaseIndex]]); DELTA vectors (vec_id%7=0) then arrive as a
+    * 3-file parquet STREAM and each micro-batch assigns against the
+    * FROZEN codebook (no retraining — the standard serving contract:
+    * codebooks version with the corpus, not with every append) and
+    * APPENDS to a cell-partitioned delta layout; the live index is
+    * base ∪ delta ([[readIndex]]). Three gated faces prove the
+    * maintenance is exact:
     *  - census: base/delta/total row counts of the final index equal
     *    the corpus slice counts (append lost nothing, duplicated
     *    nothing);
@@ -2960,71 +3002,30 @@ object DedupSim {
     * partition-local append (no shuffle, no rewrite of existing cells);
     * the codebook is frozen metadata, so maintenance cost is O(batch),
     * independent of index size. */
-  /** Frozen serving codebook for the q351/q358 maintenance family: the
-    * first √Nbase BASE (vec_id%7≠0) vectors by vec_id — codebooks version
-    * with the corpus, not with every append. */
-  private[graft] def frozenBaseCodebook(s: SparkSession,
-                                        d: String): Array[(Long, Array[Float])] = {
-    val base = Tables.embeddings(s, d).filter(col("vec_id") % 7 =!= 0)
-    val nBase = base.count()
-    val cells = math.max(16L, math.round(math.sqrt(nBase.toDouble)))
-    base.orderBy(col("vec_id")).limit(cells.toInt)
-      .select(col("vec_id").cast("long"), col("embedding"))
-      .collect()
-      .map { r =>
-        val raw = r.getSeq[Any](1)
-        require(raw != null && raw.forall(_ != null),
-          s"frozen codebook seed ${r.getLong(0)} contains null element(s)")
-        (r.getLong(0), raw.map(_.asInstanceOf[Float]).toArray)
-      }
-      .sortBy(_._1)
-  }
-
   def q351(s: SparkSession, d: String): DataFrame = {
-    val emb = Tables.embeddings(s, d)
-    val base = emb.filter(col("vec_id") % 7 =!= 0)
-    val delta = emb.filter(col("vec_id") % 7 === 0)
-    val code = frozenBaseCodebook(s, d)
+    val delta = Tables.embeddings(s, d).filter(col("vec_id") % 7 === 0)
+    val SessionMemo.Owned(baseDir, code) = frozenBaseIndex(s, d)
 
-    // v1: base index, one-time partitioned build. Corpus-sized scratch:
-    // reclaimed at JVM exit (the result reads the index lazily)
-    val idxDir = graft.io.FsUtil.scratchDir("graft_q351_idx")
-    // cluster by cell before the partitioned write: exactly ONE file per
-    // occupied cell instead of one per (scan task × cell) — the layout the
-    // operator itself argues for (guide §6: sensible output file sizing);
-    // locally it cuts the build's file count ~4× and every later listing
-    // and pruned read with it. Content-identical: layout only.
-    cellIndexRows(base, code).repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(idxDir)
-
-    // delta arrives as a stream: stage 3 files, one micro-batch each
-    val stagedDir = graft.io.FsUtil.scratchDir("graft_q351_delta")
+    // delta arrives as a stream: stage 3 files, one micro-batch each,
+    // appended to this call's own delta dir. The staging dir is deleted
+    // once the stream stops; the delta dir stays, the result reads it.
+    val deltaDir = graft.io.FsUtil.scratchDir("graft_q351_delta")
+    val stagedDir = graft.io.FsUtil.scratchDir("graft_q351_stage")
     delta.repartition(3).write.mode("overwrite").parquet(stagedDir)
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions",
-      graft.core.Sessions.streamShufflePartitions(s2))
-    val q = s2.readStream.schema(delta.schema)
-      .option("maxFilesPerTrigger", "1").parquet(stagedDir)
-      .writeStream.outputMode("append").queryName("q351_index_ingest")
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        cellIndexRows(df.toDF(), code)
-          .write.mode("append").partitionBy("cell").parquet(idxDir)
-        ()
-      }
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    val q = ivfIngest(s, "q351_index_ingest", delta, stagedDir, code, () => deltaDir)
+    try q.processAllAvailable()
+    finally { q.stop(); graft.io.FsUtil.deleteRecursively(new java.io.File(stagedDir)) }
 
-    // ---- gated faces over the final index (file listing AFTER the drive)
-    val index = s.read.parquet(idxDir).withColumn("cell", col("cell").cast("long"))
+    // ---- gated faces over the final index, base ∪ delta (file listing
+    // AFTER the drive)
+    val index = readIndex(s, Seq(baseDir, deltaDir))
+      .withColumn("cell", col("cell").cast("long"))
     val nullL = lit(null).cast("long")
     val census = index
       .select(when(col("vec_id") % 7 === 0, "delta").otherwise("base").as("origin"))
       .groupBy(col("origin")).agg(count(lit(1)).as("n"))
-    val censusFace = census
-      .unionByName(census.agg(sum(col("n")).as("n")).select(lit("total").as("origin"), col("n")))
-      .select(lit("census").as("face"), col("origin"), nullL.as("q_id"),
-        nullL.as("rnk"), nullL.as("vec_id"), nullL.as("cell"),
-        lit(null).cast("double").as("cosine"), col("n"))
+    val censusFace = countFace("census", census
+      .unionByName(census.agg(sum(col("n")).as("n")).select(lit("total").as("origin"), col("n"))))
     val assignFace = index.filter(col("vec_id") % 7 === 0)
       .select(lit("assign").as("face"), lit("delta").as("origin"),
         nullL.as("q_id"), nullL.as("rnk"),
@@ -3033,12 +3034,7 @@ object DedupSim {
 
     // search: q345's pruned-read shape over the combined index
     val ps = probeSide(s, d, code, org.apache.spark.sql.types.LongType)
-    val searchFace = prunedTop3(index, ps)
-      .select(lit("search").as("face"), lit(null).cast("string").as("origin"),
-        col("q_id"), col("rnk"), col("vec_id"), col("cell"), col("cosine"),
-        nullL.as("n"))
-
-    censusFace.unionByName(assignFace).unionByName(searchFace)
+    censusFace.unionByName(assignFace).unionByName(searchFace(index, ps))
       .orderBy(col("face"), col("origin"), col("q_id"), col("rnk"), col("vec_id"))
   }
   /** The frozen-codebook maintenance CTEs (nn → cb → assign → probes →
@@ -3106,17 +3102,47 @@ object DedupSim {
        |ORDER BY face, origin, q_id, rnk, vec_id""".stripMargin
   }
 
+  /** A compacted layout: its dir, its file count and its ONE read (each
+    * read lists ~cells paths afresh, so every face derives from it). */
+  private final case class Compacted(dir: String, files: Long, index: DataFrame)
+
+  /** The compaction step of q358 and q371: the layout over `dirs` is
+    * clustered by cell and rewritten into a fresh dir — ONE file per
+    * occupied cell, never re-assigning a vector. It requires a strictly
+    * smaller file count and an IDENTICAL pruned search before vs after,
+    * both searches run by ONE tagged-union collect (r18, guide §1.2). */
+  private def compactIndex(s: SparkSession, dirs: Seq[String], label: String,
+                           ps: ProbeSide): Compacted = {
+    val filesBefore = dirs.map(countParquet).sum
+    val fragmented = readIndex(s, dirs)
+    val dir = graft.io.FsUtil.scratchDir(s"graft_${label}_compact")
+    fragmented.repartition(col("cell"))
+      .write.mode("overwrite").partitionBy("cell").parquet(dir)
+    val files = countParquet(dir)
+    require(files < filesBefore,
+      s"$label compaction must reduce the file count ($filesBefore -> $files)")
+    val compacted = s.read.parquet(dir)
+    val sides = prunedTop3(fragmented, ps).withColumn("side", lit("b"))
+      .unionByName(prunedTop3(compacted, ps).withColumn("side", lit("a")))
+      .orderBy(col("side"), col("q_id"), col("rnk")).collect()
+    val (afterRows, beforeRows) = sides.partition(_.getString(5) == "a")
+    require(beforeRows.map(_.toSeq.init).sameElements(afterRows.map(_.toSeq.init)),
+      s"$label compaction changed search results — rewrite must be content-neutral")
+    Compacted(dir, files, compacted)
+  }
+
   // ---------------------------------------------------------------- q358
   /** IVF INDEX COMPACTION (round 16, verdict item 5): q351's per-batch
     * partition-local appends are the classic small-file generator at
     * 100 TB — one file per (cell, micro-batch), so after B batches a
     * √N-cell index carries O(cells·B) files and every pruned read pays
     * O(B) opens per probed cell. This entry recreates that on-disk
-    * aftermath (base build + three appended delta batches against the
-    * SAME frozen codebook as q351), then runs the q237 small-file-
-    * optimize shape on the cell-partitioned layout: cluster by cell and
-    * rewrite — exactly ONE file per occupied cell, a partition-local
-    * rewrite that never re-assigns a vector. Three proofs ride the gate:
+    * aftermath (the shared base index + three appended delta batches
+    * against the SAME frozen codebook as q351), then runs the q237
+    * small-file-optimize shape on the cell-partitioned layout
+    * ([[compactIndex]]): cluster by cell and rewrite — exactly ONE file
+    * per occupied cell, a partition-local rewrite that never re-assigns a
+    * vector. Three proofs ride the gate:
     *
     *  - in-query require()s: the rewrite strictly REDUCED the file count,
     *    and the pruned search returns IDENTICAL rows before vs after
@@ -3132,74 +3158,31 @@ object DedupSim {
     * serving reads go from O(B) opens per probed cell to one. */
   def q358(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val emb = Tables.embeddings(s, d)
-    val base = emb.filter(col("vec_id") % 7 =!= 0)
-    val delta = emb.filter(col("vec_id") % 7 === 0)
-    val code = frozenBaseCodebook(s, d)
-
-
-    // the q351 stream's on-disk aftermath: base build + 3 appended batches.
-    // The base is cell-clustered (one file per occupied cell — the q351
-    // build discipline); the APPENDS stay unclustered because the
-    // per-batch fragmentation is exactly the aftermath this operator
-    // exists to compact.
-    val idxDir = graft.io.FsUtil.scratchDir("graft_q358_idx")
-    cellIndexRows(base, code).repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(idxDir)
+    val delta = Tables.embeddings(s, d).filter(col("vec_id") % 7 === 0)
+    val SessionMemo.Owned(baseDir, code) = frozenBaseIndex(s, d)
+    // the q351 stream's on-disk aftermath: the shared base + 3 appended
+    // batches in this call's own dir. The base is cell-clustered (one file
+    // per occupied cell — the q351 build discipline); the APPENDS stay
+    // unclustered because the per-batch fragmentation is exactly the
+    // aftermath this operator exists to compact. Nothing reads the
+    // fragmented delta after the compare, so it is deleted there.
+    val fragDir = graft.io.FsUtil.scratchDir("graft_q358_delta")
     (0 until 3).foreach { b =>
       cellIndexRows(delta.filter(col("vec_id") % 3 === b), code)
-        .write.mode("append").partitionBy("cell").parquet(idxDir)
+        .write.mode("append").partitionBy("cell").parquet(fragDir)
     }
-    val filesBefore = countParquet(idxDir)
-
-    // COMPACT: cluster by cell, rewrite — one file per occupied cell.
-    // `fragmented` is reused by the pre-compaction search below: one
-    // listing of the fragmented layout instead of two.
-    val compDir = graft.io.FsUtil.scratchDir("graft_q358_compact")
-    val fragmented = s.read.parquet(idxDir)
-    fragmented.repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(compDir)
-    val filesAfter = countParquet(compDir)
-    require(filesAfter < filesBefore,
-      s"compaction must reduce the file count ($filesBefore -> $filesAfter)")
-
-    // pruned search (q345's shape) over either layout. One DataFrame per
-    // layout state: each s.read.parquet(dir) builds a fresh
-    // InMemoryFileIndex (a full directory listing of ~cells paths), so
-    // deriving every face of one layout from ONE read halves the listing
-    // count (guide §6: small-file listing cost is real cost)
     val ps = probeSide(s, d, code, org.apache.spark.sql.types.LongType)
-    def search(idx: DataFrame): DataFrame = prunedTop3(idx, ps)
-    val compacted = s.read.parquet(compDir)
-    // ONE collect compares both layouts (r18, guide §1.2): the fragmented
-    // and compacted searches are independent subtrees, so a tagged union
-    // runs them in a single job instead of two serialized collects — the
-    // comparison itself is unchanged, driver-side, per side sorted
-    val sides = search(fragmented).withColumn("side", lit("b"))
-      .unionByName(search(compacted).withColumn("side", lit("a")))
-      .orderBy(col("side"), col("q_id"), col("rnk")).collect()
-    val (afterRows, beforeRows) = sides.partition(_.getString(5) == "a")
-    require(beforeRows.map(_.toSeq.init).sameElements(afterRows.map(_.toSeq.init)),
-      "compaction changed search results — rewrite must be content-neutral")
+    val comp = compactIndex(s, Seq(baseDir, fragDir), "q358", ps)
+    graft.io.FsUtil.deleteRecursively(new java.io.File(fragDir))
 
-    val nullL = lit(null).cast("long")
     // rows_total stays a LIVE aggregate over the compacted layout — it
     // folds into the final output job instead of costing its own action
-    val censusFace = Seq(("files_after", filesAfter)).toDF("origin", "n")
-      .select(lit("compact").as("face"), col("origin"), nullL.as("q_id"),
-        nullL.as("rnk"), nullL.as("vec_id"), nullL.as("cell"),
-        lit(null).cast("double").as("cosine"), col("n"))
-      .unionByName(compacted.agg(count(lit(1)).as("n"))
-        .select(lit("compact").as("face"), lit("rows_total").as("origin"),
-          nullL.as("q_id"), nullL.as("rnk"), nullL.as("vec_id"),
-          nullL.as("cell"), lit(null).cast("double").as("cosine"), col("n")))
+    val censusFace = countFace("compact", Seq(("files_after", comp.files)).toDF("origin", "n")
+      .unionByName(comp.index.agg(count(lit(1)).as("n"))
+        .select(lit("rows_total").as("origin"), col("n"))))
     // the final search face stays a LIVE query over the compacted layout
     // (PlanCheck pins the INSET partition pruning on this plan)
-    val searchFace = search(compacted)
-      .select(lit("search").as("face"), lit(null).cast("string").as("origin"),
-        col("q_id"), col("rnk"), col("vec_id"), col("cell"), col("cosine"),
-        nullL.as("n"))
-    censusFace.unionByName(searchFace)
+    censusFace.unionByName(searchFace(comp.index, ps))
       .orderBy(col("face"), col("origin"), col("q_id"), col("rnk"))
   }
   val q358Sql: String = {
@@ -3244,22 +3227,12 @@ object DedupSim {
     * survival over the twice-compacted layout). */
   def q371(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val emb = Tables.embeddings(s, d)
-    val base = emb.filter(col("vec_id") % 7 =!= 0)
-    val delta = emb.filter(col("vec_id") % 7 === 0)
-    val code = frozenBaseCodebook(s, d)
-    // search over an already-resolved index DataFrame: every
-    // s.read.parquet(dir) builds a fresh InMemoryFileIndex (a directory
-    // listing of ~cells paths), so each layout state is read ONCE and all
-    // of its faces derive from that one DataFrame (guide §6)
+    val delta = Tables.embeddings(s, d).filter(col("vec_id") % 7 === 0)
+    val SessionMemo.Owned(baseDir, code) = frozenBaseIndex(s, d)
     val ps = probeSide(s, d, code, org.apache.spark.sql.types.LongType)
-    def search(idx: DataFrame): DataFrame = prunedTop3(idx, ps)
-
-    var live = graft.io.FsUtil.scratchDir("graft_q371_idx")
-    // cell-clustered base build — one file per occupied cell (q351's
-    // build discipline; content-identical, layout only)
-    cellIndexRows(base, code).repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(live)
+    // the live layout: the shared base plus this call's delta dir, which
+    // the stream appends to until the first compaction replaces both
+    var live = Seq(baseDir, graft.io.FsUtil.scratchDir("graft_q371_delta"))
     val census = scala.collection.mutable.Buffer.empty[(String, Long)]
     // ONE long-lived ingest stream serves BOTH cycles (r17 verdict item 5:
     // the per-cycle query setup/teardown — checkpoint dir, WAL, offset log,
@@ -3269,70 +3242,39 @@ object DedupSim {
     // what the live-pointer indirection below exercises. Each cycle still
     // appends its slice as two micro-batches onto the then-current layout.
     val stagedDir = graft.io.FsUtil.scratchDir("graft_q371_stage")
-    val livePtr = new java.util.concurrent.atomic.AtomicReference[String](live)
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions",
-      graft.core.Sessions.streamShufflePartitions(s2))
-    val q = s2.readStream.schema(delta.schema)
-      .option("maxFilesPerTrigger", "1").parquet(stagedDir)
-      .writeStream.outputMode("append").queryName("q371_ingest")
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        cellIndexRows(df.toDF(), code)
-          .write.mode("append").partitionBy("cell").parquet(livePtr.get())
-        ()
-      }
-      .start()
+    val livePtr = new java.util.concurrent.atomic.AtomicReference[String](live.last)
+    val q = ivfIngest(s, "q371_ingest", delta, stagedDir, code, () => livePtr.get())
     def runCycle(cyc: Int, batchPred: Column): Unit = {
       // stage this cycle's delta slice as two NEW files; the running
       // stream picks them up as two micro-batches (maxFilesPerTrigger=1)
       delta.filter(batchPred).repartition(2)
         .write.mode("append").parquet(stagedDir)
       q.processAllAvailable()
-      val filesAppend = countParquet(live)
-      val fragmented = s.read.parquet(live)
-      // compact: cluster by cell, rewrite, swap the live pointer
-      val comp = graft.io.FsUtil.scratchDir(s"graft_q371_compact$cyc")
-      fragmented.repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(comp)
-      val filesComp = countParquet(comp)
-      val compDf = s.read.parquet(comp)
-      // ONE aggregate job carries the cycle census (rows + occupied cells,
-      // previously two actions); ONE tagged-union collect compares the
-      // pre/post-compaction searches (previously two serialized collects)
-      val cen = compDf.agg(count(lit(1)).as("n"), countDistinct(col("cell")).as("c")).head()
+      val comp = compactIndex(s, live, s"q371_c$cyc", ps)
+      // ONE aggregate job carries the cycle census (rows + occupied cells)
+      val cen = comp.index.agg(count(lit(1)).as("n"), countDistinct(col("cell")).as("c")).head()
       val (rows, occ) = (cen.getLong(0), cen.getLong(1))
-      require(filesComp < filesAppend,
-        s"cycle $cyc compaction must reduce files ($filesAppend -> $filesComp)")
-      require(filesComp == occ,
-        s"cycle $cyc must land one file per occupied cell ($filesComp vs $occ)")
-      val sides = search(fragmented).withColumn("side", lit("b"))
-        .unionByName(search(compDf).withColumn("side", lit("a")))
-        .orderBy(col("side"), col("q_id"), col("rnk")).collect()
-      val (afterRows, beforeRows) = sides.partition(_.getString(5) == "a")
-      require(beforeRows.map(_.toSeq.init).sameElements(afterRows.map(_.toSeq.init)),
-        s"cycle $cyc compaction changed search results")
-      live = comp
-      livePtr.set(comp)
+      require(comp.files == occ,
+        s"cycle $cyc must land one file per occupied cell (${comp.files} vs $occ)")
+      // swap the live pointer; nothing reads the superseded layout (the
+      // delta dir, then the first compacted one) again, the base is the
+      // memo's
+      livePtr.set(comp.dir)
+      live.filter(_ != baseDir).foreach(dir =>
+        graft.io.FsUtil.deleteRecursively(new java.io.File(dir)))
+      live = Seq(comp.dir)
       census += ((s"c${cyc}_rows", rows))
       census += ((s"c${cyc}_cells", occ))
     }
     try {
       runCycle(1, expr("(vec_id div 7) % 4") <= 1)
       runCycle(2, expr("(vec_id div 7) % 4") >= 2)
-    } finally q.stop()
+    } finally { q.stop(); graft.io.FsUtil.deleteRecursively(new java.io.File(stagedDir)) }
 
-    val nullL = lit(null).cast("long")
-    val censusFace = census.toSeq.toDF("origin", "n")
-      .select(lit("census").as("face"), col("origin"), nullL.as("q_id"),
-        nullL.as("rnk"), nullL.as("vec_id"), nullL.as("cell"),
-        lit(null).cast("double").as("cosine"), col("n"))
     // the final search face stays a LIVE query over the twice-compacted
     // index (PlanCheck pins the INSET partition pruning on this plan)
-    val searchFace = search(s.read.parquet(live))
-      .select(lit("search").as("face"), lit(null).cast("string").as("origin"),
-        col("q_id"), col("rnk"), col("vec_id"), col("cell"), col("cosine"),
-        nullL.as("n"))
-    censusFace.unionByName(searchFace)
+    countFace("census", census.toSeq.toDF("origin", "n"))
+      .unionByName(searchFace(readIndex(s, live), ps))
       .orderBy(col("face"), col("origin"), col("q_id"), col("rnk"))
   }
   val q371Sql: String = {

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The IVF kernel broadcast cache, pinned bounded (round 17, closing the
   * r16 advisory): the r16 cache keyed on codebook array INSTANCE and
   * never evicted, so every fresh-but-content-equal codebook (the
-  * frozenBaseCodebook shape — one new array per invocation) leaked one
+  * q351/q358 base codebook, then one new array per invocation) leaked one
   * strongly-pinned broadcast for the session's lifetime. This spec
   * drives a multi-codebook session through `ivfAssignKernel` and pins:
   * content-hash reuse across distinct array instances, the LRU bound,

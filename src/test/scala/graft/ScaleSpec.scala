@@ -51,6 +51,7 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("session memo: eviction by (session, dir), by a dir switch, and per session") {
     import graft.core.SessionMemo
+    import org.apache.spark.sql.Dataset
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
     val d = "/root/testdata/sf0.001"
     val d2 = "/root/testdata/sf0.01"
@@ -58,20 +59,27 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     def q(name: String, s: SparkSession, dir: String) =
       graft.SparkEntry.queries(name)(s, dir).collect()
     def cachedRdds(s: SparkSession, dir: String): Map[String, Seq[Int]] =
-      SessionMemo.entries(s, dir).map { case (kind, df) =>
+      SessionMemo.entries(s, dir).collect { case (kind, df: Dataset[_]) =>
         kind -> df.queryExecution.withCachedData.collect {
           case r: InMemoryRelation => r.cacheBuilder.cachedColumnBuffers.id
         }
       }
+    // the index dirs the memo owns, by kind
+    def indexDirs(s: SparkSession, dir: String): Map[String, java.io.File] =
+      SessionMemo.entries(s, dir).collect { case (kind, SessionMemo.Owned(p, _)) =>
+        kind -> new java.io.File(p)
+      }
     def persistent = spark.sparkContext.getPersistentRDDs.keySet
+    val ivf = Seq("q345_ivf_sqrtn_partitioned", "q351_ivf_stream_append")
     try {
       // one consumer per memo kind; q361 builds the chunk pairs while
       // resolving the chunk bands, the nested build. Cap 0 persists every
-      // kind, so each entry owns an RDD the eviction must release.
+      // DataFrame kind, so each entry owns an RDD the eviction must
+      // release; q345 and q351 own their index dirs.
       SessionMemo.withLocalRowCap(0) {
-        Seq("q24_minhash_lsh_pairs", "q25_simhash", "q80_substring_spans",
+        (Seq("q24_minhash_lsh_pairs", "q25_simhash", "q80_substring_spans",
           "q128_prefix_jaccard_join", "q361_chunk_dedup_clusters",
-          "q360_curation_composite").foreach(q(_, spark, d))
+          "q360_curation_composite") ++ ivf).foreach(q(_, spark, d))
       }
       val rdds = cachedRdds(spark, d)
       assert(rdds.keySet == Set("lsh_candidates", "simhash_signatures",
@@ -79,24 +87,37 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
         "decisions"))
       assert(rdds.values.forall(_.nonEmpty), s"unpersisted memo: $rdds")
       assert(rdds.values.flatten.forall(persistent.contains))
-      q("q25_simhash", other, d)
-      assert(SessionMemo.entries(other, d).keySet == Set("simhash_signatures"))
+      val dirs = indexDirs(spark, d)
+      assert(dirs.keySet == Set("ivf_index", "ivf_base_index"))
+      assert(dirs.values.forall(_.isDirectory))
+      (Seq("q25_simhash") ++ ivf).foreach(q(_, other, d))
+      val otherKinds = Set("simhash_signatures", "ivf_index", "ivf_base_index")
+      assert(SessionMemo.entries(other, d).keySet == otherKinds)
+      val otherDirs = indexDirs(other, d).values
+      assert(otherDirs.forall(_.isDirectory) && (otherDirs.toSet & dirs.values.toSet).isEmpty)
 
       graft.queries.DedupSim.invalidateSessionCaches(spark, d)
       assert(SessionMemo.entries(spark, d).isEmpty)
       assert(rdds.values.flatten.forall(!persistent.contains(_)))
-      // another session's entries survive the eviction
-      assert(SessionMemo.entries(other, d).keySet == Set("simhash_signatures"))
+      assert(dirs.values.forall(!_.exists), s"index dirs outlive the eviction: $dirs")
+      // another session's entries, index dirs included, survive the eviction
+      assert(SessionMemo.entries(other, d).keySet == otherKinds)
+      assert(otherDirs.forall(_.isDirectory))
 
       // a memo call on a second dir releases every entry of the first
       SessionMemo.withLocalRowCap(0)(q("q24_minhash_lsh_pairs", spark, d))
+      ivf.foreach(q(_, spark, d))
       val candRdds = cachedRdds(spark, d).values.flatten
       assert(candRdds.nonEmpty && candRdds.forall(persistent.contains))
+      val dirs2 = indexDirs(spark, d).values
+      assert(dirs2.size == 2 && dirs2.forall(_.isDirectory))
       q("q25_simhash", spark, d2)
       assert(SessionMemo.entries(spark, d).isEmpty)
       assert(candRdds.forall(!persistent.contains(_)))
+      assert(dirs2.forall(!_.exists), s"index dirs outlive the dir switch: $dirs2")
       assert(SessionMemo.entries(spark, d2).keySet == Set("simhash_signatures"))
-      assert(SessionMemo.entries(other, d).keySet == Set("simhash_signatures"))
+      assert(SessionMemo.entries(other, d).keySet == otherKinds)
+      assert(otherDirs.forall(_.isDirectory))
     } finally {
       graft.queries.DedupSim.invalidateSessionCaches(spark, d)
       graft.queries.DedupSim.invalidateSessionCaches(spark, d2)

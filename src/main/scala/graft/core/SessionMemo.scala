@@ -10,11 +10,16 @@ import org.apache.spark.storage.StorageLevel
   *     `simhash_signatures` (q25/q78), `substring_spans` (q80/q86/q92),
   *     `shingle_arrays` (q128), `chunk_bands`/`chunk_pairs`
   *     (q357/q361/q368), `decisions` (q360/q363/q365/q370) and q372's
-  *     doc-grain flag table `curation_flags`;
+  *     doc-grain flag table `curation_flags`, which scores the q360
+  *     signals in its own pass and does not read `decisions`;
   *   - index dirs ([[Owned]]), released by deleting the dir: q345's
   *     inverted file `ivf_index` and `ivf_base_index`, the frozen-codebook
   *     base that q351, q358 and q371 share. Both are stamped with the
-  *     embeddings files' signature, so a regenerated corpus misses.
+  *     embeddings files' signature, so a regenerated corpus misses. The
+  *     per-call layouts those three read on top of the base (q351's
+  *     delta `ivf_q351_delta`, the compacted `ivf_q358_layout` and
+  *     `ivf_q371_layout`) are [[ownedPerCall]] kinds: each call replaces
+  *     the previous call's dir.
   *
   * The one policy every kind follows:
   *   - Entries are keyed by (session, dir, kind) and hold the value, its
@@ -43,9 +48,11 @@ import org.apache.spark.storage.StorageLevel
   *     `DedupSim.invalidateSessionCaches`); Bench and the benchmark
   *     workloads evict before every timed pass.
   *
-  * A DataFrame that reads an [[Owned]] dir (q345's result, q351's base ∪
-  * delta) lives as long as the entry: execute or plan it before evicting
-  * its (session, dir) or calling a memo on another dir. `Verify`, `Bench`,
+  * A DataFrame that reads an [[Owned]] dir (q345's result, and the
+  * results of q351, q358 and q371) lives as long as the entry: execute or
+  * plan it before evicting its (session, dir), calling a memo on another
+  * dir, or calling the same query again (an [[ownedPerCall]] kind's next
+  * call releases the previous call's dir). `Verify`, `Bench`,
   * `ScaleBench`, `PlanCheck` and perfbench all do.
   *
   * Two caches stay outside, keyed on no (session, dir): `DedupSim`'s IVF
@@ -64,11 +71,17 @@ object SessionMemo {
 
   private val rowCap = new scala.util.DynamicVariable[Int](LocalRowCap)
 
-  /** A value built into a scratch dir that its memo entry owns. */
+  /** A value built into a scratch dir that its memo entry owns. A plan
+    * reading the dir is valid until the entry is released: by [[evict]], a
+    * memo call on another dir, or, for an [[ownedPerCall]] kind, the
+    * kind's next call. */
   private[graft] final case class Owned[T](dir: String, value: T)
 
   /** One entry: its stamp, its value and what dropping it releases. */
   private final case class Slot(stamp: String, value: Any, release: () => Unit)
+
+  /** Stamps of [[ownedPerCall]]: each call's differs from every other. */
+  private val calls = new java.util.concurrent.atomic.AtomicLong()
 
   private val memos = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, String, String), Slot]()
@@ -118,6 +131,14 @@ object SessionMemo {
       }
     }
 
+  /** The rows of a [[replayed]] value that is held as a local relation,
+    * read without a Spark job; None for a persisted one. */
+  private[graft] def localRows(df: DataFrame): Option[Array[Row]] =
+    df.queryExecution.logical match {
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => Some(df.collect())
+      case _ => None
+    }
+
   /** The memoized `build` for (s, d, kind), always persisted, so it keeps
     * the physical partitioning a local relation would lose. */
   private[graft] def persisted(s: SparkSession, d: String, kind: String)
@@ -134,6 +155,13 @@ object SessionMemo {
       try Owned(dir, build(dir))
       catch { case e: Throwable => delete(dir); throw e }
     }((o: Owned[T]) => delete(o.dir))
+
+  /** [[owned]] built afresh on every call: the entry holds the latest
+    * call's dir, which the kind's next call releases, as do [[evict]] and
+    * a memo call on another dir. */
+  private[graft] def ownedPerCall[T](s: SparkSession, d: String, kind: String)
+                                    (build: String => T): Owned[T] =
+    owned(s, d, kind, s"call ${calls.incrementAndGet()}")(build)
 
   /** Releases and drops every memo of (s, d). */
   private[graft] def evict(s: SparkSession, d: String): Unit =

@@ -1,7 +1,9 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Readers for the driver's parquet test tables (TESTDATA.md).
   *
@@ -16,7 +18,18 @@ object Tables {
     // that guarantees the plans-package strategy + optimizer rule are live
     // on driver sessions built without spark.sql.extensions
     graft.plans.GraftPlanner.ensure(spark)
-    spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    footerSchema(spark, path).fold(spark.read)(spark.read.schema).parquet(path)
+  }
+
+  /** The schema Spark would infer for `path`, read from the local footer
+    * (so the read launches no inference job) under the session's parquet
+    * settings; None, and Spark's own inference, for a non-local or
+    * unreadable table or with schema merging on. */
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    if (conf.isParquetSchemaMergingEnabled) None
+    else graft.io.ParquetStats.sparkSchema(path, new ParquetToSparkSchemaConverter(conf))
   }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "lineitem")
@@ -41,7 +54,7 @@ object Tables {
     *     `epoch_us` on the same file (both read the stored count verbatim).
     *   - `ts_t`: a µs-precision TIMESTAMP for window/time-bucket operations.
     * Both confs are runtime-settable so this works under the driver's
-    * session; the branch is picked off the inferred schema, so one binary
+    * session; the branch is picked off the read's schema, so one binary
     * serves either testdata generation.
     *
     * SIDE EFFECT (round-7 advice, documented contract): on the µs branch

@@ -6,18 +6,24 @@ import org.apache.parquet.column.statistics.{IntStatistics, LongStatistics}
 import org.apache.parquet.format.Util
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.metadata.{BlockMetaData, ParquetMetadata}
+import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** The one parquet footer reader: every metadata question the engine asks
   * of a parquet file is answered here from the file's own footer, read
   * from the local tail (the thrift FileMetaData, its 4-byte length and
   * the "PAR1" magic) without opening a Hadoop file system or decoding a
-  * row. Three answers:
+  * row. Four answers:
   *
   *   - [[rowCount]]: the footers' num_rows, parsed with the row groups
   *     skipped (it runs on every doc-grain memo build, so it stays the
   *     cheapest parse);
   *   - [[schema]]: the file's parquet message type;
+  *   - [[sparkSchema]]: the Spark schema a read of a table infers, so
+  *     `Tables` reads launch no inference job;
   *   - [[longRanges]]: per column, the exact integral min/max of a file
   *     ([[LongRange.Bounds]]), no non-null value ([[LongRange.AllNull]]),
   *     or [[LongRange.Unknown]] — the footer cannot vouch for bounds that
@@ -85,6 +91,32 @@ object ParquetStats {
   def schema(file: String): MessageType =
     metadata(file).getOrElse(throw new IllegalArgumentException(
       s"$file has no readable parquet footer")).getFileMetaData.getSchema
+
+  /** The schema `spark.read.parquet(path)` infers with schema merging off,
+    * from the same footer: Spark reads the first data file in path order
+    * and converts it with `readSchemaFromFooter` (the row-metadata key a
+    * Spark writer leaves, else `converter`). None where Spark's pick could
+    * be another file or the footer is not read here: a non-local or absent
+    * path, a subdirectory (partition dirs), a summary file, an empty first
+    * file or an unreadable footer. */
+  def sparkSchema(path: String, converter: ParquetToSparkSchemaConverter): Option[StructType] = {
+    val root = new java.io.File(path)
+    // Spark's listing skips `_`/`.` names (except summaries) and `._COPYING_`
+    def hidden(n: String) = (n.startsWith("_") && !n.contains("=")) ||
+      n.startsWith(".") || n.endsWith("._COPYING_")
+    def summary(n: String) = n.startsWith("_metadata") || n.startsWith("_common_metadata")
+    val files =
+      if (path.takeWhile(_ != '/').contains(':')) None // a URI scheme
+      else if (root.isFile) Some(Seq(root))
+      else Option(root.listFiles()).map(_.toSeq).filterNot(_.exists(f =>
+        summary(f.getName) || (f.isDirectory && !hidden(f.getName))))
+        .map(_.filter(f => !hidden(f.getName)).sortBy(_.getPath))
+    for {
+      f <- files.flatMap(_.headOption) if f.length() > 0
+      md <- metadata(f.getPath)
+    } yield ParquetFileFormat.readSchemaFromFooter(
+      new Footer(new org.apache.hadoop.fs.Path(f.getPath), md), converter)
+  }
 
   /** The integral range of each of `columns` in one file (see the header
     * for when the footer cannot vouch); one footer read for all of them.

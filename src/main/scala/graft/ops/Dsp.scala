@@ -171,7 +171,9 @@ object Dsp {
     * int16-scale sums of squares, and updates each with the float
     * expression, in the order, of the filter-by-filter composition, so the
     * result is bit-identical to it (DspSpec keeps that composition as the
-    * reference). */
+    * reference). A run of bitwise-equal inputs is skipped once one step
+    * on it changes no state bit, since every further step is then the
+    * identity. */
   def musicRatio(samples: Array[Float], rate: Int): Double = {
     val n = samples.length
     if (n == 0) return 0.0 // every RMS is 0: 0 / max(1, 1 - 0)
@@ -192,19 +194,34 @@ object Dsp {
     var cAcc = sq(c)
     var bassAcc = cAcc
     var trebleAcc = cAcc
+    import java.lang.Float.{floatToRawIntBits => fb}
+    import java.lang.Double.{doubleToRawLongBits => db}
     var i = 1
     while (i < n) {
       val xi = samples(i)
-      h = aBand * (h + xi - x)
-      val ci = c + aSpeech * (h - c)
-      bass = bass + aBass * (ci - bass)
-      treble = aTreble * (treble + ci - c)
-      x = xi
+      val hi = aBand * (h + xi - x)
+      val ci = c + aSpeech * (hi - c)
+      val bi = bass + aBass * (ci - bass)
+      val ti = aTreble * (treble + ci - c)
+      val cA = cAcc + sq(ci)
+      val bA = bassAcc + sq(bi)
+      val tA = trebleAcc + sq(ti)
+      // a repeated input that leaves every state bit for bit as it was
+      // (a decayed filter in digital silence, often stuck on subnormals)
+      // makes each further step on that input the identity: skip the run
+      val fixed = fb(xi) == fb(x) && fb(hi) == fb(h) && fb(ci) == fb(c) &&
+        fb(bi) == fb(bass) && fb(ti) == fb(treble) &&
+        db(cA) == db(cAcc) && db(bA) == db(bassAcc) && db(tA) == db(trebleAcc)
+      h = hi
       c = ci
-      cAcc += sq(c)
-      bassAcc += sq(bass)
-      trebleAcc += sq(treble)
+      bass = bi
+      treble = ti
+      x = xi
+      cAcc = cA
+      bassAcc = bA
+      trebleAcc = tA
       i += 1
+      if (fixed) while (i < n && fb(samples(i)) == fb(xi)) i += 1
     }
     val totalRms = math.max(1.0, math.sqrt(cAcc / n))
     val nonSpeech = math.sqrt(bassAcc / n) + math.sqrt(trebleAcc / n)

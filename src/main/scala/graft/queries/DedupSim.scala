@@ -3008,13 +3008,16 @@ object DedupSim {
 
     // delta arrives as a stream: stage 3 files, one micro-batch each,
     // appended to this call's own delta dir. The staging dir is deleted
-    // once the stream stops; the delta dir stays, the result reads it.
-    val deltaDir = graft.io.FsUtil.scratchDir("graft_q351_delta")
-    val stagedDir = graft.io.FsUtil.scratchDir("graft_q351_stage")
-    delta.repartition(3).write.mode("overwrite").parquet(stagedDir)
-    val q = ivfIngest(s, "q351_index_ingest", delta, stagedDir, code, () => deltaDir)
-    try q.processAllAvailable()
-    finally { q.stop(); graft.io.FsUtil.deleteRecursively(new java.io.File(stagedDir)) }
+    // once the stream stops; the delta dir, which the result reads, is
+    // the memo's until the next call.
+    val SessionMemo.Owned(deltaDir, _) =
+      SessionMemo.ownedPerCall(s, d, "ivf_q351_delta") { dir =>
+        val stagedDir = graft.io.FsUtil.scratchDir("graft_q351_stage")
+        delta.repartition(3).write.mode("overwrite").parquet(stagedDir)
+        val q = ivfIngest(s, "q351_index_ingest", delta, stagedDir, code, () => dir)
+        try q.processAllAvailable()
+        finally { q.stop(); graft.io.FsUtil.deleteRecursively(new java.io.File(stagedDir)) }
+      }
 
     // ---- gated faces over the final index, base ∪ delta (file listing
     // AFTER the drive)
@@ -3107,15 +3110,14 @@ object DedupSim {
   private final case class Compacted(dir: String, files: Long, index: DataFrame)
 
   /** The compaction step of q358 and q371: the layout over `dirs` is
-    * clustered by cell and rewritten into a fresh dir — ONE file per
+    * clustered by cell and rewritten into the new dir `dir` — ONE file per
     * occupied cell, never re-assigning a vector. It requires a strictly
     * smaller file count and an IDENTICAL pruned search before vs after,
     * both searches run by ONE tagged-union collect (r18, guide §1.2). */
-  private def compactIndex(s: SparkSession, dirs: Seq[String], label: String,
-                           ps: ProbeSide): Compacted = {
+  private def compactIndex(s: SparkSession, dirs: Seq[String], dir: String,
+                           label: String, ps: ProbeSide): Compacted = {
     val filesBefore = dirs.map(countParquet).sum
     val fragmented = readIndex(s, dirs)
-    val dir = graft.io.FsUtil.scratchDir(s"graft_${label}_compact")
     fragmented.repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell").parquet(dir)
     val files = countParquet(dir)
@@ -3165,15 +3167,20 @@ object DedupSim {
     // per occupied cell — the q351 build discipline); the APPENDS stay
     // unclustered because the per-batch fragmentation is exactly the
     // aftermath this operator exists to compact. Nothing reads the
-    // fragmented delta after the compare, so it is deleted there.
-    val fragDir = graft.io.FsUtil.scratchDir("graft_q358_delta")
-    (0 until 3).foreach { b =>
-      cellIndexRows(delta.filter(col("vec_id") % 3 === b), code)
-        .write.mode("append").partitionBy("cell").parquet(fragDir)
-    }
+    // fragmented delta after the compare, so it is deleted there; the
+    // compacted layout is the memo's until the next call.
     val ps = probeSide(s, d, code, org.apache.spark.sql.types.LongType)
-    val comp = compactIndex(s, Seq(baseDir, fragDir), "q358", ps)
-    graft.io.FsUtil.deleteRecursively(new java.io.File(fragDir))
+    val SessionMemo.Owned(_, comp) =
+      SessionMemo.ownedPerCall(s, d, "ivf_q358_layout") { dir =>
+        val fragDir = s"$dir/delta"
+        (0 until 3).foreach { b =>
+          cellIndexRows(delta.filter(col("vec_id") % 3 === b), code)
+            .write.mode("append").partitionBy("cell").parquet(fragDir)
+        }
+        val comp = compactIndex(s, Seq(baseDir, fragDir), s"$dir/compact", "q358", ps)
+        graft.io.FsUtil.deleteRecursively(new java.io.File(fragDir))
+        comp
+      }
 
     // rows_total stays a LIVE aggregate over the compacted layout — it
     // folds into the final output job instead of costing its own action
@@ -3230,51 +3237,61 @@ object DedupSim {
     val delta = Tables.embeddings(s, d).filter(col("vec_id") % 7 === 0)
     val SessionMemo.Owned(baseDir, code) = frozenBaseIndex(s, d)
     val ps = probeSide(s, d, code, org.apache.spark.sql.types.LongType)
-    // the live layout: the shared base plus this call's delta dir, which
-    // the stream appends to until the first compaction replaces both
-    var live = Seq(baseDir, graft.io.FsUtil.scratchDir("graft_q371_delta"))
-    val census = scala.collection.mutable.Buffer.empty[(String, Long)]
-    // ONE long-lived ingest stream serves BOTH cycles (r17 verdict item 5:
-    // the per-cycle query setup/teardown — checkpoint dir, WAL, offset log,
-    // child session — was ~1 s of non-pinned overhead). This is also
-    // production's actual shape: the ingest stream keeps running while
-    // compaction swaps the serving pointer underneath it, which is exactly
-    // what the live-pointer indirection below exercises. Each cycle still
-    // appends its slice as two micro-batches onto the then-current layout.
-    val stagedDir = graft.io.FsUtil.scratchDir("graft_q371_stage")
-    val livePtr = new java.util.concurrent.atomic.AtomicReference[String](live.last)
-    val q = ivfIngest(s, "q371_ingest", delta, stagedDir, code, () => livePtr.get())
-    def runCycle(cyc: Int, batchPred: Column): Unit = {
-      // stage this cycle's delta slice as two NEW files; the running
-      // stream picks them up as two micro-batches (maxFilesPerTrigger=1)
-      delta.filter(batchPred).repartition(2)
-        .write.mode("append").parquet(stagedDir)
-      q.processAllAvailable()
-      val comp = compactIndex(s, live, s"q371_c$cyc", ps)
-      // ONE aggregate job carries the cycle census (rows + occupied cells)
-      val cen = comp.index.agg(count(lit(1)).as("n"), countDistinct(col("cell")).as("c")).head()
-      val (rows, occ) = (cen.getLong(0), cen.getLong(1))
-      require(comp.files == occ,
-        s"cycle $cyc must land one file per occupied cell (${comp.files} vs $occ)")
-      // swap the live pointer; nothing reads the superseded layout (the
-      // delta dir, then the first compacted one) again, the base is the
-      // memo's
-      livePtr.set(comp.dir)
-      live.filter(_ != baseDir).foreach(dir =>
-        graft.io.FsUtil.deleteRecursively(new java.io.File(dir)))
-      live = Seq(comp.dir)
-      census += ((s"c${cyc}_rows", rows))
-      census += ((s"c${cyc}_cells", occ))
-    }
-    try {
-      runCycle(1, expr("(vec_id div 7) % 4") <= 1)
-      runCycle(2, expr("(vec_id div 7) % 4") >= 2)
-    } finally { q.stop(); graft.io.FsUtil.deleteRecursively(new java.io.File(stagedDir)) }
+    // every layout of this call lives under one memo-owned dir, which the
+    // next call releases; the final one is what the result reads
+    val SessionMemo.Owned(_, (census, finalDir)) =
+      SessionMemo.ownedPerCall(s, d, "ivf_q371_layout") { dir =>
+        // the live layout: the shared base plus this call's delta dir,
+        // which the stream appends to until the first compaction replaces
+        // both
+        val deltaDir = s"$dir/delta"
+        new java.io.File(deltaDir).mkdir()
+        var live = Seq(baseDir, deltaDir)
+        val census = scala.collection.mutable.Buffer.empty[(String, Long)]
+        // ONE long-lived ingest stream serves BOTH cycles (r17 verdict item
+        // 5: the per-cycle query setup/teardown — checkpoint dir, WAL,
+        // offset log, child session — was ~1 s of non-pinned overhead).
+        // This is also production's actual shape: the ingest stream keeps
+        // running while compaction swaps the serving pointer underneath
+        // it, which is exactly what the live-pointer indirection below
+        // exercises. Each cycle still appends its slice as two
+        // micro-batches onto the then-current layout.
+        val stagedDir = graft.io.FsUtil.scratchDir("graft_q371_stage")
+        val livePtr = new java.util.concurrent.atomic.AtomicReference[String](deltaDir)
+        val q = ivfIngest(s, "q371_ingest", delta, stagedDir, code, () => livePtr.get())
+        def runCycle(cyc: Int, batchPred: Column): Unit = {
+          // stage this cycle's delta slice as two NEW files; the running
+          // stream picks them up as two micro-batches (maxFilesPerTrigger=1)
+          delta.filter(batchPred).repartition(2)
+            .write.mode("append").parquet(stagedDir)
+          q.processAllAvailable()
+          val comp = compactIndex(s, live, s"$dir/c$cyc", s"q371_c$cyc", ps)
+          // ONE aggregate job carries the cycle census (rows + occupied cells)
+          val cen = comp.index.agg(count(lit(1)).as("n"), countDistinct(col("cell")).as("c")).head()
+          val (rows, occ) = (cen.getLong(0), cen.getLong(1))
+          require(comp.files == occ,
+            s"cycle $cyc must land one file per occupied cell (${comp.files} vs $occ)")
+          // swap the live pointer; nothing reads the superseded layout (the
+          // delta dir, then the first compacted one) again, the base is the
+          // memo's
+          livePtr.set(comp.dir)
+          live.filter(_ != baseDir).foreach(old =>
+            graft.io.FsUtil.deleteRecursively(new java.io.File(old)))
+          live = Seq(comp.dir)
+          census += ((s"c${cyc}_rows", rows))
+          census += ((s"c${cyc}_cells", occ))
+        }
+        try {
+          runCycle(1, expr("(vec_id div 7) % 4") <= 1)
+          runCycle(2, expr("(vec_id div 7) % 4") >= 2)
+        } finally { q.stop(); graft.io.FsUtil.deleteRecursively(new java.io.File(stagedDir)) }
+        (census.toSeq, live.head)
+      }
 
     // the final search face stays a LIVE query over the twice-compacted
     // index (PlanCheck pins the INSET partition pruning on this plan)
-    countFace("census", census.toSeq.toDF("origin", "n"))
-      .unionByName(searchFace(readIndex(s, live), ps))
+    countFace("census", census.toDF("origin", "n"))
+      .unionByName(searchFace(readIndex(s, Seq(finalDir)), ps))
       .orderBy(col("face"), col("origin"), col("q_id"), col("rnk"))
   }
   val q371Sql: String = {

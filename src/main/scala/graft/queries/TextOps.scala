@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -1558,8 +1558,9 @@ object TextOps {
     * — the property production sampling jobs need for resumability.
     * Scale shape: q343's bucket is the `lm_bucket` column of the q360
     * decision memo ([[corpusDecisions]], one row per doc), so the LM
-    * scores each document once per session for q360, q365 and q372; the
-    * coin and the gate are per-row expressions on top of it. */
+    * scores each document once per session for q360 and q365; the coin
+    * and the gate are per-row expressions on top of it, which q372's flag
+    * pass adds in its own stage. */
   private val Q365Rates = Seq("head" -> 1000L, "middle" -> 500L,
     "tail" -> 100L, "unscored" -> 100L)
   def q365(s: SparkSession, d: String): DataFrame =
@@ -1570,7 +1571,7 @@ object TextOps {
 
   /** q365's sample over a q360 decision table: adds `bucket` (q343's, or
     * 'unscored'), the md5 `coin`, the bucket's `keep_rate` and `kept`. */
-  private def bucketSample(decisions: DataFrame): DataFrame = {
+  private[graft] def bucketSample(decisions: DataFrame): DataFrame = {
     val rates = Q365Rates.foldLeft(lit(100L)) { case (acc, (b, r)) =>
       when(col("bucket") === b, lit(r)).otherwise(acc) }
     decisions
@@ -1612,17 +1613,18 @@ object TextOps {
     * Scale shape: one typed pass per document ([[chunkFingerprints]])
     * splits the text once and emits its DISTINCT window fingerprints; the
     * benchmark slice's set is built once, from the same pass over the
-    * slice's rows. A REAL benchmark is constant-sized (benchmarks don't
-    * grow with the crawl), so its set fits the bounded collect
-    * ([[SessionMemo.docGrainCollect]]) and is broadcast: every train doc
+    * slice's rows ([[benchSide]]). A REAL benchmark is constant-sized
+    * (benchmarks don't grow with the crawl), so its set fits the bounded
+    * collect ([[SessionMemo.docGrainCollect]]) and is broadcast: every train doc
     * then scores its hits inside the same map, with no exchange. THIS
     * gate's doc_id%5=0 stand-in is 20% of the corpus's chunks, so it
     * grows with the corpus; past the row cap the set stays distributed
     * and the hits are a relational join on chunk_fp (AQE picks the
     * strategy on measured size, the q352 discipline), so nothing
-    * corpus-proportional is ever forced resident. q372's flag table reads
-    * the same pass. The relational form it replaced (tokenChunks →
-    * distinct → left_semi) is the parity reference in ChunkHitsSpec. */
+    * corpus-proportional is ever forced resident. q372's flag pass meets
+    * the slice through the same two paths. The relational form it
+    * replaced (tokenChunks → distinct → left_semi) is the parity reference
+    * in ChunkHitsSpec. */
   def q364(s: SparkSession, d: String): DataFrame =
     chunkHits(d, Tables.documents(s, d))
       .filter(col("n_hit_chunks") > 0)
@@ -1633,6 +1635,10 @@ object TextOps {
   /** The benchmark stand-in: q343's reference slice convention. */
   private val BenchSlice = col("doc_id") % 5 === 0
 
+  /** A text's distinct [[chunkWindows]] fingerprints from its tokens. */
+  private def windowFps(toks: Array[String]): Array[String] =
+    CurationSignals.chunkFingerprints(toks, Q349Window, Q349Stride)
+
   /** The per-document chunk pass: doc_id, n_tok and the doc's distinct
     * [[chunkWindows]] fingerprints (`fps`), from ONE tokenization of its
     * text ([[CurationSignals.tokens]], the same split rule). */
@@ -1641,9 +1647,45 @@ object TextOps {
     docs.select(col("doc_id"), col("text")).as[(Long, String)]
       .map { case (id, text) =>
         val toks = CurationSignals.tokens(text)
-        (id, toks.length.toLong,
-          CurationSignals.chunkFingerprints(toks, Q349Window, Q349Stride)) }
+        (id, toks.length.toLong, windowFps(toks)) }
       .toDF("doc_id", "n_tok", "fps")
+  }
+
+  /** The small side of q364 and q372, from ONE collect over the benchmark
+    * slice: the slice's distinct window fingerprints (`fps`) and q343's
+    * reference texts (`lmRef`, Spark's lower(text) of the slice's docs
+    * below [[CurationSignals.LmRefIdCap]]). */
+  private final case class BenchSide(fps: Set[String], lmRef: Seq[String])
+
+  /** [[BenchSide]] of `docs`; None past the row cap
+    * ([[SessionMemo.docGrainCollect]]), where the slice stays distributed
+    * ([[benchHitsByJoin]]). */
+  private def benchSide(d: String, docs: DataFrame): Option[BenchSide] = {
+    import docs.sparkSession.implicits._
+    val slice = docs.filter(BenchSlice)
+      .select(col("text"),
+        when(col("doc_id") < CurationSignals.LmRefIdCap, lower(col("text"))))
+      .as[(String, String)]
+      .map { case (text, lt) => (windowFps(CurationSignals.tokens(text)), lt) }
+      .toDF("fps", "lower")
+    SessionMemo.docGrainCollect(slice, d).map(rows => BenchSide(
+      rows.iterator.flatMap(_.getSeq[String](0)).toSet,
+      rows.toSeq.flatMap(r => Option(r.getString(1)))))
+  }
+
+  /** Past the row cap: `perDoc`'s rows grouped back by `keys` (which hold
+    * `train`) with `n_hit_chunks`, how many of a train doc's `fps` the
+    * benchmark slice of `docs` also holds, as a left join on the
+    * fingerprint (AQE picks the strategy on measured size). */
+  private def benchHitsByJoin(perDoc: DataFrame, keys: Seq[String],
+                              docs: DataFrame): DataFrame = {
+    val bench = chunkFingerprints(docs.filter(BenchSlice))
+      .select(explode(col("fps")).as("chunk_fp"))
+      .distinct().withColumn("hit", lit(true))
+    perDoc.select(keys.map(col) :+ explode_outer(col("fps")).as("chunk_fp"): _*)
+      .join(bench, Seq("chunk_fp"), "left")
+      .groupBy(keys.map(col): _*)
+      .agg(count(when(col("train"), col("hit"))).as("n_hit_chunks"))
   }
 
   /** Every doc of `docs` with `train` (outside the benchmark slice),
@@ -1653,25 +1695,17 @@ object TextOps {
     val s = docs.sparkSession
     import s.implicits._
     val fp = chunkFingerprints(docs).withColumn("train", !BenchSlice)
-    val benchDocs = chunkFingerprints(docs.filter(BenchSlice)).select(col("fps"))
-    SessionMemo.docGrainCollect(benchDocs, d) match {
-      case Some(rows) =>
-        val bench = s.sparkContext.broadcast(
-          rows.iterator.flatMap(_.getSeq[String](0)).toSet)
+    benchSide(d, docs) match {
+      case Some(b) =>
+        val bench = s.sparkContext.broadcast(b.fps)
         fp.select(col("doc_id"), col("train"), col("n_tok"), col("fps"))
           .as[(Long, Boolean, Long, Array[String])].map { case (id, train, n, fps) =>
           (id, train, n, fps.length.toLong,
             if (train) fps.count(bench.value.contains).toLong else 0L) }
           .toDF("doc_id", "train", "n_tok", "n_chunks", "n_hit_chunks")
       case None =>
-        val bench = benchDocs.select(explode(col("fps")).as("chunk_fp"))
-          .distinct().withColumn("hit", lit(true))
-        fp.withColumn("n_chunks", size(col("fps")).cast("long"))
-          .select(col("doc_id"), col("train"), col("n_tok"), col("n_chunks"),
-            explode_outer(col("fps")).as("chunk_fp"))
-          .join(bench, Seq("chunk_fp"), "left")
-          .groupBy(col("doc_id"), col("train"), col("n_tok"), col("n_chunks"))
-          .agg(count(when(col("train"), col("hit"))).as("n_hit_chunks"))
+        benchHitsByJoin(fp.withColumn("n_chunks", size(col("fps")).cast("long")),
+          Seq("doc_id", "train", "n_tok", "n_chunks"), docs)
     }
   }
 
@@ -1713,70 +1747,128 @@ object TextOps {
     *
     * Scale shape: every gate is a per-document flag, so the funnel is
     * ONE doc-grain flag table over all documents ([[curationFlags]]:
-    * train, keep, sampled, contaminated, n_tok), held by the session memo
-    * as a local relation under the row cap and persisted past it, and
-    * ONE conditional aggregate over it. n_sequences is
-    * ceil(total_tokens / 2048) exactly, because the survivors' tokens
-    * occupy global positions 0…T−1 with no gap. The survivors' offsets
-    * are q366's exclusive prefix sum over the table's n_tok, taken on the
-    * driver when the survivor rows fit the bounded collect and by q366's
-    * two-level scan otherwise (its group width from the unfiltered
-    * table's footer range: a superset range only widens groups, and the
-    * output is G-independent, Q366GroupWidthSpec). Face 1 slices and
-    * packs the survivors' text as q367 does (sequencePartsAt →
-    * assembleSequences). A pass reads documents once, tokenizes each
-    * document once for the flags and each survivor once more for its
-    * slices, and holds no checkpoint: the memo's local relation holds no
-    * blocks, and its persisted form is released by the memo's eviction. */
+    * train, keep, sampled, contaminated, n_tok) and ONE fold over its
+    * rows ([[Funnel]]). n_sequences is ceil(total_tokens / 2048) exactly,
+    * because the survivors' tokens occupy global positions 0…T−1 with no
+    * gap. Face 1 slices and packs the survivors' text as q367 does
+    * (sequencePartsAt → assembleSequences) at q366's exclusive prefix sum
+    * over the survivors' n_tok.
+    *
+    * Under the row cap the memo holds the flag table as a local relation,
+    * so the funnel and the offsets are driver arithmetic over its rows and
+    * face 1 is collected into a local result. A warm pass is then 5 Spark
+    * jobs (CurationFunnelSpec): the benchmark-slice collect and the flag
+    * pass's collect, then face 1's offsets broadcast, its sequence
+    * shuffle and its collect. Past the cap the table is persisted, the
+    * fold runs per partition, the offsets are q366's two-level scan (its
+    * group width from the unfiltered table's footer range: a superset
+    * range only widens groups, and the output is G-independent,
+    * Q366GroupWidthSpec) and the result stays distributed. A pass reads
+    * documents once for the flags, tokenizes each document once there and
+    * each survivor once more for its slices, and holds no checkpoint: the
+    * memo's local relation holds no blocks, and its persisted form is
+    * released by the memo's eviction. */
   def q372(s: SparkSession, d: String): DataFrame = {
+    import scala.jdk.CollectionConverters._
     val docs = Tables.documents(s, d)
     val flags = curationFlags(s, d, docs)
-    val surv = col("train") && col("keep") && col("sampled") && !col("contaminated")
+    val local = SessionMemo.localRows(flags)
+    val (funnel, offsets) = local match {
+      case Some(rows) =>
+        val placed = rows.filter(survives).map(r => (r.getLong(0), r.getLong(5))).sortBy(_._1)
+        val at = placed.scanLeft(0L)(_ + _._2)
+        (Funnel.of(rows.iterator),
+          withSeqSpan(s.createDataFrame(placed.zip(at).map { case ((id, nt), off) =>
+            (id, nt, off) }.toSeq).toDF("doc_id", "n_tok", "tok_off")))
+      case None =>
+        (flags.rdd.mapPartitions(rows => Iterator(Funnel.of(rows)))
+          .collect().foldLeft(Funnel.of(Iterator.empty))(_ merge _),
+          q366Offsets(flags.filter((r: Row) => survives(r)).select(col("doc_id"), col("n_tok")),
+            q366GroupWidthFor(d, docs)))
+    }
     val nullL = lit(null).cast("long")
     val nullS = lit(null).cast("string")
-    def n(flag: Column): Column = count(when(flag, lit(1)))
-    val funnel = flags
-      .agg(count(lit(1)).as("docs_total"), n(col("train")).as("train_docs"),
-        n(col("keep")).as("keep_docs"), n(col("sampled")).as("sampled_docs"),
-        n(col("contaminated")).as("decon_flagged"), n(surv).as("survivor_docs"),
-        coalesce(sum(when(surv, col("n_tok"))), lit(0L)).as("total_tokens"))
-      .withColumn("n_sequences",
-        expr(s"(total_tokens + ${Q366SeqLen - 1}) div $Q366SeqLen"))
-      .unpivot(Array.empty[Column], "metric", "n")
-      .select(lit(0L).as("face"), col("metric"), col("n"),
-        nullL.as("seq_id"), nullL.as("n_parts"), nullL.as("n_tok"),
-        nullS.as("seq_md5"))
-    val survTok = flags.filter(surv).select(col("doc_id"), col("n_tok"))
-    val offsets = SessionMemo.boundedCollect(survTok) match {
-      case Some(rows) =>
-        val placed = rows.map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-        val at = placed.scanLeft(0L)(_ + _._2)
-        withSeqSpan(s.createDataFrame(placed.zip(at).map { case ((id, nt), off) =>
-          (id, nt, off) }.toSeq).toDF("doc_id", "n_tok", "tok_off"))
-      case None => q366Offsets(survTok, q366GroupWidthFor(d, docs))
-    }
     val seqFace = assembleSequences(sequencePartsAt(docs, offsets))
       .select(lit(1L).as("face"), nullS.as("metric"),
         nullL.as("n"), col("seq_id"), col("n_parts"),
         size(col("toks")).cast("long").as("n_tok"),
         md5(array_join(col("toks"), " ")).as("seq_md5"))
-    funnel.unionByName(seqFace)
-      .orderBy(col("face"), col("metric"), col("seq_id"))
+    val schema = org.apache.spark.sql.types.StructType(
+      seqFace.schema.map(f => f.copy(nullable = f.name != "face")))
+    val funnelRows = funnel.metrics.map { case (m, n) => Row(0L, m, n, null, null, null, null) }
+    local.flatMap(_ => SessionMemo.boundedCollect(seqFace)) match {
+      case Some(seqs) =>
+        s.createDataFrame((funnelRows ++ seqs.sortBy(_.getLong(3))).asJava, schema)
+      case None =>
+        s.createDataFrame(funnelRows.asJava, schema).unionByName(seqFace)
+          .orderBy(col("face"), col("metric"), col("seq_id"))
+    }
+  }
+
+  /** Whether a flag row (doc_id, train, keep, sampled, contaminated,
+    * n_tok) survives every gate: train, kept, sampled, not contaminated. */
+  private def survives(r: Row): Boolean =
+    r.getBoolean(1) && r.getBoolean(2) && r.getBoolean(3) && !r.getBoolean(4)
+
+  /** q372's face-0 census of flag rows: one fold per partition
+    * ([[Funnel.of]]) and a merge, so the local and the persisted flag
+    * table are counted by one definition. */
+  private final case class Funnel(docs: Long, train: Long, keep: Long, sampled: Long,
+                                  decon: Long, survivors: Long, tokens: Long) {
+    def merge(o: Funnel): Funnel = Funnel(docs + o.docs, train + o.train, keep + o.keep,
+      sampled + o.sampled, decon + o.decon, survivors + o.survivors, tokens + o.tokens)
+    /** The face-0 (metric, n) pairs in metric order. */
+    def metrics: Seq[(String, Long)] = Seq("docs_total" -> docs, "train_docs" -> train,
+      "keep_docs" -> keep, "sampled_docs" -> sampled, "decon_flagged" -> decon,
+      "survivor_docs" -> survivors, "total_tokens" -> tokens,
+      "n_sequences" -> (tokens + Q366SeqLen - 1) / Q366SeqLen).sortBy(_._1)
+  }
+  private object Funnel {
+    def of(rows: Iterator[Row]): Funnel = rows.foldLeft(Funnel(0, 0, 0, 0, 0, 0, 0)) { (f, r) =>
+      def n(i: Int) = if (r.getBoolean(i)) 1L else 0L
+      val surv = survives(r)
+      Funnel(f.docs + 1, f.train + n(1), f.keep + n(2), f.sampled + n(3), f.decon + n(4),
+        f.survivors + (if (surv) 1L else 0L), f.tokens + (if (surv) r.getLong(5) else 0L))
+    }
   }
 
   /** q372's doc-grain flag table over ALL documents: doc_id, train (outside
     * the benchmark slice), keep (q360 decision), sampled (q365 coin),
     * contaminated (a train doc sharing a window with the slice, q364) and
-    * n_tok. The keep and sample gates read the q360 decision memo; the
-    * contamination flag and n_tok come from q364's chunk pass. */
-  private def curationFlags(s: SparkSession, d: String, docs: DataFrame): DataFrame =
+    * n_tok, held by the session memo (kind `curation_flags`). One typed
+    * pass per document tokenizes its text once for n_tok and its window
+    * fingerprints and scores the q360 signals against q343's model; the
+    * model and the slice's fingerprint set both come from the ONE
+    * benchmark-slice collect ([[benchSide]]), and [[bucketSample]] adds
+    * the coin in the same stage. Past the row cap the pass emits the
+    * fingerprints and contamination is q364's distributed join
+    * ([[benchHitsByJoin]]). q360, q363, q365 and q370 read the `decisions`
+    * memo instead; CurationFlagsSpec keeps that composition as this
+    * table's reference. */
+  private[graft] def curationFlags(s: SparkSession, d: String, docs: DataFrame): DataFrame =
     SessionMemo.replayed(s, d, "curation_flags", docGrain = true) {
-      val decisions = bucketSample(corpusDecisions(s, d, Some(docs)))
-        .select(col("doc_id"), (col("decision") === "keep").as("keep"),
-          col("kept").as("sampled"))
-      chunkHits(d, docs).join(decisions, Seq("doc_id"))
-        .select(col("doc_id"), col("train"), col("keep"), col("sampled"),
-          (col("n_hit_chunks") > 0).as("contaminated"), col("n_tok"))
+      import s.implicits._
+      val bench = benchSide(d, docs)
+      val lm = s.sparkContext.broadcast(CurationSignals.BigramModel.fit(
+        bench.fold(lmReference(docs).as[String].collect().toSeq)(_.lmRef)))
+      val set = bench.map(b => s.sparkContext.broadcast(b.fps))
+      val perDoc = docs.select(col("doc_id"), col("text"), lower(col("text")))
+        .as[(Long, String, String)]
+        .map { case (id, text, lt) =>
+          val toks = CurationSignals.tokens(text)
+          val train = id % 5 != 0
+          val fps = if (train) windowFps(toks) else Array.empty[String]
+          val sig = CurationSignals.signals(id, text, lt, lm.value)
+          (id, train, sig.decision == "keep", sig.lmBucket, toks.length.toLong,
+            set.exists(b => fps.exists(b.value.contains)),
+            if (set.isEmpty) fps else Array.empty[String]) }
+        .toDF("doc_id", "train", "keep", "lm_bucket", "n_tok", "contaminated", "fps")
+      val flagged =
+        if (set.isDefined) perDoc
+        else benchHitsByJoin(perDoc, Seq("doc_id", "train", "keep", "lm_bucket", "n_tok"), docs)
+          .withColumn("contaminated", col("n_hit_chunks") > 0)
+      bucketSample(flagged).select(col("doc_id"), col("train"), col("keep"),
+        col("kept").as("sampled"), col("contaminated"), col("n_tok"))
     }
 
   lazy val q372Sql: String =
@@ -2084,11 +2176,11 @@ object TextOps {
   // Session-scoped memos (r18, guide §1.2): three corpus-derived tables are
   // each consumed by SEVERAL board entries — the chunk band table
   // (q357/q361/q368), its near-dup pair rollup (q357/q361), and the q360
-  // decision table (q360/q363/q365/q370, and q372 through its flag table)
-  // — and each entry previously re-ran the whole derivation pipeline. They
-  // ride graft.core.SessionMemo, whose doc states the policy, as does
-  // q372's doc-grain flag table ([[curationFlags]]); values are
-  // doc/chunk-grain (corpus-bounded, never token-grain).
+  // decision table (q360/q363/q365/q370) — and each entry previously re-ran
+  // the whole derivation pipeline. They ride graft.core.SessionMemo, whose
+  // doc states the policy, as does q372's doc-grain flag table
+  // ([[curationFlags]]); values are doc/chunk-grain (corpus-bounded, never
+  // token-grain).
   // ------------------------------------------------------------------
 
   /** The corpus chunk-band table, memoized: q357 (self-join), q361 (via
@@ -2107,14 +2199,13 @@ object TextOps {
       chunkPairsOverBands(corpusChunkBands(s, d)))
 
   /** The q360 decision table, memoized: q360 reports it, q363 weights it
-    * by token mass, q365 samples on its LM bucket, q372's flag table takes
-    * its keep and sample gates from it, and q370 slices its
+    * by token mass, q365 samples on its LM bucket, and q370 slices its
     * base/delta/parity faces from it (private[graft] for that TxnOps
-    * consumer). `docs` is the caller's documents read, when it has one. */
-  private[graft] def corpusDecisions(s: SparkSession, d: String,
-                                     docs: Option[DataFrame] = None): DataFrame =
+    * consumer). q372's flag table scores the same signals in its own
+    * pass. */
+  private[graft] def corpusDecisions(s: SparkSession, d: String): DataFrame =
     SessionMemo.replayed(s, d, "decisions", docGrain = true)(
-      q360Where(docs.getOrElse(Tables.documents(s, d)), lit(true)))
+      q360Where(Tables.documents(s, d), lit(true)))
 
   // ---------------------------------------------------------------- q357
   /** CHUNK-LEVEL MINHASH NEAR-DUP (round 16, verdict item 4): q352

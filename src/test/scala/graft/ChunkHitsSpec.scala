@@ -84,10 +84,28 @@ class ChunkHitsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("chunk pass equals the relational q364 on an adversarial corpus") {
+    import ChunkHitsSpec.adversarial
+    val s = spark
+    import s.implicits._
+    adversarial.toDF("doc_id", "text").repartition(3)
+      .write.parquet(s"$adversarialDir/documents.parquet")
+    val got = assertParity(adversarialDir)
+    assert(got.map(_.head) == Seq(6L, 12L, 16L, 18L, 19L),
+      s"contaminated docs: ${got.map(_.head)}")
+    val perDoc = relationalPerDoc(adversarialDir)
+    assert(perDoc(11L) == (160L, 1L) && perDoc(9L) == (113L, 3L) &&
+      perDoc(8L) == (112L, 2L) && perDoc(7L) == (65L, 2L) && perDoc(1L) == (0L, 0L))
+    assert(graft.io.ParquetStats.rowCount(s"$adversarialDir/documents.parquet") ==
+      Some(adversarial.size.toLong))
+  }
+}
+
+object ChunkHitsSpec {
   /** Window and stride boundaries, the distinct count, Spark's space-only
     * trim and `\s` split, non-ASCII text, and a train doc that meets the
     * benchmark slice only at a non-zero window offset. */
-  private val adversarial: Seq[(Long, String)] = {
+  val adversarial: Seq[(Long, String)] = {
     def toks(p: String, n: Int) = (0 until n).map(i => s"$p$i")
     def words(p: String, n: Int) = toks(p, n).mkString(" ")
     val bench = toks("b", 112)
@@ -113,20 +131,5 @@ class ChunkHitsSpec extends AnyFunSuite with BeforeAndAfterAll {
       16L -> ("  " + bench.slice(48, 112).mkString("  ") + " \n"), // doc 0 at 48
       18L -> (toks("h", 48) ++ bench.take(64)).mkString(" "), // hit at offset 48
       19L -> Seq.fill(70)("Straße İİ").mkString(" "))
-  }
-
-  test("chunk pass equals the relational q364 on an adversarial corpus") {
-    val s = spark
-    import s.implicits._
-    adversarial.toDF("doc_id", "text").repartition(3)
-      .write.parquet(s"$adversarialDir/documents.parquet")
-    val got = assertParity(adversarialDir)
-    assert(got.map(_.head) == Seq(6L, 12L, 16L, 18L, 19L),
-      s"contaminated docs: ${got.map(_.head)}")
-    val perDoc = relationalPerDoc(adversarialDir)
-    assert(perDoc(11L) == (160L, 1L) && perDoc(9L) == (113L, 3L) &&
-      perDoc(8L) == (112L, 2L) && perDoc(7L) == (65L, 2L) && perDoc(1L) == (0L, 0L))
-    assert(graft.io.ParquetStats.rowCount(s"$adversarialDir/documents.parquet") ==
-      Some(adversarial.size.toLong))
   }
 }

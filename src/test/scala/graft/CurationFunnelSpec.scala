@@ -9,9 +9,10 @@ import graft.core.SessionMemo
 import graft.queries.{DedupSim, TextOps}
 
 /** q372's shape over its doc-grain flag table: the number of Spark jobs a
-  * pass launches, the funnel identities the sequence face must meet, the
-  * memo's local and persisted paths giving the same rows, and a corpus
-  * with no survivor. */
+  * warm pass launches under the row cap (the benchmark-slice collect, the
+  * flag pass and face 1's three), the funnel identities the sequence face
+  * must meet, the memo's local and persisted paths giving the same rows,
+  * and a corpus with no survivor. */
 class CurationFunnelSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark = SparkSession.builder()
@@ -48,12 +49,13 @@ class CurationFunnelSpec extends AnyFunSuite with BeforeAndAfterAll {
     local
   }
 
-  test("a warm q372 on sf0.01 runs at most 12 jobs, none of them a localCheckpoint") {
+  test("a warm q372 on sf0.01 runs at most 5 jobs, none of them a localCheckpoint") {
     val d = "/root/testdata/sf0.01"
     pass(d)
     DedupSim.invalidateSessionCaches(spark, d)
     val (_, sites) = JobLog.of(spark.sparkContext)(TextOps.q372(spark, d).collect())
-    assert(sites.size <= 12, s"${sites.size} jobs:\n${sites.mkString("\n")}")
+    info(sites.mkString("; "))
+    assert(sites.size <= 5, s"${sites.size} jobs:\n${sites.mkString("\n")}")
     assert(!sites.exists(_.startsWith("localCheckpoint")), sites.mkString("\n"))
   }
 

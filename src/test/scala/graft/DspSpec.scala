@@ -130,6 +130,35 @@ class DspSpec extends AnyFunSuite {
     }
   }
 
+  test("musicRatio's skip over repeated inputs is bit-identical to the four-pass composition") {
+    // runs of one repeated sample (where the one-pass loop skips once the
+    // filter states stop changing) mixed with noise, bursts and special
+    // values; the last segment is often a run, so a skip can end the array
+    val rnd = new scala.util.Random(13)
+    val specials = Array(Float.NaN, Float.PositiveInfinity, Float.NegativeInfinity,
+      -0f, java.lang.Float.MIN_VALUE, -java.lang.Float.MIN_VALUE,
+      java.lang.Float.MIN_NORMAL / 3, 1e-39f)
+    def segment(): Array[Float] = rnd.nextInt(8) match {
+      case 0 => Array.fill(10 + rnd.nextInt(500))(rnd.nextFloat() - 0.5f)
+      case 1 => new Array[Float](1 + rnd.nextInt(3000))                   // exact zeros
+      case 2 => Array.tabulate(1 + rnd.nextInt(2000))(i =>                 // ±0.0
+        if (i % 2 == 0) 0f else -0f)
+      case 3 =>                                                            // DC run
+        val v = if (rnd.nextBoolean()) rnd.nextFloat() - 0.5f else 1e-6f * rnd.nextFloat()
+        Array.fill(1 + rnd.nextInt(3000))(v)
+      case 4 => Array.fill(1 + rnd.nextInt(2000))(                         // subnormal run
+        java.lang.Float.MIN_VALUE * (1 + rnd.nextInt(3)))
+      case 5 => Array.fill(1 + rnd.nextInt(3))(specials(rnd.nextInt(specials.length)))
+      case 6 => Array.fill(1 + rnd.nextInt(1500))(specials(rnd.nextInt(specials.length)))
+      case _ => sine(100 + rnd.nextInt(4000), 5 + rnd.nextInt(60), 16000,
+        rnd.nextDouble()) ++ new Array[Float](rnd.nextInt(8000))          // decay to silence
+    }
+    for (rate <- Seq(8000, 16000, 48000); k <- 0 until 300) {
+      val x = Array.fill(1 + rnd.nextInt(6))(segment()).flatten
+      assertSameRatio(s"$rate Hz runs #$k", x, rate)
+    }
+  }
+
   test("musicRatio is bit-identical to the four-pass composition on a 5-minute file") {
     val x = speechLike(new scala.util.Random(5), 16000, 5 * 60 * 1000)
     assertSameRatio("5 min", x, 16000)

@@ -75,7 +75,7 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
       // one consumer per memo kind; q361 builds the chunk pairs while
       // resolving the chunk bands, the nested build. Cap 0 persists every
       // DataFrame kind, so each entry owns an RDD the eviction must
-      // release; q345 and q351 own their index dirs.
+      // release; q345 and q351 own their index dirs, q351 also its delta.
       SessionMemo.withLocalRowCap(0) {
         (Seq("q24_minhash_lsh_pairs", "q25_simhash", "q80_substring_spans",
           "q128_prefix_jaccard_join", "q361_chunk_dedup_clusters",
@@ -88,10 +88,11 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(rdds.values.forall(_.nonEmpty), s"unpersisted memo: $rdds")
       assert(rdds.values.flatten.forall(persistent.contains))
       val dirs = indexDirs(spark, d)
-      assert(dirs.keySet == Set("ivf_index", "ivf_base_index"))
+      assert(dirs.keySet == Set("ivf_index", "ivf_base_index", "ivf_q351_delta"))
       assert(dirs.values.forall(_.isDirectory))
       (Seq("q25_simhash") ++ ivf).foreach(q(_, other, d))
-      val otherKinds = Set("simhash_signatures", "ivf_index", "ivf_base_index")
+      val otherKinds = Set("simhash_signatures", "ivf_index", "ivf_base_index",
+        "ivf_q351_delta")
       assert(SessionMemo.entries(other, d).keySet == otherKinds)
       val otherDirs = indexDirs(other, d).values
       assert(otherDirs.forall(_.isDirectory) && (otherDirs.toSet & dirs.values.toSet).isEmpty)
@@ -110,7 +111,7 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
       val candRdds = cachedRdds(spark, d).values.flatten
       assert(candRdds.nonEmpty && candRdds.forall(persistent.contains))
       val dirs2 = indexDirs(spark, d).values
-      assert(dirs2.size == 2 && dirs2.forall(_.isDirectory))
+      assert(dirs2.size == 3 && dirs2.forall(_.isDirectory))
       q("q25_simhash", spark, d2)
       assert(SessionMemo.entries(spark, d).isEmpty)
       assert(candRdds.forall(!persistent.contains(_)))

@@ -46,6 +46,7 @@ class SessionMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("soak: five passes stay flat in memo entries, persisted RDDs and index dirs") {
     val ivf = Seq("q345_ivf_sqrtn_partitioned", "q351_ivf_stream_append",
       "q358_ivf_index_compaction", "q371_ivf_serving_lifecycle")
+    val perCall = Seq("ivf_q351_delta", "ivf_q358_layout", "ivf_q371_layout")
     val sc = spark.sparkContext
     // (memo kinds, persisted RDDs, memo-owned index dirs)
     type Level = (Set[String], Int, Int)
@@ -57,6 +58,7 @@ class SessionMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
       val afterEvict = scala.collection.mutable.ArrayBuffer.empty[Level]
       val scratch = scala.collection.mutable.ArrayBuffer(scratchCount())
       val bases = scala.collection.mutable.LinkedHashSet.empty[String]
+      var lastCallDirs = Seq.empty[String]
       for (pass <- 1 to 5) {
         ivf.foreach { name =>
           rows(name, spark, sf)
@@ -67,6 +69,10 @@ class SessionMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
         afterRun += level()
         val owned = indexDirs(spark, sf).values.toSeq
         assert(owned.forall(new java.io.File(_).isDirectory))
+        // each call released the previous call's per-call layout
+        assert(lastCallDirs.forall(!new java.io.File(_).exists),
+          s"pass $pass: per-call dirs outlive the next call: $lastCallDirs")
+        lastCallDirs = perCall.flatMap(indexDirs(spark, sf).get)
         if (evict) {
           DedupSim.invalidateSessionCaches(spark, sf)
           afterEvict += level()
@@ -81,8 +87,8 @@ class SessionMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
           s"(+${scratch.last - scratch(scratch.length - 2)}), level ${afterRun.last}")
       }
       assert(afterRun.drop(1).distinct.size == 1, s"levels after each pass: $afterRun")
-      assert(Set("ivf_index", "ivf_base_index").subsetOf(afterRun.last._1) &&
-        afterRun.last._3 == 2, s"levels after each pass: $afterRun")
+      assert((Set("ivf_index", "ivf_base_index") ++ perCall).subsetOf(afterRun.last._1) &&
+        afterRun.last._3 == 5, s"levels after each pass: $afterRun")
       assert(bases.size == (if (evict) 5 else 1),
         s"one base build per (session, dir) lifetime, got ${bases.size}")
       if (evict) {
@@ -90,9 +96,10 @@ class SessionMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(afterEvict.drop(1).distinct.size == 1, s"after evictions: $afterEvict")
       }
       // the per-call dirs the returned plans read (q351's delta, the
-      // compacted layouts of q358 and q371) are the only scratch growth
+      // compacted layouts of q358 and q371) are the memo's, so from pass 2
+      // on the scratch root does not grow
       val growth = scratch.sliding(2).map(p => p(1) - p(0)).toSeq.drop(1)
-      assert(growth.forall(_ == 3), s"scratch entries per pass: $scratch")
+      assert(growth.forall(_ == 0), s"scratch entries per pass: $scratch")
     }
     try {
       soak(evict = true)
@@ -108,7 +115,7 @@ class SessionMemoSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.read.parquet(s"$sf/embeddings.parquet").write.parquet(emb)
       val before = names.map(rows(_, spark, d))
       val dirsBefore = indexDirs(spark, d)
-      assert(dirsBefore.keySet == Set("ivf_index", "ivf_base_index"))
+      assert(dirsBefore.keySet == Set("ivf_index", "ivf_base_index", "ivf_q351_delta"))
       // rewrite the corpus in place: each vector's components scaled
       // unevenly, so its direction, cell and neighbours change
       val staged = graft.io.FsUtil.scratchDir("graft_regen_stage")
